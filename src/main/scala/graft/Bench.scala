@@ -1,7 +1,5 @@
 package graft
 
-import org.apache.spark.sql.SparkSession
-
 /** Benchmark main: runs every catalog query on SPARK_GRAFT_SF_DIR and prints
   * per-query JSON plus a FINAL short self-contained totals line.
   *
@@ -28,22 +26,8 @@ import org.apache.spark.sql.SparkSession
 object Bench {
   def main(args: Array[String]): Unit = {
     val sfDir = sys.env.getOrElse("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
-    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "32")
     val detailPath = sys.env.getOrElse("SPARK_GRAFT_BENCH_DETAIL", "bench_detail.json")
-    val spark = SparkSession.builder()
-      .master(s"local[$cpus]")
-      .config("spark.sql.shuffle.partitions", cpus)
-      .config("spark.local.dir", graft.engine.Scratch.localDir)
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.sql.adaptive.enabled", "true")
-      // ~200 catalog plans compile 400+ generated classes; the default
-      // 100-entry codegen class cache churns mid-bench, and each recompile
-      // reads as a GC/latency spike — r4's retry path fired 11 times on
-      // clean plans. A catalog-sized cache keeps steady state compile-free
-      // (VERDICT r4 item 8: retried ≤ 5).
-      .config("spark.sql.codegen.cache.maxEntries", "4000")
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
+    val spark = graft.engine.Tables.localSession("graft-bench")
     spark.sparkContext.setLogLevel("WARN")
 
     def run(name: String): Unit =

@@ -1,6 +1,5 @@
 package graft
 
-import org.apache.spark.sql.SparkSession
 import graft.plans.RoundStrip
 
 /** Rounding-margin audit over the whole catalog (VERDICT r4 item 2): for
@@ -254,14 +253,7 @@ object MarginAudit {
     require(unknown.isEmpty,
       s"unknown query name(s): ${unknown.mkString(", ")} — an audit that " +
         "matches nothing must not report success")
-    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "4")
-    val spark = SparkSession.builder()
-      .master(s"local[$cpus]")
-      .config("spark.sql.shuffle.partitions", cpus)
-      .config("spark.local.dir", graft.engine.Scratch.localDir)
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
+    val spark = graft.engine.Tables.localSession("graft-margin-audit")
     spark.sparkContext.setLogLevel("ERROR")
     var flagged = 0
     var audited = 0

@@ -102,8 +102,8 @@ object Probe {
         pairs.unpersist()
       }
       else if (name == "TRISTAGE") {
-        // stage timing for the triangle census edge build (see TriProbe for
-        // the per-stage breakdown inside engine.Triangles itself)
+        // stage timing for the triangle census edge build (time the census
+        // itself end to end with `QProbe <sfDir> <n> graph_triangles`)
         val sp = Tables.load(spark, d, "lineitem")
           .select(col("l_partkey").as("pk"),
             (year(col("l_shipdate")) * 100 + month(col("l_shipdate"))).as("m"),

@@ -16,16 +16,7 @@ object QProbe {
     val sfDir = args.headOption.getOrElse("/root/testdata/sf0.1")
     val n = args.lift(1).map(_.toInt).getOrElse(5)
     val names = if (args.length > 2) args.drop(2).toSeq else Seq("dd_clusters", "graph_triangles")
-    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "32")
-    val spark = org.apache.spark.sql.SparkSession.builder()
-      .master(s"local[$cpus]")
-      .config("spark.sql.shuffle.partitions", cpus)
-      .config("spark.local.dir", graft.engine.Scratch.localDir)
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.sql.adaptive.enabled", "true")
-      .config("spark.sql.codegen.cache.maxEntries", "4000")
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
+    val spark = graft.engine.Tables.localSession("graft-qprobe")
     spark.sparkContext.setLogLevel("ERROR")
 
     // GRAFT_FREE_RDDS=1: after each run, drop every persistent RDD still

@@ -85,15 +85,8 @@ object ShuffleAudit {
   def main(args: Array[String]): Unit = {
     val sfDir = args.headOption.getOrElse("/root/testdata/sf0.1")
     val only = args.drop(1).toSet
-    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "32")
-    val spark = SparkSession.builder()
-      .master(s"local[$cpus]")
-      .config("spark.sql.shuffle.partitions", cpus)
-      .config("spark.local.dir", graft.engine.Scratch.localDir)
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.sql.adaptive.enabled", "true")
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
+    val spark = graft.engine.Tables.localSession("graft-shuffle-audit")
+    val cpus = spark.conf.get("spark.sql.shuffle.partitions")
     spark.sparkContext.setLogLevel("ERROR")
     val meter = new Meter(spark)
 

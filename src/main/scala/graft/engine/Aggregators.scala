@@ -79,11 +79,15 @@ object Aggregators {
     * lets reduce() reject a non-improving row with ONE comparison against
     * the current cutoff (OPTIMIZATION r15: the aggregate sees every scored
     * row, so the per-row path must be O(1) in the common case; results are
-    * identical to the always-sort form, AggregatorsSpec pins it). */
+    * identical to the always-sort form, AggregatorsSpec pins it).
+    * `ord` is the ONE ranking reduce() and trim() share: value descending
+    * under `java.lang.Double.compare` — NaN above every number, as in
+    * Spark's and DuckDB's `ORDER BY value DESC` — then id ascending. */
   final class TopK(k: Int) extends Aggregator[(Long, Double), Seq[(Double, Long)], Seq[Long]] {
-    private val ord = Ordering.Tuple2(Ordering[Double].reverse, Ordering[Long])
+    private val ord =
+      Ordering.Tuple2(Ordering.Double.TotalOrdering.reverse, Ordering.Long)
     private def trim(s: Seq[(Double, Long)]): Seq[(Double, Long)] =
-      s.sortBy { case (v, id) => (-v, id) }.take(k)
+      s.sorted(ord).take(k)
     override def zero: Seq[(Double, Long)] = Vector.empty
     override def reduce(b: Seq[(Double, Long)], x: (Long, Double)): Seq[(Double, Long)] = {
       val e = (x._2, x._1)

@@ -45,4 +45,27 @@ class AggregatorsSpec extends AnyFunSuite with SharedSparkSpec {
     val want = rows.sortBy { case (id, v) => (-v, id) }.take(5).map(_._1)
     assert(got == want && want == Seq(8L, 0L, 1L, 2L, 3L))
   }
+
+  test("TopK ranks NaN like orderBy(value.desc, id.asc): above every number, on every path") {
+    import spark.implicits._
+    // a NaN that lands in a full buffer becomes its cutoff; the early-reject
+    // comparison and the buffer sort must agree on where NaN ranks, or
+    // every later row is rejected against (or sorted past) the wrong cutoff
+    val rows = Seq((1L, 0.5), (2L, Double.NaN), (3L, 0.9), (4L, 0.1),
+      (5L, Double.NaN), (6L, 0.7))
+    val want = rows.toDF("id", "v").orderBy(col("v").desc, col("id").asc)
+      .limit(3).select("id").as[Long].collect().toSeq
+    assert(want == Seq(2L, 5L, 3L))
+    for (parts <- Seq(1, 3)) {
+      val got = rows.toDS().repartition(parts)
+        .groupByKey(_ => 0).agg(new Aggregators.TopK(3).toColumn).head()._2
+      assert(got == want, s"$parts partition(s)")
+    }
+    // the per-row path alone, in arrival order: NaN enters second and
+    // must not reject the 0.9 that arrives behind it
+    val topk = new Aggregators.TopK(2)
+    val buf = Seq((1L, 0.5), (2L, Double.NaN), (3L, 0.9))
+      .foldLeft(topk.zero)(topk.reduce)
+    assert(topk.finish(buf) == Seq(2L, 3L))
+  }
 }

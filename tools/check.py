@@ -23,8 +23,13 @@ def main(sf_dir, out_dir):
         oracles = json.load(f)
     n_pass = n_fail = 0
     spark_dirs = {os.path.basename(p): p for p in glob.glob(f"{out_dir}/*") if os.path.isdir(p)}
-    for name in sorted(spark_dirs):
-        path = spark_dirs[name]
+    # every oracle key must have a Spark output: a query that failed in
+    # Verify leaves no directory, and that is a failure, not a skip
+    names = sorted(set(spark_dirs) | set(oracles))
+    for name in names:
+        path = spark_dirs.get(name)
+        if path is None:
+            print(f"FAIL {name}: no spark output"); n_fail += 1; continue
         try:
             sdf = con.execute(f"SELECT * FROM '{path}/*.parquet'").df()
         except Exception as e:
@@ -41,7 +46,7 @@ def main(sf_dir, out_dir):
             print(f"PASS {name} ({len(sdf)} rows)" + (f" [{msg}]" if msg else "")); n_pass += 1
         else:
             print(f"FAIL {name}: {msg}"); n_fail += 1
-    print(f"\n{n_pass} pass, {n_fail} fail, {len(spark_dirs) - n_pass - n_fail} skipped")
+    print(f"\n{n_pass} pass, {n_fail} fail, {len(names) - n_pass - n_fail} skipped")
     return 1 if n_fail else 0
 
 def compare(sdf, odf):
