@@ -234,19 +234,6 @@ object Bench {
       detail ++= "\n  ]\n}\n"
       java.nio.file.Files.write(java.nio.file.Paths.get(detailPath),
         detail.toString.getBytes("UTF-8"))
-      // Archive a per-round copy: bench_detail.json is overwritten every
-      // round, which left r6's regression adjudication without r5's
-      // per-query numbers (VERDICT r6 item 4). The round number is inferred
-      // as max(BENCH_r{NN}.json in cwd) + 1 — the driver writes BENCH_r{NN}
-      // AFTER this bench run, so the current round's file never exists yet.
-      val roundRe = "BENCH_r(\\d+)\\.json".r
-      val prior = java.nio.file.Files.list(java.nio.file.Paths.get("."))
-        .iterator().asScala
-        .flatMap(p => roundRe.findFirstMatchIn(p.getFileName.toString).map(_.group(1).toInt))
-        .foldLeft(0)(math.max)
-      val archive = f"bench_detail_r${prior + 1}%02d.json"
-      java.nio.file.Files.write(java.nio.file.Paths.get(archive),
-        detail.toString.getBytes("UTF-8"))
     } catch { case e: Throwable => System.err.println(s"[bench] detail write failed: $e") }
 
     // Full line first (humans / detail), short self-contained line LAST —

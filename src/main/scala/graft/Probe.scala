@@ -5,7 +5,7 @@ import graft.engine.Tables
 
 /** Scratch probe main for ad-hoc plan/perf checks (not part of the API).
   * Usage: sbt "runMain graft.Probe <sfDir> [MODE|query ...]" where MODE is
-  * HASHBENCH | SIGBENCH | COSBENCH | JWBENCH | TRISTAGE | CLEAR, and any
+  * HASHBENCH | SIGBENCH | COSBENCH | JWBENCH | CLEAR, and any
   * other arg is a catalog query name timed through the noop sink. The
   * *BENCH modes race each native codegen expression against its composed /
   * UDF alternative on an inflated corpus — the README showcase numbers. */
@@ -100,25 +100,6 @@ object Probe {
           }
         }
         pairs.unpersist()
-      }
-      else if (name == "TRISTAGE") {
-        // stage timing for the triangle census edge build (time the census
-        // itself end to end with `QProbe <sfDir> <n> graph_triangles`)
-        val sp = Tables.load(spark, d, "lineitem")
-          .select(col("l_partkey").as("pk"),
-            (year(col("l_shipdate")) * 100 + month(col("l_shipdate"))).as("m"),
-            col("l_suppkey").as("sk")).distinct()
-        time("sp distinct")(sp.count())
-        val e = sp.as("a").join(sp.as("b"),
-            col("a.pk") === col("b.pk") && col("a.m") === col("b.m") &&
-              col("a.sk") < col("b.sk"))
-          .select(col("a.sk").as("u"), col("b.sk").as("v")).distinct()
-        time("edge build")(e.count())
-        val ec = e.localCheckpoint()
-        time("census on checkpointed")(graft.engine.Triangles.census(ec).collect()
-          .foreach(r => println(s"[probe] census: $r")))
-        time("census on raw plan")(graft.engine.Triangles.census(e).collect()
-          .foreach(r => println(s"[probe] census: $r")))
       }
       else {
         val fn = SparkEntry.queries(name)

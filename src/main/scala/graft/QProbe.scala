@@ -8,8 +8,8 @@ package graft
   * sample). Usage:
   *   sbt "runMain graft.QProbe <sfDir> <n> <query> [query ...]"
   * Each run materializes through the noop sink exactly like Bench, and the
-  * cache manager is cleared between runs so no run reuses its predecessor's
-  * cached frames.
+  * cache manager and persistent RDDs are cleared between runs so no run
+  * reuses its predecessor's cached frames or checkpoint blocks.
   */
 object QProbe {
   def main(args: Array[String]): Unit = {
@@ -19,20 +19,18 @@ object QProbe {
     val spark = graft.engine.Tables.localSession("graft-qprobe")
     spark.sparkContext.setLogLevel("ERROR")
 
-    // GRAFT_FREE_RDDS=1: after each run, drop every persistent RDD still
-    // registered with the context — this is where localCheckpoint() blocks
-    // live, and nothing frees them until a full GC lets ContextCleaner run
-    // (rare on a 128 GiB heap). Used to test whether in-bench inflation of
-    // the checkpoint-heavy queries is accumulated dead blocks.
-    val freeRdds = sys.env.get("GRAFT_FREE_RDDS").contains("1")
     def runOnce(name: String): Double = {
       val t0 = System.nanoTime()
       SparkEntry.queries(name)(spark, sfDir)
         .write.format("noop").mode("overwrite").save()
       val dt = (System.nanoTime() - t0) / 1e9
       spark.sharedState.cacheManager.clearCache()
-      if (freeRdds)
-        spark.sparkContext.getPersistentRDDs.values.foreach(_.unpersist(false))
+      // free every persistent RDD still registered with the context, as
+      // Bench does: localCheckpoint() blocks live there, and nothing frees
+      // them until a full GC lets ContextCleaner run, so checkpoint-heavy
+      // queries would otherwise inflate over runs. Blocking, so the next
+      // run does not race the removal.
+      spark.sparkContext.getPersistentRDDs.values.foreach(_.unpersist(true))
       dt
     }
 

@@ -346,7 +346,7 @@ object Commits {
         s".v$version-${java.util.UUID.randomUUID().toString.take(8)}")
       df.coalesce(1).write.mode("errorifexists").parquet(tmp.getPath)
       if (tmp.renameTo(d)) true
-      else { rmTree(tmp); false } // lost the publish race: identical content won
+      else { Layouts.rmTree(tmp); false } // lost the publish race: identical content won
     }
 
     /** THE O(changes) reader: version `v`'s change rows, change files only
@@ -354,11 +354,6 @@ object Commits {
     def read(spark: SparkSession, table: String, v: Int): DataFrame = {
       require(exists(table, v), s"no change data for $table v$v")
       spark.read.parquet(dir(table, v).getPath)
-    }
-
-    private def rmTree(f: java.io.File): Unit = {
-      Option(f.listFiles()).foreach(_.foreach(rmTree))
-      f.delete(); ()
     }
 
     private def horizonFile(table: String) =
@@ -418,7 +413,7 @@ object Commits {
         java.nio.file.StandardCopyOption.ATOMIC_MOVE,
         java.nio.file.StandardCopyOption.REPLACE_EXISTING)
       val victims = versions(table).filter(_ < newHorizon)
-      victims.foreach(v => rmTree(dir(table, v)))
+      victims.foreach(v => Layouts.rmTree(dir(table, v)))
       victims
     }
   }

@@ -64,4 +64,46 @@ object Layouts {
   /** The common case: existence = the layout's _SUCCESS commit marker. */
   def ensureCommitted(s: SparkSession, path: String)(write: => Unit): Unit =
     ensure(s, path)(new java.io.File(s"$path/_SUCCESS").exists())(write)
+
+  /** The one publish path for a per-sf scenario table: returns `path` at
+    * once if it exists. Otherwise `build` fills a fresh `path.build-<id>`
+    * work dir OUTSIDE the lock — a scenario build runs Spark jobs and
+    * streaming drains, and a blocked one inside [[ensure]] would wedge
+    * every other layout build in the session (ADVICE r10). The lock is
+    * taken only to re-check, rename the work dir into place (atomic, so a
+    * half-built table is never visible) and drop cached listings. A
+    * concurrent builder that loses the race discards its copy: scenarios
+    * are deterministic, so either copy is THE table. The work dir is
+    * deleted in a `finally`, so a `build` that throws leaves nothing
+    * behind and its exception reaches the caller. */
+  def publish(s: SparkSession, path: String)(build: String => Unit): String =
+    publishWith(path, p => s.catalog.refreshByPath(p))(build)
+
+  /** [[publish]] with the listing refresh passed in (tests run it
+    * without a session). */
+  private[graft] def publishWith(path: String, refresh: String => Unit)(
+      build: String => Unit): String = {
+    val dst = new java.io.File(path)
+    if (!dst.exists()) {
+      val work = new java.io.File(
+        path + ".build-" + java.util.UUID.randomUUID().toString.take(8))
+      try {
+        build(work.getPath)
+        lock.synchronized {
+          if (!dst.exists()) {
+            require(work.renameTo(dst), s"atomic publish of $work failed")
+            refresh(path)
+          }
+        }
+      } finally if (work.exists()) rmTree(work)
+    }
+    path
+  }
+
+  /** Recursive best-effort delete (scenario work dirs, stream scratch,
+    * vacuumed change files, stale spill dirs). */
+  def rmTree(f: java.io.File): Unit = {
+    Option(f.listFiles()).foreach(_.foreach(rmTree))
+    f.delete(): Unit
+  }
 }

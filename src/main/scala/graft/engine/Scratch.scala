@@ -39,12 +39,6 @@ object Scratch {
     * long (its JVM is dead or wedged either way). */
   val StaleAgeMs: Long = 30L * 60 * 1000
 
-  private def deleteRecursively(f: java.io.File): Unit = {
-    val kids = f.listFiles()
-    if (kids != null) kids.foreach(deleteRecursively)
-    f.delete(): Unit
-  }
-
   /** True iff the pid encoded in a `pidNNN` scratch dir name belongs to a
     * LIVE process. The mtime age floor alone is not a liveness test
     * (ADVICE r13): a directory's lastModified updates only on direct-child
@@ -76,7 +70,7 @@ object Scratch {
       val old = root.listFiles()
       if (old != null)
         old.filter(d => now - d.lastModified() > StaleAgeMs && !ownerAlive(d))
-          .foreach(deleteRecursively)
+          .foreach(Layouts.rmTree)
       val free = shm.getUsableSpace
       if (free >= MinShmFreeBytes) {
         val d = new java.io.File(root, s"pid${ProcessHandle.current().pid()}")

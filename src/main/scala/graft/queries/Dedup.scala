@@ -45,64 +45,26 @@ object Dedup {
     * holds beside the stream — and writes the flags idempotently under
     * the batch id. Committed per sf (deterministic artifact of the
     * snapshot; the oracle re-derives every flag from SQL). */
-  private def decontStreamScenario(s: SparkSession, d: String): String = {
-    val out = s"/tmp/graft_dedup/decont_${graft.engine.Layouts.tag(d)}"
-    if (!new java.io.File(out).exists()) {
-      def uuid = java.util.UUID.randomUUID().toString.take(8)
-      val work = out + ".build-" + uuid
-      val src = out + ".src-" + uuid
-      try {
-        val isEval = col("doc_id") % 97 === 0 && col("doc_id") < 1000000
-        val c = corpus(s, d).select("doc_id", "text")
-        // benchmark gram set: tiny at any corpus scale, materialized once,
-        // derived by the SAME fold the per-batch flagging applies
-        val evalGrams = graft.streaming.Streams
-          .benchmarkGrams(c.filter(isEval)).localCheckpoint()
-        val train = c.filter(!isEval)
-        (0 to 2).foreach { b =>
-          train.filter(pmod(col("doc_id"), lit(3)) === b)
-            .coalesce(1).write.parquet(s"$src/staged/b$b")
-        }
-        val watchDir = new java.io.File(src, "in")
-        watchDir.mkdirs()
-        new java.io.File(work).mkdirs()
-        val schema = s.read.parquet(s"$src/staged/b0").schema
-        val q = s.readStream.schema(schema).parquet(watchDir.getPath)
-          .writeStream
-          .foreachBatch { (df: org.apache.spark.sql.Dataset[org.apache.spark.sql.Row],
-                           batchId: Long) =>
-            graft.streaming.Streams.flagContaminated(df, evalGrams)
-              .withColumn("batch", lit(batchId))
-              .coalesce(1).write.mode("overwrite").parquet(s"$work/b$batchId")
-            ()
-          }
-          .option("checkpointLocation", s"$src/ckpt")
-          .start()
-        try {
-          (0 to 2).foreach { b =>
-            val f = new java.io.File(s"$src/staged/b$b").listFiles()
-              .filter(_.getName.endsWith(".parquet")).head
-            java.nio.file.Files.move(f.toPath,
-              new java.io.File(watchDir, f"b$b.parquet").toPath)
-            Temporal.drainWithin(q)
-          }
-        } finally q.stop()
-        (0 to 2).foreach { b =>
-          require(new java.io.File(s"$work/b$b").exists(),
-            s"micro-batch $b must have written its flags")
-        }
-        graft.engine.Layouts.ensure(s, out)(new java.io.File(out).exists()) {
-          require(new java.io.File(work).renameTo(new java.io.File(out)),
-            s"atomic publish of $work failed")
-        }
-      } finally {
-        Temporal.rmTree(new java.io.File(src))
-        val w = new java.io.File(work)
-        if (w.exists()) Temporal.rmTree(w)
+  private def decontStreamScenario(s: SparkSession, d: String): String =
+    graft.engine.Layouts.publish(s, s"/tmp/graft_dedup/decont_${graft.engine.Layouts.tag(d)}") { work =>
+      val isEval = col("doc_id") % 97 === 0 && col("doc_id") < 1000000
+      val c = corpus(s, d).select("doc_id", "text")
+      // benchmark gram set: tiny at any corpus scale, materialized once,
+      // derived by the SAME fold the per-batch flagging applies
+      val evalGrams = graft.streaming.Streams
+        .benchmarkGrams(c.filter(isEval)).localCheckpoint()
+      val train = c.filter(!isEval)
+      graft.streaming.StreamHarness.replayForeach(s,
+          (0 to 2).map(b => train.filter(pmod(col("doc_id"), lit(3)) === b))) { (df, batchId) =>
+        graft.streaming.Streams.flagContaminated(df, evalGrams)
+          .withColumn("batch", lit(batchId))
+          .coalesce(1).write.mode("overwrite").parquet(s"$work/b$batchId")
+      }
+      (0 to 2).foreach { b =>
+        require(new java.io.File(s"$work/b$b").exists(),
+          s"micro-batch $b must have written its flags")
       }
     }
-    out
-  }
 
   /** (doc_id, sig) — cached: the narrow signature table is reused by the
     * band explode and both sides of the candidate join; caching keeps

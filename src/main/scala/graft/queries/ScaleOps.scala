@@ -17,14 +17,12 @@ object ScaleOps {
     * etl_commit_changes): v1 = customers nation < 10, a winning append of
     * [10, 20) at v2, a stale compaction REJECTED by conflict detection,
     * and a second append rebasing ≥ 20 through the conflict to v3.
-    * Materialized once per sf; built in a work dir and atomically renamed
-    * so a crashed half-build can never be consumed (manifests are
-    * table-relative, so the rename is safe). */
-  private def commitScenario(s: SparkSession, d: String): String = {
-    val C = graft.engine.Commits
-    val table = s"/tmp/graft_commits/tbl_${graft.engine.Layouts.tag(d)}"
-    graft.engine.Layouts.ensure(s, table)(new java.io.File(table).exists()) {
-      val work = table + ".build-" + java.util.UUID.randomUUID().toString.take(8)
+    * Materialized once per sf through [[graft.engine.Layouts.publish]], so
+    * a crashed half-build can never be consumed (manifests are
+    * table-relative, so the publishing rename is safe). */
+  private def commitScenario(s: SparkSession, d: String): String =
+    graft.engine.Layouts.publish(s, s"/tmp/graft_commits/tbl_${graft.engine.Layouts.tag(d)}") { work =>
+      val C = graft.engine.Commits
       val cust = t(s, d, "customer")
       C.init(work, C.stage(cust.filter(col("c_nationkey") < 10), work, "base"))
       // all three writers stage against basis v1
@@ -39,11 +37,7 @@ object ScaleOps {
         "stale rewrite must be rejected by conflict detection")
       val (v3, cConf) = C.commitAppend(work, 1, Seq(cStaged))
       require(v3 == 3 && cConf, "append C must rebase through the conflict to v3")
-      require(new java.io.File(work).renameTo(new java.io.File(table)),
-        s"atomic publish of $work failed")
     }
-    table
-  }
 
   /** The delta-action-log + checkpoint scenario (etl_commit_checkpoint):
     * three appends build the table (v1–v3), a quiescent compaction
@@ -52,14 +46,11 @@ object ScaleOps {
     * through the conflict to v6. Exercises every reader shape: full
     * replay (v1–v3, no checkpoint yet), checkpoint-exact (v4), and
     * checkpoint + tail (v5–v6, with the tail containing a rebased
-    * commit). Built in a work dir and atomically renamed (commitScenario
-    * discipline). */
-  private def ckptScenario(s: SparkSession, d: String): String = {
-    val C = graft.engine.Commits
-    val A = C.ActionLog
-    val table = s"/tmp/graft_ckpt/tbl_${graft.engine.Layouts.tag(d)}"
-    graft.engine.Layouts.ensure(s, table)(new java.io.File(table).exists()) {
-      val work = table + ".build-" + java.util.UUID.randomUUID().toString.take(8)
+    * commit). Published like commitScenario. */
+  private def ckptScenario(s: SparkSession, d: String): String =
+    graft.engine.Layouts.publish(s, s"/tmp/graft_ckpt/tbl_${graft.engine.Layouts.tag(d)}") { work =>
+      val C = graft.engine.Commits
+      val A = C.ActionLog
       val cust = t(s, d, "customer")
       A.init(work, C.stage(cust.filter(col("c_nationkey") < 5), work, "base"))
       A.commitAppend(work, 1, Seq(C.stage(
@@ -79,11 +70,7 @@ object ScaleOps {
       require(v5 == 5 && !c5, "append A must win v5 unconflicted")
       val (v6, c6) = A.commitAppend(work, 4, Seq(bS))
       require(v6 == 6 && c6, "append B must rebase through the conflict to v6")
-      require(new java.io.File(work).renameTo(new java.io.File(table)),
-        s"atomic publish of $work failed")
     }
-    table
-  }
 
   /** Shared SCD2 dimension history: per-(custkey, day) revenue states with
     * lead()-derived validity windows — the ONE history every versioned-read
@@ -1181,14 +1168,13 @@ object ScaleOps {
     // clone's file set is 2 shared + 1 own, its rows are exactly
     // |c<20| + |c<5| (clone snapshot + clone-only append), and the
     // source's rows are the full table (its post-clone commit landed, the
-    // clone's did not leak back). Scenario builds once per sf with the
-    // commitScenario atomic-rename publish; at 100 TB a clone is the same
+    // clone's did not leak back). Scenario builds once per sf through
+    // Layouts.publish like commitScenario; at 100 TB a clone is the same
     // one metadata write regardless of table size — that is the point.
     "etl_clone_shallow" -> ((s, d) => {
       val C = graft.engine.Commits
-      val root = s"/tmp/graft_clone/${graft.engine.Layouts.tag(d)}"
-      graft.engine.Layouts.ensure(s, root)(new java.io.File(root).exists()) {
-        val work = root + ".build-" + java.util.UUID.randomUUID().toString.take(8)
+      val root = graft.engine.Layouts.publish(s,
+          s"/tmp/graft_clone/${graft.engine.Layouts.tag(d)}") { work =>
         val (wsrc, wdst) = (s"$work/src", s"$work/clone")
         val cust = t(s, d, "customer")
         C.init(wsrc, C.stage(cust.filter(col("c_nationkey") < 15), wsrc, "base"))
@@ -1200,8 +1186,6 @@ object ScaleOps {
           cust.filter(col("c_nationkey") < 5), wdst, "cl")))
         C.commitAppend(wsrc, 2, Seq(C.stage(
           cust.filter(col("c_nationkey") >= 20), wsrc, "w3")))
-        require(new java.io.File(work).renameTo(new java.io.File(root)),
-          s"atomic publish of $work failed")
       }
       def row(name: String, tbl: String) = {
         val v = C.latestVersion(tbl)

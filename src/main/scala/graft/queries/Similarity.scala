@@ -429,8 +429,8 @@ object Similarity {
   }
 
   /** Schedule hook for the hierarchy faces (the betweennessAt pattern):
-    * runs the staged census at an arbitrary schedule so tooling (the
-    * HnswSweep probe) can measure recall/budget trade-offs without
+    * runs the staged census at an arbitrary schedule so a schedule sweep
+    * can measure recall/budget trade-offs without
     * editing the committed face. The catalog face + its oracle pin ONE
     * schedule; this hook exists to EARN that schedule by measurement. */
   private[graft] def hnswLevelsAt(s: SparkSession, d: String,
@@ -669,62 +669,24 @@ object Similarity {
     * bulk half; both share [[searchThenLink]], so stream and batch
     * CANNOT drift). Committed per sf; the oracle re-derives every edge
     * of every batch from SQL. */
-  private[graft] def indexAppendScenario(s: SparkSession, d: String): String = {
-    val out = s"/tmp/graft_sim/append_${graft.engine.Layouts.tag(d)}"
-    if (!new java.io.File(out).exists()) {
-      def uuid = java.util.UUID.randomUUID().toString.take(8)
-      val work = out + ".build-" + uuid
-      val src = out + ".src-" + uuid
-      try {
-        val e = emb(s, d).select(col("vec_id"), col("v")).cache()
-        val gbEdges = coarseKnnLayout(s, d, e, 2)
-        val hinted = embHintGate(d)
-        (0 to 2).foreach { b =>
-          e.filter(col("vec_id") % 2 === 1)
-            .filter(pmod(expr("vec_id div 2"), lit(3)) === b)
-            .coalesce(1).write.parquet(s"$src/staged/b$b")
-        }
-        val watchDir = new java.io.File(src, "in")
-        watchDir.mkdirs()
-        new java.io.File(work).mkdirs()
-        val schema = s.read.parquet(s"$src/staged/b0").schema
-        val q = s.readStream.schema(schema).parquet(watchDir.getPath)
-          .writeStream
-          .foreachBatch { (df: org.apache.spark.sql.Dataset[org.apache.spark.sql.Row],
-                           batchId: Long) =>
-            searchThenLink(e, gbEdges,
-                df.select(col("vec_id").as("qid"), col("v").as("qv")), hinted)
-              .withColumn("batch", lit(batchId))
-              .coalesce(1).write.mode("overwrite").parquet(s"$work/b$batchId")
-            ()
-          }
-          .option("checkpointLocation", s"$src/ckpt")
-          .start()
-        try {
-          (0 to 2).foreach { b =>
-            val f = new java.io.File(s"$src/staged/b$b").listFiles()
-              .filter(_.getName.endsWith(".parquet")).head
-            java.nio.file.Files.move(f.toPath,
-              new java.io.File(watchDir, f"b$b.parquet").toPath)
-            Temporal.drainWithin(q)
-          }
-        } finally q.stop()
-        (0 to 2).foreach { b =>
-          require(new java.io.File(s"$work/b$b").exists(),
-            s"micro-batch $b must have written its appended edges")
-        }
-        graft.engine.Layouts.ensure(s, out)(new java.io.File(out).exists()) {
-          require(new java.io.File(work).renameTo(new java.io.File(out)),
-            s"atomic publish of $work failed")
-        }
-      } finally {
-        Temporal.rmTree(new java.io.File(src))
-        val w = new java.io.File(work)
-        if (w.exists()) Temporal.rmTree(w)
+  private[graft] def indexAppendScenario(s: SparkSession, d: String): String =
+    graft.engine.Layouts.publish(s, s"/tmp/graft_sim/append_${graft.engine.Layouts.tag(d)}") { work =>
+      val e = emb(s, d).select(col("vec_id"), col("v")).cache()
+      val gbEdges = coarseKnnLayout(s, d, e, 2)
+      val hinted = embHintGate(d)
+      val arriving = (0 to 2).map(b => e.filter(col("vec_id") % 2 === 1)
+        .filter(pmod(expr("vec_id div 2"), lit(3)) === b))
+      graft.streaming.StreamHarness.replayForeach(s, arriving) { (df, batchId) =>
+        searchThenLink(e, gbEdges,
+            df.select(col("vec_id").as("qid"), col("v").as("qv")), hinted)
+          .withColumn("batch", lit(batchId))
+          .coalesce(1).write.mode("overwrite").parquet(s"$work/b$batchId")
+      }
+      (0 to 2).foreach { b =>
+        require(new java.io.File(s"$work/b$b").exists(),
+          s"micro-batch $b must have written its appended edges")
       }
     }
-    out
-  }
 
   /** The stream ≡ batch twin: the same arriving vectors search-then-
     * linked in ONE batch pass — FacesInvariantSpec compares edge sets
@@ -1878,20 +1840,26 @@ object Similarity {
     // descent reaches the base search having scored FEWER candidates —
     // measured at all three sfs: final recall ≥ the 2-layer face's at
     // cum_scored ≤ its budget, pinned in-row by FacesInvariantSpec.
-    // Schedule EARNED by the HnswSweep probe over ~40 candidates at all
-    // three sfs: final recall ≥ the 2-layer face at EVERY sf (0.5125 vs
-    // 0.5125 / 0.5000 vs 0.4625 / 0.2656 vs 0.2625), cum_scored ≤ its
-    // budget at sf0.001 (1282 vs 1314) and sf0.1 (6596 vs 6660), and
+    // Schedule EARNED by a one-off sweep through hnswLevelsAt over ~40
+    // candidates at all three sfs: final recall ≥ the 2-layer face at
+    // EVERY sf (0.5125 vs 0.5125 / 0.5000 vs 0.4625 / 0.2656 vs 0.2625),
+    // cum_scored ≤ its budget at sf0.001 (1282 vs 1314) and sf0.1
+    // (6596 vs 6660), and
     // +2.1% budget at sf0.01 (1298 vs 1271) for +8.1% recall — the
     // 500-vector regime where the third layer's fixed ~79-candidate
     // floor cannot amortize; at the corpus size the hierarchy exists
     // for (sf0.1, 4× vectors) it dominates outright. l0 expands from
     // the beam's best 8 while answering over 9 (Stage.expand — HNSW's
     // ef/frontier split). FacesInvariantSpec pins strict (recall ≥,
-    // cum ≤) dominance in-row at its test sf.
+    // cum ≤) dominance in-row at its test sf. Measured and declined
+    // (VERDICT r14 #7): l1-fold schedules (l1r=0, l2's winners seeding
+    // l0 directly, 7 rounds) at varied l2 width / entries / l0 width all
+    // lose 4-6 recall points at all three sfs (sf0.01: 0.4375-0.4500 vs
+    // 0.5000; sf0.1: 0.2063-0.2250 vs 0.2656) — the stride-16 l1 round
+    // bridges the 1/64 entry layer to the base graph.
     // ONE definition of the committed schedule: the face IS the
     // hnswLevelsAt hook at (l2b=5, l1b=7·1, l0b=9·5 expand 8, entries=3),
-    // so the HnswSweep probe and PlanQualitySpec's gate pins measure
+    // so a schedule sweep and PlanQualitySpec's gate pins measure
     // exactly what the catalog runs
     "sim_hnsw_levels" -> ((s, d) =>
       hnswLevelsAt(s, d, l2b = 5, l1b = 7, l1r = 1,

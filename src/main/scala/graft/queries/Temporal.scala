@@ -4,6 +4,7 @@ import org.apache.spark.sql.{Column, DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.expressions.Window
 import graft.engine.{FixedPoint => FP, Tables}
+import graft.streaming.StreamHarness
 
 /** Event-time operators over `events` — the batch-semantics twins of the
   * Structured Streaming pipelines in graft.streaming (SURVEY.md §2.9): tumbling
@@ -30,101 +31,33 @@ object Temporal {
           .over(byUser.rowsBetween(Window.unboundedPreceding, Window.currentRow)))
   }
 
-  /** One-time exactly-once-sink scenario (Layouts.ensure + atomic rename
-    * publish, the ckptScenario pattern): a REAL file-watch streaming query
-    * delivers the events corpus in 3 deterministic micro-batches to a
-    * foreachBatch sink that stages each batch and claims manifest version
-    * batchId + 2 through [[graft.engine.Commits.commitExactlyOnce]] — the
-    * Delta txnVersion mechanic. The builder then simulates the restart
-    * replay: re-attempting batch 1's version with its own staged path must
-    * LOSE the put-if-absent claim, proving the sink de-duplicates
-    * at-least-once delivery into exactly-once table state. */
-  /** `processAllAvailable` with a hard deadline (ADVICE r10): it can block
-    * indefinitely (e.g. a staged file the source never picks up), and a
-    * scenario builder must fail loudly rather than hang the session. */
-  private[queries] def drainWithin(q: org.apache.spark.sql.streaming.StreamingQuery,
-                                   timeoutSec: Int = 120): Unit = {
-    val worker = new Thread(() => q.processAllAvailable())
-    worker.setDaemon(true)
-    worker.start()
-    worker.join(timeoutSec * 1000L)
-    if (worker.isAlive) {
-      q.stop()
-      throw new IllegalStateException(
-        s"stream did not drain within ${timeoutSec}s — scenario aborted")
-    }
-  }
-
-  /** Recursive best-effort delete for scenario scratch dirs. */
-  private[queries] def rmTree(f: java.io.File): Unit = {
-    Option(f.listFiles()).foreach(_.foreach(rmTree))
-    f.delete(); ()
-  }
-
-  private def eosScenario(s: SparkSession, d: String): String = {
-    val C = graft.engine.Commits
-    val table = s"/tmp/graft_eos/tbl_${graft.engine.Layouts.tag(d)}"
-    // The whole scenario — staging, a real streaming query, the replay
-    // probes — runs OUTSIDE the JVM-wide layout lock (ADVICE r10: a
-    // blocked processAllAvailable inside Layouts.ensure would wedge every
-    // other layout build in the session); only the exists-check + atomic
-    // rename publish take the lock. A concurrent builder losing the
-    // rename race discards its work dir — the published scenario is
-    // deterministic, so either copy is THE table.
-    if (!new java.io.File(table).exists()) {
-      val work = table + ".build-" + java.util.UUID.randomUUID().toString.take(8)
-      val src = table + ".src-" + java.util.UUID.randomUUID().toString.take(8)
-      try {
-        val P = 1000000007L
-        val ev = t(s, d, "events")
-          .select(col("event_id"), col("ts"), col("user_id"), col("event_type"), col("value"))
-        val batched = ev.withColumn("batch",
-          pmod(col("event_id"), lit(P)) * 2654435761L % P % 3)
-        (0 to 2).foreach { b =>
-          batched.filter(col("batch") === b).drop("batch")
-            .coalesce(1).write.parquet(s"$src/staged/b$b")
-        }
-        val watchDir = new java.io.File(src, "in")
-        watchDir.mkdirs()
-        C.init(work, C.stage(ev.limit(0), work, "base"))
-        val schema = s.read.parquet(s"$src/staged/b0").schema
-        val q = s.readStream.schema(schema).parquet(watchDir.getPath)
-          .writeStream
-          .foreachBatch { (df: org.apache.spark.sql.Dataset[org.apache.spark.sql.Row],
-                           batchId: Long) =>
-            val staged = C.stage(df, work, s"b$batchId")
-            require(C.commitExactlyOnce(work, batchId.toInt + 2, Seq(staged)),
-              s"first delivery of batch $batchId must win version ${batchId + 2}")
-            ()
-          }
-          .option("checkpointLocation", s"$src/ckpt")
-          .start()
-        try {
-          (0 to 2).foreach { b =>
-            val f = new java.io.File(s"$src/staged/b$b").listFiles()
-              .filter(_.getName.endsWith(".parquet")).head
-            java.nio.file.Files.move(f.toPath,
-              new java.io.File(watchDir, f"b$b.parquet").toPath)
-            drainWithin(q)
-          }
-        } finally q.stop()
-        // restart replay: batch 1 re-delivered → same version, claim must fail
-        val b1staged = C.manifestEntries(work, 3).diff(C.manifestEntries(work, 2))
-        require(!C.commitExactlyOnce(work, 3, b1staged),
-          "a replayed micro-batch must lose the version claim")
-        require(C.latestVersion(work) == 4, "3 batches over init must land at v4")
-        graft.engine.Layouts.ensure(s, table)(new java.io.File(table).exists()) {
-          require(new java.io.File(work).renameTo(new java.io.File(table)),
-            s"atomic publish of $work failed")
-        }
-      } finally {
-        rmTree(new java.io.File(src))
-        val w = new java.io.File(work)
-        if (w.exists()) rmTree(w) // race loser or failed build — never published
+  /** One-time exactly-once-sink scenario (built and published once per sf
+    * through [[graft.engine.Layouts.publish]]): a REAL file-watch
+    * streaming query delivers the events corpus in 3 deterministic
+    * micro-batches to a foreachBatch sink that stages each batch and
+    * claims manifest version batchId + 2 through
+    * [[graft.engine.Commits.commitExactlyOnce]] — the Delta txnVersion
+    * mechanic. The builder then simulates the restart replay:
+    * re-attempting batch 1's version with its own staged path must LOSE
+    * the put-if-absent claim, proving the sink de-duplicates at-least-once
+    * delivery into exactly-once table state. */
+  private def eosScenario(s: SparkSession, d: String): String =
+    graft.engine.Layouts.publish(s, s"/tmp/graft_eos/tbl_${graft.engine.Layouts.tag(d)}") { work =>
+      val C = graft.engine.Commits
+      val ev = t(s, d, "events")
+        .select(col("event_id"), col("ts"), col("user_id"), col("event_type"), col("value"))
+      C.init(work, C.stage(ev.limit(0), work, "base"))
+      StreamHarness.replayForeach(s, StreamHarness.idHashBatches(ev)) { (df, batchId) =>
+        val staged = C.stage(df, work, s"b$batchId")
+        require(C.commitExactlyOnce(work, batchId.toInt + 2, Seq(staged)),
+          s"first delivery of batch $batchId must win version ${batchId + 2}")
       }
+      // restart replay: batch 1 re-delivered → same version, claim must fail
+      val b1staged = C.manifestEntries(work, 3).diff(C.manifestEntries(work, 2))
+      require(!C.commitExactlyOnce(work, 3, b1staged),
+        "a replayed micro-batch must lose the version claim")
+      require(C.latestVersion(work) == 4, "3 batches over init must land at v4")
     }
-    table
-  }
 
   /** Streaming CDC upsert scenario (VERDICT r10 #3) — the lakehouse
     * pattern st_exactly_once_sink's APPEND proof left open: a change
@@ -141,148 +74,94 @@ object Temporal {
     * simulates the restart replay: batch 1 is re-merged against v2 state
     * and re-attempted at version 3 — the claim must LOSE and the v3
     * manifest must be byte-identical, proving a replayed CDC batch leaves
-    * table state unchanged. Same out-of-lock build + timeout-guarded
-    * drain + scratch cleanup discipline as eosScenario. */
-  private def cdcScenario(s: SparkSession, d: String): String = {
-    val C = graft.engine.Commits
+    * table state unchanged. */
+  private def cdcScenario(s: SparkSession, d: String): String =
     // tbl2: the r12 layout adds stored `_change_data/` per commit — a new
     // path so a pre-CDF materialization is abandoned, never half-upgraded
-    val table = s"/tmp/graft_cdc/tbl2_${graft.engine.Layouts.tag(d)}"
-    if (!new java.io.File(table).exists()) {
-      val work = table + ".build-" + java.util.UUID.randomUUID().toString.take(8)
-      val src = table + ".src-" + java.util.UUID.randomUUID().toString.take(8)
-      try {
-        val P = 1000000007L
-        val ch = t(s, d, "events")
-          .select(col("event_id"), col("ts"), col("user_id"), col("value"),
-            when(col("event_id") % 10 === 0, "D").otherwise("U").as("op"))
-        val batched = ch.withColumn("batch",
-          pmod(col("event_id"), lit(P)) * 2654435761L % P % 3)
-        (0 to 2).foreach { b =>
-          batched.filter(col("batch") === b).drop("batch")
-            .coalesce(1).write.parquet(s"$src/staged/b$b")
-        }
-        val watchDir = new java.io.File(src, "in")
-        watchDir.mkdirs()
-        // v1 = the empty state (key, ts, event_id, value — no op column)
-        C.init(work, C.stage(
-          ch.select("user_id", "ts", "event_id", "value").limit(0), work, "base"))
-        // the MERGE a micro-batch applies: ONE window for within-batch
-        // LWW, one left_anti to retract touched keys, one union of the
-        // surviving upserts — O(batch + state), no driver-side rows.
-        // Returns (post-merge state, the commit's CDF rows): the committer
-        // is the ONE place that holds both the predecessor state and the
-        // batch winners, so emitting the Delta-tagged change rows here is
-        // one extra left join on the key — the O(changes) write path that
-        // spares every downstream CDC consumer the O(state) snapshot diff
-        // (VERDICT r11 #1).
-        def merged(changes: DataFrame, basis: Int): (DataFrame, DataFrame) = {
-          val w = Window.partitionBy("user_id")
-            .orderBy(col("ts").desc, col("event_id").desc)
-          val winners = changes.withColumn("rn", row_number().over(w))
-            .filter(col("rn") === 1)
-          val prev = s.read.parquet(C.snapshotFiles(work, basis): _*)
-          val state = prev
-            .join(winners.select("user_id"), Seq("user_id"), "left_anti")
-            .unionByName(winners.filter(col("op") === "U")
-              .select("user_id", "ts", "event_id", "value"))
-          // classify each winner against the predecessor row (key-
-          // partitioned left join): U+absent → insert; U+present with a
-          // different winning event → update (pre+post images); D+present
-          // → delete (preimage); D+absent and U+identical → no change row
-          val j = winners.join(
-            prev.select(col("user_id"), col("ts").as("p_ts"),
-              col("event_id").as("p_event_id"), col("value").as("p_value")),
-            Seq("user_id"), "left")
-          def img(tc: Column, ec: Column, vc: Column, ct: String) =
-            struct(tc.as("ts"), ec.as("event_id"), vc.as("value"),
-              lit(ct).as("_change_type"))
-          val post = img(col("ts"), col("event_id"), col("value"), _: String)
-          val pre = img(col("p_ts"), col("p_event_id"), col("p_value"), _: String)
-          val cdf = j.select(col("user_id"), explode(
-              when(col("op") === "U" && col("p_event_id").isNull,
-                array(post("insert")))
-              .when(col("op") === "U" && col("p_event_id").isNotNull &&
-                    col("p_event_id") =!= col("event_id"),
-                array(pre("update_preimage"), post("update_postimage")))
-              .when(col("op") === "D" && col("p_event_id").isNotNull,
-                array(pre("delete")))
-              // slice(x, 1, 0): an empty array of the branch type, so the
-              // no-op cases (D on an absent key; U re-winning the same
-              // event) emit zero rows through the explode
-              .otherwise(slice(array(post("noop")), 1, 0))).as("c"))
-            .select(col("user_id"), col("c.ts").as("ts"),
-              col("c.event_id").as("event_id"), col("c.value").as("value"),
-              col("c._change_type").as("_change_type"))
-          (state, cdf)
-        }
-        val schema = s.read.parquet(s"$src/staged/b0").schema
-        val q = s.readStream.schema(schema).parquet(watchDir.getPath)
-          .writeStream
-          .foreachBatch { (df: org.apache.spark.sql.Dataset[org.apache.spark.sql.Row],
-                           batchId: Long) =>
-            val version = batchId.toInt + 2
-            val (state, cdf) = merged(df, version - 1)
-            val staged = C.stage(state, work, s"m$batchId")
-            require(C.commitExactlyOnceReplace(work, version, Seq(staged)),
-              s"first delivery of CDC batch $batchId must win version $version")
-            // stored change files land AFTER the durable commit (they
-            // describe a committed transition) and idempotently — a
-            // replayer can re-derive and re-publish the identical rows,
-            // which closes the crash window between claim and CDF write
-            C.ChangeData.publish(
-              cdf.withColumn("_commit_version", lit(version.toLong)),
-              work, version)
-            ()
-          }
-          .option("checkpointLocation", s"$src/ckpt")
-          .start()
-        try {
-          (0 to 2).foreach { b =>
-            val f = new java.io.File(s"$src/staged/b$b").listFiles()
-              .filter(_.getName.endsWith(".parquet")).head
-            java.nio.file.Files.move(f.toPath,
-              new java.io.File(watchDir, f"b$b.parquet").toPath)
-            drainWithin(q)
-          }
-        } finally q.stop()
-        // restart replay: batch 1 re-delivered (at-least-once) → re-merge
-        // against v2 and re-attempt v3; the claim must lose and v3's
-        // manifest must not move — table state provably unchanged
-        val before = C.manifestEntries(work, 3)
-        val b1again = merged(s.read.parquet(s"${watchDir.getPath}/b1.parquet"), 2)._1
-        val restaged = C.stage(b1again, work, "m1-replay")
-        require(!C.commitExactlyOnceReplace(work, 3, Seq(restaged)),
-          "a replayed CDC batch must lose the version claim")
-        require(C.manifestEntries(work, 3) == before,
-          "a lost CDC claim must leave the manifest untouched")
-        require(C.latestVersion(work) == 4, "3 CDC batches over init must land at v4")
-        graft.engine.Layouts.ensure(s, table)(new java.io.File(table).exists()) {
-          require(new java.io.File(work).renameTo(new java.io.File(table)),
-            s"atomic publish of $work failed")
-        }
-      } finally {
-        rmTree(new java.io.File(src))
-        val w = new java.io.File(work)
-        if (w.exists()) rmTree(w)
+    graft.engine.Layouts.publish(s, s"/tmp/graft_cdc/tbl2_${graft.engine.Layouts.tag(d)}") { work =>
+      val C = graft.engine.Commits
+      val ch = t(s, d, "events")
+        .select(col("event_id"), col("ts"), col("user_id"), col("value"),
+          when(col("event_id") % 10 === 0, "D").otherwise("U").as("op"))
+      val frames = StreamHarness.idHashBatches(ch)
+      // v1 = the empty state (key, ts, event_id, value — no op column)
+      C.init(work, C.stage(
+        ch.select("user_id", "ts", "event_id", "value").limit(0), work, "base"))
+      // the MERGE a micro-batch applies: ONE window for within-batch
+      // LWW, one left_anti to retract touched keys, one union of the
+      // surviving upserts — O(batch + state), no driver-side rows.
+      // Returns (post-merge state, the commit's CDF rows): the committer
+      // is the ONE place that holds both the predecessor state and the
+      // batch winners, so emitting the Delta-tagged change rows here is
+      // one extra left join on the key — the O(changes) write path that
+      // spares every downstream CDC consumer the O(state) snapshot diff
+      // (VERDICT r11 #1).
+      def merged(changes: DataFrame, basis: Int): (DataFrame, DataFrame) = {
+        val w = Window.partitionBy("user_id")
+          .orderBy(col("ts").desc, col("event_id").desc)
+        val winners = changes.withColumn("rn", row_number().over(w))
+          .filter(col("rn") === 1)
+        val prev = s.read.parquet(C.snapshotFiles(work, basis): _*)
+        val state = prev
+          .join(winners.select("user_id"), Seq("user_id"), "left_anti")
+          .unionByName(winners.filter(col("op") === "U")
+            .select("user_id", "ts", "event_id", "value"))
+        // classify each winner against the predecessor row (key-
+        // partitioned left join): U+absent → insert; U+present with a
+        // different winning event → update (pre+post images); D+present
+        // → delete (preimage); D+absent and U+identical → no change row
+        val j = winners.join(
+          prev.select(col("user_id"), col("ts").as("p_ts"),
+            col("event_id").as("p_event_id"), col("value").as("p_value")),
+          Seq("user_id"), "left")
+        def img(tc: Column, ec: Column, vc: Column, ct: String) =
+          struct(tc.as("ts"), ec.as("event_id"), vc.as("value"),
+            lit(ct).as("_change_type"))
+        val post = img(col("ts"), col("event_id"), col("value"), _: String)
+        val pre = img(col("p_ts"), col("p_event_id"), col("p_value"), _: String)
+        val cdf = j.select(col("user_id"), explode(
+            when(col("op") === "U" && col("p_event_id").isNull,
+              array(post("insert")))
+            .when(col("op") === "U" && col("p_event_id").isNotNull &&
+                  col("p_event_id") =!= col("event_id"),
+              array(pre("update_preimage"), post("update_postimage")))
+            .when(col("op") === "D" && col("p_event_id").isNotNull,
+              array(pre("delete")))
+            // slice(x, 1, 0): an empty array of the branch type, so the
+            // no-op cases (D on an absent key; U re-winning the same
+            // event) emit zero rows through the explode
+            .otherwise(slice(array(post("noop")), 1, 0))).as("c"))
+          .select(col("user_id"), col("c.ts").as("ts"),
+            col("c.event_id").as("event_id"), col("c.value").as("value"),
+            col("c._change_type").as("_change_type"))
+        (state, cdf)
       }
+      StreamHarness.replayForeach(s, frames) { (df, batchId) =>
+        val version = batchId.toInt + 2
+        val (state, cdf) = merged(df, version - 1)
+        val staged = C.stage(state, work, s"m$batchId")
+        require(C.commitExactlyOnceReplace(work, version, Seq(staged)),
+          s"first delivery of CDC batch $batchId must win version $version")
+        // stored change files land AFTER the durable commit (they
+        // describe a committed transition) and idempotently — a
+        // replayer can re-derive and re-publish the identical rows,
+        // which closes the crash window between claim and CDF write
+        C.ChangeData.publish(
+          cdf.withColumn("_commit_version", lit(version.toLong)),
+          work, version)
+      }
+      // restart replay: batch 1 re-delivered (at-least-once) → re-merge
+      // against v2 and re-attempt v3; the claim must lose and v3's
+      // manifest must not move — table state provably unchanged
+      val before = C.manifestEntries(work, 3)
+      val restaged = C.stage(merged(frames(1), 2)._1, work, "m1-replay")
+      require(!C.commitExactlyOnceReplace(work, 3, Seq(restaged)),
+        "a replayed CDC batch must lose the version claim")
+      require(C.manifestEntries(work, 3) == before,
+        "a lost CDC claim must leave the manifest untouched")
+      require(C.latestVersion(work) == 4, "3 CDC batches over init must land at v4")
     }
-    table
-  }
 
-  /** Streaming CDF CONSUMER scenario (VERDICT r11 #5): the downstream half
-    * of the stored-change-file design. A REAL file-watch streaming query
-    * receives the cdcScenario table's per-commit `_change_data/` files one
-    * version per micro-batch (copied, never moved — the source table is a
-    * published artifact) and reconstructs the keyed state by applying ONLY
-    * the change rows: retract the touched keys (delete/update), append the
-    * insert/update_postimage rows — O(changes) per version, the predecessor
-    * snapshot is joined on the key but never diffed. Each reconstructed
-    * state claims its version on the consumer's OWN log through the same
-    * exactly-once replace mechanic, so a replayed change file leaves the
-    * reconstruction unchanged. The st_cdf_stream face then proves the
-    * reconstruction ≡ the CDC table's ledger at every version (the
-    * FacesInvariantSpec reconciliation, end-to-end through the stream). */
   /** CDF VACUUM scenario (VERDICT r12 #7): a file-level clone of the CDC
     * table (snapshots + manifests + change data — clones are how a
     * retention experiment must run: the source table is a published
@@ -290,95 +169,66 @@ object Temporal {
     * marker-first engine path. Deterministic artifact of the snapshot,
     * committed once per sf like every scenario. */
   private def cdfVacuumScenario(s: SparkSession, d: String): String = {
-    val C = graft.engine.Commits
     val src0 = cdcScenario(s, d) // ensures snapshots + change data exist
-    val table = s"/tmp/graft_cdc/vac_${graft.engine.Layouts.tag(d)}"
-    if (!new java.io.File(table).exists()) {
-      val work = table + ".build-" + java.util.UUID.randomUUID().toString.take(8)
-      try {
-        def copyTree(from: java.io.File, to: java.io.File): Unit = {
-          if (from.isDirectory) {
-            to.mkdirs()
-            Option(from.listFiles()).foreach(_.foreach(f =>
-              copyTree(f, new java.io.File(to, f.getName))))
-          } else
-            java.nio.file.Files.copy(from.toPath, to.toPath)
-        }
-        copyTree(new java.io.File(src0), new java.io.File(work))
-        val removed = C.ChangeData.vacuum(work, keepFrom = 4)
-        require(removed == Seq(2, 3),
-          s"vacuum below v4 must remove exactly v2/v3 change files, got $removed")
-        require(C.ChangeData.vacuum(work, keepFrom = 4).isEmpty,
-          "a second vacuum at the same horizon must be a no-op")
-        require(C.ChangeData.versions(work) == Seq(4),
-          "v4's change file must survive the horizon")
-        graft.engine.Layouts.ensure(s, table)(new java.io.File(table).exists()) {
-          require(new java.io.File(work).renameTo(new java.io.File(table)),
-            s"atomic publish of $work failed")
-        }
-      } finally {
-        val w = new java.io.File(work)
-        if (w.exists()) rmTree(w)
+    graft.engine.Layouts.publish(s, s"/tmp/graft_cdc/vac_${graft.engine.Layouts.tag(d)}") { work =>
+      val C = graft.engine.Commits
+      def copyTree(from: java.io.File, to: java.io.File): Unit = {
+        if (from.isDirectory) {
+          to.mkdirs()
+          Option(from.listFiles()).foreach(_.foreach(f =>
+            copyTree(f, new java.io.File(to, f.getName))))
+        } else
+          java.nio.file.Files.copy(from.toPath, to.toPath)
       }
+      copyTree(new java.io.File(src0), new java.io.File(work))
+      val removed = C.ChangeData.vacuum(work, keepFrom = 4)
+      require(removed == Seq(2, 3),
+        s"vacuum below v4 must remove exactly v2/v3 change files, got $removed")
+      require(C.ChangeData.vacuum(work, keepFrom = 4).isEmpty,
+        "a second vacuum at the same horizon must be a no-op")
+      require(C.ChangeData.versions(work) == Seq(4),
+        "v4's change file must survive the horizon")
     }
-    table
   }
 
+  /** Streaming CDF CONSUMER scenario (VERDICT r11 #5): the downstream half
+    * of the stored-change-file design. A REAL file-watch streaming query
+    * receives the cdcScenario table's per-commit `_change_data/` rows one
+    * version per micro-batch (re-staged, never moved — the source table is
+    * a published artifact) and reconstructs the keyed state by applying
+    * ONLY the change rows: retract the touched keys (delete/update), append
+    * the insert/update_postimage rows — O(changes) per version, the
+    * predecessor snapshot is joined on the key but never diffed. Each
+    * reconstructed state claims its version on the consumer's OWN log
+    * through the same exactly-once replace mechanic, so a replayed change
+    * file leaves the reconstruction unchanged. The st_cdf_stream face then
+    * proves the reconstruction ≡ the CDC table's ledger at every version
+    * (the FacesInvariantSpec reconciliation, end-to-end through the
+    * stream). */
   private def cdfStreamScenario(s: SparkSession, d: String): String = {
-    val C = graft.engine.Commits
     val src0 = cdcScenario(s, d) // ensures the change data exists
-    val table = s"/tmp/graft_cdc/recon_${graft.engine.Layouts.tag(d)}"
-    if (!new java.io.File(table).exists()) {
-      val work = table + ".build-" + java.util.UUID.randomUUID().toString.take(8)
-      val src = table + ".src-" + java.util.UUID.randomUUID().toString.take(8)
-      try {
-        val watchDir = new java.io.File(src, "in")
-        watchDir.mkdirs()
-        C.init(work, C.stage(
-          s.read.parquet(C.snapshotFiles(src0, 1): _*).limit(0), work, "base"))
-        val schema = C.ChangeData.read(s, src0, 2).schema
-        val q = s.readStream.schema(schema).parquet(watchDir.getPath)
-          .writeStream
-          .foreachBatch { (df: org.apache.spark.sql.Dataset[org.apache.spark.sql.Row],
-                           batchId: Long) =>
-            val version = batchId.toInt + 2
-            val touched = df.filter(col("_change_type")
-                .isin("delete", "update_preimage", "update_postimage"))
-              .select("user_id").distinct()
-            val next = s.read.parquet(C.snapshotFiles(work, version - 1): _*)
-              .join(touched, Seq("user_id"), "left_anti")
-              .unionByName(df.filter(col("_change_type")
-                  .isin("insert", "update_postimage"))
-                .select("user_id", "ts", "event_id", "value"))
-            val staged = C.stage(next, work, s"c$batchId")
-            require(C.commitExactlyOnceReplace(work, version, Seq(staged)),
-              s"first delivery of change file v$version must win its claim")
-            ()
-          }
-          .option("checkpointLocation", s"$src/ckpt")
-          .start()
-        try {
-          (2 to 4).foreach { v =>
-            val cdDir = new java.io.File(src0, f"_change_data/v$v%05d")
-            val f = cdDir.listFiles().filter(_.getName.endsWith(".parquet")).head
-            java.nio.file.Files.copy(f.toPath,
-              new java.io.File(watchDir, f"v$v.parquet").toPath)
-            drainWithin(q)
-          }
-        } finally q.stop()
-        require(C.latestVersion(work) == 4,
-          "3 change files over init must land the reconstruction at v4")
-        graft.engine.Layouts.ensure(s, table)(new java.io.File(table).exists()) {
-          require(new java.io.File(work).renameTo(new java.io.File(table)),
-            s"atomic publish of $work failed")
-        }
-      } finally {
-        rmTree(new java.io.File(src))
-        val w = new java.io.File(work)
-        if (w.exists()) rmTree(w)
+    graft.engine.Layouts.publish(s, s"/tmp/graft_cdc/recon_${graft.engine.Layouts.tag(d)}") { work =>
+      val C = graft.engine.Commits
+      C.init(work, C.stage(
+        s.read.parquet(C.snapshotFiles(src0, 1): _*).limit(0), work, "base"))
+      val changes = (2 to 4).map(v => C.ChangeData.read(s, src0, v))
+      StreamHarness.replayForeach(s, changes) { (df, batchId) =>
+        val version = batchId.toInt + 2
+        val touched = df.filter(col("_change_type")
+            .isin("delete", "update_preimage", "update_postimage"))
+          .select("user_id").distinct()
+        val next = s.read.parquet(C.snapshotFiles(work, version - 1): _*)
+          .join(touched, Seq("user_id"), "left_anti")
+          .unionByName(df.filter(col("_change_type")
+              .isin("insert", "update_postimage"))
+            .select("user_id", "ts", "event_id", "value"))
+        val staged = C.stage(next, work, s"c$batchId")
+        require(C.commitExactlyOnceReplace(work, version, Seq(staged)),
+          s"first delivery of change file v$version must win its claim")
       }
+      require(C.latestVersion(work) == 4,
+        "3 change files over init must land the reconstruction at v4")
     }
-    table
   }
 
   val queries: Map[String, Q] = Map(
@@ -485,10 +335,7 @@ object Temporal {
     // controlled, not by a cross-engine hash on order-sensitive floats.
     "st_repair_roundtrip" -> ((s, d) => {
       import s.implicits._
-      val fragPath = s"/tmp/graft_stream/tws_frags_${graft.engine.Layouts.tag(d)}"
-      graft.engine.Layouts.ensureCommitted(s, fragPath) {
-        graft.streaming.StreamHarness.materializeTwsFragments(s, d, fragPath)
-      }
+      val fragPath = StreamHarness.twsFragments(s, d)
       val repaired = graft.streaming.Streams.repairSessions(
           s.read.parquet(fragPath).as[graft.streaming.Streams.SessionOut])
         .toDF()

@@ -1716,7 +1716,7 @@ class FacesInvariantSpec extends AnyFunSuite with SharedSparkSpec {
     val cums = rows.map(_.getLong(5))
     assert(cums.toSeq == rows.map(_.getLong(2)).scanLeft(0L)(_ + _).tail.toSeq,
       "cum_scored must be the running sum of n_scored")
-    // THE headline claim (VERDICT r12 #4, measured by HnswSweep): at
+    // THE headline claim (VERDICT r12 #4, measured by a schedule sweep): at
     // this sf the layer stack reaches >= the 2-layer face's final recall
     // at <= its scored-candidate budget (strict dominance; the in-face
     // doc carries the three-sf table including the one disclosed +2.1%
