@@ -41,7 +41,7 @@ object FileSkipping {
     * driver list (≤ number of files) — the documented exception to the
     * no-collect-in-query-paths rule, mirroring a Delta log read. */
   def survivors(spark: SparkSession, path: String, lo: Double, hi: Double): Seq[String] =
-    spark.read.parquet(statsPath(path))
+    Tables.parquet(spark, statsPath(path))
       .filter(col("min_key") <= hi && col("max_key") >= lo)
       .select("file").collect().map(_.getString(0)).toSeq
 
@@ -52,9 +52,8 @@ object FileSkipping {
   def prunedRead(spark: SparkSession, path: String, keyCol: String,
                  lo: Double, hi: Double): DataFrame = {
     val files = survivors(spark, path, lo, hi)
-    val full = spark.read.parquet(path)
     val pruned =
-      if (files.isEmpty) full.limit(0)
+      if (files.isEmpty) Tables.parquet(spark, path).limit(0)
       else spark.read.parquet(files: _*)
     pruned.filter(col(keyCol) >= lo && col(keyCol) <= hi)
   }

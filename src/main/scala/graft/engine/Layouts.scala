@@ -1,6 +1,6 @@
 package graft.engine
 
-import org.apache.spark.sql.SparkSession
+import org.apache.spark.sql.{DataFrame, SparkSession}
 
 /** First-use creation of the persistent /tmp layouts (bucketed tables,
   * partitioned parquet, format round-trips, file-stats ranges) that several
@@ -62,8 +62,16 @@ object Layouts {
     }
 
   /** The common case: existence = the layout's _SUCCESS commit marker. */
-  def ensureCommitted(s: SparkSession, path: String)(write: => Unit): Unit =
+  private def ensureCommitted(s: SparkSession, path: String)(write: => Unit): Unit =
     ensure(s, path)(new java.io.File(s"$path/_SUCCESS").exists())(write)
+
+  /** The committed layout at `path`, written first if its _SUCCESS marker is
+    * missing, then opened by `open`: [[Tables.parquet]] unless not parquet. */
+  def committed(s: SparkSession, path: String,
+      open: (SparkSession, String) => DataFrame = Tables.parquet)(write: => Unit): DataFrame = {
+    ensureCommitted(s, path)(write)
+    open(s, path)
+  }
 
   /** The one publish path for a per-sf scenario table: returns `path` at
     * once if it exists. Otherwise `build` fills a fresh `path.build-<id>`

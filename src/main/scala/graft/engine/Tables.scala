@@ -1,6 +1,11 @@
 package graft.engine
 
+import org.apache.hadoop.fs.{FileStatus, Path}
+import org.apache.parquet.format.converter.ParquetMetadataConverter.SKIP_ROW_GROUPS
+import org.apache.parquet.hadoop.Footer
+import org.apache.parquet.hadoop.util.HadoopInputFile
 import org.apache.spark.sql.{DataFrame, SparkSession}
+import org.apache.spark.sql.execution.datasources.parquet.{ParquetFileFormat, ParquetFooterReader, ParquetToSparkSchemaConverter}
 
 /** Typed loaders for the driver's synthetic star schema (TESTDATA.md) and
   * shared session defaults.
@@ -10,7 +15,7 @@ import org.apache.spark.sql.{DataFrame, SparkSession}
   *    happen in `FileSourceScanExec` for free as long as queries stay
   *    declarative (SURVEY.md §4).
   *  - At cluster scale the same loaders work over a partitioned lake layout
-  *    (`.../table/year=.../part-*.parquet`); `spark.read.parquet(dir)` picks up
+  *    (`.../table/year=.../part-*.parquet`); [[parquet]] on the dir picks up
   *    partition columns and Catalyst prunes partitions from `WHERE` clauses.
   */
 object Tables {
@@ -32,31 +37,58 @@ object Tables {
       .getOrElse(0L)
   }
 
-  def load(spark: SparkSession, sfDir: String, name: String): DataFrame = name match {
-    case "events" =>
-      // events.ts has shipped as parquet TIMESTAMP(NANOS) in some data drops
-      // (which Spark's vectorized reader rejects — [PARQUET_TYPE_ILLEGAL])
-      // and as plain TIMESTAMP(MICROS)/NTZ in others, so the loader branches
-      // on the materialized type rather than assuming either. With
-      // nanosAsLong=true a nanos column arrives as LongType: floor-div to
-      // micros (integer `div` — a double division would lose precision at
-      // 1.7e18 ns); DuckDB's reader truncates ns→µs identically, so oracle
-      // comparisons stay exact. A micros column arrives as TIMESTAMP_NTZ:
-      // cast to session-TZ TIMESTAMP (identity under the UTC session default,
-      // matching the instant DuckDB reads) so downstream window/unix_micros
-      // logic sees one type either way.
-      spark.conf.set("spark.sql.legacy.parquet.nanosAsLong", "true")
-      val raw = spark.read.parquet(s"$sfDir/$name.parquet")
-      import org.apache.spark.sql.functions.{col, expr, timestamp_micros}
-      raw.schema("ts").dataType match {
-        case org.apache.spark.sql.types.LongType =>
-          raw.withColumn("ts", timestamp_micros(expr("ts div 1000")))
-        case _: org.apache.spark.sql.types.TimestampNTZType =>
-          raw.withColumn("ts", col("ts").cast("timestamp"))
-        case _ => raw
-      }
-    case _ =>
-      spark.read.parquet(s"$sfDir/$name.parquet")
+  def load(spark: SparkSession, sfDir: String, name: String): DataFrame = {
+    // events.ts has shipped as parquet TIMESTAMP(NANOS) in some data drops
+    // (which Spark's vectorized reader rejects — [PARQUET_TYPE_ILLEGAL])
+    // and as plain TIMESTAMP(MICROS)/NTZ in others, so the loader branches
+    // on the materialized type rather than assuming either. With
+    // nanosAsLong=true a nanos column arrives as LongType: floor-div to
+    // micros (integer `div` — a double division would lose precision at
+    // 1.7e18 ns); DuckDB's reader truncates ns→µs identically, so oracle
+    // comparisons stay exact. A micros column arrives as TIMESTAMP_NTZ:
+    // cast to session-TZ TIMESTAMP (identity under the UTC session default,
+    // matching the instant DuckDB reads) so downstream window/unix_micros
+    // logic sees one type either way.
+    if (name == "events") spark.conf.set("spark.sql.legacy.parquet.nanosAsLong", "true")
+    val raw = parquet(spark, s"$sfDir/$name.parquet")
+    import org.apache.spark.sql.functions.{col, expr, timestamp_micros}
+    if (name != "events") raw else raw.schema("ts").dataType match {
+      case org.apache.spark.sql.types.LongType =>
+        raw.withColumn("ts", timestamp_micros(expr("ts div 1000")))
+      case _: org.apache.spark.sql.types.TimestampNTZType =>
+        raw.withColumn("ts", col("ts").cast("timestamp"))
+      case _ => raw
+    }
+  }
+
+  /** Open the parquet table at `path` with no Spark job: the driver reads
+    * the one footer Spark's schema-inference job would (`_common_metadata`,
+    * else `_metadata`, else the first data file in path order; row groups
+    * skipped) and converts it with the session's flags, so schema, plans
+    * and results are inference's own. No cache: a table rewritten at `path`
+    * is seen at once. No data file: `spark.read.parquet` raises Spark's error. */
+  def parquet(s: SparkSession, path: String): DataFrame = {
+    val conf = s.sessionState.newHadoopConf()
+    val fs = new Path(path).getFileSystem(conf)
+    val summaries = Seq("_common_metadata", "_metadata")
+    // skip `_*` (not `_k=v` partition dirs or summaries), `.*`, `*._COPYING_`
+    def leaves(f: FileStatus): Seq[FileStatus] = if (!f.isDirectory) Seq(f) else
+      fs.listStatus(f.getPath).toSeq.filter { c =>
+        val n = c.getPath.getName
+        summaries.exists(n.startsWith) || !(n.startsWith("_") && !n.contains("=") ||
+          n.startsWith(".") || n.endsWith("._COPYING_"))
+      }.flatMap(leaves)
+    val files = scala.util.Try(fs.getFileStatus(new Path(path))).toOption.toSeq.flatMap(leaves)
+      .sortBy(_.getPath.toString)
+    summaries.flatMap(n => files.find(_.getPath.getName == n)).headOption
+      .orElse(files.find(f => !summaries.contains(f.getPath.getName))) match {
+      case Some(f) =>
+        val footer = new Footer(f.getPath,
+          ParquetFooterReader.readFooter(HadoopInputFile.fromStatus(f, conf), SKIP_ROW_GROUPS))
+        s.read.schema(ParquetFileFormat.readSchemaFromFooter(
+          footer, new ParquetToSparkSchemaConverter(s.sessionState.conf))).parquet(path)
+      case None => s.read.parquet(path)
+    }
   }
 
   /** The engine's one session factory: every main (Bench, Verify, the

@@ -3,7 +3,7 @@ package graft.queries
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.expressions.Window
-import graft.engine.Tables
+import graft.engine.Tables.{load => t}
 
 /** Constellation-fingerprint audio dedup (VERDICT r13 missing #2) — the
   * audio member of the dedup triad beside the MinHash text pipeline
@@ -47,7 +47,6 @@ import graft.engine.Tables
   */
 object AudioDedup {
   type Q = (SparkSession, String) => DataFrame
-  private def t(s: SparkSession, d: String, n: String) = Tables.load(s, d, n)
 
   private val P = 1000000007L
 

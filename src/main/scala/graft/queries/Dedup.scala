@@ -4,6 +4,7 @@ import org.apache.spark.sql.{Column, DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.expressions.Window
 import graft.engine.{FixedPoint => FP, Tables, TextFunctions => T}
+import graft.engine.Tables.{load => t}
 
 /** Deduplication catalog over `documents` (builder-prompt first-class
   * component): exact (hash-groupBy), MinHash+LSH (shingle → minhash → band →
@@ -23,7 +24,6 @@ import graft.engine.{FixedPoint => FP, Tables, TextFunctions => T}
   */
 object Dedup {
   type Q = (SparkSession, String) => DataFrame
-  private def t(s: SparkSession, d: String, n: String) = Tables.load(s, d, n)
 
   /** documents ∪ planted near-dups (+1M ids) ∪ planted exact dups (+2M ids). */
   private def corpus(s: SparkSession, d: String): DataFrame = {
@@ -117,7 +117,7 @@ object Dedup {
     val sg = sigs(s, d)
     val tag = graft.engine.Layouts.tag(d)
     val path = s"/tmp/graft_dedup/cand_$tag"
-    graft.engine.Layouts.ensureCommitted(s, path) {
+    val cand = graft.engine.Layouts.committed(s, path) {
       val bd = bands(sg)
       bd.as("x").join(bd.as("y"),
           col("x.band") === col("y.band") && col("x.bkey") === col("y.bkey") &&
@@ -126,7 +126,7 @@ object Dedup {
         .coalesce(2)
         .write.mode("overwrite").parquet(path)
     }
-    (s.read.parquet(path), sg)
+    (cand, sg)
   }
 
   /** LSH candidate pairs joined to both sides' distinct bigram sets with
@@ -251,12 +251,11 @@ object Dedup {
   private def ccLabels(s: SparkSession, d: String): DataFrame = {
     val tag = graft.engine.Layouts.tag(d)
     val path = s"/tmp/graft_dedup/cc_$tag"
-    graft.engine.Layouts.ensureCommitted(s, path) {
+    graft.engine.Layouts.committed(s, path) {
       connectedComponents(corpus(s, d), lshPairs(s, d))
         .coalesce(2)
         .write.mode("overwrite").parquet(path)
     }
-    s.read.parquet(path)
   }
 
   /** Committed 4-gram table + df-ranked prefix index (dd_prefix_filter):
@@ -273,7 +272,7 @@ object Dedup {
     val tag = graft.engine.Layouts.tag(d)
     val gPath = s"/tmp/graft_dedup/grams4_$tag"
     val pPath = s"/tmp/graft_dedup/prefix4_$tag"
-    graft.engine.Layouts.ensureCommitted(s, pPath) {
+    val prefix = graft.engine.Layouts.committed(s, pPath) {
       val g4 = when(size(col("__th")) < 4, array().cast("array<long>"))
         .otherwise(expr(
           """transform(sequence(1, size(__th) - 3),
@@ -296,7 +295,7 @@ object Dedup {
         .coalesce(2).write.mode("overwrite").parquet(pPath)
       grams.unpersist()
     }
-    (s.read.parquet(gPath), s.read.parquet(pPath))
+    (Tables.parquet(s, gPath), prefix)
   }
 
   /** Maximal duplicated 8-token spans per doc (the Lee et al. 2022
@@ -311,11 +310,10 @@ object Dedup {
     // Derivation is deterministic; the oracles keep recomputing it in SQL.
     val tag = graft.engine.Layouts.tag(d)
     val path = s"/tmp/graft_dedup/spans8_$tag"
-    graft.engine.Layouts.ensureCommitted(s, path) {
+    graft.engine.Layouts.committed(s, path) {
       substringSpansDerive(s, d).coalesce(2)
         .write.mode("overwrite").parquet(path)
     }
-    s.read.parquet(path)
   }
 
   private def substringSpansDerive(s: SparkSession, d: String): DataFrame = {
@@ -599,7 +597,7 @@ object Dedup {
     "dd_simhash_near" -> ((s, d) => {
       val tag = graft.engine.Layouts.tag(d)
       val path = s"/tmp/graft_dedup/shcand_$tag"
-      graft.engine.Layouts.ensureCommitted(s, path) {
+      graft.engine.Layouts.committed(s, path) {
         val sh = stagedSimhash(corpus(s, d)).cache()
         val byteBands = sh.select(col("doc_id"), col("sh"), explode(array((0 until 3).map(k =>
             struct(lit(k).as("band"), (floor(col("sh") / math.pow(2, 8 * k).toLong).cast("long") % 256).as("bkey"))): _*)).as("bd"))
@@ -613,7 +611,6 @@ object Dedup {
           .coalesce(2)
           .write.mode("overwrite").parquet(path)
       }
-      s.read.parquet(path)
         .filter(col("hamming") <= 4)
         .orderBy("a", "b")
     }),
@@ -1183,7 +1180,7 @@ object Dedup {
       val w = 4
       val tag = graft.engine.Layouts.tag(d)
       val path = s"/tmp/graft_dedup/winnow4_$tag"
-      graft.engine.Layouts.ensureCommitted(s, path) {
+      val staged = graft.engine.Layouts.committed(s, path) {
         corpus(s, d)
           .select(col("doc_id"),
             T.shinglesFromHashes(T.tokenHashes(col("text"))).as("__sh"))
@@ -1195,7 +1192,6 @@ object Dedup {
               i => array_min(slice(col("__sh"), i + 1, lit(w))))).as("__fps"))
           .coalesce(2).write.mode("overwrite").parquet(path)
       }
-      val staged = s.read.parquet(path)
       val fps = staged.select(col("doc_id"), explode(col("__fps")).as("fp"))
       val kept = fps.join(
         fps.groupBy("fp").agg(countDistinct("doc_id").as("fp_df"))
@@ -1245,7 +1241,7 @@ object Dedup {
       val L = 5
       val tag = graft.engine.Layouts.tag(d)
       val path = s"/tmp/graft_dedup/suffix8_$tag"
-      graft.engine.Layouts.ensureCommitted(s, path) {
+      val stored = graft.engine.Layouts.committed(s, path) {
         val K = 8
         val base = corpus(s, d)
         val planted = base
@@ -1290,8 +1286,7 @@ object Dedup {
       // partition as delivered by the scan (file splits may cut or merge
       // stored partitions arbitrarily; the stitch below reassembles by
       // integers alone)
-      val local = s.read.parquet(path)
-        .select(col("spid").cast("int"), col("seq").cast("long"),
+      val local = stored.select(col("spid").cast("int"), col("seq").cast("long"),
           col("doc_id").cast("long"), col("karr"))
         .as[(Int, Long, Long, Seq[String])]
         .mapPartitions { it =>

@@ -4,6 +4,7 @@ import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.expressions.Window
 import graft.engine.{FixedPoint => FP, Tables}
+import graft.engine.Tables.{load => t}
 
 /** Graph-shaped analytics over the star schema: the customer→supplier
   * bipartite graph induced by orders⋈lineitem (an edge per distinct
@@ -23,7 +24,6 @@ import graft.engine.{FixedPoint => FP, Tables}
   */
 object Graph {
   type Q = (SparkSession, String) => DataFrame
-  private def t(s: SparkSession, d: String, n: String) = Tables.load(s, d, n)
 
   /** distinct customer→supplier trading edges, MATERIALIZED once per sf
     * (first-use parquet, the bucketed-layout pattern): six catalog faces
@@ -36,7 +36,7 @@ object Graph {
   private def edges(s: SparkSession, d: String): DataFrame = {
     val tag = graft.engine.Layouts.tag(d)
     val path = s"/tmp/graft_graph/edges_$tag"
-    graft.engine.Layouts.ensureCommitted(s, path) {
+    graft.engine.Layouts.committed(s, path) {
       t(s, d, "orders")
         .join(t(s, d, "lineitem"), col("o_orderkey") === col("l_orderkey"))
         .select(col("o_custkey").as("src"), col("l_suppkey").as("dst"))
@@ -44,7 +44,6 @@ object Graph {
         .coalesce(4)
         .write.mode("overwrite").parquet(path)
     }
-    s.read.parquet(path)
   }
 
   /** SYMMETRIC disjoint-id (customers even, suppliers odd) edge frame,
@@ -59,14 +58,13 @@ object Graph {
   private def symEdges(s: SparkSession, d: String): DataFrame = {
     val tag = graft.engine.Layouts.tag(d)
     val path = s"/tmp/graft_graph/symedges_$tag"
-    graft.engine.Layouts.ensureCommitted(s, path) {
+    graft.engine.Layouts.committed(s, path) {
       val base = edges(s, d)
         .select((col("src") * 2).as("src"), (col("dst") * 2 + 1).as("dst"))
       base.union(base.select(col("dst").as("src"), col("src").as("dst")))
         .coalesce(4)
         .write.mode("overwrite").parquet(path)
     }
-    s.read.parquet(path)
   }
 
   /** DIRECTED trade-flow edges (graph_scc_coloring) — the catalog's one
@@ -79,7 +77,7 @@ object Graph {
   private def dirEdges(s: SparkSession, d: String): DataFrame = {
     val tag = graft.engine.Layouts.tag(d)
     val path = s"/tmp/graft_graph/dedges_$tag"
-    graft.engine.Layouts.ensureCommitted(s, path) {
+    graft.engine.Layouts.committed(s, path) {
       val ol = t(s, d, "orders")
         .join(t(s, d, "lineitem"), col("o_orderkey") === col("l_orderkey"))
       val ship = ol.select(col("o_custkey").as("c"), col("l_suppkey").as("s"))
@@ -91,7 +89,6 @@ object Graph {
         .select((col("c") * 2).as("src"), (col("s") * 2 + 1).as("dst"))
       ship.union(ret).coalesce(4).write.mode("overwrite").parquet(path)
     }
-    s.read.parquet(path)
   }
 
   /** Degree-weighted symmetric adjacency (src, dst, outdeg) + node frame,
@@ -104,13 +101,12 @@ object Graph {
   private def weightedLayout(s: SparkSession, d: String): DataFrame = {
     val tag = graft.engine.Layouts.tag(d)
     val wPath = s"/tmp/graft_graph/symweighted_$tag"
-    graft.engine.Layouts.ensureCommitted(s, wPath) {
+    graft.engine.Layouts.committed(s, wPath) {
       val e = symEdges(s, d)
       e.join(e.groupBy(col("src")).agg(count(lit(1)).as("outdeg")), "src")
         .select(col("src"), col("dst"), col("outdeg"))
         .coalesce(4).write.mode("overwrite").parquet(wPath)
     }
-    s.read.parquet(wPath)
   }
 
   /** One WEIGHTED Louvain move pass (graph_louvain_levels): `e` is a
@@ -546,7 +542,7 @@ object Graph {
   private def cosupplyLayout(s: SparkSession, d: String): DataFrame = {
     val tag = graft.engine.Layouts.tag(d)
     val path = s"/tmp/graft_graph/cosupply_$tag"
-    graft.engine.Layouts.ensureCommitted(s, path) {
+    graft.engine.Layouts.committed(s, path) {
       val sp = t(s, d, "lineitem")
         .select(col("l_partkey").as("pk"),
           (year(col("l_shipdate")) * 100 + month(col("l_shipdate"))).as("m"),
@@ -558,7 +554,6 @@ object Graph {
         .coalesce(4)
         .write.mode("overwrite").parquet(path)
     }
-    s.read.parquet(path)
   }
 
   /** Degree-ORIENTED co-supply edge frame + its sorted out-adjacency,
@@ -574,7 +569,7 @@ object Graph {
     val tag = graft.engine.Layouts.tag(d)
     val orPath = s"/tmp/graft_graph/cosupply_or_$tag"
     val adjPath = s"/tmp/graft_graph/cosupply_adj_$tag"
-    graft.engine.Layouts.ensureCommitted(s, adjPath) {
+    val adj = graft.engine.Layouts.committed(s, adjPath) {
       val e = cosupplyLayout(s, d)
       val deg = e.select(col("u").as("n")).unionAll(e.select(col("v").as("n")))
         .groupBy("n").agg(count(lit(1)).as("dg"))
@@ -587,18 +582,18 @@ object Graph {
           when(lowFirst, col("u")).otherwise(col("v")).as("src"),
           when(lowFirst, col("v")).otherwise(col("u")).as("dst"))
       or.coalesce(2).write.mode("overwrite").parquet(orPath)
-      s.read.parquet(orPath)
+      Tables.parquet(s, orPath)
         .groupBy(col("src").as("n"))
         .agg(sort_array(collect_list(col("dst"))).as("nbrs"))
         .coalesce(2).write.mode("overwrite").parquet(adjPath)
     }
-    (s.read.parquet(orPath), s.read.parquet(adjPath))
+    (Tables.parquet(s, orPath), adj)
   }
 
   private def nodesLayout(s: SparkSession, d: String): DataFrame = {
     val tag = graft.engine.Layouts.tag(d)
     val nPath = s"/tmp/graft_graph/symnodes_$tag"
-    graft.engine.Layouts.ensureCommitted(s, nPath) {
+    graft.engine.Layouts.committed(s, nPath) {
       val e = symEdges(s, d)
       e.select(col("src").as("node")).union(e.select(col("dst").as("node")))
         .distinct().coalesce(1).write.mode("overwrite").parquet(nPath)
@@ -608,11 +603,10 @@ object Graph {
       // bytes/row, which would let the betweenness gate broadcast
       // oversized state. Counting here is a parquet footer-metadata read;
       // the gate then reads the true value with zero per-run Spark jobs.
-      val n = s.read.parquet(nPath).count()
+      val n = Tables.parquet(s, nPath).count()
       java.nio.file.Files.write(new java.io.File(nPath, "_rowcount").toPath,
         n.toString.getBytes(java.nio.charset.StandardCharsets.UTF_8))
     }
-    s.read.parquet(nPath)
   }
 
   /** SSSP's weighted symmetric adjacency (min observed unit price per
@@ -626,7 +620,7 @@ object Graph {
   private def weightedAdj(s: SparkSession, d: String): DataFrame = {
     val tag = graft.engine.Layouts.tag(d)
     val path = s"/tmp/graft_graph/wadj_$tag"
-    graft.engine.Layouts.ensureCommitted(s, path) {
+    graft.engine.Layouts.committed(s, path) {
       val we = t(s, d, "orders")
         .join(t(s, d, "lineitem"), col("o_orderkey") === col("l_orderkey"))
         .groupBy(col("o_custkey").as("c"), col("l_suppkey").as("sp"))
@@ -637,7 +631,6 @@ object Graph {
         .coalesce(4)
         .write.mode("overwrite").parquet(path)
     }
-    s.read.parquet(path)
   }
 
   /** Symmetric adjacency as per-node SORTED neighbor arrays — the CSR-ish
@@ -648,13 +641,12 @@ object Graph {
   private def adjListLayout(s: SparkSession, d: String): DataFrame = {
     val tag = graft.engine.Layouts.tag(d)
     val path = s"/tmp/graft_graph/adjlist_$tag"
-    graft.engine.Layouts.ensureCommitted(s, path) {
+    graft.engine.Layouts.committed(s, path) {
       symEdges(s, d)
         .groupBy(col("src").as("node"))
         .agg(array_sort(collect_list(col("dst").cast("long"))).as("nbrs"))
         .coalesce(4).write.mode("overwrite").parquet(path)
     }
-    s.read.parquet(path)
   }
 
   /** Hub-capped scored supplier-pair table (s1, s2, common, aa) + its
@@ -681,7 +673,7 @@ object Graph {
     val tag = graft.engine.Layouts.tag(d)
     val pairsPath = s"/tmp/graft_graph/aa_pairs_$tag"
     val censusPath = s"/tmp/graft_graph/aa_census_$tag"
-    graft.engine.Layouts.ensureCommitted(s, pairsPath) {
+    val pairs = graft.engine.Layouts.committed(s, pairsPath) {
       val e = edges(s, d)
       val wdeg = e.groupBy("src").agg(count(lit(1)).as("wdeg"))
       wdeg.agg(
@@ -701,7 +693,7 @@ object Graph {
         .filter(col("common") >= 3)
         .coalesce(4).write.mode("overwrite").parquet(pairsPath)
     }
-    (s.read.parquet(pairsPath), s.read.parquet(censusPath))
+    (pairs, Tables.parquet(s, censusPath))
   }
 
   val queries: Map[String, Q] = Map(

@@ -2,7 +2,7 @@ package graft.queries
 
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
-import graft.engine.Tables
+import graft.engine.Tables.{load => t}
 
 /** Perceptual image dedup — the multimodal twin of the MinHash text
   * pipeline: decode → 56-bit dHash → banded Hamming candidates → verify,
@@ -28,7 +28,6 @@ import graft.engine.Tables
   */
 object ImageDedup {
   type Q = (SparkSession, String) => DataFrame
-  private def t(s: SparkSession, d: String, n: String) = Tables.load(s, d, n)
 
   val queries: Map[String, Q] = Map(
     "mm_image_dedup" -> ((s, d) => {

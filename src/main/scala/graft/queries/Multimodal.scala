@@ -2,7 +2,7 @@ package graft.queries
 
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
-import graft.engine.Tables
+import graft.engine.Tables.{load => t}
 
 /** Multimodal-column plumbing (builder-prompt first-class component): media
   * payloads as opaque `binary` columns + typed metadata. The real image/audio
@@ -13,7 +13,6 @@ import graft.engine.Tables
   */
 object Multimodal {
   type Q = (SparkSession, String) => DataFrame
-  private def t(s: SparkSession, d: String, n: String) = Tables.load(s, d, n)
 
   val queries: Map[String, Q] = Map[String, Q](
     // binary payload + metadata extraction: documents.text stands in for

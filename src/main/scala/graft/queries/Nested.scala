@@ -2,7 +2,7 @@ package graft.queries
 
 import org.apache.spark.sql.{Column, DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
-import graft.engine.Tables
+import graft.engine.Tables.{load => t}
 
 /** Dremel-style nested-data operators: shred a flat table into
   * arrays-of-structs + struct columns, write real nested Parquet, and query
@@ -32,13 +32,11 @@ import graft.engine.Tables
   */
 object Nested {
   type Q = (SparkSession, String) => DataFrame
-  private def t(s: SparkSession, d: String, n: String) = Tables.load(s, d, n)
 
-  /** Per-sf nested events table, created on first use (idempotent). */
-  def nestedPath(s: SparkSession, d: String): String = {
-    val tag = graft.engine.Layouts.tag(d)
-    val path = s"/tmp/graft_nested/events_$tag"
-    if (!new java.io.File(path + "/_SUCCESS").exists()) {
+  /** Per-sf nested events table, committed on first use. */
+  private def nested(s: SparkSession, d: String): DataFrame = {
+    val path = s"/tmp/graft_nested/events_${graft.engine.Layouts.tag(d)}"
+    graft.engine.Layouts.committed(s, path) {
       val attrs = filter(
         array(
           struct(lit("cents").as("k"),
@@ -54,7 +52,6 @@ object Nested {
           col("props").as("payload"))
         .write.mode("overwrite").parquet(path)
     }
-    path
   }
 
   val queries: Map[String, Q] = Map(
@@ -63,7 +60,7 @@ object Nested {
     // leaves (k, v); partial aggregation runs map-side before the one
     // shuffle on k.
     "nested_inline_agg" -> ((s, d) =>
-      s.read.parquet(nestedPath(s, d))
+      nested(s, d)
         .select(inline(col("attrs")))
         .groupBy("k")
         .agg(count(lit(1)).as("n"), sum("v").as("sum_v"))
@@ -73,7 +70,7 @@ object Nested {
     // meta.uid — attrs (the big repeated column) and payload must be absent
     // from ReadSchema (plan-asserted: nested schema pruning).
     "nested_dotpath_agg" -> ((s, d) =>
-      s.read.parquet(nestedPath(s, d))
+      nested(s, d)
         .groupBy(col("meta.etype").as("etype"))
         .agg(count(lit(1)).as("n"), sum(col("meta.uid")).as("sum_uid"))
         .orderBy("etype")),
@@ -83,7 +80,7 @@ object Nested {
     // rebuilt array — the full unnest/renest round-trip every span-level
     // filter pipeline needs, with hash-friendly scalar output.
     "nested_renest" -> ((s, d) =>
-      s.read.parquet(nestedPath(s, d))
+      nested(s, d)
         .select(col("event_id"), explode(col("attrs")).as("a"))
         .filter(col("a.v") % 2 === 0)
         .groupBy("event_id")
@@ -103,7 +100,7 @@ object Nested {
     // the hand-written faces: every derived column is a leaf path or an
     // array size, so ReadSchema carries only referenced leaves.
     "nested_flatten_auto" -> ((s, d) => {
-      val df = s.read.parquet(nestedPath(s, d))
+      val df = nested(s, d)
       val flat = df.select(flattenColumns(df.schema): _*)
       flat.groupBy("meta_etype")
         .agg(count(lit(1)).as("n"),

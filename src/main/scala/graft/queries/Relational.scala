@@ -4,6 +4,7 @@ import org.apache.spark.sql.{Column, DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.expressions.Window
 import graft.engine.{FixedPoint => FP, Tables}
+import graft.engine.Tables.{load => t}
 
 /** Core relational operator catalog — SURVEY.md §2.2 (projections/filters),
   * §2.3 (joins), §2.4 (aggregations), §2.5 (windows), §2.6 (sorts/limits),
@@ -22,7 +23,6 @@ import graft.engine.{FixedPoint => FP, Tables}
   */
 object Relational {
   type Q = (SparkSession, String) => DataFrame
-  private def t(s: SparkSession, d: String, n: String) = Tables.load(s, d, n)
   private def r4(c: Column) = round(c, 4)
 
   /** Max on-disk parquet bytes at which a SCALED table (or a frame derived

@@ -2,7 +2,8 @@ package graft.queries
 
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
-import graft.engine.{Durations => D, Tables}
+import graft.engine.{Durations => D}
+import graft.engine.Tables.{load => t}
 
 /** Scalar-function catalog — SURVEY.md §2.8 (the duration codec F2–F18, bool
   * coercion, ISO parse, numeric coercion) plus the JSON scalar surface the
@@ -16,7 +17,6 @@ import graft.engine.{Durations => D, Tables}
   */
 object Scalars {
   type Q = (SparkSession, String) => DataFrame
-  private def t(s: SparkSession, d: String, n: String) = Tables.load(s, d, n)
 
   // ---- SQL builders mirroring Durations.* (DuckDB dialect) ----------------
   private def sqlSign(sec: String) = s"(CASE WHEN $sec < 0 THEN '-' ELSE '' END)"
@@ -79,8 +79,8 @@ object Scalars {
   // identical order (the projection is order-preserving), half the codec
   // evaluations, and the exchange row shrinks to the input columns.
   // Measured at sf0.1 (isolated 5-run medians): f2 3.46→1.10,
-  // f4 1.53→1.07, f6 1.41→1.16, f7 1.30→0.84, f8 1.70→0.64 — full
-  // table and plan diffs in OPTIMIZATION_r14.md / plans/r14/.
+  // f4 1.53→1.07, f6 1.41→1.16, f7 1.30→0.84, f8 1.70→0.64 (the
+  // before/after plan dumps are in the git history of round 14).
   val queries: Map[String, Q] = Map(
     // F2: seconds → MM:SS:mmm (round-half, sign-aware, minutes unbounded).
     "f2_format_mmssms" -> ((s, d) =>

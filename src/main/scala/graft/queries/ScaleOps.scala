@@ -4,6 +4,7 @@ import org.apache.spark.sql.{Column, DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.expressions.Window
 import graft.engine.{FixedPoint => FP, Tables}
+import graft.engine.Tables.{load => t}
 
 /** Scale-path operators beyond the reference's surface: skew-salted joins,
   * as-of joins, and sketch aggregates — the moves a 100 TB pipeline actually
@@ -11,7 +12,6 @@ import graft.engine.{FixedPoint => FP, Tables}
   */
 object ScaleOps {
   type Q = (SparkSession, String) => DataFrame
-  private def t(s: SparkSession, d: String, n: String) = Tables.load(s, d, n)
 
   /** The shared three-writer commit-log scenario (etl_commit_conflict +
     * etl_commit_changes): v1 = customers nation < 10, a winning append of
@@ -89,6 +89,15 @@ object ScaleOps {
       .withColumn("eff_to", lead(col("eff_from"), 1).over(w))
   }
 
+  /** orders partitioned by o_year: pp_partition_pruned and pp_dynamic_pruning's fact side. */
+  private def ordersByYear(s: SparkSession, d: String): DataFrame = {
+    val path = s"/tmp/graft_partitioned/orders_${graft.engine.Layouts.tag(d)}"
+    graft.engine.Layouts.committed(s, path) {
+      t(s, d, "orders").withColumn("o_year", year(col("o_orderdate")))
+        .write.mode("overwrite").partitionBy("o_year").parquet(path)
+    }
+  }
+
   val queries: Map[String, Q] = Map(
     // ---- skew-salted aggregation+join. Scenario: one hot key dominates
     // (here: synthetic hot_key = user_id % 3 == 0 collapsed to key 0 — at
@@ -151,7 +160,6 @@ object ScaleOps {
     // many-to-many. THE ORACLE IS THE NAIVE BETWEEN JOIN — the hash gate
     // is a proof that the binned rewrite is semantics-preserving.
     "range_join_binned" -> ((s, d) => {
-      import s.implicits._
       val binUs = 12L * 3600 * 1000000
       val ev = t(s, d, "events")
         .select(col("event_id"), col("user_id"), col("value"),
@@ -466,15 +474,9 @@ object ScaleOps {
     // is how "join orders to the current catalog snapshot" avoids scanning
     // a decade of partitions.
     "pp_dynamic_pruning" -> ((s, d) => {
-      val tag = graft.engine.Layouts.tag(d)
-      val fact = s"/tmp/graft_partitioned/orders_$tag"
-      graft.engine.Layouts.ensureCommitted(s, fact) {
-        t(s, d, "orders")
-          .withColumn("o_year", year(col("o_orderdate")))
-          .write.mode("overwrite").partitionBy("o_year").parquet(fact)
-      }
-      val dim = s"/tmp/graft_partitioned/years_$tag"
-      graft.engine.Layouts.ensureCommitted(s, dim) {
+      val fact = ordersByYear(s, d)
+      val dim = s"/tmp/graft_partitioned/years_${graft.engine.Layouts.tag(d)}"
+      val dimDf = graft.engine.Layouts.committed(s, dim) {
         t(s, d, "orders")
           .select(year(col("o_orderdate")).as("o_year")).distinct()
           .withColumn("era",
@@ -483,8 +485,7 @@ object ScaleOps {
               .otherwise("late"))
           .coalesce(1).write.mode("overwrite").parquet(dim)
       }
-      s.read.parquet(fact)
-        .join(broadcast(s.read.parquet(dim).filter(col("era") === "mid")), "o_year")
+      fact.join(broadcast(dimDf.filter(col("era") === "mid")), "o_year")
         .groupBy("o_orderstatus")
         .agg(count(lit(1)).as("n"), round(FP.qsum(col("o_totalprice"), 20), 4).as("rev"))
         .orderBy("o_orderstatus")
@@ -662,7 +663,7 @@ object ScaleOps {
       val base = s"/tmp/graft_compact/orders_$tag"
       val slice = t(s, d, "orders").filter(col("o_orderkey") % 4 === 0)
         .select("o_orderkey", "o_orderstatus", "o_totalprice")
-      graft.engine.Layouts.ensureCommitted(s, s"$base/frag") {
+      val frag = graft.engine.Layouts.committed(s, s"$base/frag") {
         // the oracle pins files_before=64, but FileFormatWriter emits NO
         // file for an empty partition — guard the precondition loudly
         // instead of letting a thin slice surface as a hash mismatch
@@ -673,16 +674,15 @@ object ScaleOps {
             s"non-empty row count per round-robin partition; got $n rows at $d")
         slice.repartition(64).write.mode("overwrite").parquet(s"$base/frag")
       }
-      graft.engine.Layouts.ensureCommitted(s, s"$base/compact") {
-        s.read.parquet(s"$base/frag").repartition(4)
-          .write.mode("overwrite").parquet(s"$base/compact")
+      val compact = graft.engine.Layouts.committed(s, s"$base/compact") {
+        frag.repartition(4).write.mode("overwrite").parquet(s"$base/compact")
       }
       def files(p: String): Long =
         new java.io.File(p).listFiles().count(f => f.getName.endsWith(".parquet"))
       require(files(s"$base/frag") == 64 && files(s"$base/compact") == 4,
         s"layout under $base does not match the oracle's pinned 64→4 file " +
           "counts — stale or partial /tmp state; delete and regenerate")
-      val compacted = s.read.parquet(s"$base/compact")
+      val compacted = compact
         .withColumn("sig", element_at(graft.engine.TextFunctions.tokenHashes(
           md5(concat_ws("|", col("o_orderkey"), col("o_orderstatus")))), 1))
         .agg(count(lit(1)).as("n_rows"), sum("sig").as("checksum"))
@@ -720,13 +720,11 @@ object ScaleOps {
     "src_csv_roundtrip" -> ((s, d) => {
       val tag = graft.engine.Layouts.tag(d)
       val path = s"/tmp/graft_formats/orders_csv_$tag"
-      graft.engine.Layouts.ensureCommitted(s, path) {
+      graft.engine.Layouts.committed(s, path, _.read.option("header", "true")
+          .schema("o_orderkey LONG, o_orderstatus STRING, o_totalprice DOUBLE").csv(_)) {
         t(s, d, "orders").select("o_orderkey", "o_orderstatus", "o_totalprice")
           .write.mode("overwrite").option("header", "true").csv(path)
       }
-      s.read.option("header", "true")
-        .schema("o_orderkey LONG, o_orderstatus STRING, o_totalprice DOUBLE")
-        .csv(path)
         .groupBy("o_orderstatus")
         .agg(count(lit(1)).as("n"), round(FP.qsum(col("o_totalprice"), 20), 4).as("rev"),
              min("o_orderkey").as("min_key"), max("o_orderkey").as("max_key"))
@@ -748,7 +746,9 @@ object ScaleOps {
     "src_csv_badrecords" -> ((s, d) => {
       val tag = graft.engine.Layouts.tag(d)
       val path = s"/tmp/graft_formats/orders_badcsv_$tag"
-      graft.engine.Layouts.ensureCommitted(s, path) {
+      graft.engine.Layouts.committed(s, path, _.read.option("header", "true")
+          .option("mode", "PERMISSIVE").option("columnNameOfCorruptRecord", "_bad")
+          .schema("o_orderkey LONG, o_orderstatus STRING, o_totalprice DOUBLE, _bad STRING").csv(_)) {
         t(s, d, "orders")
           .select(col("o_orderkey"), col("o_orderstatus"),
             when(pmod(col("o_orderkey"), lit(23)) === 0,
@@ -756,10 +756,6 @@ object ScaleOps {
               .otherwise(col("o_totalprice").cast("string")).as("o_totalprice"))
           .write.mode("overwrite").option("header", "true").csv(path)
       }
-      s.read.option("header", "true").option("mode", "PERMISSIVE")
-        .option("columnNameOfCorruptRecord", "_bad")
-        .schema("o_orderkey LONG, o_orderstatus STRING, o_totalprice DOUBLE, _bad STRING")
-        .csv(path)
         .groupBy("o_orderstatus")
         .agg(count(lit(1)).as("n_rows"),
           sum(when(col("_bad").isNotNull, 1L).otherwise(0L)).as("n_bad"),
@@ -773,12 +769,11 @@ object ScaleOps {
     "src_orc_roundtrip" -> ((s, d) => {
       val tag = graft.engine.Layouts.tag(d)
       val path = s"/tmp/graft_formats/lineitem_orc_$tag"
-      graft.engine.Layouts.ensureCommitted(s, path) {
+      graft.engine.Layouts.committed(s, path, _.read.orc(_)) {
         t(s, d, "lineitem")
           .select("l_orderkey", "l_returnflag", "l_quantity", "l_extendedprice")
           .write.mode("overwrite").orc(path)
       }
-      s.read.orc(path)
         .filter(col("l_quantity") < 25)
         .groupBy("l_returnflag")
         .agg(count(lit(1)).as("n"), round(FP.qsum(col("l_extendedprice"), 20), 4).as("rev"))
@@ -795,12 +790,11 @@ object ScaleOps {
     "src_json_roundtrip" -> ((s, d) => {
       val tag = graft.engine.Layouts.tag(d)
       val path = s"/tmp/graft_formats/customer_json_$tag"
-      graft.engine.Layouts.ensureCommitted(s, path) {
+      graft.engine.Layouts.committed(s, path,
+          _.read.schema("c_custkey LONG, c_mktsegment STRING, c_acctbal DOUBLE").json(_)) {
         t(s, d, "customer").select("c_custkey", "c_mktsegment", "c_acctbal")
           .write.mode("overwrite").json(path)
       }
-      s.read.schema("c_custkey LONG, c_mktsegment STRING, c_acctbal DOUBLE")
-        .json(path)
         .groupBy("c_mktsegment")
         .agg(count(lit(1)).as("n"),
              round(FP.qsum(col("c_acctbal"), 20), 4).as("bal"),
@@ -869,20 +863,12 @@ object ScaleOps {
         .agg(sum(bit_count(col("word"))).as("n_users"))
         .orderBy("event_type")),
 
-    "pp_partition_pruned" -> ((s, d) => {
-      val tag = graft.engine.Layouts.tag(d)
-      val path = s"/tmp/graft_partitioned/orders_$tag"
-      graft.engine.Layouts.ensureCommitted(s, path) {
-        t(s, d, "orders")
-          .withColumn("o_year", year(col("o_orderdate")))
-          .write.mode("overwrite").partitionBy("o_year").parquet(path)
-      }
-      s.read.parquet(path)
+    "pp_partition_pruned" -> ((s, d) =>
+      ordersByYear(s, d)
         .filter(col("o_year") === 1995)
         .groupBy("o_orderstatus")
         .agg(count(lit(1)).as("n"), round(sum("o_totalprice"), 4).as("rev"))
-        .orderBy("o_orderstatus")
-    }),
+        .orderBy("o_orderstatus")),
 
     // ---- per-file min/max data skipping (engine.FileSkipping): the
     // layout twin of pp_partition_pruned for keys too continuous to
@@ -897,13 +883,13 @@ object ScaleOps {
     "layout_file_skipping" -> ((s, d) => {
       val tag = graft.engine.Layouts.tag(d)
       val path = s"/tmp/graft_filestats/lineitem_$tag"
-      graft.engine.Layouts.ensureCommitted(s, path) {
+      graft.engine.Layouts.committed(s, path,
+          graft.engine.FileSkipping.prunedRead(_, _, "l_extendedprice", 2000.0, 15000.0)) {
         graft.engine.FileSkipping.writeRangedWithStats(
           t(s, d, "lineitem").select("l_orderkey", "l_linenumber", "l_returnflag",
             "l_extendedprice"),
           "l_extendedprice", 8, path)
       }
-      graft.engine.FileSkipping.prunedRead(s, path, "l_extendedprice", 2000.0, 15000.0)
         .groupBy("l_returnflag")
         .agg(count(lit(1)).as("n"), round(sum("l_extendedprice"), 4).as("rev"))
         .orderBy("l_returnflag")
@@ -942,8 +928,7 @@ object ScaleOps {
       val tag = graft.engine.Layouts.tag(d)
       val base = s"/tmp/graft_filestats/bloom_$tag"
       // bits is written LAST, so its commit marker certifies all three
-      graft.engine.Layouts.ensure(s, base)(
-        new java.io.File(s"$base/bits/_SUCCESS").exists()) {
+      val bits = graft.engine.Layouts.committed(s, s"$base/bits") {
         val keys0 = t(s, d, "lineitem")
           .select(((year(col("l_shipdate")) * 12 + month(col("l_shipdate"))) % 8)
             .cast("long").as("fid"), col("l_orderkey"))
@@ -960,9 +945,8 @@ object ScaleOps {
           .coalesce(2).write.mode("overwrite").parquet(s"$base/bits")
         keys0.unpersist()
       }
-      val keys = s.read.parquet(s"$base/keys")
-      val perfile = s.read.parquet(s"$base/perfile")
-      val bits = s.read.parquet(s"$base/bits")
+      val keys = Tables.parquet(s, s"$base/keys")
+      val perfile = Tables.parquet(s, s"$base/perfile")
       val present = keys.select("l_orderkey").distinct()
         .filter(col("l_orderkey") % 97 === 0)
         .orderBy("l_orderkey").limit(10)
@@ -1358,8 +1342,8 @@ object ScaleOps {
     "etl_partition_evolution" -> ((s, d) => {
       val tag = graft.engine.Layouts.tag(d)
       val base = s"/tmp/graft_evolvepart/orders_$tag"
-      graft.engine.Layouts.ensure(s, base)(
-        new java.io.File(s"$base/gen2/_SUCCESS").exists()) {
+      // gen2 is written last, so its commit marker certifies both
+      val g2 = graft.engine.Layouts.committed(s, s"$base/gen2") {
         val o = t(s, d, "orders")
           .withColumn("o_year", year(col("o_orderdate")))
           .withColumn("o_month", month(col("o_orderdate")))
@@ -1367,11 +1351,10 @@ object ScaleOps {
           .write.mode("overwrite").partitionBy("o_year").parquet(s"$base/gen1")
         o.filter(col("o_year") >= 1996)
           .write.mode("overwrite").partitionBy("o_year", "o_month").parquet(s"$base/gen2")
-      }
-      val g1 = s.read.parquet(s"$base/gen1")
+      }.withColumn("gen", lit("gen2"))
+      val g1 = Tables.parquet(s, s"$base/gen1")
         .withColumn("o_month", month(col("o_orderdate")))
         .withColumn("gen", lit("gen1"))
-      val g2 = s.read.parquet(s"$base/gen2").withColumn("gen", lit("gen2"))
       g1.unionByName(g2)
         .filter(col("o_year") === 1995 ||
           (col("o_year") === 1996 && col("o_month") <= 3))
@@ -1518,7 +1501,7 @@ object ScaleOps {
       val dv = s"/tmp/graft_dv/dv_$tag"
       val deletePred =
         col("o_orderstatus") === "F" && col("o_orderkey") % 7 === 0
-      graft.engine.Layouts.ensureCommitted(s, base) {
+      val baseDf = graft.engine.Layouts.committed(s, base) {
         t(s, d, "orders")
           .withColumn("file_id", (col("o_orderkey") % 4).cast("int"))
           .withColumn("pos",
@@ -1526,21 +1509,20 @@ object ScaleOps {
               .orderBy("o_orderkey")).cast("long") - 1)
           .write.mode("overwrite").partitionBy("file_id").parquet(base)
       }
-      graft.engine.Layouts.ensureCommitted(s, dv) {
-        s.read.parquet(base).filter(deletePred)
+      val dvDf = graft.engine.Layouts.committed(s, dv) {
+        baseDf.filter(deletePred)
           .groupBy(col("file_id"), expr("pos div 32").as("word_idx"))
           .agg(expr("bit_or(shiftleft(CAST(1 AS BIGINT), CAST(pos % 32 AS INT)))")
             .as("word"))
           .coalesce(1).write.mode("overwrite").parquet(dv)
       }
-      val dvDf = s.read.parquet(dv)
-      val live = s.read.parquet(base)
+      val live = Tables.parquet(s, base)
         .withColumn("word_idx", expr("pos div 32"))
         .join(broadcast(dvDf), Seq("file_id", "word_idx"), "left")
         .filter(col("word").isNull ||
           col("word").bitwiseAND(
             expr("shiftleft(CAST(1 AS BIGINT), CAST(pos % 32 AS INT))")) === 0)
-      val globals = s.read.parquet(base).filter(deletePred)
+      val globals = Tables.parquet(s, base).filter(deletePred)
         .agg(count(lit(1)).as("deleted_rows"))
         .crossJoin(dvDf.agg(count(lit(1)).as("dv_words")))
         .crossJoin(live.agg(

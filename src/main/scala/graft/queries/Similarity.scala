@@ -3,7 +3,8 @@ package graft.queries
 import org.apache.spark.sql.{Column, DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.expressions.Window
-import graft.engine.{FixedPoint => FP, Tables, Vectors => V}
+import graft.engine.{FixedPoint => FP, Vectors => V}
+import graft.engine.Tables.{load => t}
 
 /** Similarity-search catalog over `embeddings` (builder-prompt first-class
   * component): brute-force cosine top-k as the exact baseline, a
@@ -19,7 +20,6 @@ import graft.engine.{FixedPoint => FP, Tables, Vectors => V}
   */
 object Similarity {
   type Q = (SparkSession, String) => DataFrame
-  private def t(s: SparkSession, d: String, n: String) = Tables.load(s, d, n)
 
   /** embeddings with double-cast vector column `v`. */
   private def emb(s: SparkSession, d: String): DataFrame =
@@ -205,11 +205,10 @@ object Similarity {
   private def knnGraphLayout(s: SparkSession, d: String, e: DataFrame): DataFrame = {
     val tag = graft.engine.Layouts.tag(d)
     val path = s"/tmp/graft_sim/knn8_$tag"
-    graft.engine.Layouts.ensureCommitted(s, path) {
+    graft.engine.Layouts.committed(s, path) {
       nnDescentGraphs(e, 8, embHintGate(d)).last.select("a", "b")
         .coalesce(2).write.mode("overwrite").parquet(path)
     }
-    s.read.parquet(path)
   }
 
   /** Greedy beam search over the kNN graph `g` for the 2% query sample,
@@ -467,14 +466,13 @@ object Similarity {
     // stride 16 keeps its r12 path; further layers suffix their stride
     val sfx = if (stride == 16) "" else stride.toString
     val path = s"/tmp/graft_sim/knn8c${sfx}_$tag"
-    graft.engine.Layouts.ensureCommitted(s, path) {
+    graft.engine.Layouts.committed(s, path) {
       val ec = e.filter(col("vec_id") % stride === 0)
         .select((col("vec_id") / stride).cast("long").as("vec_id"), col("v"))
       nnDescentGraphs(ec, 8, embHintGate(d)).last
         .select((col("a") * stride).as("a"), (col("b") * stride).as("b"))
         .coalesce(1).write.mode("overwrite").parquet(path)
     }
-    s.read.parquet(path)
   }
 
   /** The sim_index_insert body at an explicit gate decision — ANN index

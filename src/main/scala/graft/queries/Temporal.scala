@@ -3,7 +3,8 @@ package graft.queries
 import org.apache.spark.sql.{Column, DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.expressions.Window
-import graft.engine.{FixedPoint => FP, Tables}
+import graft.engine.{FixedPoint => FP}
+import graft.engine.Tables.{load => t}
 import graft.streaming.StreamHarness
 
 /** Event-time operators over `events` — the batch-semantics twins of the
@@ -15,7 +16,6 @@ import graft.streaming.StreamHarness
   */
 object Temporal {
   type Q = (SparkSession, String) => DataFrame
-  private def t(s: SparkSession, d: String, n: String) = Tables.load(s, d, n)
 
   /** Gap-based session assignment shared by st_sessionize and
     * st_session_transcript: lag → new-session flag → running sum, one

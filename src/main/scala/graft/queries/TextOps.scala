@@ -4,6 +4,7 @@ import org.apache.spark.sql.{Column, DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.expressions.Window
 import graft.engine.{FixedPoint => FP, Tables, TextFunctions => T}
+import graft.engine.Tables.{load => t}
 
 /** Text-analysis catalog over the `documents` table (builder-prompt
   * first-class components): token counting, quality scoring, language ID,
@@ -13,7 +14,6 @@ import graft.engine.{FixedPoint => FP, Tables, TextFunctions => T}
   */
 object TextOps {
   type Q = (SparkSession, String) => DataFrame
-  private def t(s: SparkSession, d: String, n: String) = Tables.load(s, d, n)
 
   /** Training-vocabulary frequency floor for the driver-side BPE trainers
     * (tx_bpe_encode_trie, tx_bpe_encode_k500): words seen fewer times never

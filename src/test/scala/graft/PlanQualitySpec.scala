@@ -744,7 +744,7 @@ class PlanQualitySpec extends AnyFunSuite with SharedSparkSpec {
     // Exchange input list the 512-B array is riding the frontier again —
     // at a corpus/2-sized insert batch that was 72 MB of the catalog's
     // largest shuffle (448/448 qid-exchanges carried qv in the r15
-    // before-plan, committed under plans/r15/).
+    // before-plan, kept in the git history of round 15).
     val p = graft.queries.Similarity.indexInsertAt(spark, d,
         graft.queries.Similarity.embHintGate(d), truncate = false)
       .queryExecution.explainString(org.apache.spark.sql.execution.FormattedMode)

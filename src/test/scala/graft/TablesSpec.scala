@@ -1,0 +1,179 @@
+package graft
+
+import java.io.File
+import java.util.concurrent.atomic.AtomicInteger
+
+import org.apache.spark.scheduler.{SparkListener, SparkListenerJobEnd, SparkListenerJobStart}
+import org.scalatest.funsuite.AnyFunSuite
+
+import graft.engine.{Layouts, Tables}
+
+/** `Tables.parquet` opens a parquet table from one footer read on the
+  * driver instead of Spark's one-task schema-inference job. Its contract is
+  * that nothing else changes: the schema is the one `spark.read.parquet`
+  * infers (same footer, same converter flags), no Spark job runs, the
+  * `events` nanos branch of `Tables.load` still fires, and a table
+  * rewritten in place is seen at once (there is no cache). The last test
+  * keeps base tables and committed layouts on that one path.
+  */
+class TablesSpec extends AnyFunSuite with SharedSparkSpec {
+  private val sfs = Seq("/root/testdata/sf0.001", "/root/testdata/sf0.01")
+
+  private def tmpDir(prefix: String): File =
+    java.nio.file.Files.createTempDirectory(prefix).toFile
+
+  test("(a) footer schema equals the inferred schema for every table and committed layout") {
+    for (d <- sfs; n <- Tables.names) {
+      val p = s"$d/$n.parquet"
+      assert(Tables.parquet(spark, p).schema == spark.read.parquet(p).schema, p)
+    }
+    // build a few layouts of distinct shapes (partitioned, nested structs,
+    // arrays, range-clustered files and their stats table) so the walk never
+    // comes up empty; the rest are whatever the other suites committed
+    val d = sfs.head
+    Seq("nested_inline_agg", "pp_dynamic_pruning", "etl_deletion_vectors",
+      "layout_file_skipping", "graph_degree_hist", "dd_winnowing")
+      .foreach(q => SparkEntry.queries(q)(spark, d))
+    val tags = sfs.map(Layouts.tag)
+    def committed(f: File): Seq[File] =
+      if (new File(f, "_SUCCESS").isFile) Seq(f)
+      else Option(f.listFiles()).toSeq.flatten.filter(_.isDirectory).sortBy(_.getName)
+        .filterNot(_.getName.contains(".build-")).flatMap(committed)
+    def dataFiles(f: File): Seq[File] = Option(f.listFiles()).toSeq.flatten
+      .filterNot(c => c.getName.startsWith("_") || c.getName.startsWith("."))
+      .flatMap(c => if (c.isDirectory) dataFiles(c) else Seq(c))
+    val layouts = Option(new File("/tmp").listFiles()).toSeq.flatten
+      .filter(f => f.isDirectory && f.getName.startsWith("graft_"))
+      .flatMap(committed)
+      .filter(f => tags.exists(f.getPath.contains))
+      .filter { f => val fs = dataFiles(f); fs.nonEmpty && fs.forall(_.getName.endsWith(".parquet")) }
+    assert(layouts.size >= 6, s"too few committed layouts found: $layouts")
+    for (f <- layouts) {
+      val p = f.getPath
+      assert(Tables.parquet(spark, p).schema == spark.read.parquet(p).schema, p)
+    }
+  }
+
+  test("(b) Tables.load opens all ten tables without a Spark job") {
+    val group = s"tables-spec-${java.util.UUID.randomUUID()}"
+    val barrier = s"$group-barrier"
+    val jobs = new AtomicInteger(0)
+    val barriers = new AtomicInteger(0)
+    val listener = new SparkListener {
+      private def groupOf(e: SparkListenerJobStart) =
+        Option(e.properties).map(_.getProperty("spark.jobGroup.id")).orNull
+      private val barrierJobs = java.util.concurrent.ConcurrentHashMap.newKeySet[Int]()
+      override def onJobStart(e: SparkListenerJobStart): Unit = groupOf(e) match {
+        case `group` => jobs.incrementAndGet(): Unit
+        case `barrier` => barrierJobs.add(e.jobId): Unit
+        case _ =>
+      }
+      override def onJobEnd(e: SparkListenerJobEnd): Unit =
+        if (barrierJobs.remove(e.jobId)) barriers.incrementAndGet(): Unit
+    }
+    val sc = spark.sparkContext
+    // listener delivery is asynchronous and in order: once a job started
+    // after `body` has ended, every job `body` started has been counted
+    def jobsDuring(body: => Unit): Int = {
+      jobs.set(0)
+      val seen = barriers.get
+      sc.setJobGroup(group, "TablesSpec")
+      try body finally sc.clearJobGroup()
+      sc.setJobGroup(barrier, "TablesSpec barrier")
+      try sc.parallelize(Seq(1), 1).count() finally sc.clearJobGroup()
+      while (barriers.get == seen) Thread.sleep(1)
+      jobs.get
+    }
+    sc.addSparkListener(listener)
+    try {
+      val d = sfs.head
+      assert(jobsDuring(Tables.names.foreach(n => Tables.load(spark, d, n).schema)) == 0)
+      // control: the listener does see a schema-inference job
+      assert(jobsDuring(spark.read.parquet(s"$d/orders.parquet").schema) >= 1)
+    } finally sc.removeSparkListener(listener)
+  }
+
+  test("(c) Tables.load floors a TIMESTAMP(NANOS) events.ts to microseconds") {
+    import org.apache.parquet.example.data.simple.SimpleGroupFactory
+    import org.apache.parquet.hadoop.example.ExampleParquetWriter
+    import org.apache.parquet.schema.MessageTypeParser
+    val dir = tmpDir("graft-nanos")
+    try {
+      val schema = MessageTypeParser.parseMessageType(
+        "message events { required int64 event_id; required int64 ts (TIMESTAMP(NANOS,true)); }")
+      val nanos = Seq(1700000000123456789L, 1700000000000000999L, 1600000000000001000L)
+      val w = ExampleParquetWriter
+        .builder(new org.apache.hadoop.fs.Path(s"${dir.getPath}/events.parquet"))
+        .withType(schema).withConf(new org.apache.hadoop.conf.Configuration()).build()
+      try nanos.zipWithIndex.foreach { case (ns, i) =>
+        w.write(new SimpleGroupFactory(schema).newGroup().append("event_id", i.toLong).append("ts", ns))
+      } finally w.close()
+      val ev = Tables.load(spark, dir.getPath, "events")
+      assert(ev.schema("ts").dataType == org.apache.spark.sql.types.TimestampType)
+      val micros = ev.orderBy("event_id").selectExpr("unix_micros(ts)").collect().map(_.getLong(0)).toSeq
+      assert(micros == nanos.map(_ / 1000))
+    } finally Layouts.rmTree(dir)
+  }
+
+  test("(d) a table rewritten at the same path shows its new schema at once") {
+    import spark.implicits._
+    val dir = tmpDir("graft-rewrite")
+    val p = s"${dir.getPath}/t"
+    try {
+      Seq(1L, 2L).toDF("a").write.parquet(p)
+      assert(Tables.parquet(spark, p).schema.fieldNames.toSeq == Seq("a"))
+      Seq((3L, "x")).toDF("a", "b").write.mode("overwrite").parquet(p)
+      val again = Tables.parquet(spark, p)
+      assert(again.schema.fieldNames.toSeq == Seq("a", "b"))
+      assert(again.as[(Long, String)].collect().toSeq == Seq((3L, "x")))
+    } finally Layouts.rmTree(dir)
+  }
+
+  test("(e) a _common_metadata summary wins over the first data file, as in Spark") {
+    import spark.implicits._
+    val dir = tmpDir("graft-summary")
+    val p = s"${dir.getPath}/t"
+    try {
+      Seq((1L, 2L)).toDF("a", "b").write
+        .option("parquet.summary.metadata.level", "ALL").parquet(p)
+      assert(new File(p, "_common_metadata").isFile)
+      // a wider file that sorts before every part-file
+      Seq((1L, 2L, 3L)).toDF("a", "b", "c").coalesce(1).write.parquet(s"${dir.getPath}/w")
+      val wide = new File(s"${dir.getPath}/w").listFiles().filter(_.getName.endsWith(".parquet")).head
+      java.nio.file.Files.copy(wide.toPath, new File(p, "a-wide.parquet").toPath)
+      val inferred = spark.read.parquet(p).schema
+      assert(inferred.fieldNames.toSeq == Seq("a", "b"))
+      assert(Tables.parquet(spark, p).schema == inferred)
+    } finally Layouts.rmTree(dir)
+  }
+
+  private def scalaFiles(dir: File): Seq[File] =
+    Option(dir.listFiles()).toSeq.flatten.sortBy(_.getName).flatMap { f =>
+      if (f.isDirectory) scalaFiles(f)
+      else if (f.getName.endsWith(".scala")) Seq(f)
+      else Nil
+    }
+
+  /** (path under src/main/scala/graft, trimmed line) for every line
+    * containing `token`. */
+  private def sites(token: String): Seq[(String, String)] = {
+    val root = new File("src/main/scala/graft")
+    for {
+      f <- scalaFiles(root)
+      line <- new String(java.nio.file.Files.readAllBytes(f.toPath), "UTF-8").linesIterator
+      if line.contains(token)
+    } yield (root.toPath.relativize(f.toPath).toString, line.trim)
+  }
+
+  test("base tables and committed layouts open only through Tables and Layouts.committed") {
+    val loaders = sites("def t(").filter(_._1.startsWith("queries/"))
+    assert(loaders.isEmpty,
+      s"graft/queries defines its own table loader (use Tables.load): ${loaders.mkString("; ")}")
+    val ensures = sites("ensureCommitted(").map(_._1).distinct
+    assert(ensures == Seq("engine/Layouts.scala"),
+      s"ensureCommitted( outside Layouts (use Layouts.committed): ${ensures.mkString(", ")}")
+    val raw = (sites(""".read.parquet(s"$d/""") ++ sites(""".read.parquet(s"$sfDir/"""))
+      .filterNot(_._1 == "engine/Tables.scala")
+    assert(raw.isEmpty, s"base table read outside Tables: ${raw.mkString("; ")}")
+  }
+}
