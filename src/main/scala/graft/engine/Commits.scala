@@ -1,46 +1,55 @@
 package graft.engine
 
+import java.nio.charset.StandardCharsets.UTF_8
+import java.nio.file.{Files, StandardCopyOption}
 import org.apache.spark.sql.{DataFrame, SparkSession}
 
-/** Optimistic-concurrency commit protocol over a file manifest — the core
-  * ACID mechanic of the Delta/Iceberg transaction log (VERDICT r8 #3),
-  * implemented against the engine's own manifest layout (README
-  * "Table-format stance": no table-format jar exists in this sandbox, so
-  * the PROTOCOL is demonstrated on plain files; the mechanics — versioned
-  * manifests, put-if-absent commits, conflict detection, append rebase,
-  * stale-rewrite abort — are exactly the published Delta commit design).
+/** Optimistic-concurrency commit protocol over a delta-action log — the
+  * core ACID mechanic of the Delta/Iceberg transaction log (VERDICT r8 #3),
+  * implemented against the engine's own log layout (README "Table-format
+  * stance": no table-format jar exists in this sandbox, so the PROTOCOL is
+  * demonstrated on plain files; the mechanics — versioned delta manifests,
+  * put-if-absent commits, conflict detection, append rebase, stale-rewrite
+  * abort, checkpoint compaction — are exactly the published Delta design).
   *
   * Layout:
   * {{{
   *   table/data/<writer>-<uuid>/   one parquet dir per staged write
-  *   table/_log/v00001.txt         manifest: one data path per line
+  *   table/_log/v00001.txt         delta: one "+rel" / "-rel" action per line
+  *   table/_log/v00004.ckpt        checkpoint: the full file listing AT v4
   * }}}
   *
-  * A snapshot at version N is the file set listed in `_log/v0000N.txt`.
-  * Committing version N+1 is PUT-IF-ABSENT on that manifest name:
+  * A commit writes only what it changes — O(changed files) per version,
+  * the table metadata kept apart from the data (Dremel, VLDB'20). The
+  * snapshot at version N is the latest checkpoint ≤ N with the deltas after
+  * it folded on top ([[resolve]]); [[replay]] folds from v1 and is what a
+  * checkpoint exists to avoid. Checkpoints are derived state: rewriting one
+  * is always safe, so they need no claim, only the atomic rename, and a
+  * missing or lagging checkpoint only lengthens the fold.
+  *
+  * Committing version N+1 is PUT-IF-ABSENT on that delta's name:
   * `File.createNewFile` is atomic on POSIX, so of two writers racing the
   * same version exactly one wins; the loser gets a [[Conflict]] carrying
-  * the version that beat it. (On object stores this step maps to the
-  * put-if-absent / ETag-conditional write every production log store
-  * uses; content is written after the atomic claim, which a production
-  * store replaces with write-temp-then-rename — the claim is what carries
-  * the correctness.)
+  * the version that beat it. Content lands after the claim by temp-write +
+  * atomic rename over the claimed name, so no reader sees a half-written
+  * delta; a zero-byte delta is a claim whose writer crashed before the
+  * rename. (On object stores the claim maps to the put-if-absent /
+  * ETag-conditional write every production log store uses.)
   *
   * Conflict RESOLUTION is the transaction-type-aware half of the design:
-  *  - a blind APPEND never read table state, so on conflict it simply
-  *    rebases: re-list the latest manifest, re-commit its files at the new
-  *    version ([[commitAppend]] loops this — the Delta "logical conflict
-  *    check" trivially passes for appends);
+  *  - a blind APPEND never read table state, so its `+` delta is valid on
+  *    top of any newer snapshot: on conflict it simply re-targets the next
+  *    version ([[commitAppend]] loops this);
   *  - a REWRITE (compaction, overwrite, delete) is valid only against the
   *    exact snapshot it read: if the table moved underneath it, its
   *    replacement file set was derived from stale data and the transaction
   *    must ABORT ([[commitRewrite]] refuses to rebase) — its staged files
-  *    are never referenced by any manifest and stay invisible to every
+  *    are never referenced by any delta and stay invisible to every
   *    reader, which CommitsSpec and the etl_commit_conflict census prove.
   *
-  * Driver-side footprint: manifests are file-count-sized (the FileSkipping
-  * discipline) — reading one is a metadata operation, like a Delta log
-  * read; table DATA never flows through the protocol.
+  * Driver-side footprint: deltas and checkpoints are file-count-sized (the
+  * FileSkipping discipline) — resolving one is a metadata operation, like
+  * a Delta log read; table DATA never flows through the protocol.
   */
 object Commits {
   final case class Conflict(attempted: Int, winner: String)
@@ -52,16 +61,24 @@ object Commits {
     * with overwhelming probability, and a younger one must NOT be healed
     * over (ADVICE r11: the exactly-once heal could otherwise stomp a
     * concurrent append/rewrite writer's in-flight rename and silently
-    * drop its files from the manifest). Both [[commitExactlyOnce]]'s heal
-    * and [[commitAppend]]'s wedge detection gate on this age. */
+    * drop its files from the log). Both [[commitExactlyOnce]]'s heal and
+    * [[commitAppend]]'s wedge detection gate on this age. */
   val HealGraceMs = 60000L
 
   private def logDir(table: String) = new java.io.File(table, "_log")
-  private def manifest(table: String, v: Int) =
+  private def delta(table: String, v: Int) =
     new java.io.File(logDir(table), f"v$v%05d.txt")
+  private def ckpt(table: String, v: Int) =
+    new java.io.File(logDir(table), f"v$v%05d.ckpt")
+
+  /** (version, file) for every `_log` entry with extension `ext`. */
+  private def logFiles(table: String, ext: String): Seq[(Int, java.io.File)] =
+    Option(logDir(table).listFiles()).map(_.toSeq).getOrElse(Seq.empty)
+      .filter(_.getName.matches(s"v\\d{5}\\.$ext"))
+      .map(f => (f.getName.substring(1, 6).toInt, f))
 
   /** Highest DURABLY committed version, 0 if none (an empty table). A
-    * zero-byte manifest is a claim whose content write never landed (a
+    * zero-byte delta is a claim whose content write never landed (a
     * commit that crashed between the put-if-absent claim and the atomic
     * content rename) — it is not a commit, so readers must not resolve to
     * it (ADVICE r10): the snapshot they'd see doesn't exist. The claim
@@ -69,121 +86,180 @@ object Commits {
     * (see [[commitExactlyOnce]], where the version IS the batch identity
     * and the content is therefore re-derivable). */
   def latestVersion(table: String): Int =
-    Option(logDir(table).listFiles()).map(_.toSeq).getOrElse(Seq.empty)
-      .filter(f => f.getName.matches("v\\d{5}\\.txt") && f.length() > 0)
-      .map(_.getName.substring(1, 6).toInt).maxOption.getOrElse(0)
+    logFiles(table, "txt").collect { case (v, f) if f.length() > 0 => v }
+      .maxOption.getOrElse(0)
 
-  /** Manifest entries at version `v` — paths RELATIVE to the table root
-    * (the Delta log convention), so the whole table directory stays
-    * relocatable: an atomic build-then-rename publish, a backup restore,
-    * or a mount-point change never dangles a manifest. */
-  def manifestEntries(table: String, v: Int): Seq[String] = {
-    val m = manifest(table, v)
+  private def requireDurable(table: String, v: Int, what: String): Unit =
+    require(delta(table, v).length() > 0, s"$what v$v of $table not durably committed")
+
+  /** Action lines of delta `v`: ('+', rel) adds, ('-', rel) removes. Paths
+    * are RELATIVE to the table root (the Delta log convention), so the
+    * whole table directory stays relocatable: an atomic build-then-rename
+    * publish, a backup restore, or a mount-point change never dangles a
+    * log entry. A line without a `+`/`-` op is a full-listing manifest
+    * from the retired log format — it fails loudly, naming the file. */
+  def actions(table: String, v: Int): Seq[(Char, String)] = {
+    val m = delta(table, v)
     require(m.exists(), s"no manifest for version $v at $table")
     require(m.length() > 0,
       s"zero-byte manifest v$v at $table: claimed but never written (crashed commit)")
     import scala.jdk.CollectionConverters._
-    java.nio.file.Files.readAllLines(m.toPath).asScala.toSeq.filter(_.nonEmpty)
+    Files.readAllLines(m.toPath).asScala.toSeq.filter(_.nonEmpty).map { l =>
+      require(l.head == '+' || l.head == '-',
+        s"${m.getPath} (version $v): line '$l' is not a +/- action — a full-listing " +
+          "manifest from an older log format; wipe the table or bump Layouts.LayoutVersion")
+      (l.head, l.tail)
+    }
   }
+
+  /** Fold deltas `from+1 .. to` over `base` — order within a delta:
+    * removes first, then adds, as [[deltaLines]] writes them (a
+    * compaction may re-add under a new name; re-adding a live path or
+    * removing an unknown one is rejected as a protocol violation rather
+    * than silently deduped). */
+  private def fold(table: String, base: Set[String], from: Int, to: Int): Set[String] =
+    (from + 1 to to).foldLeft(base) { (acc, v) =>
+      actions(table, v).foldLeft(acc) {
+        case (a, ('-', rel)) =>
+          require(a.contains(rel), s"delta v$v at $table removes unknown $rel"); a - rel
+        case (a, (_, rel)) =>
+          require(!a.contains(rel), s"delta v$v at $table re-adds live $rel"); a + rel
+      }
+    }
+
+  /** FULL replay from v1 — the reader cost a checkpoint exists to avoid.
+    * Sorted for deterministic downstream listings. */
+  def replay(table: String, v: Int): Seq[String] =
+    fold(table, Set.empty, 0, v).toSeq.sorted
+
+  /** Write (or refresh) the checkpoint at `v`: the full file listing of
+    * the snapshot at `v`, derived by replay. Idempotent derived state —
+    * atomic rename, no claim needed. */
+  def checkpoint(table: String, v: Int): Unit =
+    writeAtomic(ckpt(table, v), replay(table, v))
+
+  /** THE reader path: snapshot at `v` = latest checkpoint ≤ v + delta
+    * tail. Returns (sorted file set, checkpoint version used — 0 if the
+    * resolve fell back to full replay, tail length folded). */
+  def resolveStats(table: String, v: Int): (Seq[String], Int, Int) = {
+    val cv = logFiles(table, "ckpt").map(_._1).filter(_ <= v).maxOption.getOrElse(0)
+    val base: Set[String] =
+      if (cv == 0) Set.empty
+      else {
+        val c = ckpt(table, cv)
+        require(c.length() > 0, s"zero-byte checkpoint v$cv at $table")
+        import scala.jdk.CollectionConverters._
+        Files.readAllLines(c.toPath).asScala.toSet.filter(_.nonEmpty)
+      }
+    (fold(table, base, cv, v).toSeq.sorted, cv, v - cv)
+  }
+
+  def resolve(table: String, v: Int): Seq[String] = resolveStats(table, v)._1
+
+  /** The table-relative file set visible at version `v` (the resolved
+    * snapshot, sorted). */
+  def manifestEntries(table: String, v: Int): Seq[String] = resolve(table, v)
 
   /** The absolute data paths visible at version `v`. Canonicalized so
     * cross-table `../` entries (shallow clones) resolve to plain paths
     * before they reach a reader. */
   def snapshotFiles(table: String, v: Int): Seq[String] =
-    manifestEntries(table, v).map(rel => new java.io.File(table, rel).getCanonicalPath)
+    resolve(table, v).map(rel => new java.io.File(table, rel).getCanonicalPath)
 
   /** Read the latest snapshot (empty-schema-less: requires ≥1 version). */
   def read(spark: SparkSession, table: String): DataFrame =
     spark.read.parquet(snapshotFiles(table, latestVersion(table)): _*)
 
   /** Stage `df` as a new data directory under the table, NOT yet visible:
-    * only a later manifest commit publishes it. Returns the table-relative
-    * staged path (the manifest currency). */
+    * only a later delta commit publishes it. Returns the table-relative
+    * staged path (the log currency). */
   def stage(df: DataFrame, table: String, writer: String): String = {
     val rel = s"data/$writer-${java.util.UUID.randomUUID().toString.take(8)}"
     df.write.mode("errorifexists").parquet(new java.io.File(table, rel).getPath)
     rel
   }
 
-  /** Attempt to commit manifest `v` listing exactly `files`. Atomic
-    * put-if-absent on the manifest name: returns false iff another writer
-    * already owns version `v`. Content lands via write-temp-then-rename
-    * OVER the claimed name (ADVICE r9): a reader (or crash) in the window
-    * between the claim and the content write must never observe a
-    * half-written manifest — the rename is atomic, and [[manifestEntries]]
-    * rejects a zero-byte manifest so a crashed pre-rename commit fails
-    * loudly instead of silently reading as an empty snapshot. An EMPTY
-    * file set stays representable (its manifest is one newline, not zero
-    * bytes). */
-  private def writeManifest(table: String, m: java.io.File, files: Seq[String]): Unit = {
-    val tmp = java.nio.file.Files.createTempFile(logDir(table).toPath, s".${m.getName}-", ".tmp")
-    java.nio.file.Files.write(tmp,
-      (files.mkString("\n") + "\n").getBytes(java.nio.charset.StandardCharsets.UTF_8))
-    java.nio.file.Files.move(tmp, m.toPath,
-      java.nio.file.StandardCopyOption.ATOMIC_MOVE,
-      java.nio.file.StandardCopyOption.REPLACE_EXISTING)
+  /** Publish `lines` at `target` by temp-write + atomic rename, so a
+    * reader (or a crash) never observes a torn write. Lines are newline-
+    * terminated: an EMPTY listing or delta is one newline, never zero
+    * bytes, so zero bytes always means a claim whose write never landed. */
+  private def writeAtomic(target: java.io.File, lines: Seq[String]): Unit = {
+    val tmp = Files.createTempFile(target.getParentFile.toPath, s".${target.getName}-", ".tmp")
+    Files.write(tmp, (lines.mkString("\n") + "\n").getBytes(UTF_8))
+    Files.move(tmp, target.toPath,
+      StandardCopyOption.ATOMIC_MOVE, StandardCopyOption.REPLACE_EXISTING)
   }
 
-  private def tryCommit(table: String, v: Int, files: Seq[String]): Boolean = {
-    val m = manifest(table, v)
+  private def deltaLines(adds: Seq[String], removes: Seq[String]): Seq[String] =
+    removes.map("-" + _) ++ adds.map("+" + _)
+
+  /** Attempt to commit delta `v`. Atomic put-if-absent on the delta name:
+    * returns false iff another writer already owns version `v`. Content
+    * lands via [[writeAtomic]] OVER the claimed name (ADVICE r9), and
+    * [[actions]] rejects a zero-byte delta, so a crashed pre-rename commit
+    * fails loudly instead of silently reading as an empty change. */
+  private def tryCommit(table: String, v: Int, lines: Seq[String]): Boolean = {
+    val m = delta(table, v)
     m.getParentFile.mkdirs()
     if (!m.createNewFile()) false
-    else { writeManifest(table, m, files); true }
+    else { writeAtomic(m, lines); true }
   }
 
   /** Idempotent exactly-once append for streaming sinks (the Delta
     * txnAppId/txnVersion mechanic): micro-batch N maps to ONE fixed
-    * manifest version, so a batch replayed after a sink restart
-    * re-attempts the SAME version and loses the put-if-absent claim —
-    * the sink skips it, turning the source's at-least-once delivery into
-    * end-to-end exactly-once. Unlike [[commitAppend]] there is no rebase:
-    * the version IS the batch identity, and batches commit in order (the
-    * predecessor manifest must be durable). Returns false iff `version`
-    * was already DURABLY committed — its manifest exists with content —
-    * so a rejected replay has zero side effects on the log.
+    * version, so a batch replayed after a sink restart re-attempts the
+    * SAME version and loses the put-if-absent claim — the sink skips it,
+    * turning the source's at-least-once delivery into end-to-end
+    * exactly-once. Unlike [[commitAppend]] there is no rebase: the version
+    * IS the batch identity, and batches commit in order (the predecessor
+    * delta must be durable). Returns false iff `version` was already
+    * DURABLY committed — its delta exists with content — so a rejected
+    * replay has zero side effects on the log.
     *
     * Crash healing (ADVICE r10): a sink that crashed BETWEEN the
     * put-if-absent claim and the atomic content rename leaves a zero-byte
-    * manifest — a claim with no commit. The replayed batch then loses the
+    * delta — a claim with no commit. The replayed batch then loses the
     * claim, and pre-heal it would have been skipped as "already
     * committed" with its data never published and the log wedged on an
-    * unreadable manifest. Because the version IS the batch identity, the
+    * unreadable delta. Because the version IS the batch identity, the
     * replay carries the same batch content the crashed attempt held, so
     * healing is safe and idempotent for the fixed batch: rewrite the
-    * zero-byte manifest's content via the same temp-write + ATOMIC_MOVE
-    * and report the commit as won. (The crashed attempt's staged dir is
-    * orphaned — never referenced by any manifest — exactly like a
-    * rewrite loser's.) The heal fires only for claims provably dead —
-    * older than [[HealGraceMs]] (ADVICE r11): a YOUNGER zero-byte claim
-    * may be another writer mid-rename, so the replay throws retryable
-    * instead of racing it. */
+    * zero-byte delta's content by the same atomic rename and report the
+    * commit as won. (The crashed attempt's staged dir is orphaned — never
+    * referenced by any delta — exactly like a rewrite loser's.) The heal
+    * fires only for claims provably dead — older than [[HealGraceMs]]
+    * (ADVICE r11): a YOUNGER zero-byte claim may be another writer
+    * mid-rename, so the replay throws retryable instead of racing it. */
   def commitExactlyOnce(table: String, version: Int, stagedPaths: Seq[String],
                         healGraceMs: Long = HealGraceMs): Boolean = {
     require(version >= 2, s"version 1 belongs to init, got $version")
-    val prev = manifestEntries(table, version - 1)
-    commitExactlyOnceAs(table, version, prev ++ stagedPaths, healGraceMs)
+    requireDurable(table, version - 1, "predecessor")
+    commitExactlyOnceAs(table, version, deltaLines(stagedPaths, Nil), healGraceMs)
   }
 
   /** Exactly-once REPLACE commit — the copy-on-write MERGE twin of
-    * [[commitExactlyOnce]]: manifest `version` lists exactly `files` (the
-    * full post-merge snapshot) instead of predecessor ++ staged. Same
-    * claim + crash-heal discipline; same contract (false ⇔ `version`
-    * already durably committed). Used by the streaming CDC upsert sink,
-    * where each micro-batch's MERGE output is a complete new table state
-    * derived deterministically from (predecessor state, batch). */
+    * [[commitExactlyOnce]]: version `version`'s snapshot is exactly
+    * `files` (the full post-merge state), committed as the delta
+    * `-(prev − files)` / `+(files − prev)` against the predecessor
+    * snapshot. Same claim + crash-heal discipline; same contract (false ⇔
+    * `version` already durably committed). Used by the streaming CDC
+    * upsert sink, where each micro-batch's MERGE output is a complete new
+    * table state derived deterministically from (predecessor state,
+    * batch). */
   def commitExactlyOnceReplace(table: String, version: Int, files: Seq[String],
                                healGraceMs: Long = HealGraceMs): Boolean = {
     require(version >= 2, s"version 1 belongs to init, got $version")
-    require(manifest(table, version - 1).length() > 0,
-      s"predecessor v${version - 1} of $table not durably committed")
-    commitExactlyOnceAs(table, version, files, healGraceMs)
+    requireDurable(table, version - 1, "predecessor")
+    val prev = resolve(table, version - 1)
+    commitExactlyOnceAs(table, version,
+      deltaLines(files.filterNot(prev.toSet), prev.filterNot(files.toSet)), healGraceMs)
   }
 
-  private def commitExactlyOnceAs(table: String, version: Int, files: Seq[String],
+  private def commitExactlyOnceAs(table: String, version: Int, lines: Seq[String],
                                   healGraceMs: Long): Boolean = {
-    if (tryCommit(table, version, files)) true
+    if (tryCommit(table, version, lines)) true
     else {
-      val m = manifest(table, version)
+      val m = delta(table, version)
       // claim exists: durable commit → replay, skip. Zero-byte → either
       // the crashed-commit window (heal with this identical batch's
       // content) or another writer mid-rename — the age gate (ADVICE r11)
@@ -198,7 +274,7 @@ object Commits {
             s"zero-byte claim ${m.getPath} is ${ageMs} ms old (< heal grace " +
               s"$healGraceMs ms) — possibly a writer between claim and content " +
               "rename; retry after the grace window")
-        writeManifest(table, m, files); true
+        writeAtomic(m, lines); true
       }
     }
   }
@@ -206,59 +282,59 @@ object Commits {
   /** Initialize version 1 from a staged path. Fails if the table exists. */
   def init(table: String, stagedPath: String): Int = {
     require(latestVersion(table) == 0, s"table $table already initialized")
-    require(tryCommit(table, 1, Seq(stagedPath)), s"lost init race on $table")
+    require(tryCommit(table, 1, deltaLines(Seq(stagedPath), Nil)), s"lost init race on $table")
     1
   }
 
   /** SHALLOW CLONE (the Delta `CREATE TABLE ... CLONE` mechanic): create
-    * `dst` whose v1 manifest references the SOURCE's current data files by
+    * `dst` whose v1 delta adds the SOURCE's current data files by
     * `../<src>/`-relative path — a metadata-only copy. Zero data bytes
     * move; the clone then evolves independently (its appends stage under
     * its OWN data/ dir and the source never learns of them), while source
     * commits after the clone point are equally invisible to the clone —
     * snapshot isolation in both directions, which the etl_clone_shallow
     * census proves by row count. `dst` must share `src`'s parent so the
-    * pair stays relocatable together (the manifestEntries relative-path
-    * contract). Fails if `dst` already exists. */
+    * pair stays relocatable together (the relative-path contract of
+    * [[actions]]). Fails if `dst` already exists. */
   def shallowClone(src: String, dst: String): Int = {
     val (srcF, dstF) = (new java.io.File(src), new java.io.File(dst))
     require(srcF.getParentFile.getCanonicalFile == dstF.getParentFile.getCanonicalFile,
       s"shallow clone requires siblings: $src vs $dst")
     require(latestVersion(dst) == 0, s"table $dst already initialized")
-    val entries = manifestEntries(src, latestVersion(src))
-      .map(e => s"../${srcF.getName}/$e")
-    require(tryCommit(dst, 1, entries), s"lost clone-init race on $dst")
+    val entries = resolve(src, latestVersion(src)).map(e => s"../${srcF.getName}/$e")
+    require(tryCommit(dst, 1, deltaLines(entries, Nil)), s"lost clone-init race on $dst")
     1
   }
 
   /** APPEND transaction: add `stagedPaths` on top of whatever is current.
-    * Reads nothing but the manifest, so a version conflict is resolved by
-    * rebasing onto the winner — retry until a commit lands (bounded; two
-    * writers cannot livelock a put-if-absent log). Returns the committed
-    * version and whether a conflict was hit along the way.
+    * Reads nothing, so a version conflict is resolved by re-targeting the
+    * winner's successor — retry until a commit lands (bounded; two writers
+    * cannot livelock a put-if-absent log). Returns the committed version
+    * and whether a conflict was hit along the way.
     *
     * Wedge detection (ADVICE r11): with latestVersion skipping zero-byte
-    * manifests, a CRASHED append's claim permanently holds its version —
+    * deltas, a CRASHED append's claim permanently holds its version —
     * every later append rebases to the same base, re-targets the claimed
-    * version, and fails createNewFile forever. Unlike the exactly-once
-    * family there is no heal path (append content is not re-derivable
-    * from the version), so once the claim is provably dead (older than
+    * version, and fails the claim forever. Unlike the exactly-once family
+    * there is no heal path (append content is not re-derivable from the
+    * version), so once the claim is provably dead (older than
     * [[HealGraceMs]] — a younger one may be a writer mid-rename, which
-    * the retry loop absorbs) this fails fast NAMING the wedged manifest
+    * the retry loop absorbs) this fails fast NAMING the wedged delta
     * instead of burning attempts into a generic retries-exhausted error;
     * the exhausted error also names a wedging claim when one exists. */
   def commitAppend(table: String, basis: Int, stagedPaths: Seq[String],
                    maxAttempts: Int = 10): (Int, Boolean) = {
+    requireDurable(table, basis, "append basis")
+    val lines = deltaLines(stagedPaths, Nil)
     var base = basis
     var conflicted = false
     var attempt = 0
     while (attempt < maxAttempts) {
       attempt += 1
       val target = base + 1
-      if (tryCommit(table, target, manifestEntries(table, base) ++ stagedPaths))
-        return (target, conflicted)
+      if (tryCommit(table, target, lines)) return (target, conflicted)
       conflicted = true
-      val m = manifest(table, target)
+      val m = delta(table, target)
       val rebased = latestVersion(table)
       if (rebased == base && m.exists() && m.length() == 0 &&
           System.currentTimeMillis() - m.lastModified() > HealGraceMs)
@@ -268,7 +344,7 @@ object Commits {
             "re-derivable — remove or reclaim the dead claim to unwedge the log")
       base = rebased // rebase onto the winner and retry
     }
-    val m = manifest(table, base + 1)
+    val m = delta(table, base + 1)
     val wedge =
       if (m.exists() && m.length() == 0)
         s" (zero-byte claim ${m.getPath} holds the target version — a crashed " +
@@ -278,16 +354,20 @@ object Commits {
       s"append could not commit after $maxAttempts attempts$wedge")
   }
 
-  /** REWRITE transaction (compaction/overwrite/delete shape): replace the
-    * file set of the snapshot it READ (`basis`) with `stagedPaths`. Valid
+  /** REWRITE transaction (compaction/overwrite/delete shape): remove
+    * `removes` from the snapshot it READ (`basis`) and add `adds`. Valid
     * only if the table has not moved: on a version conflict the staged
     * output was derived from stale data, so the transaction ABORTS —
-    * Left(Conflict) — and its staged files are never published. */
-  def commitRewrite(table: String, basis: Int,
-                    stagedPaths: Seq[String]): Either[Conflict, Int] = {
+    * Left(Conflict) — and its staged files are never published. Without
+    * `removes` the whole basis snapshot is replaced by `adds`. */
+  def commitRewrite(table: String, basis: Int, adds: Seq[String]): Either[Conflict, Int] =
+    commitRewrite(table, basis, adds, resolve(table, basis))
+
+  def commitRewrite(table: String, basis: Int, adds: Seq[String],
+                    removes: Seq[String]): Either[Conflict, Int] = {
     val target = basis + 1
-    if (tryCommit(table, target, stagedPaths)) Right(target)
-    else Left(Conflict(target, manifest(table, target).getPath))
+    if (tryCommit(table, target, deltaLines(adds, removes))) Right(target)
+    else Left(Conflict(target, delta(table, target).getPath))
   }
 
   /** STORED CHANGE DATA FILES (VERDICT r11 #1) — the write path of the
@@ -311,9 +391,9 @@ object Commits {
     * identity, so the rows are re-derivable by any replayer from
     * (predecessor snapshot, batch) — which makes publishing idempotent
     * (directory-exists skip + build-then-rename, the Layouts discipline)
-    * and lets a replayer that LOST the manifest claim still close the
+    * and lets a replayer that LOST the version claim still close the
     * crash window between a winner's commit and its change-data write.
-    * Publication requires the version's manifest to be durable: change
+    * Publication requires the version's delta to be durable: change
     * files describe committed transitions, never in-flight ones. */
   object ChangeData {
     private def dir(table: String, v: Int) =
@@ -340,7 +420,7 @@ object Commits {
       if (exists(table, version)) return false
       require(df.columns.contains("_change_type") && df.columns.contains("_commit_version"),
         s"change data for $table v$version lacks _change_type/_commit_version")
-      require(manifest(table, version).length() > 0,
+      require(delta(table, version).length() > 0,
         s"change data publishes only for durable commits: $table v$version")
       val tmp = new java.io.File(d.getParentFile,
         s".v$version-${java.util.UUID.randomUUID().toString.take(8)}")
@@ -363,20 +443,19 @@ object Commits {
       * vacuumed — readers must route them to the snapshot-diff fallback
       * (etl_change_data_feed's derivation). 0 = never vacuumed.
       *
-      * Durability (ADVICE r13): the marker is published by temp-write +
-      * ATOMIC_MOVE (below), so a reader can never observe a torn write.
-      * An EMPTY marker is still tolerated as 0 — the artifact of a
-      * pre-atomic writer's truncate-then-crash, and safe: the marker is
-      * written BEFORE any delete, so a crash that lost the marker also
-      * lost the deletes and every change file is still readable. Any
-      * other unparsable content is NOT a known crash shape — fail loudly
-      * with the repair path rather than silently routing readers. */
+      * Durability (ADVICE r13): the marker is published by [[writeAtomic]]
+      * (below), so a reader can never observe a torn write. An EMPTY
+      * marker is still tolerated as 0 — the artifact of a pre-atomic
+      * writer's truncate-then-crash, and safe: the marker is written
+      * BEFORE any delete, so a crash that lost the marker also lost the
+      * deletes and every change file is still readable. Any other
+      * unparsable content is NOT a known crash shape — fail loudly with
+      * the repair path rather than silently routing readers. */
     def vacuumHorizon(table: String): Int = {
       val f = horizonFile(table)
       if (!f.exists()) 0
       else {
-        val txt = new String(java.nio.file.Files.readAllBytes(f.toPath),
-          java.nio.charset.StandardCharsets.UTF_8).trim
+        val txt = new String(Files.readAllBytes(f.toPath), UTF_8).trim
         if (txt.isEmpty) 0
         else if (txt.forall(_.isDigit)) txt.toInt
         else throw new IllegalStateException(
@@ -402,182 +481,12 @@ object Commits {
       val newHorizon = math.max(vacuumHorizon(table), keepFrom)
       val f = horizonFile(table)
       f.getParentFile.mkdirs()
-      // temp-write + ATOMIC_MOVE (ADVICE r13): a crash mid-write must not
-      // leave a truncated marker that bricks every subsequent read — the
-      // same build-then-rename discipline the change-file publisher uses
-      val tmp = new java.io.File(f.getParentFile,
-        s".${f.getName}.${java.util.UUID.randomUUID().toString.take(8)}")
-      java.nio.file.Files.write(tmp.toPath,
-        newHorizon.toString.getBytes(java.nio.charset.StandardCharsets.UTF_8))
-      java.nio.file.Files.move(tmp.toPath, f.toPath,
-        java.nio.file.StandardCopyOption.ATOMIC_MOVE,
-        java.nio.file.StandardCopyOption.REPLACE_EXISTING)
+      // atomic (ADVICE r13): a crash mid-write must not leave a truncated
+      // marker that bricks every subsequent read
+      writeAtomic(f, Seq(newHorizon.toString))
       val victims = versions(table).filter(_ < newHorizon)
       victims.foreach(v => Layouts.rmTree(dir(table, v)))
       victims
-    }
-  }
-
-  /** DELTA-ACTION log with CHECKPOINT COMPACTION (VERDICT r9 #5) — the
-    * second half of the production transaction-log design. The
-    * full-listing log above makes every manifest a self-contained
-    * snapshot (O(files) metadata per commit); real logs (Delta's JSON
-    * actions, Iceberg's manifest lists) instead commit DELTAS — `+path` /
-    * `-path` action lines, O(changed files) per commit — which makes
-    * commits cheap but forces readers to REPLAY the log from v1. The
-    * published fix is periodic checkpointing: every N versions a reader-
-    * or writer-side job folds the log into one full-listing checkpoint
-    * file, and every subsequent read resolves latest-checkpoint + tail
-    * instead of the whole history. This object implements that protocol
-    * against its own `_alog/` directory (same claim discipline as the
-    * full-listing log: put-if-absent `createNewFile` claim, temp-write +
-    * atomic-rename content), so the two log designs coexist per table
-    * without touching each other's files.
-    *
-    * Layout:
-    * {{{
-    *   table/_alog/v00001.txt    delta manifest: "+rel" / "-rel" lines
-    *   table/_alog/v00004.ckpt   checkpoint: full file listing AT v4
-    * }}}
-    *
-    * Checkpoints are derived state — rewriting one is always safe
-    * (idempotent content), so they need no claim, only atomic rename;
-    * [[resolve]] tolerates a missing or lagging checkpoint (falls back to
-    * longer tails, ultimately full replay). CommitsSpec proves
-    * checkpoint-resolved snapshots ≡ full replay at every version,
-    * including across a conflict-rebase.
-    */
-  object ActionLog {
-    private def logDir(table: String) = new java.io.File(table, "_alog")
-    private def delta(table: String, v: Int) =
-      new java.io.File(logDir(table), f"v$v%05d.txt")
-    private def ckpt(table: String, v: Int) =
-      new java.io.File(logDir(table), f"v$v%05d.ckpt")
-
-    def latestVersion(table: String): Int =
-      Option(logDir(table).listFiles()).map(_.toSeq).getOrElse(Seq.empty)
-        .map(_.getName).filter(_.matches("v\\d{5}\\.txt"))
-        .map(_.substring(1, 6).toInt).maxOption.getOrElse(0)
-
-    /** Action lines of delta `v`: ('+', rel) adds, ('-', rel) removes. */
-    def actions(table: String, v: Int): Seq[(Char, String)] = {
-      val m = delta(table, v)
-      require(m.exists(), s"no delta manifest for version $v at $table")
-      require(m.length() > 0,
-        s"zero-byte delta v$v at $table: claimed but never written (crashed commit)")
-      import scala.jdk.CollectionConverters._
-      java.nio.file.Files.readAllLines(m.toPath).asScala.toSeq.filter(_.nonEmpty)
-        .map(l => (l.charAt(0), l.substring(1)))
-    }
-
-    private def writeAtomic(target: java.io.File, lines: Seq[String]): Unit = {
-      val tmp = java.nio.file.Files.createTempFile(
-        target.getParentFile.toPath, s".${target.getName}-", ".tmp")
-      java.nio.file.Files.write(tmp,
-        (lines.mkString("\n") + "\n").getBytes(java.nio.charset.StandardCharsets.UTF_8))
-      java.nio.file.Files.move(tmp, target.toPath,
-        java.nio.file.StandardCopyOption.ATOMIC_MOVE,
-        java.nio.file.StandardCopyOption.REPLACE_EXISTING)
-    }
-
-    /** Put-if-absent claim on delta `v`, then atomic content write —
-      * identical discipline to the full-listing tryCommit. */
-    private def tryCommitDelta(table: String, v: Int,
-                               adds: Seq[String], removes: Seq[String]): Boolean = {
-      val m = delta(table, v)
-      m.getParentFile.mkdirs()
-      if (!m.createNewFile()) false
-      else { writeAtomic(m, removes.map("-" + _) ++ adds.map("+" + _)); true }
-    }
-
-    /** Fold deltas `from+1 .. to` over `base` — order within a manifest:
-      * removes first, then adds (a compaction may re-add under a new
-      * name; re-adding an existing path is rejected as a protocol
-      * violation rather than silently deduped). */
-    private def fold(table: String, base: Set[String], from: Int, to: Int): Set[String] =
-      (from + 1 to to).foldLeft(base) { (acc, v) =>
-        actions(table, v).foldLeft(acc) {
-          case (a, ('-', rel)) =>
-            require(a.contains(rel), s"delta v$v at $table removes unknown $rel"); a - rel
-          case (a, ('+', rel)) =>
-            require(!a.contains(rel), s"delta v$v at $table re-adds live $rel"); a + rel
-          case (_, (op, rel)) =>
-            throw new IllegalArgumentException(s"bad action '$op$rel' in v$v at $table")
-        }
-      }
-
-    /** FULL replay from v1 — the reader cost a checkpoint exists to avoid.
-      * Sorted for deterministic downstream listings. */
-    def replay(table: String, v: Int): Seq[String] =
-      fold(table, Set.empty, 0, v).toSeq.sorted
-
-    /** Write (or refresh) the checkpoint at `v`: the full file listing of
-      * the snapshot at `v`, derived by replay. Idempotent derived state —
-      * atomic rename, no claim needed. */
-    def checkpoint(table: String, v: Int): Unit =
-      writeAtomic(ckpt(table, v), replay(table, v))
-
-    /** Highest checkpoint version ≤ v, 0 if none. */
-    def latestCheckpointAtOrBefore(table: String, v: Int): Int =
-      Option(logDir(table).listFiles()).map(_.toSeq).getOrElse(Seq.empty)
-        .map(_.getName).filter(_.matches("v\\d{5}\\.ckpt"))
-        .map(_.substring(1, 6).toInt).filter(_ <= v).maxOption.getOrElse(0)
-
-    /** THE reader path: snapshot at `v` = latest checkpoint ≤ v + delta
-      * tail. Returns (sorted file set, checkpoint version used — 0 if the
-      * resolve fell back to full replay, tail length folded). */
-    def resolveStats(table: String, v: Int): (Seq[String], Int, Int) = {
-      val cv = latestCheckpointAtOrBefore(table, v)
-      val base: Set[String] =
-        if (cv == 0) Set.empty
-        else {
-          val c = ckpt(table, cv)
-          require(c.length() > 0, s"zero-byte checkpoint v$cv at $table")
-          import scala.jdk.CollectionConverters._
-          java.nio.file.Files.readAllLines(c.toPath).asScala.toSet.filter(_.nonEmpty)
-        }
-      (fold(table, base, cv, v).toSeq.sorted, cv, v - cv)
-    }
-
-    def resolve(table: String, v: Int): Seq[String] = resolveStats(table, v)._1
-
-    /** Absolute data paths at `v`, checkpoint-resolved. */
-    def snapshotFiles(table: String, v: Int): Seq[String] =
-      resolve(table, v).map(rel => new java.io.File(table, rel).getCanonicalPath)
-
-    def init(table: String, stagedRel: String): Int = {
-      require(latestVersion(table) == 0, s"table $table already action-initialized")
-      require(tryCommitDelta(table, 1, Seq(stagedRel), Seq.empty),
-        s"lost action-log init race on $table")
-      1
-    }
-
-    /** Blind append of `adds`: rebases through conflicts like the
-      * full-listing commitAppend — an append's delta is valid against any
-      * newer snapshot (it read nothing), so on losing the claim it simply
-      * re-targets the next version. */
-    def commitAppend(table: String, basis: Int, adds: Seq[String],
-                     maxAttempts: Int = 10): (Int, Boolean) = {
-      var base = basis
-      var conflicted = false
-      var attempt = 0
-      while (attempt < maxAttempts) {
-        attempt += 1
-        if (tryCommitDelta(table, base + 1, adds, Seq.empty))
-          return (base + 1, conflicted)
-        conflicted = true
-        base = latestVersion(table)
-      }
-      throw new IllegalStateException(s"append could not commit after $maxAttempts attempts")
-    }
-
-    /** Rewrite (compaction shape): remove `removes`, add `adds`, valid
-      * only against the exact snapshot read — aborts on conflict. */
-    def commitRewrite(table: String, basis: Int, adds: Seq[String],
-                      removes: Seq[String]): Either[Conflict, Int] = {
-      val target = basis + 1
-      if (tryCommitDelta(table, target, adds, removes)) Right(target)
-      else Left(Conflict(target, delta(table, target).getPath))
     }
   }
 }

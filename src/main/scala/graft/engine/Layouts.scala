@@ -29,7 +29,7 @@ object Layouts {
     * signature scheme, different edge rule, schema change…). The version
     * is folded into every layout path, so a stale materialization from an
     * older pipeline is abandoned, never silently consumed. */
-  val LayoutVersion = 8
+  val LayoutVersion = 9
 
   /** Cache tag for dataset dir `d`: sanitized path + a staleness
     * fingerprint of (LayoutVersion, newest top-level mtime under `d`).

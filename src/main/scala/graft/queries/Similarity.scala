@@ -560,14 +560,16 @@ object Similarity {
       scored.withColumn("rn", row_number().over(
           Window.partitionBy("qid").orderBy(col("cos").desc, col("cand").asc)))
         .filter(col("rn") <= k).select("qid", "cand", "cos")
+    // the adjacency, its endpoint aliased once to a name the frontier
+    // (qid, cand) can never carry, so `col("__nbr")` below resolves
+    // uniquely by NAME — a dataset-qualified gbEdges("b") trips
+    // DetectAmbiguousSelfJoin on the untruncated lineage (gbEdges appears
+    // in every prior round)
+    val adj = gbEdges.select(col("a"), col("b").as("__nbr"))
     def expand(b0: DataFrame): DataFrame = {
-      // the frontier is (qid, cand) only, so `col("b")` below resolves
-      // uniquely to the adjacency's endpoint by NAME — a dataset-
-      // qualified gbEdges("b") trips DetectAmbiguousSelfJoin on the
-      // untruncated lineage (gbEdges appears in every prior round)
       val b = b0.select("qid", "cand")
-      b.union(b.join(gbEdges, b("cand") === gbEdges("a"))
-          .select(col("qid"), col("b").as("cand")))
+      b.union(b.join(adj, b("cand") === adj("a"))
+          .select(col("qid"), col("__nbr").as("cand")))
         .filter(col("cand") =!= col("qid")).distinct()
     }
     var b = ckpt(top(score(entries)))

@@ -53,7 +53,7 @@ object Temporal {
           s"first delivery of batch $batchId must win version ${batchId + 2}")
       }
       // restart replay: batch 1 re-delivered → same version, claim must fail
-      val b1staged = C.manifestEntries(work, 3).diff(C.manifestEntries(work, 2))
+      val b1staged = C.actions(work, 3).collect { case ('+', rel) => rel }
       require(!C.commitExactlyOnce(work, 3, b1staged),
         "a replayed micro-batch must lose the version claim")
       require(C.latestVersion(work) == 4, "3 batches over init must land at v4")
@@ -391,7 +391,7 @@ object Temporal {
     "st_exactly_once_sink" -> ((s, d) => {
       val C = graft.engine.Commits
       val table = eosScenario(s, d)
-      val b1staged = C.manifestEntries(table, 3).diff(C.manifestEntries(table, 2))
+      val b1staged = C.actions(table, 3).collect { case ('+', rel) => rel }
       val replayRejected = !C.commitExactlyOnce(table, 3, b1staged)
       (1 to 4).map { v =>
         val files = C.snapshotFiles(table, v)

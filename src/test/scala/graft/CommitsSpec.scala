@@ -7,7 +7,9 @@ import graft.engine.Commits
 /** Drives the optimistic-concurrency commit protocol's interleavings
   * directly (the etl_commit_conflict face audits the same properties from
   * a committed log): put-if-absent atomicity, append rebase, stale-rewrite
-  * abort, loser invisibility, and the contended-append progress bound. */
+  * abort, loser invisibility, and the contended-append progress bound —
+  * plus checkpoint-resolve ≡ replay over one mixed history, and a source
+  * scan that keeps the delta-action log the only log. */
 class CommitsSpec extends AnyFunSuite with SharedSparkSpec {
 
   private def freshTable(): String =
@@ -160,57 +162,53 @@ class CommitsSpec extends AnyFunSuite with SharedSparkSpec {
 
   test("action log: checkpoint-resolved snapshot ≡ full replay at every version, across a conflict-rebase") {
     val t = freshTable()
-    val A = Commits.ActionLog
-    A.init(t, Commits.stage(df(0 until 10), t, "base"))
-    A.commitAppend(t, 1, Seq(Commits.stage(df(10 until 30), t, "w2")))
+    Commits.init(t, Commits.stage(df(0 until 10), t, "base"))
+    Commits.commitAppend(t, 1, Seq(Commits.stage(df(10 until 30), t, "w2")))
     // compaction at v3: remove both live files, re-add as one
-    val live = A.resolve(t, 2)
+    val live = Commits.resolve(t, 2)
     assert(live.size == 2)
     val comp = Commits.stage(df(0 until 30), t, "compact")
-    assert(A.commitRewrite(t, 2, Seq(comp), live).isRight)
-    A.checkpoint(t, 3)
+    assert(Commits.commitRewrite(t, 2, Seq(comp), live).isRight)
+    Commits.checkpoint(t, 3)
     // two writers race basis 3: A wins v4 clean, B rebases through to v5
     val a = Commits.stage(df(30 until 40), t, "wA")
     val b = Commits.stage(df(40 until 45), t, "wB")
-    assert(A.commitAppend(t, 3, Seq(a)) == ((4, false)))
-    assert(A.commitAppend(t, 3, Seq(b)) == ((5, true)))
+    assert(Commits.commitAppend(t, 3, Seq(a)) == ((4, false)))
+    assert(Commits.commitAppend(t, 3, Seq(b)) == ((5, true)))
     (1 to 5).foreach { v =>
-      val (files, cv, tail) = A.resolveStats(t, v)
-      assert(files == A.replay(t, v), s"v$v: checkpoint-resolve must equal full replay")
+      val (files, cv, tail) = Commits.resolveStats(t, v)
+      assert(files == Commits.replay(t, v), s"v$v: checkpoint-resolve must equal full replay")
       if (v >= 3) assert(cv == 3 && tail == v - 3, s"v$v must read ckpt v3 + ${v - 3} deltas")
       else assert(cv == 0 && tail == v, s"v$v predates the checkpoint: full replay")
     }
-    assert(spark.read.parquet(A.snapshotFiles(t, 5): _*).count() == 45)
+    assert(spark.read.parquet(Commits.snapshotFiles(t, 5): _*).count() == 45)
   }
 
   test("action log: stale rewrite aborts; earlier snapshots stay time-travel readable") {
     val t = freshTable()
-    val A = Commits.ActionLog
-    A.init(t, Commits.stage(df(0 until 10), t, "base"))
+    Commits.init(t, Commits.stage(df(0 until 10), t, "base"))
     val staleComp = Commits.stage(df(0 until 10), t, "compactStale")
-    val v1Files = A.resolve(t, 1)
+    val v1Files = Commits.resolve(t, 1)
     // a winner moves the table before the compaction commits
-    A.commitAppend(t, 1, Seq(Commits.stage(df(10 until 20), t, "w2")))
-    assert(A.commitRewrite(t, 1, Seq(staleComp), v1Files).isLeft,
+    Commits.commitAppend(t, 1, Seq(Commits.stage(df(10 until 20), t, "w2")))
+    assert(Commits.commitRewrite(t, 1, Seq(staleComp), v1Files).isLeft,
       "a rewrite against a moved basis must abort")
-    assert(A.replay(t, 2).forall(f => !f.contains("compactStale")),
+    assert(Commits.replay(t, 2).forall(f => !f.contains("compactStale")),
       "aborted staged files must never surface in any snapshot")
-    assert(spark.read.parquet(A.snapshotFiles(t, 1): _*).count() == 10)
-    assert(spark.read.parquet(A.snapshotFiles(t, 2): _*).count() == 20)
+    assert(spark.read.parquet(Commits.snapshotFiles(t, 1): _*).count() == 10)
+    assert(spark.read.parquet(Commits.snapshotFiles(t, 2): _*).count() == 20)
   }
 
   test("action log: protocol violations fail loudly — re-add of a live path, remove of an unknown one") {
     val t = freshTable()
-    val A = Commits.ActionLog
     val base = Commits.stage(df(0 until 10), t, "base")
-    A.init(t, base)
-    A.commitAppend(t, 1, Seq(base)) // re-adds the live path at v2
-    intercept[IllegalArgumentException] { A.replay(t, 2) }
+    Commits.init(t, base)
+    Commits.commitAppend(t, 1, Seq(base)) // re-adds the live path at v2
+    intercept[IllegalArgumentException] { Commits.replay(t, 2) }
     val t2 = freshTable()
-    val A2 = Commits.ActionLog
-    A2.init(t2, Commits.stage(df(0 until 10), t2, "base"))
-    assert(A2.commitRewrite(t2, 1, Seq.empty, Seq("data/never-existed")).isRight)
-    intercept[IllegalArgumentException] { A2.replay(t2, 2) }
+    Commits.init(t2, Commits.stage(df(0 until 10), t2, "base"))
+    assert(Commits.commitRewrite(t2, 1, Seq.empty, Seq("data/never-existed")).isRight)
+    intercept[IllegalArgumentException] { Commits.replay(t2, 2) }
   }
 
   test("contended appends from many stale writers all make progress") {
@@ -433,5 +431,99 @@ class CommitsSpec extends AnyFunSuite with SharedSparkSpec {
       .as[(Long, String)].collect().toMap
     assert(j == Map(1L -> "update", 2L -> "delete", 3L -> "insert"),
       "the v2->v3 transition must remain derivable after its change file is vacuumed")
+  }
+
+  test("one log, mixed history: resolve ≡ replay and the expected file set at every version, on the table and its shallow clone") {
+    val t = freshTable()
+    val base = Commits.stage(df(0 until 10), t, "base")
+    Commits.init(t, base)
+    // two appends race basis 1: a wins v2 clean, b rebases through to v3
+    val a = Commits.stage(df(10 until 20), t, "wA")
+    val b = Commits.stage(df(20 until 25), t, "wB")
+    assert(Commits.commitAppend(t, 1, Seq(a)) == ((2, false)))
+    assert(Commits.commitAppend(t, 1, Seq(b)) == ((3, true)))
+    // a compaction of v1 staged before the table moved aborts
+    val stale = Commits.stage(
+      spark.read.parquet(Commits.snapshotFiles(t, 1): _*).coalesce(1), t, "stale")
+    assert(Commits.commitRewrite(t, 1, Seq(stale)).isLeft)
+    // a quiescent compaction replaces the whole v3 snapshot at v4
+    val comp = Commits.stage(
+      spark.read.parquet(Commits.snapshotFiles(t, 3): _*).coalesce(1), t, "compact")
+    assert(Commits.commitRewrite(t, 3, Seq(comp)) == Right(4))
+    Commits.checkpoint(t, 4)
+    // exactly-once append at v5, exactly-once replace at v6 (drops e5)
+    val e5 = Commits.stage(df(25 until 30), t, "e5")
+    assert(Commits.commitExactlyOnce(t, 5, Seq(e5)))
+    val r6 = Commits.stage(df(100 until 103), t, "r6")
+    assert(Commits.commitExactlyOnceReplace(t, 6, Seq(comp, r6)))
+    // v7: a dead zero-byte claim healed by the exactly-once replay
+    val claim = new java.io.File(s"$t/_log/v00007.txt")
+    assert(claim.createNewFile())
+    assert(claim.setLastModified(System.currentTimeMillis() - 2 * Commits.HealGraceMs))
+    val e7 = Commits.stage(df(200 until 204), t, "e7")
+    assert(Commits.commitExactlyOnce(t, 7, Seq(e7)))
+    val expected = Seq(Seq(base), Seq(base, a), Seq(base, a, b), Seq(comp),
+      Seq(comp, e5), Seq(comp, r6), Seq(comp, r6, e7)).map(_.sorted)
+    assert(Commits.latestVersion(t) == 7)
+    (1 to 7).foreach { v =>
+      val (files, cv, tail) = Commits.resolveStats(t, v)
+      assert(files == Commits.replay(t, v), s"v$v: checkpoint-resolve must equal full replay")
+      assert(Commits.manifestEntries(t, v) == expected(v - 1), s"v$v: wrong file set")
+      assert(!files.contains(stale), s"aborted rewrite leaked into v$v")
+      assert((cv, tail) == (if (v >= 4) (4, v - 4) else (0, v)), s"v$v: wrong checkpoint use")
+    }
+    // each delta holds only its own change: an append one add, the
+    // replace one remove and one add
+    assert(Commits.actions(t, 2) == Seq(('+', a)))
+    assert(Commits.actions(t, 6) == Seq(('-', e5), ('+', r6)))
+    assert(Commits.read(spark, t).count() == 25 + 3 + 4)
+    // the clone resolves to the same files through ../-relative adds
+    val dst = new java.io.File(new java.io.File(t).getParentFile, "clone").getPath
+    assert(Commits.shallowClone(t, dst) == 1)
+    val cl = Commits.stage(df(300 until 302), dst, "cl")
+    assert(Commits.commitAppend(dst, 1, Seq(cl)) == ((2, false)))
+    Commits.checkpoint(dst, 2)
+    val shared = expected(6).map("../tbl/" + _)
+    val cloneExpected = Seq(shared, shared :+ cl).map(_.sorted)
+    (1 to 2).foreach { v =>
+      assert(Commits.resolve(dst, v) == Commits.replay(dst, v), s"clone v$v: resolve ≢ replay")
+      assert(Commits.manifestEntries(dst, v) == cloneExpected(v - 1), s"clone v$v: wrong file set")
+    }
+    assert(Commits.read(spark, dst).count() == 25 + 3 + 4 + 2)
+  }
+
+  test("a full-listing manifest from the retired log format fails loudly, naming the file and version") {
+    val t = freshTable()
+    val base = Commits.stage(df(0 until 5), t, "base")
+    val m = new java.io.File(s"$t/_log/v00001.txt")
+    m.getParentFile.mkdirs()
+    java.nio.file.Files.write(m.toPath, s"$base\n".getBytes("UTF-8"))
+    assert(Commits.latestVersion(t) == 1)
+    val e = intercept[IllegalArgumentException](Commits.read(spark, t))
+    assert(e.getMessage.contains(m.getPath) && e.getMessage.contains("version 1"),
+      s"an old-format manifest must be named, got: ${e.getMessage}")
+  }
+
+  test("one commit log in the source: one atomic rename, one claim, no second log") {
+    def code(f: java.io.File): Seq[String] =
+      new String(java.nio.file.Files.readAllBytes(f.toPath), "UTF-8").linesIterator
+        .filterNot { l => val x = l.trim; x.startsWith("*") || x.startsWith("//") || x.startsWith("/*") }
+        .toSeq
+    val commits = code(new java.io.File("src/main/scala/graft/engine/Commits.scala"))
+    for (token <- Seq("ATOMIC_MOVE", "createNewFile()")) {
+      val n = commits.count(_.contains(token))
+      assert(n == 1, s"engine/Commits.scala must hold `$token` once (one temp-write + " +
+        s"rename helper, one claim), found $n")
+    }
+    def scalaFiles(dir: java.io.File): Seq[java.io.File] =
+      Option(dir.listFiles()).toSeq.flatten.flatMap { f =>
+        if (f.isDirectory) scalaFiles(f) else if (f.getName.endsWith(".scala")) Seq(f) else Nil
+      }
+    // spelled in halves so this scan does not find itself
+    for (token <- Seq("_a" + "log", "Action" + "Log")) {
+      val found = scalaFiles(new java.io.File("src")).filter(f =>
+        new String(java.nio.file.Files.readAllBytes(f.toPath), "UTF-8").contains(token))
+      assert(found.isEmpty, s"`$token` (the retired second log) found in: ${found.mkString(", ")}")
+    }
   }
 }

@@ -751,7 +751,8 @@ class PlanQualitySpec extends AnyFunSuite with SharedSparkSpec {
     val exchangeInputs = """\(\d+\) Exchange\s*\nInput \[\d+\]: \[([^\]]*)\]""".r
       .findAllMatchIn(p).map(_.group(1)).toSeq
     assert(exchangeInputs.nonEmpty, "expected Exchange nodes in the untruncated plan")
-    val offenders = exchangeInputs.filter(in => in.contains("qv#") || in.contains("va#") || in.contains("vb#"))
+    val offenders = exchangeInputs.filter(in =>
+      Seq("qv#", "cv#", "va#", "vb#").exists(in.contains))
     assert(offenders.isEmpty,
       s"vector arrays must not cross an exchange; offending Exchange inputs:\n${offenders.mkString("\n")}")
   }
