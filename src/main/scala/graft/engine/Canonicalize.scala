@@ -3,6 +3,7 @@ package graft.engine
 import org.apache.spark.sql.{Column, DataFrame}
 import org.apache.spark.sql.functions._
 import graft.engine.{Durations => D}
+import graft.plans.GraftExtensions.parseF1Duration
 
 /** The transformer pipeline (SURVEY.md §3.2,
   * /root/reference/src/transform/f1_dataTransformer.py:125-207) re-expressed
@@ -19,6 +20,11 @@ import graft.engine.{Durations => D}
   *
   * At scale both passes are single codegen'd projections over a partitioned
   * read — the reference's file-at-a-time os.walk becomes one distributed job.
+  *
+  * Durations parse with the native char parser (`parseF1Duration`, one
+  * expression per column). The composed `Durations.parseDurationToMillis`
+  * (3 `rlike` + 13 `regexp_extract` per column, slow to plan) is the
+  * reference it agrees with on every string (PlansSpec, CanonicalizeSpec).
   */
 object Canonicalize {
 
@@ -74,12 +80,13 @@ object Canonicalize {
     when(trim(c).isin(naTokens: _*), lit(null)).otherwise(trim(c))
 
   /** raw all-string frame → typed frame (total: bad cells become NULL). */
-  def typed(raw: DataFrame, table: String): DataFrame = {
+  def typed(raw: DataFrame, table: String,
+            parseDuration: Column => Column = parseF1Duration): DataFrame = {
     val spec = specs(table)
     val out = raw.columns.map { name =>
       val c = cleaned(col(name))
       val e =
-        if (spec.durationCols.contains(name)) D.parseDurationToMillis(c)
+        if (spec.durationCols.contains(name)) parseDuration(c)
         else if (spec.secondsCols.contains(name)) D.secondsToMillis(c.try_cast("double"))
         else if (spec.isoCols.contains(name)) to_timestamp(c)
         else if (spec.intCols.contains(name)) {

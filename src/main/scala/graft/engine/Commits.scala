@@ -166,9 +166,11 @@ object Commits {
   def snapshotFiles(table: String, v: Int): Seq[String] =
     resolve(table, v).map(rel => new java.io.File(table, rel).getCanonicalPath)
 
-  /** Read the latest snapshot (empty-schema-less: requires ≥1 version). */
-  def read(spark: SparkSession, table: String): DataFrame =
-    spark.read.parquet(snapshotFiles(table, latestVersion(table)): _*)
+  /** Read the snapshot at `v` (default: the latest) with no Spark job, from
+    * the footer inference would read ([[Tables.parquet]]); needs ≥1 file. */
+  def read(spark: SparkSession, table: String, v: Int): DataFrame =
+    Tables.parquet(spark, snapshotFiles(table, v): _*)
+  def read(spark: SparkSession, table: String): DataFrame = read(spark, table, latestVersion(table))
 
   /** Stage `df` as a new data directory under the table, NOT yet visible:
     * only a later delta commit publishes it. Returns the table-relative
@@ -433,7 +435,7 @@ object Commits {
       * — no snapshot is touched. */
     def read(spark: SparkSession, table: String, v: Int): DataFrame = {
       require(exists(table, v), s"no change data for $table v$v")
-      spark.read.parquet(dir(table, v).getPath)
+      Tables.parquet(spark, dir(table, v).getPath)
     }
 
     private def horizonFile(table: String) =

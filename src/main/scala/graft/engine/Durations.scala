@@ -114,7 +114,10 @@ object Durations {
 
   /** F6 (f1_dataTransformer.py:11-64): sign-aware regex-dispatch parse of the
     * three duration encodings → millis LongType; no-match / 'nan' / 'nat' /
-    * empty → NULL (never throws — SURVEY.md §1.3). */
+    * empty → NULL (never throws — SURVEY.md §1.3).
+    * The REFERENCE implementation (f6_parse_edges, PlansSpec): the engine
+    * runs the native `graft.plans.ParseF1Duration`, which agrees with it on
+    * every string and plans one expression instead of 16 regex calls. */
   def parseDurationToMillis(s0: Column): Column = {
     val s = trim(s0)
     val lowered = lower(s)
@@ -133,11 +136,6 @@ object Durations {
           grp(s, ReHhMmSs, 3) * 60000L + grp(s, ReHhMmSs, 4) * 1000L))
       .otherwise(lit(null).cast("long"))
   }
-
-  /** F8 (streamlit_app.py:41-59): `[-]HH:MM:SS:mmm` → float seconds via the
-    * "replace last `:` with `.`" trick; coercing (no match → NULL). */
-  def safeToSeconds(s: Column): Column =
-    parseDurationToMillis(s).cast("double") / 1000.0
 
   /** F1 (f1_dataExtractor.py:28-35): anything numeric-like → float seconds,
     * else NULL. Millis-long columns divide; strings try-cast. */

@@ -68,7 +68,7 @@ object Layouts {
   /** The committed layout at `path`, written first if its _SUCCESS marker is
     * missing, then opened by `open`: [[Tables.parquet]] unless not parquet. */
   def committed(s: SparkSession, path: String,
-      open: (SparkSession, String) => DataFrame = Tables.parquet)(write: => Unit): DataFrame = {
+      open: (SparkSession, String) => DataFrame = Tables.parquet(_, _))(write: => Unit): DataFrame = {
     ensureCommitted(s, path)(write)
     open(s, path)
   }

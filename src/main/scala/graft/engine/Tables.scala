@@ -61,33 +61,35 @@ object Tables {
     }
   }
 
-  /** Open the parquet table at `path` with no Spark job: the driver reads
-    * the one footer Spark's schema-inference job would (`_common_metadata`,
-    * else `_metadata`, else the first data file in path order; row groups
-    * skipped) and converts it with the session's flags, so schema, plans
-    * and results are inference's own. No cache: a table rewritten at `path`
-    * is seen at once. No data file: `spark.read.parquet` raises Spark's error. */
-  def parquet(s: SparkSession, path: String): DataFrame = {
+  /** Open the parquet table at `paths` with no Spark job: the driver reads
+    * the one footer Spark's non-merging inference would (over the leaves of
+    * every path, sorted by path: `_common_metadata`, else `_metadata`, else
+    * the first data file; row groups skipped) and converts it with the
+    * session's flags, so schema, plans and results are inference's own. No
+    * cache: a table rewritten in place is seen at once. No data file:
+    * `spark.read.parquet` raises Spark's error. */
+  def parquet(s: SparkSession, paths: String*): DataFrame = {
     val conf = s.sessionState.newHadoopConf()
-    val fs = new Path(path).getFileSystem(conf)
     val summaries = Seq("_common_metadata", "_metadata")
-    // skip `_*` (not `_k=v` partition dirs or summaries), `.*`, `*._COPYING_`
-    def leaves(f: FileStatus): Seq[FileStatus] = if (!f.isDirectory) Seq(f) else
-      fs.listStatus(f.getPath).toSeq.filter { c =>
-        val n = c.getPath.getName
-        summaries.exists(n.startsWith) || !(n.startsWith("_") && !n.contains("=") ||
-          n.startsWith(".") || n.endsWith("._COPYING_"))
-      }.flatMap(leaves)
-    val files = scala.util.Try(fs.getFileStatus(new Path(path))).toOption.toSeq.flatMap(leaves)
-      .sortBy(_.getPath.toString)
+    val files = paths.flatMap { path =>
+      val fs = new Path(path).getFileSystem(conf)
+      // skip `_*` (not `_k=v` partition dirs or summaries), `.*`, `*._COPYING_`
+      def leaves(f: FileStatus): Seq[FileStatus] = if (!f.isDirectory) Seq(f) else
+        fs.listStatus(f.getPath).toSeq.filter { c =>
+          val n = c.getPath.getName
+          summaries.exists(n.startsWith) || !(n.startsWith("_") && !n.contains("=") ||
+            n.startsWith(".") || n.endsWith("._COPYING_"))
+        }.flatMap(leaves)
+      scala.util.Try(fs.getFileStatus(new Path(path))).toOption.toSeq.flatMap(leaves)
+    }.sortBy(_.getPath.toString)
     summaries.flatMap(n => files.find(_.getPath.getName == n)).headOption
       .orElse(files.find(f => !summaries.contains(f.getPath.getName))) match {
       case Some(f) =>
         val footer = new Footer(f.getPath,
           ParquetFooterReader.readFooter(HadoopInputFile.fromStatus(f, conf), SKIP_ROW_GROUPS))
         s.read.schema(ParquetFileFormat.readSchemaFromFooter(
-          footer, new ParquetToSparkSchemaConverter(s.sessionState.conf))).parquet(path)
-      case None => s.read.parquet(path)
+          footer, new ParquetToSparkSchemaConverter(s.sessionState.conf))).parquet(paths: _*)
+      case None => s.read.parquet(paths: _*)
     }
   }
 

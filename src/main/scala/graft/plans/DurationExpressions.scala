@@ -7,9 +7,9 @@ import org.apache.spark.unsafe.types.UTF8String
 
 /** Native Catalyst expressions for the duration codec (SURVEY.md §2.10
   * "showcase-grade option"): semantics identical to the composed Column
-  * versions in graft.engine.Durations (property-checked in PlansSpec), but
-  * evaluated by a hand-rolled char parser inside whole-stage codegen — no
-  * regex, no intermediate arrays.
+  * versions in graft.engine.Durations, the reference (property-checked and
+  * fuzzed in PlansSpec), but evaluated by a hand-rolled char parser inside
+  * whole-stage codegen — no regex, no intermediate arrays.
   *
   * Reference semantics: parse dispatch per
   * /root/reference/src/transform/f1_dataTransformer.py:11-64; truncating
@@ -45,20 +45,28 @@ object ParseF1Duration {
     * Width dispatch matches graft.engine.Durations.parseDurationToMillis
     * (leading group 1-7 digits — a longer digit run returns null rather than
     * overflowing parseLong/Long; see the leniency note there for why widths
-    * are looser than the reference's exactly-2-digit regexes). */
+    * are looser than the reference's exactly-2-digit regexes). So do the
+    * blanks: Spark's `trim` strips only U+0020 (Java's `String.trim` strips
+    * every char ≤ U+0020), and the regexes' `$` accepts one final line
+    * terminator (`\r\n`, `\n`, `\r`, U+0085, U+2028, U+2029). NA tokens
+    * hold letters, which the digit test rejects. */
   def parseBoxed(raw: String): java.lang.Long = {
     if (raw == null) return null
-    val s = raw.trim
-    if (s.isEmpty) return null
-    val ls = s.toLowerCase
-    if (ls == "nan" || ls == "nat" || ls == "none") return null
-    var i = 0
-    var sign = 1L
-    if (s.charAt(0) == '-') { sign = -1L; i = 1 }
-    // split remaining into digit-only groups on ':'
+    var b = 0
+    var e = raw.length
+    while (b < e && raw.charAt(b) == ' ') b += 1
+    while (e > b && raw.charAt(e - 1) == ' ') e -= 1
+    if (e > b) raw.charAt(e - 1) match {
+      case '\n' => e -= (if (e - 2 >= b && raw.charAt(e - 2) == '\r') 2 else 1)
+      case '\r' | '\u0085' | '\u2028' | '\u2029' => e -= 1
+      case _ =>
+    }
+    val s = raw.substring(b, e)
+    val sign = if (s.startsWith("-")) -1L else 1L
+    // split remaining into digit-only groups on ':' (blank → one empty group)
     val parts = new scala.collection.mutable.ArrayBuffer[String](4)
-    var start = i
-    var j = i
+    var start = if (sign < 0) 1 else 0
+    var j = start
     while (j <= s.length) {
       if (j == s.length || s.charAt(j) == ':') {
         if (j == start) return null // empty group

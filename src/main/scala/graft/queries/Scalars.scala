@@ -148,12 +148,12 @@ object Scalars {
     }),
 
     // F8: HH:MM:SS:mmm string → float seconds (coercing). The parse runs
-    // through the NATIVE codegen expression (graft.plans.ParseF1Duration —
-    // same semantics as the composed regex path, PlansSpec agreement
-    // property; the composed version stays exercised by f6_parse_edges):
-    // the composed form was 3 RLIKEs + 12 regexp_extracts per row, the
-    // dominant cost of this face (guide §4: prefer codegen-friendly
-    // expressions in the hot path).
+    // through the engine's parser, the native codegen expression
+    // (graft.plans.ParseF1Duration), as Canonicalize.typed does. The
+    // composed regex parser is the reference it must agree with on every
+    // string (PlansSpec edges and fuzz); f6_parse_edges runs that
+    // reference. Composed, the parse is 3 RLIKEs + 13 regexp_extracts per
+    // row, and it dominated this face's plan and run time.
     "f8_safe_seconds" -> ((s, d) =>
       t(s, d, "orders")
         .withColumn("sec_in", col("o_totalprice") / 3.0 - 30000.0)

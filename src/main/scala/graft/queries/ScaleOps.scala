@@ -3,7 +3,7 @@ package graft.queries
 import org.apache.spark.sql.{Column, DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.expressions.Window
-import graft.engine.{FixedPoint => FP, Tables}
+import graft.engine.{Commits => C, FixedPoint => FP, Tables}
 import graft.engine.Tables.{load => t}
 
 /** Scale-path operators beyond the reference's surface: skew-salted joins,
@@ -22,14 +22,13 @@ object ScaleOps {
     * table-relative, so the publishing rename is safe). */
   private def commitScenario(s: SparkSession, d: String): String =
     graft.engine.Layouts.publish(s, s"/tmp/graft_commits/tbl_${graft.engine.Layouts.tag(d)}") { work =>
-      val C = graft.engine.Commits
       val cust = t(s, d, "customer")
       C.init(work, C.stage(cust.filter(col("c_nationkey") < 10), work, "base"))
       // all three writers stage against basis v1
       val aStaged = C.stage(cust.filter(col("c_nationkey") >= 10 &&
         col("c_nationkey") < 20), work, "writerA")
       val bStaged = C.stage(
-        s.read.parquet(C.snapshotFiles(work, 1): _*).coalesce(1), work, "writerB")
+        C.read(s, work, 1).coalesce(1), work, "writerB")
       val cStaged = C.stage(cust.filter(col("c_nationkey") >= 20), work, "writerC")
       val (v2, aConf) = C.commitAppend(work, 1, Seq(aStaged))
       require(v2 == 2 && !aConf, "append A must win v2 unconflicted")
@@ -49,7 +48,6 @@ object ScaleOps {
     * commit). Published like commitScenario. */
   private def ckptScenario(s: SparkSession, d: String): String =
     graft.engine.Layouts.publish(s, s"/tmp/graft_ckpt/tbl_${graft.engine.Layouts.tag(d)}") { work =>
-      val C = graft.engine.Commits
       val cust = t(s, d, "customer")
       C.init(work, C.stage(cust.filter(col("c_nationkey") < 5), work, "base"))
       C.commitAppend(work, 1, Seq(C.stage(
@@ -58,7 +56,7 @@ object ScaleOps {
         cust.filter(col("c_nationkey") >= 10 && col("c_nationkey") < 15), work, "w3")))
       val live = C.resolve(work, 3)
       val compacted = C.stage(
-        s.read.parquet(C.snapshotFiles(work, 3): _*).coalesce(1), work, "compact")
+        C.read(s, work, 3).coalesce(1), work, "compact")
       require(C.commitRewrite(work, 3, Seq(compacted), live).isRight,
         "quiescent compaction must land at v4")
       C.checkpoint(work, 4)
@@ -1119,7 +1117,6 @@ object ScaleOps {
     // etl_commit_conflict — the aborted compaction correctly never appears
     // in any version's diff.
     "etl_commit_changes" -> ((s, d) => {
-      val C = graft.engine.Commits
       val table = commitScenario(s, d)
       val latest = C.latestVersion(table)
       val perVersion = (1 to latest).map { v =>
@@ -1153,7 +1150,6 @@ object ScaleOps {
     // Layouts.publish like commitScenario; at 100 TB a clone is the same
     // one metadata write regardless of table size — that is the point.
     "etl_clone_shallow" -> ((s, d) => {
-      val C = graft.engine.Commits
       val root = graft.engine.Layouts.publish(s,
           s"/tmp/graft_clone/${graft.engine.Layouts.tag(d)}") { work =>
         val (wsrc, wdst) = (s"$work/src", s"$work/clone")
@@ -1411,7 +1407,6 @@ object ScaleOps {
     // half-build can never be consumed); CommitsSpec drives the same
     // interleavings plus the contended-append livelock bound directly.
     "etl_commit_conflict" -> ((s, d) => {
-      val C = graft.engine.Commits
       val table = commitScenario(s, d)
       // audit the committed log: metadata-sized driver reads (the
       // FileSkipping / Delta-log-read exception), data stays distributed
@@ -1421,7 +1416,7 @@ object ScaleOps {
         .map(_.toSeq).getOrElse(Seq.empty).map("data/" + _.getName).sorted
       val orphans = staged.filterNot(published)
       val snapCounts = (1 to latest).map { v =>
-        s.read.parquet(C.snapshotFiles(table, v): _*)
+        C.read(s, table, v)
           .agg(count(lit(1)).as(s"v${v}_rows"))
       }.reduce(_.crossJoin(_))
       snapCounts
@@ -1457,7 +1452,6 @@ object ScaleOps {
     // distributed. CommitsSpec drives the same protocol directly
     // (claim atomicity, rebase-through-checkpoint, abort invisibility).
     "etl_commit_checkpoint" -> ((s, d) => {
-      val C = graft.engine.Commits
       val table = ckptScenario(s, d)
       val latest = C.latestVersion(table)
       (1 to latest).map { v =>

@@ -3,7 +3,7 @@ package graft.queries
 import org.apache.spark.sql.{Column, DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.expressions.Window
-import graft.engine.{FixedPoint => FP}
+import graft.engine.{Commits => C, FixedPoint => FP}
 import graft.engine.Tables.{load => t}
 import graft.streaming.StreamHarness
 
@@ -43,7 +43,6 @@ object Temporal {
     * delivery into exactly-once table state. */
   private def eosScenario(s: SparkSession, d: String): String =
     graft.engine.Layouts.publish(s, s"/tmp/graft_eos/tbl_${graft.engine.Layouts.tag(d)}") { work =>
-      val C = graft.engine.Commits
       val ev = t(s, d, "events")
         .select(col("event_id"), col("ts"), col("user_id"), col("event_type"), col("value"))
       C.init(work, C.stage(ev.limit(0), work, "base"))
@@ -79,7 +78,6 @@ object Temporal {
     // tbl2: the r12 layout adds stored `_change_data/` per commit — a new
     // path so a pre-CDF materialization is abandoned, never half-upgraded
     graft.engine.Layouts.publish(s, s"/tmp/graft_cdc/tbl2_${graft.engine.Layouts.tag(d)}") { work =>
-      val C = graft.engine.Commits
       val ch = t(s, d, "events")
         .select(col("event_id"), col("ts"), col("user_id"), col("value"),
           when(col("event_id") % 10 === 0, "D").otherwise("U").as("op"))
@@ -101,7 +99,7 @@ object Temporal {
           .orderBy(col("ts").desc, col("event_id").desc)
         val winners = changes.withColumn("rn", row_number().over(w))
           .filter(col("rn") === 1)
-        val prev = s.read.parquet(C.snapshotFiles(work, basis): _*)
+        val prev = C.read(s, work, basis)
         val state = prev
           .join(winners.select("user_id"), Seq("user_id"), "left_anti")
           .unionByName(winners.filter(col("op") === "U")
@@ -171,7 +169,6 @@ object Temporal {
   private def cdfVacuumScenario(s: SparkSession, d: String): String = {
     val src0 = cdcScenario(s, d) // ensures snapshots + change data exist
     graft.engine.Layouts.publish(s, s"/tmp/graft_cdc/vac_${graft.engine.Layouts.tag(d)}") { work =>
-      val C = graft.engine.Commits
       def copyTree(from: java.io.File, to: java.io.File): Unit = {
         if (from.isDirectory) {
           to.mkdirs()
@@ -208,16 +205,15 @@ object Temporal {
   private def cdfStreamScenario(s: SparkSession, d: String): String = {
     val src0 = cdcScenario(s, d) // ensures the change data exists
     graft.engine.Layouts.publish(s, s"/tmp/graft_cdc/recon_${graft.engine.Layouts.tag(d)}") { work =>
-      val C = graft.engine.Commits
       C.init(work, C.stage(
-        s.read.parquet(C.snapshotFiles(src0, 1): _*).limit(0), work, "base"))
+        C.read(s, src0, 1).limit(0), work, "base"))
       val changes = (2 to 4).map(v => C.ChangeData.read(s, src0, v))
       StreamHarness.replayForeach(s, changes) { (df, batchId) =>
         val version = batchId.toInt + 2
         val touched = df.filter(col("_change_type")
             .isin("delete", "update_preimage", "update_postimage"))
           .select("user_id").distinct()
-        val next = s.read.parquet(C.snapshotFiles(work, version - 1): _*)
+        val next = C.read(s, work, version - 1)
           .join(touched, Seq("user_id"), "left_anti")
           .unionByName(df.filter(col("_change_type")
               .isin("insert", "update_postimage"))
@@ -389,15 +385,13 @@ object Temporal {
     // the sink's per-batch cost is one manifest claim regardless of data
     // volume, which is the entire point of the mechanic.
     "st_exactly_once_sink" -> ((s, d) => {
-      val C = graft.engine.Commits
       val table = eosScenario(s, d)
       val b1staged = C.actions(table, 3).collect { case ('+', rel) => rel }
       val replayRejected = !C.commitExactlyOnce(table, 3, b1staged)
       (1 to 4).map { v =>
-        val files = C.snapshotFiles(table, v)
-        s.read.parquet(files: _*).agg(count(lit(1)).as("n_rows"))
+        C.read(s, table, v).agg(count(lit(1)).as("n_rows"))
           .select(lit(v.toLong).as("version"),
-            lit(files.size.toLong).as("n_files"), col("n_rows"))
+            lit(C.manifestEntries(table, v).size.toLong).as("n_files"), col("n_rows"))
       }.reduce(_.union(_))
         .crossJoin(broadcast(t(s, d, "events").agg(count(lit(1)).as("__n_events"))))
         .select(col("version"), col("n_files"), col("n_rows"),
@@ -419,12 +413,11 @@ object Temporal {
     // within-batch LWW + batch-beats-state + tombstone semantics in one
     // window.
     "st_cdc_upsert" -> ((s, d) => {
-      val C = graft.engine.Commits
       val table = cdcScenario(s, d)
       val replayRejected =
         !C.commitExactlyOnceReplace(table, 3, C.manifestEntries(table, 3))
       (2 to 4).map { v =>
-        s.read.parquet(C.snapshotFiles(table, v): _*)
+        C.read(s, table, v)
           .agg(count(lit(1)).as("n_keys"),
             round(FP.qsum(col("value"), 20), 4).as("sum_value"))
           .select(lit(v.toLong).as("version"), col("n_keys"), col("sum_value"))
@@ -449,14 +442,13 @@ object Temporal {
     // cost the horizon trades for bounded storage); the stored path
     // stays O(changes).
     "etl_cdf_vacuum" -> ((s, d) => {
-      val C = graft.engine.Commits
       val table = cdfVacuumScenario(s, d)
       val horizon = C.ChangeData.vacuumHorizon(table)
       (2 to 4).map { v =>
         def derived = {
-          val prev = s.read.parquet(C.snapshotFiles(table, v - 1): _*)
+          val prev = C.read(s, table, v - 1)
             .select(col("user_id"), col("event_id").as("pid"))
-          val cur = s.read.parquet(C.snapshotFiles(table, v): _*)
+          val cur = C.read(s, table, v)
             .select(col("user_id"), col("event_id").as("cid"))
           prev.join(cur, Seq("user_id"), "full_outer")
             .agg(
@@ -498,12 +490,11 @@ object Temporal {
     // the read; counts collapse map-side. The oracle re-derives both
     // versions' winners from the raw change log and diffs them in SQL.
     "etl_change_data_feed" -> ((s, d) => {
-      val C = graft.engine.Commits
       val table = cdcScenario(s, d)
       (3 to 4).map { v =>
-        val prev = s.read.parquet(C.snapshotFiles(table, v - 1): _*)
+        val prev = C.read(s, table, v - 1)
           .select(col("user_id"), col("event_id").as("pid"))
-        val cur = s.read.parquet(C.snapshotFiles(table, v): _*)
+        val cur = C.read(s, table, v)
           .select(col("user_id"), col("event_id").as("cid"))
         prev.join(cur, Seq("user_id"), "full_outer")
           .agg(sum(when(col("pid").isNull, 1L).otherwise(0L)).as("n_insert"),
@@ -530,7 +521,6 @@ object Temporal {
     // pre/post image pairing, and CommitsSpec proves stored ≡ the
     // snapshot-diff derivation row-for-row.
     "etl_cdf_stored" -> ((s, d) => {
-      val C = graft.engine.Commits
       val table = cdcScenario(s, d)
       C.ChangeData.versions(table)
         .map(v => C.ChangeData.read(s, table, v))
@@ -560,12 +550,11 @@ object Temporal {
     // end-to-end: raw events → CDC merge → stored change files → streamed
     // re-application.
     "st_cdf_stream" -> ((s, d) => {
-      val C = graft.engine.Commits
       val cdc = cdcScenario(s, d)
       val recon = cdfStreamScenario(s, d)
       (2 to 4).map { v =>
-        val r = s.read.parquet(C.snapshotFiles(recon, v): _*)
-        val c = s.read.parquet(C.snapshotFiles(cdc, v): _*)
+        val r = C.read(s, recon, v)
+        val c = C.read(s, cdc, v)
         r.agg(count(lit(1)).as("n_keys"),
             round(FP.qsum(col("value"), 20), 4).as("sum_value"))
           .crossJoin(r.exceptAll(c).agg(count(lit(1)).as("__ronly")))

@@ -3,6 +3,7 @@ package graft
 import org.apache.spark.sql.functions._
 import org.scalatest.funsuite.AnyFunSuite
 import graft.engine.{Canonicalize, Ingest, Schemas}
+import graft.engine.{Durations => D}
 import java.nio.file.Files
 
 /** Golden-fixture tests for the transformer-parity canonicalizer
@@ -10,8 +11,7 @@ import java.nio.file.Files
 class CanonicalizeSpec extends AnyFunSuite with SharedSparkSpec {
 
   private def writeCsv(name: String, content: String): String = {
-    val dir = Files.createTempDirectory("graft-fixture")
-    val p = dir.resolve(name)
+    val p = tempDir("graft-fixture").toPath.resolve(name)
     Files.writeString(p, content)
     p.toString
   }
@@ -44,6 +44,50 @@ class CanonicalizeSpec extends AnyFunSuite with SharedSparkSpec {
     assert(c0.getAs[String]("Sector1SessionTime") == "00:15:51:000") // HH:MM:SS → HH:MM:SS:mmm
     assert(c0.getAs[String]("Time") == "00:15:23:456")
     assert(c0.getAs[String]("PitInTime") == null)                  // null stays null
+  }
+
+  test("laps_data: typed ≡ the same projection on the composed reference parser, whitespace edges included") {
+    // blanks Spark's trim keeps, one final line terminator the regexes'
+    // `$` accepts, two it does not, non-ASCII digits and spaces, NA tokens
+    val edges = Seq("\t01:02:345", "01:02:345\t", "01:02:345\u000b", "\u000c1:02:03",
+      "01:02:345\n\n", "01:02:345\u2028", "01:02:345\u2029", "01:02:345\u0085",
+      "01:02:345\n", "01:02:345\r\n", "01:02:345\r", "01:02:345\n\r", " 01:02:345 \n",
+      "01:02:345 \n", "\n", "nan\n", " NaN ", "<NA>", "null", "", "  ", "\u00a001:02:345",
+      "\u0661:02:345", "-01:02:03:456", "1:2:345", "99:59:59:999", "12345678:00:00",
+      "01:02:345", "00:15:23", "bogus")
+    val schema = Schemas.allStrings(Schemas.tables("laps_data"))
+    val durations = Canonicalize.specs("laps_data").durationCols
+    val rows = edges.indices.map { i =>
+      org.apache.spark.sql.Row.fromSeq(schema.fieldNames.toSeq.map {
+        case "Driver" => f"D$i%03d"
+        case n if durations.contains(n) => edges((i + durations.indexOf(n)) % edges.size)
+        case _ => "1"
+      })
+    }
+    // through parquet, so the projection runs in generated code rather
+    // than being folded into a local relation by the optimizer
+    val path = tempDir("graft-laps-edges").getPath + "/laps"
+    spark.createDataFrame(spark.sparkContext.parallelize(rows, 2), schema).write.parquet(path)
+    val raw = spark.read.parquet(path)
+    def sorted(df: org.apache.spark.sql.DataFrame) = df.orderBy("Driver").collect().toSeq
+    val native = sorted(Canonicalize.typed(raw, "laps_data"))
+    val reference = sorted(Canonicalize.typed(raw, "laps_data", D.parseDurationToMillis))
+    assert(native.size == edges.size)
+    native.zip(reference).foreach { case (n, r) => assert(n == r, s"native $n ≢ reference $r") }
+    // not vacuous: the fixture holds parsed and null cells
+    val lapTimes = native.map(_.getAs[Any]("LapTime"))
+    assert(lapTimes.count(_ != null) >= 5 && lapTimes.count(_ == null) >= 5)
+  }
+
+  test("laps_data: the typed plan parses durations natively, with no regex") {
+    val header = Schemas.tables("laps_data").fieldNames.mkString(",") + "\n"
+    val raw = Ingest.readRawCsv(spark, writeCsv("laps_data.csv", header), "laps_data")
+    def plan(df: org.apache.spark.sql.DataFrame) = df.queryExecution.executedPlan.toString.toLowerCase
+    val native = plan(Canonicalize.typed(raw, "laps_data"))
+    assert(native.contains("parse_f1_duration"), native)
+    assert(!native.contains("rlike") && !native.contains("regexp_extract"), native)
+    // control: the composed reference plans as regexes, which the check sees
+    assert(plan(Canonicalize.typed(raw, "laps_data", D.parseDurationToMillis)).contains("rlike"))
   }
 
   test("session_results: signed times, float-second Interval, Q-format migration") {

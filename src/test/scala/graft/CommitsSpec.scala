@@ -8,12 +8,12 @@ import graft.engine.Commits
   * directly (the etl_commit_conflict face audits the same properties from
   * a committed log): put-if-absent atomicity, append rebase, stale-rewrite
   * abort, loser invisibility, and the contended-append progress bound —
-  * plus checkpoint-resolve ≡ replay over one mixed history, and a source
-  * scan that keeps the delta-action log the only log. */
+  * plus checkpoint-resolve ≡ replay over one mixed history, a job-free
+  * `read` whose schema is inference's own, and a source scan that keeps
+  * the delta-action log the only log. */
 class CommitsSpec extends AnyFunSuite with SharedSparkSpec {
 
-  private def freshTable(): String =
-    java.nio.file.Files.createTempDirectory("graft-commits").toString + "/tbl"
+  private def freshTable(): String = tempDir("graft-commits").getPath + "/tbl"
 
   private def df(ids: Range) = {
     import spark.implicits._
@@ -82,7 +82,7 @@ class CommitsSpec extends AnyFunSuite with SharedSparkSpec {
   }
 
   test("shallow clone: zero-copy snapshot, bidirectional isolation after divergence") {
-    val root = java.nio.file.Files.createTempDirectory("graft-clone").toString
+    val root = tempDir("graft-clone").getPath
     val (src, dst) = (s"$root/src", s"$root/clone")
     Commits.init(src, Commits.stage(df(0 until 10), src, "base"))
     Commits.commitAppend(src, 1, Seq(Commits.stage(df(10 until 15), src, "w2")))
@@ -471,6 +471,8 @@ class CommitsSpec extends AnyFunSuite with SharedSparkSpec {
       assert(Commits.manifestEntries(t, v) == expected(v - 1), s"v$v: wrong file set")
       assert(!files.contains(stale), s"aborted rewrite leaked into v$v")
       assert((cv, tail) == (if (v >= 4) (4, v - 4) else (0, v)), s"v$v: wrong checkpoint use")
+      assert(Commits.read(spark, t, v).schema ==
+        spark.read.parquet(Commits.snapshotFiles(t, v): _*).schema, s"v$v: footer schema ≢ inferred")
     }
     // each delta holds only its own change: an append one add, the
     // replace one remove and one add
@@ -488,8 +490,39 @@ class CommitsSpec extends AnyFunSuite with SharedSparkSpec {
     (1 to 2).foreach { v =>
       assert(Commits.resolve(dst, v) == Commits.replay(dst, v), s"clone v$v: resolve ≢ replay")
       assert(Commits.manifestEntries(dst, v) == cloneExpected(v - 1), s"clone v$v: wrong file set")
+      assert(Commits.read(spark, dst, v).schema ==
+        spark.read.parquet(Commits.snapshotFiles(dst, v): _*).schema, s"clone v$v: footer schema ≢ inferred")
     }
     assert(Commits.read(spark, dst).count() == 25 + 3 + 4 + 2)
+  }
+
+  test("Commits.read opens a snapshot, latest or time-travelled, without a Spark job") {
+    val t = freshTable()
+    Commits.init(t, Commits.stage(df(0 until 10), t, "base"))
+    Commits.commitAppend(t, 1, Seq(Commits.stage(df(10 until 15), t, "w2")))
+    assert(jobsDuring(Commits.read(spark, t).schema) == 0)
+    assert(jobsDuring(Commits.read(spark, t, 1).schema) == 0)
+    // control: the listener does see the inference job of a schema-less read
+    assert(jobsDuring(spark.read.parquet(Commits.snapshotFiles(t, 2): _*).schema) >= 1)
+    assert(Commits.read(spark, t).count() == 15 && Commits.read(spark, t, 1).count() == 10)
+  }
+
+  test("staged dirs of different schemas: Commits.read takes the schema inference takes, either order") {
+    import spark.implicits._
+    // staged dirs are data/<writer>-<uuid>, so the writer name sets the
+    // path order, and inference reads the first data file in path order
+    def schemaWithWide(wideWriter: String) = {
+      val t = freshTable()
+      Commits.init(t, Commits.stage(df(0 until 10), t, "m"))
+      val wide = Seq((100L, "x"), (101L, "y")).toDF("id", "tag")
+      Commits.commitAppend(t, 1, Seq(Commits.stage(wide, t, wideWriter)))
+      val inferred = spark.read.parquet(Commits.snapshotFiles(t, 2): _*).schema
+      assert(Commits.read(spark, t).schema == inferred, s"wide writer $wideWriter")
+      assert(Commits.read(spark, t).count() == 12)
+      inferred.fieldNames.toSeq
+    }
+    assert(schemaWithWide("a") == Seq("id", "tag"), "the wider dir sorts first")
+    assert(schemaWithWide("z") == Seq("id"), "the wider dir sorts last")
   }
 
   test("a full-listing manifest from the retired log format fails loudly, naming the file and version") {

@@ -11,7 +11,7 @@ class IngestSpec extends AnyFunSuite with SharedSparkSpec {
 
   test("partitionBy round-trip preserves data; reads prune partitions") {
     import spark.implicits._
-    val base = Files.createTempDirectory("graft-part").toString
+    val base = tempDir("graft-part").getPath
     val df = Seq(
       (2023, "bahrain", "race", "VER", 1),
       (2023, "bahrain", "quali", "VER", 1),
@@ -35,7 +35,7 @@ class IngestSpec extends AnyFunSuite with SharedSparkSpec {
 
   test("dynamic partition overwrite replaces only the partitions in the batch") {
     import spark.implicits._
-    val base = Files.createTempDirectory("graft-dpo").toString + "/t"
+    val base = tempDir("graft-dpo").getPath + "/t"
     val v1 = Seq((2023, "a", 1), (2024, "b", 2)).toDF("year", "k", "v")
     v1.write.partitionBy("year").parquet(base)
     // STATIC overwrite would drop 2023 too; dynamic mode rewrites only the
@@ -54,7 +54,7 @@ class IngestSpec extends AnyFunSuite with SharedSparkSpec {
   }
 
   test("raw CSV ingest honors NA tokens and never infers") {
-    val dir = Files.createTempDirectory("graft-csv")
+    val dir = tempDir("graft-csv").toPath
     Files.writeString(dir.resolve("weather_data.csv"),
       "Time,AirTemp,TrackTemp,Humidity,Pressure,WindSpeed,Rainfall\n00:01:00:000,28.4,,,1013.2,2.1,False\n")
     val raw = Ingest.readRawCsv(spark, dir.toString, "weather_data")

@@ -20,7 +20,13 @@ class PlansSpec extends AnyFunSuite with SharedSparkSpec {
       // 20-digit run would throw NumberFormatException from a naive
       // parseLong; the 8-digit run exceeds the 7-digit width bound)
       "1234567:00:00", "12345678:00:00", "99999999999999999999:00:00",
-      "-99999999999999999999:01:02:345")
+      "-99999999999999999999:01:02:345",
+      // blanks: Spark's trim strips only U+0020, and the regexes' `$`
+      // accepts exactly one final line terminator
+      "\t01:02:345", "01:02:345\t", "01:02:345\u000b", "\u000c1:02:03", "01:02:345\n\n",
+      "01:02:345\u2028", "01:02:345\u2029", "01:02:345\u0085", "01:02:345\n",
+      "01:02:345\r\n", "01:02:345\r", "01:02:345\n\r", "01:02:345 \n", " 01:02:345\n ",
+      "\n", "-\n", "\u00a001:02:345", "\u0661:02:345")
     val randoms = Seq.fill(300) {
       val ms = rnd.nextLong(86400000L * 2) - 86400000L
       FormatF1Duration.format(ms)
@@ -34,6 +40,36 @@ class PlansSpec extends AnyFunSuite with SharedSparkSpec {
       val n = if (r.isNullAt(2)) null else r.getLong(2)
       assert(c == n, s"mismatch for '${r.getString(0)}': composed=$c native=$n")
     }
+  }
+
+  test("native parse agrees with the composed parser on a seeded fuzz of near-durations") {
+    import spark.implicits._
+    val rnd = new scala.util.Random(20261019)
+    val noise = "0123456789:- \t\n\r\u000b\u000c\u0085\u2028\u00a0\u0661aNnTe"
+    def pick() = noise(rnd.nextInt(noise.length))
+    // valid encodings, then blanks/noise prepended, appended or overwritten
+    val corpus = Seq.fill(3000) {
+      val ms = rnd.nextLong(86400000L * 2) - 86400000L
+      val base = rnd.nextInt(3) match {
+        case 0 => FormatF1Duration.format(ms)
+        case 1 => f"${ms.abs / 60000}%02d:${ms.abs / 1000 % 60}%02d:${ms.abs % 1000}%03d"
+        case _ => Seq.fill(rnd.nextInt(12))(pick()).mkString
+      }
+      val sb = new StringBuilder(base)
+      if (sb.nonEmpty && rnd.nextInt(4) == 0) sb.setCharAt(rnd.nextInt(sb.length), pick())
+      Seq.fill(rnd.nextInt(3))(pick()).mkString + sb + Seq.fill(rnd.nextInt(3))(pick()).mkString
+    }
+    val rows = corpus.toDF("s")
+      .select(col("s"),
+        D.parseDurationToMillis(col("s")).as("composed"),
+        parseF1Duration(col("s")).as("native"))
+      .collect()
+    val parsed = rows.count(!_.isNullAt(1))
+    assert(parsed > 300, s"fuzz too far from valid durations: $parsed parsed")
+    val bad = rows.filter(r => r.get(1) != r.get(2))
+      .map(r => s"'${r.getString(0).flatMap(c => if (c < ' ' || c > '~') f"<U+${c.toInt}%04X>" else c.toString)}': " +
+        s"composed=${r.get(1)} native=${r.get(2)}")
+    assert(bad.isEmpty, s"${bad.length} mismatches, first: ${bad.take(5).mkString("; ")}")
   }
 
   test("native format agrees with composed formatter; parse∘format == id") {

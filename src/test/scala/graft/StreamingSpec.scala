@@ -665,7 +665,7 @@ class StreamingSpec extends AnyFunSuite with SharedSparkSpec {
   test("checkpointed query restarts from where it stopped (no reprocessing, state intact)") {
     import spark.implicits._
     implicit val sqlCtx = spark.sqlContext
-    val ckpt = java.nio.file.Files.createTempDirectory("graft-ckpt").toString
+    val ckpt = tempDir("graft-ckpt").getPath
     val mem = MemoryStream[Event]
     def start() = Streams.hourlyCounts(mem.toDF(), "10 minutes").writeStream
       .format("memory").queryName("ckpt_counts").outputMode("complete")

@@ -1,9 +1,7 @@
 package graft
 
 import java.io.File
-import java.util.concurrent.atomic.AtomicInteger
 
-import org.apache.spark.scheduler.{SparkListener, SparkListenerJobEnd, SparkListenerJobStart}
 import org.scalatest.funsuite.AnyFunSuite
 
 import graft.engine.{Layouts, Tables}
@@ -14,13 +12,11 @@ import graft.engine.{Layouts, Tables}
   * infers (same footer, same converter flags), no Spark job runs, the
   * `events` nanos branch of `Tables.load` still fires, and a table
   * rewritten in place is seen at once (there is no cache). The last test
-  * keeps base tables and committed layouts on that one path.
+  * keeps base tables, committed layouts and commit-log snapshots on that
+  * one path.
   */
 class TablesSpec extends AnyFunSuite with SharedSparkSpec {
   private val sfs = Seq("/root/testdata/sf0.001", "/root/testdata/sf0.01")
-
-  private def tmpDir(prefix: String): File =
-    java.nio.file.Files.createTempDirectory(prefix).toFile
 
   test("(a) footer schema equals the inferred schema for every table and committed layout") {
     for (d <- sfs; n <- Tables.names) {
@@ -55,96 +51,58 @@ class TablesSpec extends AnyFunSuite with SharedSparkSpec {
   }
 
   test("(b) Tables.load opens all ten tables without a Spark job") {
-    val group = s"tables-spec-${java.util.UUID.randomUUID()}"
-    val barrier = s"$group-barrier"
-    val jobs = new AtomicInteger(0)
-    val barriers = new AtomicInteger(0)
-    val listener = new SparkListener {
-      private def groupOf(e: SparkListenerJobStart) =
-        Option(e.properties).map(_.getProperty("spark.jobGroup.id")).orNull
-      private val barrierJobs = java.util.concurrent.ConcurrentHashMap.newKeySet[Int]()
-      override def onJobStart(e: SparkListenerJobStart): Unit = groupOf(e) match {
-        case `group` => jobs.incrementAndGet(): Unit
-        case `barrier` => barrierJobs.add(e.jobId): Unit
-        case _ =>
-      }
-      override def onJobEnd(e: SparkListenerJobEnd): Unit =
-        if (barrierJobs.remove(e.jobId)) barriers.incrementAndGet(): Unit
-    }
-    val sc = spark.sparkContext
-    // listener delivery is asynchronous and in order: once a job started
-    // after `body` has ended, every job `body` started has been counted
-    def jobsDuring(body: => Unit): Int = {
-      jobs.set(0)
-      val seen = barriers.get
-      sc.setJobGroup(group, "TablesSpec")
-      try body finally sc.clearJobGroup()
-      sc.setJobGroup(barrier, "TablesSpec barrier")
-      try sc.parallelize(Seq(1), 1).count() finally sc.clearJobGroup()
-      while (barriers.get == seen) Thread.sleep(1)
-      jobs.get
-    }
-    sc.addSparkListener(listener)
-    try {
-      val d = sfs.head
-      assert(jobsDuring(Tables.names.foreach(n => Tables.load(spark, d, n).schema)) == 0)
-      // control: the listener does see a schema-inference job
-      assert(jobsDuring(spark.read.parquet(s"$d/orders.parquet").schema) >= 1)
-    } finally sc.removeSparkListener(listener)
+    val d = sfs.head
+    assert(jobsDuring(Tables.names.foreach(n => Tables.load(spark, d, n).schema)) == 0)
+    // control: the listener does see a schema-inference job
+    assert(jobsDuring(spark.read.parquet(s"$d/orders.parquet").schema) >= 1)
   }
 
   test("(c) Tables.load floors a TIMESTAMP(NANOS) events.ts to microseconds") {
     import org.apache.parquet.example.data.simple.SimpleGroupFactory
     import org.apache.parquet.hadoop.example.ExampleParquetWriter
     import org.apache.parquet.schema.MessageTypeParser
-    val dir = tmpDir("graft-nanos")
-    try {
-      val schema = MessageTypeParser.parseMessageType(
-        "message events { required int64 event_id; required int64 ts (TIMESTAMP(NANOS,true)); }")
-      val nanos = Seq(1700000000123456789L, 1700000000000000999L, 1600000000000001000L)
-      val w = ExampleParquetWriter
-        .builder(new org.apache.hadoop.fs.Path(s"${dir.getPath}/events.parquet"))
-        .withType(schema).withConf(new org.apache.hadoop.conf.Configuration()).build()
-      try nanos.zipWithIndex.foreach { case (ns, i) =>
-        w.write(new SimpleGroupFactory(schema).newGroup().append("event_id", i.toLong).append("ts", ns))
-      } finally w.close()
-      val ev = Tables.load(spark, dir.getPath, "events")
-      assert(ev.schema("ts").dataType == org.apache.spark.sql.types.TimestampType)
-      val micros = ev.orderBy("event_id").selectExpr("unix_micros(ts)").collect().map(_.getLong(0)).toSeq
-      assert(micros == nanos.map(_ / 1000))
-    } finally Layouts.rmTree(dir)
+    val dir = tempDir("graft-nanos")
+    val schema = MessageTypeParser.parseMessageType(
+      "message events { required int64 event_id; required int64 ts (TIMESTAMP(NANOS,true)); }")
+    val nanos = Seq(1700000000123456789L, 1700000000000000999L, 1600000000000001000L)
+    val w = ExampleParquetWriter
+      .builder(new org.apache.hadoop.fs.Path(s"${dir.getPath}/events.parquet"))
+      .withType(schema).withConf(new org.apache.hadoop.conf.Configuration()).build()
+    try nanos.zipWithIndex.foreach { case (ns, i) =>
+      w.write(new SimpleGroupFactory(schema).newGroup().append("event_id", i.toLong).append("ts", ns))
+    } finally w.close()
+    val ev = Tables.load(spark, dir.getPath, "events")
+    assert(ev.schema("ts").dataType == org.apache.spark.sql.types.TimestampType)
+    val micros = ev.orderBy("event_id").selectExpr("unix_micros(ts)").collect().map(_.getLong(0)).toSeq
+    assert(micros == nanos.map(_ / 1000))
   }
 
   test("(d) a table rewritten at the same path shows its new schema at once") {
     import spark.implicits._
-    val dir = tmpDir("graft-rewrite")
+    val dir = tempDir("graft-rewrite")
     val p = s"${dir.getPath}/t"
-    try {
-      Seq(1L, 2L).toDF("a").write.parquet(p)
-      assert(Tables.parquet(spark, p).schema.fieldNames.toSeq == Seq("a"))
-      Seq((3L, "x")).toDF("a", "b").write.mode("overwrite").parquet(p)
-      val again = Tables.parquet(spark, p)
-      assert(again.schema.fieldNames.toSeq == Seq("a", "b"))
-      assert(again.as[(Long, String)].collect().toSeq == Seq((3L, "x")))
-    } finally Layouts.rmTree(dir)
+    Seq(1L, 2L).toDF("a").write.parquet(p)
+    assert(Tables.parquet(spark, p).schema.fieldNames.toSeq == Seq("a"))
+    Seq((3L, "x")).toDF("a", "b").write.mode("overwrite").parquet(p)
+    val again = Tables.parquet(spark, p)
+    assert(again.schema.fieldNames.toSeq == Seq("a", "b"))
+    assert(again.as[(Long, String)].collect().toSeq == Seq((3L, "x")))
   }
 
   test("(e) a _common_metadata summary wins over the first data file, as in Spark") {
     import spark.implicits._
-    val dir = tmpDir("graft-summary")
+    val dir = tempDir("graft-summary")
     val p = s"${dir.getPath}/t"
-    try {
-      Seq((1L, 2L)).toDF("a", "b").write
-        .option("parquet.summary.metadata.level", "ALL").parquet(p)
-      assert(new File(p, "_common_metadata").isFile)
-      // a wider file that sorts before every part-file
-      Seq((1L, 2L, 3L)).toDF("a", "b", "c").coalesce(1).write.parquet(s"${dir.getPath}/w")
-      val wide = new File(s"${dir.getPath}/w").listFiles().filter(_.getName.endsWith(".parquet")).head
-      java.nio.file.Files.copy(wide.toPath, new File(p, "a-wide.parquet").toPath)
-      val inferred = spark.read.parquet(p).schema
-      assert(inferred.fieldNames.toSeq == Seq("a", "b"))
-      assert(Tables.parquet(spark, p).schema == inferred)
-    } finally Layouts.rmTree(dir)
+    Seq((1L, 2L)).toDF("a", "b").write
+      .option("parquet.summary.metadata.level", "ALL").parquet(p)
+    assert(new File(p, "_common_metadata").isFile)
+    // a wider file that sorts before every part-file
+    Seq((1L, 2L, 3L)).toDF("a", "b", "c").coalesce(1).write.parquet(s"${dir.getPath}/w")
+    val wide = new File(s"${dir.getPath}/w").listFiles().filter(_.getName.endsWith(".parquet")).head
+    java.nio.file.Files.copy(wide.toPath, new File(p, "a-wide.parquet").toPath)
+    val inferred = spark.read.parquet(p).schema
+    assert(inferred.fieldNames.toSeq == Seq("a", "b"))
+    assert(Tables.parquet(spark, p).schema == inferred)
   }
 
   private def scalaFiles(dir: File): Seq[File] =
@@ -175,5 +133,12 @@ class TablesSpec extends AnyFunSuite with SharedSparkSpec {
     val raw = (sites(""".read.parquet(s"$d/""") ++ sites(""".read.parquet(s"$sfDir/"""))
       .filterNot(_._1 == "engine/Tables.scala")
     assert(raw.isEmpty, s"base table read outside Tables: ${raw.mkString("; ")}")
+    val snapshots = sites(".read.parquet(")
+      .filter { case (f, l) => f.startsWith("queries/") && l.contains("snapshotFiles(") }
+    assert(snapshots.isEmpty,
+      s"commit-log snapshot read outside Commits.read: ${snapshots.mkString("; ")}")
+    val inCommits = sites(".read.parquet(").filter(_._1 == "engine/Commits.scala")
+    assert(inCommits.isEmpty,
+      s"Commits opens parquet without Tables.parquet: ${inCommits.mkString("; ")}")
   }
 }
