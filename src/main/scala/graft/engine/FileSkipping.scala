@@ -19,21 +19,27 @@ import org.apache.spark.sql.functions._
   */
 object FileSkipping {
 
-  /** Range-cluster `df` on `keyCol` into `nFiles` files at `path` and write
-    * the per-file (min,max,count) manifest beside it. Range clustering is
-    * what makes the envelopes selective: a hash layout gives every file the
-    * full key range and nothing ever prunes. */
+  /** Range-cluster `df` on `keyCol` into `nFiles` files at `path`. Range
+    * clustering is what makes the envelopes selective: a hash layout gives
+    * every file the full key range and nothing ever prunes. */
+  def writeRanged(df: DataFrame, keyCol: String, nFiles: Int, path: String): Unit =
+    df.repartitionByRange(nFiles, col(keyCol)).write.mode("overwrite").parquet(path)
+
+  /** [[writeRanged]], then the per-file (min,max,count) manifest beside it. */
   def writeRangedWithStats(df: DataFrame, keyCol: String, nFiles: Int, path: String): Unit = {
-    df.repartitionByRange(nFiles, col(keyCol))
-      .write.mode("overwrite").parquet(path)
-    val spark = df.sparkSession
-    spark.read.parquet(path)
+    writeRanged(df, keyCol, nFiles, path)
+    writeStats(df.sparkSession, path, keyCol, statsPath(path))
+  }
+
+  /** The manifest names each file by its absolute path, so it is written
+    * only once the table is at its final `path`. */
+  private def writeStats(spark: SparkSession, path: String, keyCol: String, out: String): Unit =
+    Tables.parquet(spark, path)
       .groupBy(input_file_name().as("file"))
       .agg(min(col(keyCol)).as("min_key"), max(col(keyCol)).as("max_key"),
            count(lit(1)).as("n_rows"))
       .coalesce(1)
-      .write.mode("overwrite").parquet(statsPath(path))
-  }
+      .write.mode("overwrite").parquet(out)
 
   def statsPath(path: String): String = path + "__stats"
 
@@ -48,9 +54,11 @@ object FileSkipping {
   /** Read only the surviving files and re-apply the exact predicate (file
     * envelopes are coarse: a surviving file still holds out-of-range rows).
     * An empty survivor set short-circuits to an empty frame with the
-    * table's schema — no file IO at all. */
+    * table's schema — no file IO at all. A published layout at `path` gets
+    * its manifest published beside it on the first read. */
   def prunedRead(spark: SparkSession, path: String, keyCol: String,
                  lo: Double, hi: Double): DataFrame = {
+    Layouts.publishAt(spark, statsPath(path))(writeStats(spark, path, keyCol, _))
     val files = survivors(spark, path, lo, hi)
     val pruned =
       if (files.isEmpty) Tables.parquet(spark, path).limit(0)

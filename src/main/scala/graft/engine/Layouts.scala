@@ -2,34 +2,29 @@ package graft.engine
 
 import org.apache.spark.sql.{DataFrame, SparkSession}
 
-/** First-use creation of the persistent /tmp layouts (bucketed tables,
-  * partitioned parquet, format round-trips, file-stats ranges) that several
-  * catalog queries share.
+/** The persistent /tmp layouts (derived edge tables, candidate sets,
+  * bucketed and partitioned copies, format round-trips, scenario tables)
+  * that catalog queries build once per dataset and then share.
   *
-  * Why a JVM-wide lock: sbt runs test SUITES in parallel inside the one
-  * forked JVM, and the layout writers used to be bare check-then-act
-  * (`if (!exists) write`). Two suites racing the same absent layout both
-  * passed the check and overwrote the same path concurrently — the loser's
-  * committed part files vanished under the winner's overwrite, and any
-  * reader holding the pre-overwrite file listing failed with
-  * FAILED_READ_FILE.FILE_NOT_EXIST (observed on graft_bucketed in r6; the
-  * graft_partitioned path is even shared by TWO queries,
-  * pp_partition_pruned and pp_dynamic_pruning's fact side).
+  * One commit rule: a layout is built aside in a private
+  * `<path>.build-<id>` work dir and renamed into place, so `path` exists
+  * iff the layout is complete, and a published layout is never rewritten.
+  * No lock is taken: sbt runs suites in parallel in one JVM, and two
+  * threads (or two JVMs) may build the same absent layout at once, but
+  * a directory rename onto a non-empty one fails, so the first rename
+  * wins. Builds are deterministic, so the winner is THE layout and the
+  * other copy is discarded. A build that throws leaves no work dir.
   *
-  * The lock serializes the create window (steady state takes it only for
-  * the exists-check), and every (re)write invalidates Spark's cached file
-  * listings for the path so no stale FileIndex can reference replaced
-  * files. Cross-PROCESS races (two concurrent sbt JVMs) stay out of scope —
-  * the verify recipe already serializes those.
+  * One path scheme: callers name a layout `"<area>/<stem>"` and only
+  * [[path]] turns that into a path, folding in [[tag]].
   */
 object Layouts {
-  private[this] val lock = new Object
-
   /** Bump when ANY /tmp layout's derivation pipeline changes shape (new
     * signature scheme, different edge rule, schema change…). The version
     * is folded into every layout path, so a stale materialization from an
-    * older pipeline is abandoned, never silently consumed. */
-  val LayoutVersion = 9
+    * older pipeline is abandoned, never silently consumed. 10 = every
+    * layout published by rename (an existing dir is a complete one). */
+  val LayoutVersion = 10
 
   /** Cache tag for dataset dir `d`: sanitized path + a staleness
     * fingerprint of (LayoutVersion, newest top-level mtime under `d`).
@@ -50,45 +45,39 @@ object Layouts {
       s"_v${LayoutVersion}_${java.lang.Long.toHexString(mt)}"
   })
 
-  /** Run `write` iff `exists` is false, atomically JVM-wide, then drop any
-    * cached listings under `path`. `exists` must itself be cheap: it is
-    * evaluated under the lock (that's the double-check). */
-  def ensure(s: SparkSession, path: String)(exists: => Boolean)(write: => Unit): Unit =
-    lock.synchronized {
-      if (!exists) {
-        write
-        s.catalog.refreshByPath(path)
-      }
-    }
-
-  /** The common case: existence = the layout's _SUCCESS commit marker. */
-  private def ensureCommitted(s: SparkSession, path: String)(write: => Unit): Unit =
-    ensure(s, path)(new java.io.File(s"$path/_SUCCESS").exists())(write)
-
-  /** The committed layout at `path`, written first if its _SUCCESS marker is
-    * missing, then opened by `open`: [[Tables.parquet]] unless not parquet. */
-  def committed(s: SparkSession, path: String,
-      open: (SparkSession, String) => DataFrame = Tables.parquet(_, _))(write: => Unit): DataFrame = {
-    ensureCommitted(s, path)(write)
-    open(s, path)
+  /** The path of layout `name` for dataset dir `d`: `"<area>/<stem>"` is
+    * `/tmp/graft_<area>/<stem>_<tag>`, a bare `"<area>"` is
+    * `/tmp/graft_<area>/<tag>`. */
+  private[graft] def path(d: String, name: String): String = name.split('/') match {
+    case Array(area, stem) => s"/tmp/graft_$area/${stem}_${tag(d)}"
+    case Array(area) => s"/tmp/graft_$area/${tag(d)}"
+    case _ => throw new IllegalArgumentException(s"layout name must be <area>[/<stem>]: $name")
   }
 
-  /** The one publish path for a per-sf scenario table: returns `path` at
-    * once if it exists. Otherwise `build` fills a fresh `path.build-<id>`
-    * work dir OUTSIDE the lock — a scenario build runs Spark jobs and
-    * streaming drains, and a blocked one inside [[ensure]] would wedge
-    * every other layout build in the session (ADVICE r10). The lock is
-    * taken only to re-check, rename the work dir into place (atomic, so a
-    * half-built table is never visible) and drop cached listings. A
-    * concurrent builder that loses the race discards its copy: scenarios
-    * are deterministic, so either copy is THE table. The work dir is
-    * deleted in a `finally`, so a `build` that throws leaves nothing
-    * behind and its exception reaches the caller. */
-  def publish(s: SparkSession, path: String)(build: String => Unit): String =
+  /** Layout `name` of `d`, published by `write` (which fills the work dir
+    * it is given) if absent, then opened by `open`: [[Tables.parquet]]
+    * unless not parquet. */
+  def committed(s: SparkSession, d: String, name: String,
+      open: (SparkSession, String) => DataFrame = Tables.parquet(_, _))(
+      write: String => Unit): DataFrame =
+    open(s, publish(s, d, name)(write))
+
+  /** The path of layout `name` of `d`, published by `build` if absent. */
+  def publish(s: SparkSession, d: String, name: String)(build: String => Unit): String =
+    publishAt(s, path(d, name))(build)
+
+  /** [[publish]] at a path derived from a published layout's (a stats
+    * manifest beside its table). */
+  private[engine] def publishAt(s: SparkSession, path: String)(build: String => Unit): String =
     publishWith(path, p => s.catalog.refreshByPath(p))(build)
 
-  /** [[publish]] with the listing refresh passed in (tests run it
-    * without a session). */
+  /** The commit rule, with the listing refresh passed in (tests run it
+    * without a session). Returns `path` at once if it exists. Otherwise
+    * `build` fills a fresh `path.build-<id>`, which is renamed to `path`;
+    * a rename that fails because another thread or process published
+    * `path` first counts as published. The work dir is deleted in a
+    * `finally`, so a `build` that throws leaves nothing behind and its
+    * exception reaches the caller. */
   private[graft] def publishWith(path: String, refresh: String => Unit)(
       build: String => Unit): String = {
     val dst = new java.io.File(path)
@@ -97,12 +86,8 @@ object Layouts {
         path + ".build-" + java.util.UUID.randomUUID().toString.take(8))
       try {
         build(work.getPath)
-        lock.synchronized {
-          if (!dst.exists()) {
-            require(work.renameTo(dst), s"atomic publish of $work failed")
-            refresh(path)
-          }
-        }
+        if (work.renameTo(dst)) refresh(path)
+        else require(dst.exists(), s"atomic publish of $work failed")
       } finally if (work.exists()) rmTree(work)
     }
     path

@@ -88,7 +88,7 @@ object PageRank {
     // shuffles. The lazy-path hint carries the same caveat, so it is
     // GATED (VERDICT r12 #1): callers pass `broadcastState = false` when
     // the node frame exceeds the broadcast budget (the catalog faces
-    // route Graph.nodeHintGate's sidecar-exact node count here) and the
+    // route Graph.nodeHintGate's footer-exact node count here) and the
     // loop runs co-partitioned on the node key instead. `truncate=false`
     // skips the checkpoints so PlanQualitySpec can read the loop's joins
     // in one visible plan — execution always truncates.

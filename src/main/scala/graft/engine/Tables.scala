@@ -1,7 +1,10 @@
 package graft.engine
 
+import scala.jdk.CollectionConverters._
+
+import org.apache.hadoop.conf.Configuration
 import org.apache.hadoop.fs.{FileStatus, Path}
-import org.apache.parquet.format.converter.ParquetMetadataConverter.SKIP_ROW_GROUPS
+import org.apache.parquet.format.converter.ParquetMetadataConverter.{NO_FILTER, SKIP_ROW_GROUPS}
 import org.apache.parquet.hadoop.Footer
 import org.apache.parquet.hadoop.util.HadoopInputFile
 import org.apache.spark.sql.{DataFrame, SparkSession}
@@ -25,8 +28,8 @@ object Tables {
 
   /** On-disk parquet bytes of table `name` under `sfDir` (single file or
     * directory of part-files) — the no-Spark-job size probe behind the
-    * scaled-table broadcast-hint gates (the Graph.nodesCountUpperBound /
-    * Similarity.embRowsUpperBound recipe, generalized). 0 for a missing
+    * scaled-table broadcast-hint gates (Similarity.embRowsUpperBound
+    * among them). 0 for a missing
     * table, which every gate treats as "small" (hint stands — the
     * test-data layout always materializes the table it reads). */
   def bytesOnDisk(sfDir: String, name: String): Long = {
@@ -70,18 +73,7 @@ object Tables {
     * `spark.read.parquet` raises Spark's error. */
   def parquet(s: SparkSession, paths: String*): DataFrame = {
     val conf = s.sessionState.newHadoopConf()
-    val summaries = Seq("_common_metadata", "_metadata")
-    val files = paths.flatMap { path =>
-      val fs = new Path(path).getFileSystem(conf)
-      // skip `_*` (not `_k=v` partition dirs or summaries), `.*`, `*._COPYING_`
-      def leaves(f: FileStatus): Seq[FileStatus] = if (!f.isDirectory) Seq(f) else
-        fs.listStatus(f.getPath).toSeq.filter { c =>
-          val n = c.getPath.getName
-          summaries.exists(n.startsWith) || !(n.startsWith("_") && !n.contains("=") ||
-            n.startsWith(".") || n.endsWith("._COPYING_"))
-        }.flatMap(leaves)
-      scala.util.Try(fs.getFileStatus(new Path(path))).toOption.toSeq.flatMap(leaves)
-    }.sortBy(_.getPath.toString)
+    val files = leaves(conf, paths)
     summaries.flatMap(n => files.find(_.getPath.getName == n)).headOption
       .orElse(files.find(f => !summaries.contains(f.getPath.getName))) match {
       case Some(f) =>
@@ -92,6 +84,33 @@ object Tables {
       case None => s.read.parquet(paths: _*)
     }
   }
+
+  /** Exact row count of the parquet table at `path` with no Spark job: the
+    * sum of the row-group row counts in its data files' footers. */
+  def rowCount(s: SparkSession, path: String): Long = {
+    val conf = s.sessionState.newHadoopConf()
+    leaves(conf, Seq(path)).filterNot(f => summaries.contains(f.getPath.getName))
+      .map(f => ParquetFooterReader.readFooter(HadoopInputFile.fromStatus(f, conf), NO_FILTER)
+        .getBlocks.asScala.map(_.getRowCount).sum)
+      .sum
+  }
+
+  private val summaries = Seq("_common_metadata", "_metadata")
+
+  /** The files Spark's file index lists under `paths`, sorted by path:
+    * skips `_*` (not `_k=v` partition dirs or summaries), `.*` and
+    * `*._COPYING_`. */
+  private def leaves(conf: Configuration, paths: Seq[String]): Seq[FileStatus] =
+    paths.flatMap { path =>
+      val fs = new Path(path).getFileSystem(conf)
+      def under(f: FileStatus): Seq[FileStatus] = if (!f.isDirectory) Seq(f) else
+        fs.listStatus(f.getPath).toSeq.filter { c =>
+          val n = c.getPath.getName
+          summaries.exists(n.startsWith) || !(n.startsWith("_") && !n.contains("=") ||
+            n.startsWith(".") || n.endsWith("._COPYING_"))
+        }.flatMap(under)
+      scala.util.Try(fs.getFileStatus(new Path(path))).toOption.toSeq.flatMap(under)
+    }.sortBy(_.getPath.toString)
 
   /** The engine's one session factory: every main (Bench, Verify, the
     * audits, probes and demos) and the perfbench harness get their session

@@ -46,7 +46,7 @@ object Dedup {
     * the batch id. Committed per sf (deterministic artifact of the
     * snapshot; the oracle re-derives every flag from SQL). */
   private def decontStreamScenario(s: SparkSession, d: String): String =
-    graft.engine.Layouts.publish(s, s"/tmp/graft_dedup/decont_${graft.engine.Layouts.tag(d)}") { work =>
+    graft.engine.Layouts.publish(s, d, "dedup/decont") { work =>
       val isEval = col("doc_id") % 97 === 0 && col("doc_id") < 1000000
       val c = corpus(s, d).select("doc_id", "text")
       // benchmark gram set: tiny at any corpus scale, materialized once,
@@ -115,16 +115,14 @@ object Dedup {
     * it in SQL ([[sigsCte]]). */
   private def candidates(s: SparkSession, d: String): (DataFrame, DataFrame) = {
     val sg = sigs(s, d)
-    val tag = graft.engine.Layouts.tag(d)
-    val path = s"/tmp/graft_dedup/cand_$tag"
-    val cand = graft.engine.Layouts.committed(s, path) {
+    val cand = graft.engine.Layouts.committed(s, d, "dedup/cand") { out =>
       val bd = bands(sg)
       bd.as("x").join(bd.as("y"),
           col("x.band") === col("y.band") && col("x.bkey") === col("y.bkey") &&
             col("x.doc_id") < col("y.doc_id"))
         .select(col("x.doc_id").as("a"), col("y.doc_id").as("b")).distinct()
         .coalesce(2)
-        .write.mode("overwrite").parquet(path)
+        .write.parquet(out)
     }
     (cand, sg)
   }
@@ -249,12 +247,10 @@ object Dedup {
     * from scratch in SQL (recursive CTE), so the materialization itself is
     * oracle-gated on every round. */
   private def ccLabels(s: SparkSession, d: String): DataFrame = {
-    val tag = graft.engine.Layouts.tag(d)
-    val path = s"/tmp/graft_dedup/cc_$tag"
-    graft.engine.Layouts.committed(s, path) {
+    graft.engine.Layouts.committed(s, d, "dedup/cc") { out =>
       connectedComponents(corpus(s, d), lshPairs(s, d))
         .coalesce(2)
-        .write.mode("overwrite").parquet(path)
+        .write.parquet(out)
     }
   }
 
@@ -269,21 +265,19 @@ object Dedup {
     * any pair at Jaccard ≥ 0.5 provably shares a prefix gram. Returns
     * (grams, prefix) readers. */
   private def prefixIndexLayout(s: SparkSession, d: String): (DataFrame, DataFrame) = {
-    val tag = graft.engine.Layouts.tag(d)
-    val gPath = s"/tmp/graft_dedup/grams4_$tag"
-    val pPath = s"/tmp/graft_dedup/prefix4_$tag"
-    val prefix = graft.engine.Layouts.committed(s, pPath) {
+    val grams = graft.engine.Layouts.committed(s, d, "dedup/grams4") { out =>
       val g4 = when(size(col("__th")) < 4, array().cast("array<long>"))
         .otherwise(expr(
           """transform(sequence(1, size(__th) - 3),
             |  i -> (((element_at(__th, i) * 131 + element_at(__th, i + 1)) * 131
             |         + element_at(__th, i + 2)) * 131 + element_at(__th, i + 3))
             |       % 1000000007L)""".stripMargin))
-      val grams = corpus(s, d)
+      corpus(s, d)
         .withColumn("__th", T.tokenHashes(col("text")))
         .select(col("doc_id"), array_distinct(g4).as("g"))
-        .cache()
-      grams.coalesce(2).write.mode("overwrite").parquet(gPath)
+        .coalesce(2).write.parquet(out)
+    }
+    val prefix = graft.engine.Layouts.committed(s, d, "dedup/prefix4") { out =>
       val tok = grams.select(col("doc_id"), size(col("g")).as("n"),
         explode(col("g")).as("gram"))
       val dfc = tok.groupBy("gram").agg(count(lit(1)).as("df"))
@@ -292,10 +286,9 @@ object Dedup {
         .withColumn("rn", row_number().over(w))
         .filter(col("rn") <= floor(col("n") / lit(2)) + lit(1))
         .select("doc_id", "gram")
-        .coalesce(2).write.mode("overwrite").parquet(pPath)
-      grams.unpersist()
+        .coalesce(2).write.parquet(out)
     }
-    (Tables.parquet(s, gPath), prefix)
+    (grams, prefix)
   }
 
   /** Maximal duplicated 8-token spans per doc (the Lee et al. 2022
@@ -308,11 +301,9 @@ object Dedup {
     // Lee-et-al-style pipelines materialize it once per corpus snapshot
     // and both consumers (the span report, the mask census) read it.
     // Derivation is deterministic; the oracles keep recomputing it in SQL.
-    val tag = graft.engine.Layouts.tag(d)
-    val path = s"/tmp/graft_dedup/spans8_$tag"
-    graft.engine.Layouts.committed(s, path) {
+    graft.engine.Layouts.committed(s, d, "dedup/spans8") { out =>
       substringSpansDerive(s, d).coalesce(2)
-        .write.mode("overwrite").parquet(path)
+        .write.parquet(out)
     }
   }
 
@@ -595,9 +586,7 @@ object Dedup {
     // per run: read + threshold + sort. The oracle still re-derives
     // signatures, bands, and distances entirely in SQL.
     "dd_simhash_near" -> ((s, d) => {
-      val tag = graft.engine.Layouts.tag(d)
-      val path = s"/tmp/graft_dedup/shcand_$tag"
-      graft.engine.Layouts.committed(s, path) {
+      graft.engine.Layouts.committed(s, d, "dedup/shcand") { out =>
         val sh = stagedSimhash(corpus(s, d)).cache()
         val byteBands = sh.select(col("doc_id"), col("sh"), explode(array((0 until 3).map(k =>
             struct(lit(k).as("band"), (floor(col("sh") / math.pow(2, 8 * k).toLong).cast("long") % 256).as("bkey"))): _*)).as("bd"))
@@ -609,7 +598,7 @@ object Dedup {
             bit_count(col("x.sh").bitwiseXOR(col("y.sh"))).cast("bigint").as("hamming"))
           .distinct()
           .coalesce(2)
-          .write.mode("overwrite").parquet(path)
+          .write.parquet(out)
       }
         .filter(col("hamming") <= 4)
         .orderBy("a", "b")
@@ -1178,9 +1167,7 @@ object Dedup {
     // the raw text.
     "dd_winnowing" -> ((s, d) => {
       val w = 4
-      val tag = graft.engine.Layouts.tag(d)
-      val path = s"/tmp/graft_dedup/winnow4_$tag"
-      val staged = graft.engine.Layouts.committed(s, path) {
+      val staged = graft.engine.Layouts.committed(s, d, "dedup/winnow4") { out =>
         corpus(s, d)
           .select(col("doc_id"),
             T.shinglesFromHashes(T.tokenHashes(col("text"))).as("__sh"))
@@ -1190,7 +1177,7 @@ object Dedup {
             array_distinct(transform(
               sequence(lit(0), size(col("__sh")) - w),
               i => array_min(slice(col("__sh"), i + 1, lit(w))))).as("__fps"))
-          .coalesce(2).write.mode("overwrite").parquet(path)
+          .coalesce(2).write.parquet(out)
       }
       val fps = staged.select(col("doc_id"), explode(col("__fps")).as("fp"))
       val kept = fps.join(
@@ -1239,9 +1226,7 @@ object Dedup {
     "dd_suffix_exact" -> ((s, d) => {
       import s.implicits._
       val L = 5
-      val tag = graft.engine.Layouts.tag(d)
-      val path = s"/tmp/graft_dedup/suffix8_$tag"
-      val stored = graft.engine.Layouts.committed(s, path) {
+      val stored = graft.engine.Layouts.committed(s, d, "dedup/suffix8") { out =>
         val K = 8
         val base = corpus(s, d)
         val planted = base
@@ -1273,7 +1258,7 @@ object Dedup {
             }
           }
           .toDF("spid", "seq", "doc_id", "pos1", "karr")
-          .write.mode("overwrite").parquet(path)
+          .write.parquet(out)
       }
       def lcpOf(a: Seq[String], b: Seq[String]): Int = {
         var i = 0; val n = math.min(a.length, b.length)

@@ -34,15 +34,13 @@ object Graph {
     * not something each query rebuilds from the raw facts. Derivation is
     * deterministic, so the DuckDB oracles keep recomputing it from SQL. */
   private def edges(s: SparkSession, d: String): DataFrame = {
-    val tag = graft.engine.Layouts.tag(d)
-    val path = s"/tmp/graft_graph/edges_$tag"
-    graft.engine.Layouts.committed(s, path) {
+    graft.engine.Layouts.committed(s, d, "graph/edges") { out =>
       t(s, d, "orders")
         .join(t(s, d, "lineitem"), col("o_orderkey") === col("l_orderkey"))
         .select(col("o_custkey").as("src"), col("l_suppkey").as("dst"))
         .distinct()
         .coalesce(4)
-        .write.mode("overwrite").parquet(path)
+        .write.parquet(out)
     }
   }
 
@@ -56,14 +54,12 @@ object Graph {
     * maintained adjacency table of a production graph workload — so the
     * DuckDB oracles keep recomputing it from SQL. */
   private def symEdges(s: SparkSession, d: String): DataFrame = {
-    val tag = graft.engine.Layouts.tag(d)
-    val path = s"/tmp/graft_graph/symedges_$tag"
-    graft.engine.Layouts.committed(s, path) {
+    graft.engine.Layouts.committed(s, d, "graph/symedges") { out =>
       val base = edges(s, d)
         .select((col("src") * 2).as("src"), (col("dst") * 2 + 1).as("dst"))
       base.union(base.select(col("dst").as("src"), col("src").as("dst")))
         .coalesce(4)
-        .write.mode("overwrite").parquet(path)
+        .write.parquet(out)
     }
   }
 
@@ -75,9 +71,7 @@ object Graph {
     * Committed per sf like [[edges]] (the directed edge list is a
     * maintained snapshot artifact); the oracle re-derives it in SQL. */
   private def dirEdges(s: SparkSession, d: String): DataFrame = {
-    val tag = graft.engine.Layouts.tag(d)
-    val path = s"/tmp/graft_graph/dedges_$tag"
-    graft.engine.Layouts.committed(s, path) {
+    graft.engine.Layouts.committed(s, d, "graph/dedges") { out =>
       val ol = t(s, d, "orders")
         .join(t(s, d, "lineitem"), col("o_orderkey") === col("l_orderkey"))
       val ship = ol.select(col("o_custkey").as("c"), col("l_suppkey").as("s"))
@@ -87,7 +81,7 @@ object Graph {
         .select(col("o_custkey").as("c"), col("l_suppkey").as("s"))
         .distinct()
         .select((col("c") * 2).as("src"), (col("s") * 2 + 1).as("dst"))
-      ship.union(ret).coalesce(4).write.mode("overwrite").parquet(path)
+      ship.union(ret).coalesce(4).write.parquet(out)
     }
   }
 
@@ -99,13 +93,11 @@ object Graph {
     * rank/outdeg stays a single IEEE divide, bit-identical to the
     * oracles' replay. */
   private def weightedLayout(s: SparkSession, d: String): DataFrame = {
-    val tag = graft.engine.Layouts.tag(d)
-    val wPath = s"/tmp/graft_graph/symweighted_$tag"
-    graft.engine.Layouts.committed(s, wPath) {
+    graft.engine.Layouts.committed(s, d, "graph/symweighted") { out =>
       val e = symEdges(s, d)
       e.join(e.groupBy(col("src")).agg(count(lit(1)).as("outdeg")), "src")
         .select(col("src"), col("dst"), col("outdeg"))
-        .coalesce(4).write.mode("overwrite").parquet(wPath)
+        .coalesce(4).write.parquet(out)
     }
   }
 
@@ -195,27 +187,6 @@ object Graph {
     * slack. Above it the loop runs co-partitioned. */
   private[graft] val BcStateRowLimit = 4000000L
 
-  /** Node count for the betweenness gate, with no per-run Spark job: the
-    * EXACT count from the `_rowcount` sidecar the symnodes layout records
-    * at commit time (ADVICE r11 — a bytes-derived estimate could
-    * undercount under dictionary/delta parquet encodings and let the gate
-    * broadcast oversized state). Falls back to the conservative
-    * bytes-based bound (≥3 bytes/row measured on every sf, so bytes/2
-    * OVERcounts — errs toward skipping the hint) only for a layout
-    * committed by a pre-sidecar build. */
-  private def nodesCountUpperBound(s: SparkSession, d: String): Long = {
-    nodesLayout(s, d) // ensure the layout exists
-    val tag = graft.engine.Layouts.tag(d)
-    val dir = new java.io.File(s"/tmp/graft_graph/symnodes_$tag")
-    val sidecar = new java.io.File(dir, "_rowcount")
-    if (sidecar.exists())
-      new String(java.nio.file.Files.readAllBytes(sidecar.toPath),
-        java.nio.charset.StandardCharsets.UTF_8).trim.toLong
-    else
-      Option(dir.listFiles()).map(_.filter(_.getName.endsWith(".parquet"))
-        .map(_.length()).sum).getOrElse(0L) / 2
-  }
-
   /** Shared gate for every NODE-sized broadcast hint in the iterative
     * graph closures (VERDICT r12 #1): true while the committed node
     * layout's exact row count fits the broadcast budget. An explicit
@@ -226,9 +197,15 @@ object Graph {
     * that hints a node-bounded state frame (scc coloring, lpa, the
     * louvain passes, the two rank loops) must route the hint through
     * this gate; above it the loop runs co-partitioned on the node key.
-    * Costs zero Spark jobs (the `_rowcount` sidecar). */
+    * The count is EXACT (ADVICE r11: a bytes-derived estimate could
+    * undercount under dictionary/delta encodings and let the gate
+    * broadcast oversized state) and costs zero Spark jobs: it sums the
+    * row-group row counts in the committed node layout's footers. */
   private[graft] def nodeHintGate(s: SparkSession, d: String): Boolean =
-    nodesCountUpperBound(s, d) <= BcStateRowLimit
+    nodeCount(s, d) <= BcStateRowLimit
+
+  private[graft] def nodeCount(s: SparkSession, d: String): Long =
+    Tables.rowCount(s, nodesPath(s, d))
 
   /** The sampled-bounded Brandes plan (graph_betweenness), parameterized
     * by whether the O(sources × nodes) state frames carry broadcast hints
@@ -540,9 +517,7 @@ object Graph {
     * the 6–42 s cache-race variance was not). Shared by graph_triangles
     * and graph_truss_support. */
   private def cosupplyLayout(s: SparkSession, d: String): DataFrame = {
-    val tag = graft.engine.Layouts.tag(d)
-    val path = s"/tmp/graft_graph/cosupply_$tag"
-    graft.engine.Layouts.committed(s, path) {
+    graft.engine.Layouts.committed(s, d, "graph/cosupply") { out =>
       val sp = t(s, d, "lineitem")
         .select(col("l_partkey").as("pk"),
           (year(col("l_shipdate")) * 100 + month(col("l_shipdate"))).as("m"),
@@ -552,7 +527,7 @@ object Graph {
             col("a.sk") < col("b.sk"))
         .select(col("a.sk").as("u"), col("b.sk").as("v")).distinct()
         .coalesce(4)
-        .write.mode("overwrite").parquet(path)
+        .write.parquet(out)
     }
   }
 
@@ -566,48 +541,37 @@ object Graph {
     * the edge list (the symEdges discipline); the oracles keep
     * re-deriving everything from SQL. */
   private def orientedCosupply(s: SparkSession, d: String): (DataFrame, DataFrame) = {
-    val tag = graft.engine.Layouts.tag(d)
-    val orPath = s"/tmp/graft_graph/cosupply_or_$tag"
-    val adjPath = s"/tmp/graft_graph/cosupply_adj_$tag"
-    val adj = graft.engine.Layouts.committed(s, adjPath) {
+    val or = graft.engine.Layouts.committed(s, d, "graph/cosupply_or") { out =>
       val e = cosupplyLayout(s, d)
       val deg = e.select(col("u").as("n")).unionAll(e.select(col("v").as("n")))
         .groupBy("n").agg(count(lit(1)).as("dg"))
       val lowFirst = col("du") < col("dv") ||
         (col("du") === col("dv") && col("u") < col("v"))
-      val or = e
-        .join(deg.select(col("n").as("u"), col("dg").as("du")), "u")
+      e.join(deg.select(col("n").as("u"), col("dg").as("du")), "u")
         .join(deg.select(col("n").as("v"), col("dg").as("dv")), "v")
         .select(
           when(lowFirst, col("u")).otherwise(col("v")).as("src"),
           when(lowFirst, col("v")).otherwise(col("u")).as("dst"))
-      or.coalesce(2).write.mode("overwrite").parquet(orPath)
-      Tables.parquet(s, orPath)
-        .groupBy(col("src").as("n"))
-        .agg(sort_array(collect_list(col("dst"))).as("nbrs"))
-        .coalesce(2).write.mode("overwrite").parquet(adjPath)
+        .coalesce(2).write.parquet(out)
     }
-    (Tables.parquet(s, orPath), adj)
+    val adj = graft.engine.Layouts.committed(s, d, "graph/cosupply_adj") { out =>
+      or.groupBy(col("src").as("n"))
+        .agg(sort_array(collect_list(col("dst"))).as("nbrs"))
+        .coalesce(2).write.parquet(out)
+    }
+    (or, adj)
   }
 
-  private def nodesLayout(s: SparkSession, d: String): DataFrame = {
-    val tag = graft.engine.Layouts.tag(d)
-    val nPath = s"/tmp/graft_graph/symnodes_$tag"
-    graft.engine.Layouts.committed(s, nPath) {
+  /** The distinct node ids of the symmetric edge frame, committed per sf. */
+  private def nodesPath(s: SparkSession, d: String): String =
+    graft.engine.Layouts.publish(s, d, "graph/symnodes") { out =>
       val e = symEdges(s, d)
       e.select(col("src").as("node")).union(e.select(col("dst").as("node")))
-        .distinct().coalesce(1).write.mode("overwrite").parquet(nPath)
-      // exact row-count sidecar, recorded at commit time (ADVICE r11): a
-      // bytes-derived node estimate can UNDERcount when dictionary/delta
-      // encodings compress regular BIGINT sequences below the assumed
-      // bytes/row, which would let the betweenness gate broadcast
-      // oversized state. Counting here is a parquet footer-metadata read;
-      // the gate then reads the true value with zero per-run Spark jobs.
-      val n = Tables.parquet(s, nPath).count()
-      java.nio.file.Files.write(new java.io.File(nPath, "_rowcount").toPath,
-        n.toString.getBytes(java.nio.charset.StandardCharsets.UTF_8))
+        .distinct().coalesce(1).write.parquet(out)
     }
-  }
+
+  private def nodesLayout(s: SparkSession, d: String): DataFrame =
+    Tables.parquet(s, nodesPath(s, d))
 
   /** SSSP's weighted symmetric adjacency (min observed unit price per
     * trading pair, fixed-point 2^8 BIGINT), materialized once per sf: the
@@ -618,9 +582,7 @@ object Graph {
     * at ANY key domain, unlike the previous key+1e6 offset whose phantom-
     * supplier overlap at custkey ≥ 1e6 was latent (ADVICE r8). */
   private def weightedAdj(s: SparkSession, d: String): DataFrame = {
-    val tag = graft.engine.Layouts.tag(d)
-    val path = s"/tmp/graft_graph/wadj_$tag"
-    graft.engine.Layouts.committed(s, path) {
+    graft.engine.Layouts.committed(s, d, "graph/wadj") { out =>
       val we = t(s, d, "orders")
         .join(t(s, d, "lineitem"), col("o_orderkey") === col("l_orderkey"))
         .groupBy(col("o_custkey").as("c"), col("l_suppkey").as("sp"))
@@ -629,7 +591,7 @@ object Graph {
       we.select((col("c") * 2).as("src"), (col("sp") * 2 + 1).as("dst"), col("w"))
         .union(we.select((col("sp") * 2 + 1).as("src"), (col("c") * 2).as("dst"), col("w")))
         .coalesce(4)
-        .write.mode("overwrite").parquet(path)
+        .write.parquet(out)
     }
   }
 
@@ -639,13 +601,11 @@ object Graph {
     * frames. Sorted so an argmin fold's strict `<` tie-break equals the
     * lexicographic (h, dst) minimum. */
   private def adjListLayout(s: SparkSession, d: String): DataFrame = {
-    val tag = graft.engine.Layouts.tag(d)
-    val path = s"/tmp/graft_graph/adjlist_$tag"
-    graft.engine.Layouts.committed(s, path) {
+    graft.engine.Layouts.committed(s, d, "graph/adjlist") { out =>
       symEdges(s, d)
         .groupBy(col("src").as("node"))
         .agg(array_sort(collect_list(col("dst").cast("long"))).as("nbrs"))
-        .coalesce(4).write.mode("overwrite").parquet(path)
+        .coalesce(4).write.parquet(out)
     }
   }
 
@@ -670,19 +630,17 @@ object Graph {
     * streaming through the codegen'd hash join. */
   private def aaPairsLayout(s: SparkSession, d: String): (DataFrame, DataFrame) = {
     val hubCap = 64
-    val tag = graft.engine.Layouts.tag(d)
-    val pairsPath = s"/tmp/graft_graph/aa_pairs_$tag"
-    val censusPath = s"/tmp/graft_graph/aa_census_$tag"
-    val pairs = graft.engine.Layouts.committed(s, pairsPath) {
-      val e = edges(s, d)
-      val wdeg = e.groupBy("src").agg(count(lit(1)).as("wdeg"))
+    def wdeg = edges(s, d).groupBy("src").agg(count(lit(1)).as("wdeg"))
+    val census = graft.engine.Layouts.committed(s, d, "graph/aa_census") { out =>
       wdeg.agg(
           count(lit(1)).as("n_witnesses"),
           sum(when(col("wdeg") > hubCap, 1L).otherwise(0L)).as("n_hubs_dropped"),
           sum(when(col("wdeg") > hubCap, col("wdeg") * (col("wdeg") - 1) / lit(2))
             .otherwise(0L)).cast("bigint").as("n_wedges_dropped"))
-        .coalesce(1).write.mode("overwrite").parquet(censusPath)
-      val ew = e.join(wdeg.filter(col("wdeg") <= hubCap), "src")
+        .coalesce(1).write.parquet(out)
+    }
+    val pairs = graft.engine.Layouts.committed(s, d, "graph/aa_pairs") { out =>
+      val ew = edges(s, d).join(wdeg.filter(col("wdeg") <= hubCap), "src")
       ew.as("x").join(ew.as("y"),
           col("x.src") === col("y.src") && col("x.dst") < col("y.dst"))
         .select(col("x.dst").as("s1"), col("y.dst").as("s2"),
@@ -691,9 +649,9 @@ object Graph {
         .agg(count(lit(1)).as("common"),
           round(FP.qsum(lit(1.0) / log(col("wdeg"))), 4).as("aa"))
         .filter(col("common") >= 3)
-        .coalesce(4).write.mode("overwrite").parquet(pairsPath)
+        .coalesce(4).write.parquet(out)
     }
-    (pairs, Tables.parquet(s, censusPath))
+    (pairs, census)
   }
 
   val queries: Map[String, Q] = Map(
@@ -1310,10 +1268,10 @@ object Graph {
       // frontier/visited/delta frames join the adjacency CO-PARTITIONED
       // on the node key instead — same results (PlanQualitySpec pins
       // both), the plan just trades per-round broadcasts for shuffles the
-      // way a true 100 TB-node run must. The estimate costs zero Spark
-      // jobs (layout file bytes, deliberately overcounted).
+      // way a true 100 TB-node run must. The node count costs zero Spark
+      // jobs (the node layout's footers, as in nodeHintGate).
       betweennessPlan(adj, sources,
-        broadcastState = 4L * nodesCountUpperBound(s, d) <= BcStateRowLimit)
+        broadcastState = 4L * nodeCount(s, d) <= BcStateRowLimit)
     }),
 
     // ---- deterministic random-walk corpus (DeepWalk / node2vec, the

@@ -35,8 +35,7 @@ object Nested {
 
   /** Per-sf nested events table, committed on first use. */
   private def nested(s: SparkSession, d: String): DataFrame = {
-    val path = s"/tmp/graft_nested/events_${graft.engine.Layouts.tag(d)}"
-    graft.engine.Layouts.committed(s, path) {
+    graft.engine.Layouts.committed(s, d, "nested/events") { out =>
       val attrs = filter(
         array(
           struct(lit("cents").as("k"),
@@ -50,7 +49,7 @@ object Nested {
           struct(col("event_type").as("etype"), col("user_id").as("uid")).as("meta"),
           attrs.as("attrs"),
           col("props").as("payload"))
-        .write.mode("overwrite").parquet(path)
+        .write.parquet(out)
     }
   }
 

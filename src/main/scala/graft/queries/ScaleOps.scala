@@ -21,7 +21,7 @@ object ScaleOps {
     * a crashed half-build can never be consumed (manifests are
     * table-relative, so the publishing rename is safe). */
   private def commitScenario(s: SparkSession, d: String): String =
-    graft.engine.Layouts.publish(s, s"/tmp/graft_commits/tbl_${graft.engine.Layouts.tag(d)}") { work =>
+    graft.engine.Layouts.publish(s, d, "commits/tbl") { work =>
       val cust = t(s, d, "customer")
       C.init(work, C.stage(cust.filter(col("c_nationkey") < 10), work, "base"))
       // all three writers stage against basis v1
@@ -47,7 +47,7 @@ object ScaleOps {
     * checkpoint + tail (v5–v6, with the tail containing a rebased
     * commit). Published like commitScenario. */
   private def ckptScenario(s: SparkSession, d: String): String =
-    graft.engine.Layouts.publish(s, s"/tmp/graft_ckpt/tbl_${graft.engine.Layouts.tag(d)}") { work =>
+    graft.engine.Layouts.publish(s, d, "ckpt/tbl") { work =>
       val cust = t(s, d, "customer")
       C.init(work, C.stage(cust.filter(col("c_nationkey") < 5), work, "base"))
       C.commitAppend(work, 1, Seq(C.stage(
@@ -86,12 +86,25 @@ object ScaleOps {
       .withColumn("eff_to", lead(col("eff_from"), 1).over(w))
   }
 
+  /** The session catalog table named like the published layout at `path`
+    * (its last path component): `register` creates it unless the session
+    * has it. A catalog table is session state, so each session registers
+    * the shared files once; the lock keeps a concurrent query from
+    * planning against a table that is registered but not yet analyzed. */
+  private def catalogTable(s: SparkSession, path: String)(register: String => Unit): String = {
+    val tbl = new java.io.File(path).getName
+    if (!s.catalog.tableExists(tbl)) catalogLock.synchronized {
+      if (!s.catalog.tableExists(tbl)) register(tbl)
+    }
+    tbl
+  }
+  private[this] val catalogLock = new Object
+
   /** orders partitioned by o_year: pp_partition_pruned and pp_dynamic_pruning's fact side. */
   private def ordersByYear(s: SparkSession, d: String): DataFrame = {
-    val path = s"/tmp/graft_partitioned/orders_${graft.engine.Layouts.tag(d)}"
-    graft.engine.Layouts.committed(s, path) {
+    graft.engine.Layouts.committed(s, d, "partitioned/orders") { out =>
       t(s, d, "orders").withColumn("o_year", year(col("o_orderdate")))
-        .write.mode("overwrite").partitionBy("o_year").parquet(path)
+        .write.partitionBy("o_year").parquet(out)
     }
   }
 
@@ -427,21 +440,24 @@ object ScaleOps {
     // bucketed scan and the absence of join-key exchanges; BucketingSpec
     // covers the layout in depth.
     "bj_colocated_join" -> ((s, d) => {
-      val tag = graft.engine.Layouts.tag(d)
-      def ensure(base: String, df: => DataFrame, key: String): String = {
-        val tbl = s"${base}_$tag"
-        graft.engine.Layouts.ensure(s, s"/tmp/graft_bucketed/$tbl")(
-          s.catalog.tableExists(tbl)) {
-          df.write.mode("overwrite")
-            .bucketBy(8, key).sortBy(key)
-            .option("path", s"/tmp/graft_bucketed/$tbl")
-            .format("parquet").saveAsTable(tbl)
+      def bucketed(stem: String, df: => DataFrame, key: String): String = {
+        // bucketBy writes only through a catalog table, so the build
+        // registers a scratch one over its work dir and drops it again
+        // (an external table: the files stay)
+        val path = graft.engine.Layouts.publish(s, d, s"bucketed/$stem") { out =>
+          val scratch = "build_" + java.util.UUID.randomUUID().toString.replace("-", "")
+          df.write.bucketBy(8, key).sortBy(key).option("path", out)
+            .format("parquet").saveAsTable(scratch)
+          s.sql(s"DROP TABLE $scratch")
         }
-        tbl
+        // a bucketed CREATE TABLE needs its column list spelled out
+        catalogTable(s, path)(tbl => s.sql(
+          s"CREATE TABLE $tbl (${Tables.parquet(s, path).schema.toDDL}) USING parquet " +
+            s"CLUSTERED BY ($key) SORTED BY ($key) INTO 8 BUCKETS LOCATION '$path'"))
       }
-      val bo = ensure("bj_orders",
+      val bo = bucketed("bj_orders",
         t(s, d, "orders").select(col("o_orderkey"), col("o_orderstatus")), "o_orderkey")
-      val bl = ensure("bj_lineitem",
+      val bl = bucketed("bj_lineitem",
         t(s, d, "lineitem").select(col("l_orderkey"), col("l_extendedprice")), "l_orderkey")
       s.table(bl).hint("merge")
         .join(s.table(bo), col("l_orderkey") === col("o_orderkey"))
@@ -472,15 +488,14 @@ object ScaleOps {
     // a decade of partitions.
     "pp_dynamic_pruning" -> ((s, d) => {
       val fact = ordersByYear(s, d)
-      val dim = s"/tmp/graft_partitioned/years_${graft.engine.Layouts.tag(d)}"
-      val dimDf = graft.engine.Layouts.committed(s, dim) {
+      val dimDf = graft.engine.Layouts.committed(s, d, "partitioned/years") { out =>
         t(s, d, "orders")
           .select(year(col("o_orderdate")).as("o_year")).distinct()
           .withColumn("era",
             when(col("o_year") < 1995, "early")
               .when(col("o_year") < 1998, "mid")
               .otherwise("late"))
-          .coalesce(1).write.mode("overwrite").parquet(dim)
+          .coalesce(1).write.parquet(out)
       }
       fact.join(broadcast(dimDf.filter(col("era") === "mid")), "o_year")
         .groupBy("o_orderstatus")
@@ -656,11 +671,9 @@ object ScaleOps {
     // partition with target-size binpacking; the written layouts are
     // first-use-cached like the other /tmp layouts.
     "etl_compact_files" -> ((s, d) => {
-      val tag = graft.engine.Layouts.tag(d)
-      val base = s"/tmp/graft_compact/orders_$tag"
-      val slice = t(s, d, "orders").filter(col("o_orderkey") % 4 === 0)
-        .select("o_orderkey", "o_orderstatus", "o_totalprice")
-      val frag = graft.engine.Layouts.committed(s, s"$base/frag") {
+      val base = graft.engine.Layouts.publish(s, d, "compact/orders") { out =>
+        val slice = t(s, d, "orders").filter(col("o_orderkey") % 4 === 0)
+          .select("o_orderkey", "o_orderstatus", "o_totalprice")
         // the oracle pins files_before=64, but FileFormatWriter emits NO
         // file for an empty partition — guard the precondition loudly
         // instead of letting a thin slice surface as a hash mismatch
@@ -669,17 +682,15 @@ object ScaleOps {
         require(n >= 64 * 8,
           s"etl_compact_files fragments into 64 files and needs a safely " +
             s"non-empty row count per round-robin partition; got $n rows at $d")
-        slice.repartition(64).write.mode("overwrite").parquet(s"$base/frag")
-      }
-      val compact = graft.engine.Layouts.committed(s, s"$base/compact") {
-        frag.repartition(4).write.mode("overwrite").parquet(s"$base/compact")
+        slice.repartition(64).write.parquet(s"$out/frag")
+        Tables.parquet(s, s"$out/frag").repartition(4).write.parquet(s"$out/compact")
       }
       def files(p: String): Long =
         new java.io.File(p).listFiles().count(f => f.getName.endsWith(".parquet"))
       require(files(s"$base/frag") == 64 && files(s"$base/compact") == 4,
         s"layout under $base does not match the oracle's pinned 64→4 file " +
           "counts — stale or partial /tmp state; delete and regenerate")
-      val compacted = compact
+      val compacted = Tables.parquet(s, s"$base/compact")
         .withColumn("sig", element_at(graft.engine.TextFunctions.tokenHashes(
           md5(concat_ws("|", col("o_orderkey"), col("o_orderstatus")))), 1))
         .agg(count(lit(1)).as("n_rows"), sum("sig").as("checksum"))
@@ -715,12 +726,10 @@ object ScaleOps {
     // round-trippable decimal text. The oracle reads the original parquet,
     // so the hash match certifies the whole text round-trip.
     "src_csv_roundtrip" -> ((s, d) => {
-      val tag = graft.engine.Layouts.tag(d)
-      val path = s"/tmp/graft_formats/orders_csv_$tag"
-      graft.engine.Layouts.committed(s, path, _.read.option("header", "true")
-          .schema("o_orderkey LONG, o_orderstatus STRING, o_totalprice DOUBLE").csv(_)) {
+      graft.engine.Layouts.committed(s, d, "formats/orders_csv", _.read.option("header", "true")
+          .schema("o_orderkey LONG, o_orderstatus STRING, o_totalprice DOUBLE").csv(_)) { out =>
         t(s, d, "orders").select("o_orderkey", "o_orderstatus", "o_totalprice")
-          .write.mode("overwrite").option("header", "true").csv(path)
+          .write.option("header", "true").csv(out)
       }
         .groupBy("o_orderstatus")
         .agg(count(lit(1)).as("n"), round(FP.qsum(col("o_totalprice"), 20), 4).as("rev"),
@@ -741,17 +750,15 @@ object ScaleOps {
     // quarantine-at-ingest pattern: bad rows stay queryable for triage
     // instead of killing the job (FAILFAST) or vanishing (DROPMALFORMED).
     "src_csv_badrecords" -> ((s, d) => {
-      val tag = graft.engine.Layouts.tag(d)
-      val path = s"/tmp/graft_formats/orders_badcsv_$tag"
-      graft.engine.Layouts.committed(s, path, _.read.option("header", "true")
+      graft.engine.Layouts.committed(s, d, "formats/orders_badcsv", _.read.option("header", "true")
           .option("mode", "PERMISSIVE").option("columnNameOfCorruptRecord", "_bad")
-          .schema("o_orderkey LONG, o_orderstatus STRING, o_totalprice DOUBLE, _bad STRING").csv(_)) {
+          .schema("o_orderkey LONG, o_orderstatus STRING, o_totalprice DOUBLE, _bad STRING").csv(_)) { out =>
         t(s, d, "orders")
           .select(col("o_orderkey"), col("o_orderstatus"),
             when(pmod(col("o_orderkey"), lit(23)) === 0,
               concat(lit("bad"), col("o_orderkey")))
               .otherwise(col("o_totalprice").cast("string")).as("o_totalprice"))
-          .write.mode("overwrite").option("header", "true").csv(path)
+          .write.option("header", "true").csv(out)
       }
         .groupBy("o_orderstatus")
         .agg(count(lit(1)).as("n_rows"),
@@ -764,12 +771,10 @@ object ScaleOps {
     // ---- ORC source round-trip: the other columnar format Spark ships
     // natively — same first-use layout, filter pushed to the ORC scan.
     "src_orc_roundtrip" -> ((s, d) => {
-      val tag = graft.engine.Layouts.tag(d)
-      val path = s"/tmp/graft_formats/lineitem_orc_$tag"
-      graft.engine.Layouts.committed(s, path, _.read.orc(_)) {
+      graft.engine.Layouts.committed(s, d, "formats/lineitem_orc", _.read.orc(_)) { out =>
         t(s, d, "lineitem")
           .select("l_orderkey", "l_returnflag", "l_quantity", "l_extendedprice")
-          .write.mode("overwrite").orc(path)
+          .write.orc(out)
       }
         .filter(col("l_quantity") < 25)
         .groupBy("l_returnflag")
@@ -785,12 +790,10 @@ object ScaleOps {
     // JSON text round-trip of every value, doubles included (both writers
     // emit shortest round-trippable decimal text).
     "src_json_roundtrip" -> ((s, d) => {
-      val tag = graft.engine.Layouts.tag(d)
-      val path = s"/tmp/graft_formats/customer_json_$tag"
-      graft.engine.Layouts.committed(s, path,
-          _.read.schema("c_custkey LONG, c_mktsegment STRING, c_acctbal DOUBLE").json(_)) {
+      graft.engine.Layouts.committed(s, d, "formats/customer_json",
+          _.read.schema("c_custkey LONG, c_mktsegment STRING, c_acctbal DOUBLE").json(_)) { out =>
         t(s, d, "customer").select("c_custkey", "c_mktsegment", "c_acctbal")
-          .write.mode("overwrite").json(path)
+          .write.json(out)
       }
         .groupBy("c_mktsegment")
         .agg(count(lit(1)).as("n"),
@@ -811,19 +814,14 @@ object ScaleOps {
     // pushes a pathGlobFilter/maxBytes prune to the listing, not the scan.
     "src_binaryfile" -> ((s, d) => {
       import s.implicits._
-      val tag = graft.engine.Layouts.tag(d)
-      val base = s"/tmp/graft_binfiles/img_$tag"
-      graft.engine.Layouts.ensure(s, base)(
-        new java.io.File(s"$base/.written").exists()) {
-        val dir = new java.io.File(base); dir.mkdirs()
+      val base = graft.engine.Layouts.publish(s, d, "binfiles/img") { out =>
+        new java.io.File(out).mkdirs()
         for (id <- 0L until 64L) {
           val w = (id % 13 + 2).toInt; val h = (id % 7 + 2).toInt
           val bytes = graft.engine.ImageHeaders.bmpPixelBytes(w, h,
             (x, y) => ((id * 31 + x * 7 + y * 11) % 256).toInt)
-          val f = new java.io.FileOutputStream(s"$base/img_$id.bmp")
-          try f.write(bytes) finally f.close()
+          java.nio.file.Files.write(new java.io.File(out, s"img_$id.bmp").toPath, bytes)
         }
-        new java.io.FileOutputStream(s"$base/.written").close()
       }
       val files = s.read.format("binaryFile")
         .option("pathGlobFilter", "*.bmp").load(base)
@@ -878,14 +876,12 @@ object ScaleOps {
     // file list is a metadata-sized driver decision, like reading a
     // transaction log; the data path stays distributed.
     "layout_file_skipping" -> ((s, d) => {
-      val tag = graft.engine.Layouts.tag(d)
-      val path = s"/tmp/graft_filestats/lineitem_$tag"
-      graft.engine.Layouts.committed(s, path,
-          graft.engine.FileSkipping.prunedRead(_, _, "l_extendedprice", 2000.0, 15000.0)) {
-        graft.engine.FileSkipping.writeRangedWithStats(
+      graft.engine.Layouts.committed(s, d, "filestats/lineitem",
+          graft.engine.FileSkipping.prunedRead(_, _, "l_extendedprice", 2000.0, 15000.0)) { out =>
+        graft.engine.FileSkipping.writeRanged(
           t(s, d, "lineitem").select("l_orderkey", "l_linenumber", "l_returnflag",
             "l_extendedprice"),
-          "l_extendedprice", 8, path)
+          "l_extendedprice", 8, out)
       }
         .groupBy("l_returnflag")
         .agg(count(lit(1)).as("n"), round(sum("l_extendedprice"), 4).as("rev"))
@@ -922,10 +918,7 @@ object ScaleOps {
       // the min/max stats log) — materialized once per sf alongside the
       // graph/dedup layout artifacts; the oracle keeps recomputing it from
       // SQL so staleness cannot hide
-      val tag = graft.engine.Layouts.tag(d)
-      val base = s"/tmp/graft_filestats/bloom_$tag"
-      // bits is written LAST, so its commit marker certifies all three
-      val bits = graft.engine.Layouts.committed(s, s"$base/bits") {
+      val base = graft.engine.Layouts.publish(s, d, "filestats/bloom") { out =>
         val keys0 = t(s, d, "lineitem")
           .select(((year(col("l_shipdate")) * 12 + month(col("l_shipdate"))) % 8)
             .cast("long").as("fid"), col("l_orderkey"))
@@ -933,15 +926,16 @@ object ScaleOps {
         val perfile0 = keys0.groupBy("fid").agg(count(lit(1)).as("n_keys"),
             min("l_orderkey").as("min_k"), max("l_orderkey").as("max_k"))
           .withColumn("m", col("n_keys") * 4)
-        keys0.coalesce(2).write.mode("overwrite").parquet(s"$base/keys")
-        perfile0.coalesce(1).write.mode("overwrite").parquet(s"$base/perfile")
+        keys0.coalesce(2).write.parquet(s"$out/keys")
+        perfile0.coalesce(1).write.parquet(s"$out/perfile")
         keys0.join(broadcast(perfile0.select("fid", "m")), "fid")
           .select(col("fid"), hashBits(col("l_orderkey")).as("hb"))
           .select(col("fid"), col("hb.j").as("j"), col("hb.bit").as("bit"))
           .distinct()
-          .coalesce(2).write.mode("overwrite").parquet(s"$base/bits")
+          .coalesce(2).write.parquet(s"$out/bits")
         keys0.unpersist()
       }
+      val bits = Tables.parquet(s, s"$base/bits")
       val keys = Tables.parquet(s, s"$base/keys")
       val perfile = Tables.parquet(s, s"$base/perfile")
       val present = keys.select("l_orderkey").distinct()
@@ -1150,8 +1144,7 @@ object ScaleOps {
     // Layouts.publish like commitScenario; at 100 TB a clone is the same
     // one metadata write regardless of table size — that is the point.
     "etl_clone_shallow" -> ((s, d) => {
-      val root = graft.engine.Layouts.publish(s,
-          s"/tmp/graft_clone/${graft.engine.Layouts.tag(d)}") { work =>
+      val root = graft.engine.Layouts.publish(s, d, "clone") { work =>
         val (wsrc, wdst) = (s"$work/src", s"$work/clone")
         val cust = t(s, d, "customer")
         C.init(wsrc, C.stage(cust.filter(col("c_nationkey") < 15), wsrc, "base"))
@@ -1333,18 +1326,16 @@ object ScaleOps {
     // recomputes the census from the raw table with the same gen rule, so
     // a row lost (or doubled) at the layout seam cannot hide.
     "etl_partition_evolution" -> ((s, d) => {
-      val tag = graft.engine.Layouts.tag(d)
-      val base = s"/tmp/graft_evolvepart/orders_$tag"
-      // gen2 is written last, so its commit marker certifies both
-      val g2 = graft.engine.Layouts.committed(s, s"$base/gen2") {
+      val base = graft.engine.Layouts.publish(s, d, "evolvepart/orders") { out =>
         val o = t(s, d, "orders")
           .withColumn("o_year", year(col("o_orderdate")))
           .withColumn("o_month", month(col("o_orderdate")))
         o.filter(col("o_year") < 1996).drop("o_month")
-          .write.mode("overwrite").partitionBy("o_year").parquet(s"$base/gen1")
+          .write.partitionBy("o_year").parquet(s"$out/gen1")
         o.filter(col("o_year") >= 1996)
-          .write.mode("overwrite").partitionBy("o_year", "o_month").parquet(s"$base/gen2")
-      }.withColumn("gen", lit("gen2"))
+          .write.partitionBy("o_year", "o_month").parquet(s"$out/gen2")
+      }
+      val g2 = Tables.parquet(s, s"$base/gen2").withColumn("gen", lit("gen2"))
       val g1 = Tables.parquet(s, s"$base/gen1")
         .withColumn("o_month", month(col("o_orderdate")))
         .withColumn("gen", lit("gen1"))
@@ -1487,25 +1478,22 @@ object ScaleOps {
     // counted THROUGH the bitmap path against the oracle's literal 0 — a
     // single mis-packed or mis-probed bit breaks the row.
     "etl_deletion_vectors" -> ((s, d) => {
-      val tag = graft.engine.Layouts.tag(d)
-      val base = s"/tmp/graft_dv/base_$tag"
-      val dv = s"/tmp/graft_dv/dv_$tag"
       val deletePred =
         col("o_orderstatus") === "F" && col("o_orderkey") % 7 === 0
-      val baseDf = graft.engine.Layouts.committed(s, base) {
+      val base = graft.engine.Layouts.publish(s, d, "dv/base") { out =>
         t(s, d, "orders")
           .withColumn("file_id", (col("o_orderkey") % 4).cast("int"))
           .withColumn("pos",
             row_number().over(Window.partitionBy("file_id")
               .orderBy("o_orderkey")).cast("long") - 1)
-          .write.mode("overwrite").partitionBy("file_id").parquet(base)
+          .write.partitionBy("file_id").parquet(out)
       }
-      val dvDf = graft.engine.Layouts.committed(s, dv) {
-        baseDf.filter(deletePred)
+      val dvDf = graft.engine.Layouts.committed(s, d, "dv/dv") { out =>
+        Tables.parquet(s, base).filter(deletePred)
           .groupBy(col("file_id"), expr("pos div 32").as("word_idx"))
           .agg(expr("bit_or(shiftleft(CAST(1 AS BIGINT), CAST(pos % 32 AS INT)))")
             .as("word"))
-          .coalesce(1).write.mode("overwrite").parquet(dv)
+          .coalesce(1).write.parquet(out)
       }
       val live = Tables.parquet(s, base)
         .withColumn("word_idx", expr("pos div 32"))
@@ -1799,20 +1787,14 @@ object ScaleOps {
     // operation (one scan over file metadata at planning), not a data
     // rewrite.
     "etl_schema_merge" -> ((s, d) => {
-      val tag = graft.engine.Layouts.tag(d)
-      val base = s"/tmp/graft_evolve/orders_$tag"
-      // gate on BOTH generations' commit markers: a crash between the two
-      // writes must not leave a half-built layout that later runs accept
-      graft.engine.Layouts.ensure(s, base)(
-        new java.io.File(s"$base/gen=1/_SUCCESS").exists() &&
-          new java.io.File(s"$base/gen=2/_SUCCESS").exists()) {
+      val base = graft.engine.Layouts.publish(s, d, "evolve/orders") { out =>
         val o = t(s, d, "orders")
         o.filter(year(col("o_orderdate")) < 1995)
           .select("o_orderkey", "o_orderstatus", "o_totalprice")
-          .write.mode("overwrite").parquet(s"$base/gen=1")
+          .write.parquet(s"$out/gen=1")
         o.filter(year(col("o_orderdate")) >= 1995)
           .select("o_orderkey", "o_orderstatus", "o_totalprice", "o_orderpriority")
-          .write.mode("overwrite").parquet(s"$base/gen=2")
+          .write.parquet(s"$out/gen=2")
       }
       s.read.option("mergeSchema", "true").parquet(base)
         .groupBy(col("gen").cast("bigint").as("gen"))
@@ -1871,26 +1853,20 @@ object ScaleOps {
     // cost is one scan per table per corpus version — the write-time stats
     // pass every warehouse already runs.
     "opt_cbo_reorder" -> ((s, d) => {
-      val tag = graft.engine.Layouts.tag(d)
-      def ensure(base: String, df: => DataFrame): String = {
-        val tbl = s"${base}_$tag"
-        // stats live in the (in-memory) session catalog, so the table must
-        // be registered + ANALYZEd once per JVM even when the parquet
-        // layout already exists on disk
-        graft.engine.Layouts.ensure(s, s"/tmp/graft_cbo/$tbl")(
-          s.catalog.tableExists(tbl)) {
-          df.write.mode("overwrite")
-            .option("path", s"/tmp/graft_cbo/$tbl")
-            .format("parquet").saveAsTable(tbl)
+      // stats live in the (in-memory) session catalog, so the table is
+      // registered + ANALYZEd once per session over the published files
+      def analyzed(stem: String, df: => DataFrame): String = {
+        val path = graft.engine.Layouts.publish(s, d, s"cbo/$stem")(df.write.parquet(_))
+        catalogTable(s, path) { tbl =>
+          s.sql(s"CREATE TABLE $tbl USING parquet LOCATION '$path'")
           s.sql(s"ANALYZE TABLE $tbl COMPUTE STATISTICS FOR ALL COLUMNS")
         }
-        tbl
       }
-      val to = ensure("cbo_orders",
+      val to = analyzed("cbo_orders",
         t(s, d, "orders").select("o_orderkey", "o_custkey", "o_totalprice"))
-      val tc = ensure("cbo_customer",
+      val tc = analyzed("cbo_customer",
         t(s, d, "customer").select("c_custkey", "c_nationkey"))
-      val tn = ensure("cbo_nation",
+      val tn = analyzed("cbo_nation",
         t(s, d, "nation").select("n_nationkey", "n_name"))
       val s2 = s.newSession() // shares context + catalog, isolates the conf
       s2.conf.set("spark.sql.cbo.enabled", "true")

@@ -3,7 +3,7 @@ package graft.queries
 import org.apache.spark.sql.{Column, DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.expressions.Window
-import graft.engine.{FixedPoint => FP, Vectors => V}
+import graft.engine.{FixedPoint => FP, Tables, Vectors => V}
 import graft.engine.Tables.{load => t}
 
 /** Similarity-search catalog over `embeddings` (builder-prompt first-class
@@ -73,19 +73,11 @@ object Similarity {
     * bytes / 64. Measured ≥380 B/row at every test sf, and 64 B/row is an
     * unreachable floor for a 64-double array column even under
     * byte-stream-split + dictionary encodings — so the estimate only ever
-    * OVERcounts, erring toward skipping the hint (the
-    * Graph.nodesCountUpperBound bytes-fallback discipline; no `_rowcount`
-    * sidecar here because the gate must answer BEFORE the first layout is
-    * built — nnDescentGraphs is itself the layout builder). */
-  private[graft] def embRowsUpperBound(d: String): Long = {
-    val f = new java.io.File(d, "embeddings.parquet")
-    val bytes =
-      if (f.isFile) f.length()
-      else Option(f.listFiles())
-        .map(_.filter(_.getName.endsWith(".parquet")).map(_.length()).sum)
-        .getOrElse(0L)
-    bytes / 64
-  }
+    * OVERcounts, erring toward skipping the hint. Bytes, not a footer
+    * count, because the gate must answer BEFORE the first layout is built
+    * (nnDescentGraphs is itself the layout builder). */
+  private[graft] def embRowsUpperBound(d: String): Long =
+    Tables.bytesOnDisk(d, "embeddings") / 64
 
   /** Shared gate for every CORPUS-ROW-sized broadcast hint in the ANN
     * module (VERDICT r13 #1 — the twin of Graph.nodeHintGate, one module
@@ -203,11 +195,9 @@ object Similarity {
     * Built by the IDENTICAL nnDescentGraphs code path the sim_nndescent
     * face measures, so build face and layout cannot drift. */
   private def knnGraphLayout(s: SparkSession, d: String, e: DataFrame): DataFrame = {
-    val tag = graft.engine.Layouts.tag(d)
-    val path = s"/tmp/graft_sim/knn8_$tag"
-    graft.engine.Layouts.committed(s, path) {
+    graft.engine.Layouts.committed(s, d, "sim/knn8") { out =>
       nnDescentGraphs(e, 8, embHintGate(d)).last.select("a", "b")
-        .coalesce(2).write.mode("overwrite").parquet(path)
+        .coalesce(2).write.parquet(out)
     }
   }
 
@@ -462,16 +452,14 @@ object Similarity {
     * beside the base graph. */
   private def coarseKnnLayout(s: SparkSession, d: String, e: DataFrame,
                               stride: Int = 16): DataFrame = {
-    val tag = graft.engine.Layouts.tag(d)
     // stride 16 keeps its r12 path; further layers suffix their stride
     val sfx = if (stride == 16) "" else stride.toString
-    val path = s"/tmp/graft_sim/knn8c${sfx}_$tag"
-    graft.engine.Layouts.committed(s, path) {
+    graft.engine.Layouts.committed(s, d, s"sim/knn8c$sfx") { out =>
       val ec = e.filter(col("vec_id") % stride === 0)
         .select((col("vec_id") / stride).cast("long").as("vec_id"), col("v"))
       nnDescentGraphs(ec, 8, embHintGate(d)).last
         .select((col("a") * stride).as("a"), (col("b") * stride).as("b"))
-        .coalesce(1).write.mode("overwrite").parquet(path)
+        .coalesce(1).write.parquet(out)
     }
   }
 
@@ -670,7 +658,7 @@ object Similarity {
     * CANNOT drift). Committed per sf; the oracle re-derives every edge
     * of every batch from SQL. */
   private[graft] def indexAppendScenario(s: SparkSession, d: String): String =
-    graft.engine.Layouts.publish(s, s"/tmp/graft_sim/append_${graft.engine.Layouts.tag(d)}") { work =>
+    graft.engine.Layouts.publish(s, d, "sim/append") { work =>
       val e = emb(s, d).select(col("vec_id"), col("v")).cache()
       val gbEdges = coarseKnnLayout(s, d, e, 2)
       val hinted = embHintGate(d)

@@ -42,7 +42,7 @@ object Temporal {
     * the put-if-absent claim, proving the sink de-duplicates at-least-once
     * delivery into exactly-once table state. */
   private def eosScenario(s: SparkSession, d: String): String =
-    graft.engine.Layouts.publish(s, s"/tmp/graft_eos/tbl_${graft.engine.Layouts.tag(d)}") { work =>
+    graft.engine.Layouts.publish(s, d, "eos/tbl") { work =>
       val ev = t(s, d, "events")
         .select(col("event_id"), col("ts"), col("user_id"), col("event_type"), col("value"))
       C.init(work, C.stage(ev.limit(0), work, "base"))
@@ -77,7 +77,7 @@ object Temporal {
   private def cdcScenario(s: SparkSession, d: String): String =
     // tbl2: the r12 layout adds stored `_change_data/` per commit — a new
     // path so a pre-CDF materialization is abandoned, never half-upgraded
-    graft.engine.Layouts.publish(s, s"/tmp/graft_cdc/tbl2_${graft.engine.Layouts.tag(d)}") { work =>
+    graft.engine.Layouts.publish(s, d, "cdc/tbl2") { work =>
       val ch = t(s, d, "events")
         .select(col("event_id"), col("ts"), col("user_id"), col("value"),
           when(col("event_id") % 10 === 0, "D").otherwise("U").as("op"))
@@ -168,7 +168,7 @@ object Temporal {
     * committed once per sf like every scenario. */
   private def cdfVacuumScenario(s: SparkSession, d: String): String = {
     val src0 = cdcScenario(s, d) // ensures snapshots + change data exist
-    graft.engine.Layouts.publish(s, s"/tmp/graft_cdc/vac_${graft.engine.Layouts.tag(d)}") { work =>
+    graft.engine.Layouts.publish(s, d, "cdc/vac") { work =>
       def copyTree(from: java.io.File, to: java.io.File): Unit = {
         if (from.isDirectory) {
           to.mkdirs()
@@ -204,7 +204,7 @@ object Temporal {
     * stream). */
   private def cdfStreamScenario(s: SparkSession, d: String): String = {
     val src0 = cdcScenario(s, d) // ensures the change data exists
-    graft.engine.Layouts.publish(s, s"/tmp/graft_cdc/recon_${graft.engine.Layouts.tag(d)}") { work =>
+    graft.engine.Layouts.publish(s, d, "cdc/recon") { work =>
       C.init(work, C.stage(
         C.read(s, src0, 1).limit(0), work, "base"))
       val changes = (2 to 4).map(v => C.ChangeData.read(s, src0, v))

@@ -96,7 +96,7 @@ object StreamHarness {
 
   /** The committed fragment layout of the streamed sessionizer for `sfDir`. */
   def twsFragments(spark: SparkSession, sfDir: String): String =
-    Layouts.publish(spark, s"/tmp/graft_stream/tws_frags_${Layouts.tag(sfDir)}") { work =>
+    Layouts.publish(spark, sfDir, "stream/tws_frags") { work =>
       import spark.implicits._
       val ev = graft.engine.Tables.load(spark, sfDir, "events")
         .select(col("event_id"), col("ts"), col("user_id"), col("event_type"), col("value"))

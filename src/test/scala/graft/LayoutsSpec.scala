@@ -1,16 +1,18 @@
 package graft
 
-import graft.engine.Layouts
+import graft.engine.{Layouts, Tables}
 import org.scalatest.funsuite.AnyFunSuite
 
-/** The one publish path for per-sf scenario tables (no Spark session
-  * needed): [[Layouts.publish]] builds into a private work dir, renames it
-  * into place at most once, and cleans up after a failed or losing build.
-  * A source scan keeps it the ONLY path: a scenario that hand-rolls its
-  * own rename or stream loop silently drifts from the lock, deadline and
+/** The one commit rule for /tmp layouts: [[Layouts.publish]] builds into a
+  * private work dir, renames it into place at most once, and cleans up
+  * after a failed or losing build; [[Layouts.committed]] opens what it
+  * published. The rule tests need no Spark session (the refresh is passed
+  * in); the `committed` tests write real parquet. Source scans keep it the
+  * ONLY path: a query that hand-rolls its own rename, stream loop, layout
+  * path or commit marker silently drifts from the commit, deadline and
   * cleanup rules the helpers enforce.
   */
-class LayoutsSpec extends AnyFunSuite {
+class LayoutsSpec extends AnyFunSuite with SharedSparkSpec {
 
   private def freshRoot(): java.io.File =
     java.nio.file.Files.createTempDirectory("layouts-spec-").toFile
@@ -80,6 +82,83 @@ class LayoutsSpec extends AnyFunSuite {
     } finally Layouts.rmTree(root)
   }
 
+  test("a publisher in another process that wins the rename race counts as published") {
+    val root = freshRoot()
+    val path = new java.io.File(root, "tbl").getPath
+    try {
+      // the build sees `path` absent; the other process publishes it
+      // before this build's rename
+      assert(publish(path) { work =>
+        write(work, "who", "this")
+        write(path, "who", "other")
+      } == path)
+      assert(siblings(root) == Seq("tbl"), s"left behind: ${siblings(root)}")
+      assert(new String(java.nio.file.Files.readAllBytes(
+        new java.io.File(path, "who").toPath), "UTF-8") == "other")
+    } finally Layouts.rmTree(root)
+  }
+
+  /** A layout name unique to this run (its tag folds in a fresh dir's
+    * path), its published path, and a cleanup of both. */
+  private def withLayout(stem: String)(body: (String, String, String) => Unit): Unit = {
+    val d = tempDir("layouts-spec-d").getPath
+    val name = s"layoutsspec/$stem"
+    val path = Layouts.path(d, name)
+    try body(d, name, path)
+    finally {
+      Layouts.rmTree(new java.io.File(path))
+      new java.io.File(path).getParentFile.delete(): Unit // only if empty
+    }
+  }
+
+  private def buildDirs(path: String): Seq[String] = {
+    val f = new java.io.File(path)
+    Option(f.getParentFile.listFiles()).toSeq.flatten.map(_.getName)
+      .filter(_.startsWith(f.getName + ".build-"))
+  }
+
+  test("committed: a writer that throws midway publishes nothing and the next call rebuilds") {
+    import spark.implicits._
+    withLayout("partial") { (d, name, path) =>
+      val e = intercept[IllegalStateException] {
+        Layouts.committed(spark, d, name) { out =>
+          Seq(1L, 2L).toDF("a").write.parquet(s"$out/part")
+          throw new IllegalStateException("writer failed")
+        }
+      }
+      assert(e.getMessage == "writer failed")
+      assert(!new java.io.File(path).exists(), "a failed writer must not publish")
+      assert(buildDirs(path).isEmpty, s"left behind: ${buildDirs(path)}")
+      var writes = 0
+      val df = Layouts.committed(spark, d, name) { out =>
+        writes += 1
+        Seq(1L, 2L, 3L).toDF("a").write.parquet(out)
+      }
+      assert(writes == 1 && df.count() == 3)
+      assert(Layouts.committed(spark, d, name) { _ => writes += 1 }.count() == 3)
+      assert(writes == 1, "a published layout is opened, not rewritten")
+    }
+  }
+
+  test("committed: a three-part layout becomes visible all at once") {
+    import spark.implicits._
+    withLayout("threepart") { (d, name, path) =>
+      val parts = Seq("keys", "perfile", "bits")
+      var seenEarly = Seq.empty[String]
+      val opened = Layouts.committed(spark, d, name, (s, p) => Tables.parquet(s, s"$p/bits")) {
+        out =>
+          parts.zipWithIndex.foreach { case (part, i) =>
+            Seq(i.toLong).toDF("i").write.parquet(s"$out/$part")
+            if (new java.io.File(path).exists()) seenEarly :+= part
+          }
+      }
+      assert(seenEarly.isEmpty, s"path visible after writing only ${seenEarly.headOption}")
+      assert(parts.forall(p => new java.io.File(s"$path/$p/_SUCCESS").isFile))
+      assert(opened.as[Long].collect().toSeq == Seq(2L))
+      assert(buildDirs(path).isEmpty, s"left behind: ${buildDirs(path)}")
+    }
+  }
+
   private def scalaFiles(dir: java.io.File): Seq[java.io.File] =
     Option(dir.listFiles()).toSeq.flatten.sortBy(_.getName).flatMap { f =>
       if (f.isDirectory) scalaFiles(f)
@@ -111,6 +190,19 @@ class LayoutsSpec extends AnyFunSuite {
       val found = sites("streaming", token) ++ sites("engine", token)
       assert(found.map(_._1) == Seq("StreamHarness.scala"),
         s"expected one `$token`, in StreamHarness: ${found.mkString("; ")}")
+    }
+  }
+
+  test("layout paths and commit markers live only in Layouts") {
+    for {
+      token <- Seq("Layouts.tag(", "\"/tmp/graft_", "_SUCCESS", ".written", "_rowcount",
+        "Layouts.ensure")
+      pkg <- Seq("queries", "streaming")
+    } {
+      val found = sites(pkg, token)
+      assert(found.isEmpty,
+        s"graft/$pkg must not contain `$token` (name the layout and let " +
+          s"Layouts.publish / Layouts.committed compose and commit it): ${found.mkString("; ")}")
     }
   }
 }

@@ -105,6 +105,17 @@ class TablesSpec extends AnyFunSuite with SharedSparkSpec {
     assert(Tables.parquet(spark, p).schema == inferred)
   }
 
+  test("(f) the node gate's count is the exact row count, read from footers without a job") {
+    for (d <- sfs) {
+      val path = Layouts.path(d, "graph/symnodes")
+      graft.queries.Graph.nodeCount(spark, d) // publishes the layout on first use
+      var n = -1L
+      assert(jobsDuring { n = graft.queries.Graph.nodeCount(spark, d) } == 0, d)
+      assert(n == spark.read.parquet(path).count(), d)
+      assert(n > 0, d)
+    }
+  }
+
   private def scalaFiles(dir: File): Seq[File] =
     Option(dir.listFiles()).toSeq.flatten.sortBy(_.getName).flatMap { f =>
       if (f.isDirectory) scalaFiles(f)
@@ -127,9 +138,9 @@ class TablesSpec extends AnyFunSuite with SharedSparkSpec {
     val loaders = sites("def t(").filter(_._1.startsWith("queries/"))
     assert(loaders.isEmpty,
       s"graft/queries defines its own table loader (use Tables.load): ${loaders.mkString("; ")}")
-    val ensures = sites("ensureCommitted(").map(_._1).distinct
-    assert(ensures == Seq("engine/Layouts.scala"),
-      s"ensureCommitted( outside Layouts (use Layouts.committed): ${ensures.mkString(", ")}")
+    val ensures = (sites("ensureCommitted(") ++ sites("Layouts.ensure")).map(_._1).distinct
+    assert(ensures.isEmpty,
+      s"a second layout commit path (use Layouts.committed): ${ensures.mkString(", ")}")
     val raw = (sites(""".read.parquet(s"$d/""") ++ sites(""".read.parquet(s"$sfDir/"""))
       .filterNot(_._1 == "engine/Tables.scala")
     assert(raw.isEmpty, s"base table read outside Tables: ${raw.mkString("; ")}")
