@@ -1,5 +1,7 @@
 package graft
 
+import graft.engine.Materialize
+
 /** Benchmark main: runs every catalog query on SPARK_GRAFT_SF_DIR and prints
   * per-query JSON plus a FINAL short self-contained totals line.
   *
@@ -34,25 +36,13 @@ object Bench {
       SparkEntry.queries(name)(spark, sfDir)
         .write.format("noop").mode("overwrite").save()
 
-    // Free every persistent RDD still registered after a run. This is where
-    // localCheckpoint() blocks live (local checkpointing IS persistence), and
-    // nothing else frees them: ContextCleaner only acts when a full GC
-    // collects the RDD reference, which a 128 GiB heap may not do across the
-    // whole bench. The iterative queries (dd_clusters, graph_rank_converged,
-    // graph_triangles, BFS) checkpoint 3-25 frames per run; across 216
-    // queries × 2-3 runs the dead blocks accumulate into storage-memory
-    // pressure whose eviction churn reads as inflated cold AND warm times on
-    // exactly those queries (r6: dd_clusters 7.7 s in-bench vs 3.2 s median
-    // isolated, graph_triangles 7.7 vs 3.8 — QProbe, 5 runs). Between
-    // queries nothing references the old blocks, so the drop is safe.
-    // blocking=true: the r7 driver run showed 2-5× spikes on exactly the
-    // cache-heavy queries (st_*, emb_*) that the builder's runs don't have —
-    // with non-blocking unpersist the block removal is async, so under a
-    // loaded machine the NEXT query's timed run races the previous query's
-    // block eviction (memory pressure + eviction churn read as query time).
-    // Blocking the free moves that cost into the untimed gap between runs.
-    def freePersistentRdds(): Unit =
-      spark.sparkContext.getPersistentRDDs.values.foreach(_.unpersist(true))
+    // Materialize.release after every run (the warm run must not reuse the
+    // query's own caches either). Without it the dead checkpoint blocks of
+    // the iterative queries accumulate into eviction churn that read as
+    // inflated cold AND warm times (r6: dd_clusters 7.7 s in-bench vs 3.2 s
+    // isolated, graph_triangles 7.7 vs 3.8 — QProbe, 5 runs), and a
+    // non-blocking unpersist let the next timed run race the removal (r7:
+    // 2-5× spikes on the cache-heavy st_*, emb_* queries).
 
     // untimed warmup: JVM + parquet footer reads + codegen paths
     try run("q1_agg") catch { case _: Throwable => () }
@@ -100,12 +90,10 @@ object Bench {
       }
       val gc0 = gcMillis()
       val cold = timed()
-      spark.sharedState.cacheManager.clearCache() // warm run must not reuse the query's own caches
-      freePersistentRdds()
+      Materialize.release(spark)
       val gc1 = gcMillis(); val cg1 = codegenCompiles()
       var warm = timed()
-      spark.sharedState.cacheManager.clearCache()
-      freePersistentRdds()
+      Materialize.release(spark)
       val gc2 = gcMillis(); val cg2 = codegenCompiles()
       // Inflation guard: a warm run reading far above the catalog median AND
       // above its OWN cold run is a JVM-state artifact (GC storm, codegen
@@ -125,8 +113,7 @@ object Bench {
       if (retried) {
         System.gc()
         val again = timed()
-        spark.sharedState.cacheManager.clearCache()
-        freePersistentRdds()
+        Materialize.release(spark)
         System.err.println(f"[bench] RETRY $name%-24s first=$warm%8.3fs retry=$again%8.3fs")
         warm = math.min(warm, again)
       }

@@ -308,7 +308,7 @@ object MarginAudit {
           flagged += 1
           println(s"FAIL $name: audit error: ${e.getMessage}")
       }
-      spark.sharedState.cacheManager.clearCache()
+      graft.engine.Materialize.release(spark)
     }
     val gw = globalWorst.map { case (q, c, r) => f"$q/$c ratio=$r%.2f" }.getOrElse("n/a")
     println(s"[margin-audit] audited=$audited flagged=$flagged tightest(dist/bar)=$gw")

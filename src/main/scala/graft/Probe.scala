@@ -1,7 +1,7 @@
 package graft
 
 import org.apache.spark.sql.functions._
-import graft.engine.Tables
+import graft.engine.{Materialize, Tables}
 
 /** Scratch probe main for ad-hoc plan/perf checks (not part of the API).
   * Usage: sbt "runMain graft.Probe <sfDir> [MODE|query ...]" where MODE is
@@ -19,7 +19,7 @@ object Probe {
     spark.sparkContext.setLogLevel("ERROR")
     val d = if (args.nonEmpty) args(0) else "/root/testdata/sf0.01"
     for (name <- args.drop(1)) {
-      if (name == "CLEAR") spark.sharedState.cacheManager.clearCache()
+      if (name == "CLEAR") Materialize.release(spark)
       else if (name == "HASHBENCH") {
         // microbench: native vs composed token hashing over an inflated
         // corpus (documents × 40 replicas), isolating the expression cost

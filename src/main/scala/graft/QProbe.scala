@@ -24,13 +24,8 @@ object QProbe {
       SparkEntry.queries(name)(spark, sfDir)
         .write.format("noop").mode("overwrite").save()
       val dt = (System.nanoTime() - t0) / 1e9
-      spark.sharedState.cacheManager.clearCache()
-      // free every persistent RDD still registered with the context, as
-      // Bench does: localCheckpoint() blocks live there, and nothing frees
-      // them until a full GC lets ContextCleaner run, so checkpoint-heavy
-      // queries would otherwise inflate over runs. Blocking, so the next
-      // run does not race the removal.
-      spark.sparkContext.getPersistentRDDs.values.foreach(_.unpersist(true))
+      // free what the run persisted, as Bench does, or runs inflate
+      graft.engine.Materialize.release(spark)
       dt
     }
 

@@ -106,7 +106,7 @@ object ShuffleAudit {
       } catch {
         case e: Throwable => println(s"[shuffle-audit] FAIL $name: ${e.getMessage}")
       }
-      spark.sharedState.cacheManager.clearCache()
+      graft.engine.Materialize.release(spark)
     }
     val all = rows.result()
     // ratio is only meaningful against a non-trivial scan: column-pruned

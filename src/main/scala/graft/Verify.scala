@@ -24,12 +24,9 @@ object Verify {
         // a previous run's output must not stand in for this failure
         org.apache.commons.io.FileUtils.deleteQuietly(new java.io.File(s"$outDir/$name"))
       }
-      // queries cache staging frames for their own lifetime; drop them so a
-      // 186-query run's storage footprint stays one query deep (Bench does
-      // the same between timings). The blocking persistent-RDD sweep also
-      // frees localCheckpoint blocks, which clearCache never touches.
-      spark.sharedState.cacheManager.clearCache()
-      spark.sparkContext.getPersistentRDDs.values.foreach(_.unpersist(true))
+      // drop what the query persisted, so a 186-query run's storage
+      // footprint stays one query deep (Bench does the same between timings)
+      graft.engine.Materialize.release(spark)
     }
     // JSON string escape: backslash, quote, and ALL control chars (<0x20)
     // — a tab or CR in builder-authored SQL would otherwise make the

@@ -8,7 +8,7 @@ import org.apache.spark.sql.functions._
   * (Dedup.dd_clusters) and PageRank, and the integer twin of both: per
   * round one frontier⋈edge join keyed on `src` (the key the edge frame is
   * already partitioned on), one min-aggregation, and one anti-join against
-  * the settled set. `localCheckpoint()` truncates lineage every round so
+  * the settled set. `Materialize.cut` cuts lineage every round so
   * plan depth stays constant for any round count.
   *
   * Scale shape per round: the frontier starts at the seed set and can only
@@ -47,14 +47,14 @@ object Bfs {
     // materialize the edge frame once: it joins into every round and a lazy
     // plan (fact⋈fact distinct) would re-execute per round — the
     // PageRank.run lesson
-    val e = edges.select(col("src"), col("dst")).localCheckpoint()
-    var settled = seeds.select(col("node")).distinct()
-      .withColumn("dist", lit(0L)).localCheckpoint(earlyExit)
+    val e = Materialize.cut(edges.select(col("src"), col("dst")), eager = true)
+    var settled = Materialize.cut(seeds.select(col("node")).distinct()
+      .withColumn("dist", lit(0L)), eager = earlyExit)
     var frontier = settled
     var round = 0
     while (round < maxRounds && (!earlyExit || frontier.limit(1).count() == 1)) {
       round += 1
-      val next = frontier
+      val next = Materialize.cut(frontier
         .join(e, frontier("node") === e("src"))
         .select(col("dst").as("node"))
         // min-agg before the anti-join: a node reached by many frontier
@@ -62,9 +62,8 @@ object Bfs {
         // so the anti-join sees |new nodes| rows, not |frontier edges|
         .distinct()
         .join(settled, Seq("node"), "left_anti")
-        .withColumn("dist", lit(round.toLong))
-        .localCheckpoint(earlyExit)
-      settled = settled.union(next).localCheckpoint(earlyExit)
+        .withColumn("dist", lit(round.toLong)), eager = earlyExit)
+      settled = Materialize.cut(settled.union(next), eager = earlyExit)
       frontier = next
     }
     settled

@@ -14,7 +14,7 @@ import org.apache.spark.sql.functions._
   * aggregation absorbs the fan-out map-side), a 1-row TakeOrdered for the
   * winner — the only driver-visible data, one (pair, count) row per round —
   * and a distributed leftmost-greedy rewrite of each word's symbol
-  * sequence. `localCheckpoint()` truncates lineage per round
+  * sequence. `Materialize.cut` cuts lineage per round
   * (KMeans.lloyd / dd_clusters pattern): plan depth stays constant for any
   * vocabulary size.
   *
@@ -157,9 +157,9 @@ object Bpe {
   def train(spark: SparkSession, words: DataFrame, k: Int): (Seq[(String, String, Long)], DataFrame) = {
     require(k >= 1, s"need k >= 1, got $k")
     import spark.implicits._
-    var tbl: Dataset[(Seq[String], Long)] =
+    var tbl: Dataset[(Seq[String], Long)] = Materialize.cut(
       words.select(col("syms").cast("array<string>"), col("freq").cast("bigint"))
-        .as[(Seq[String], Long)].localCheckpoint()
+        .as[(Seq[String], Long)], eager = true)
     val merges = Seq.newBuilder[(String, String, Long)]
     var done = false
     for (_ <- 1 to k if !done) {
@@ -173,8 +173,8 @@ object Bpe {
       else {
         val Array(a, b) = top(0).getString(0).split(" ", 2)
         merges += ((a, b, top(0).getLong(1)))
-        tbl = tbl.map { case (syms, freq) => (applyMerge(syms, a, b), freq) }
-          .localCheckpoint()
+        tbl = Materialize.cut(
+          tbl.map { case (syms, freq) => (applyMerge(syms, a, b), freq) }, eager = true)
       }
     }
     (merges.result(), tbl.toDF("syms", "freq"))

@@ -154,11 +154,8 @@ object Commits {
     (fold(table, base, cv, v).toSeq.sorted, cv, v - cv)
   }
 
+  /** The table-relative file set visible at version `v` (sorted). */
   def resolve(table: String, v: Int): Seq[String] = resolveStats(table, v)._1
-
-  /** The table-relative file set visible at version `v` (the resolved
-    * snapshot, sorted). */
-  def manifestEntries(table: String, v: Int): Seq[String] = resolve(table, v)
 
   /** The absolute data paths visible at version `v`. Canonicalized so
     * cross-table `../` entries (shallow clones) resolve to plain paths

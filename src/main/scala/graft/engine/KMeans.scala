@@ -6,7 +6,7 @@ import org.apache.spark.sql.functions._
 /** Multi-round distributed Lloyd (k-means) iteration — the numeric twin of
   * the connected-components loop in the dedup pipeline: per round, one
   * broadcast-join assignment pass and one bounded re-aggregation, with
-  * lineage truncated by `localCheckpoint()` so plan depth stays constant no
+  * lineage cut by `Materialize.cut` so plan depth stays constant no
   * matter how many rounds run (the catalog query `emb_kmeans_step` is
   * exactly one round of this, oracle-checked).
   *
@@ -46,9 +46,8 @@ object KMeans {
   def lloyd(e: DataFrame, k: Int, rounds: Int,
             trackInertia: Boolean = true): (DataFrame, Seq[Double]) = {
     require(k >= 1 && rounds >= 1, s"need k >= 1 and rounds >= 1, got k=$k rounds=$rounds")
-    var cents = e.filter(col("vec_id") < k)
-      .select(col("vec_id").as("seed_id"), col("v").as("c"))
-      .localCheckpoint()
+    var cents = Materialize.cut(e.filter(col("vec_id") < k)
+      .select(col("vec_id").as("seed_id"), col("v").as("c")), eager = true)
     // fail the seed contract loudly: an id space not starting at 0 would
     // otherwise surface as a bare NPE from the first inertia read
     require(cents.limit(1).count() == 1,
@@ -61,9 +60,9 @@ object KMeans {
       // inertia-tracking path keeps eager ones, its per-round read
       // materializes anyway. assign() already broadcasts the k-row
       // centroid side explicitly, so no stats are needed mid-cascade.
-      val a = assign(e, cents).localCheckpoint(trackInertia) // reused twice below
+      val a = Materialize.cut(assign(e, cents), eager = trackInertia) // reused twice below
       if (trackInertia) inertia += a.agg(sum("dist2")).head.getDouble(0)
-      cents = a
+      cents = Materialize.cut(a
         .select(col("cluster"), posexplode(col("v")))
         // fixed-point mean: order-independent BIGINT partials make every
         // round's centroids bit-identical run to run (and to the catalog
@@ -73,8 +72,8 @@ object KMeans {
         .groupBy("cluster")
         .agg(transform(array_sort(collect_list(struct(col("pos"), col("cv")))),
           s => s.getField("cv")).as("c"))
-        .select(col("cluster").as("seed_id"), col("c"))
-        .localCheckpoint(trackInertia) // k rows; truncates the round's lineage
+        .select(col("cluster").as("seed_id"), col("c")),
+        eager = trackInertia) // k rows; cuts the round's lineage
     }
     (cents, inertia.result())
   }

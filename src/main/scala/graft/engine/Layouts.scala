@@ -77,7 +77,9 @@ object Layouts {
     * a rename that fails because another thread or process published
     * `path` first counts as published. The work dir is deleted in a
     * `finally`, so a `build` that throws leaves nothing behind and its
-    * exception reaches the caller. */
+    * exception reaches the caller. `build` runs with lineage cuts on
+    * ([[Materialize.cutting]]), also inside a plan audit's
+    * [[Materialize.unrolled]]. */
   private[graft] def publishWith(path: String, refresh: String => Unit)(
       build: String => Unit): String = {
     val dst = new java.io.File(path)
@@ -85,7 +87,7 @@ object Layouts {
       val work = new java.io.File(
         path + ".build-" + java.util.UUID.randomUUID().toString.take(8))
       try {
-        build(work.getPath)
+        Materialize.cutting(build(work.getPath))
         if (work.renameTo(dst)) refresh(path)
         else require(dst.exists(), s"atomic publish of $work failed")
       } finally if (work.exists()) rmTree(work)

@@ -11,7 +11,7 @@ import org.apache.spark.sql.functions._
   * the key the edge list is already partitioned on after its first shuffle,
   * so AQE reuses the layout — then a per-node aggregation of contributions
   * and a node-frame left join to re-seed nodes that received nothing.
-  * `localCheckpoint()` truncates lineage every round (the dd_clusters /
+  * `Materialize.cut` cuts lineage every round (the dd_clusters /
   * KMeans.lloyd pattern), keeping plan depth constant for any round count;
   * the driver holds only round deltas, never rank rows.
   *
@@ -42,18 +42,18 @@ object PageRank {
     // materialize the edge frame ONCE: it joins into every round, and a
     // lazy edge plan (e.g. a fact⋈fact distinct) would re-execute per
     // round — at 5 rounds that was most of graph_rank_converged's time
-    val e = edges.localCheckpoint()
-    val nodes = e.select(col("src").as("node"))
+    val e = Materialize.cut(edges, eager = true)
+    val nodes = Materialize.cut(e.select(col("src").as("node"))
       .union(e.select(col("dst").as("node")))
-      .distinct().localCheckpoint()
+      .distinct(), eager = true)
     val out = e.groupBy(col("src")).agg(count(lit(1)).as("outdeg"))
     // hoist the round-invariant edge⋈outdeg join OUT of the loop: it is
     // identical every round, and materializing (src, dst, outdeg) once
     // drops one join per iteration. Carrying outdeg (not a precomputed
     // 1/outdeg) keeps the per-round `rank / outdeg` a single IEEE divide —
     // bit-identical to the unhoisted plan and to the oracle's replay.
-    val weighted = e.join(out, "src")
-      .select(col("src"), col("dst"), col("outdeg")).localCheckpoint()
+    val weighted = Materialize.cut(e.join(out, "src")
+      .select(col("src"), col("dst"), col("outdeg")), eager = true)
     runPrepared(weighted, nodes, rounds, damping, trackDeltas)
   }
 
@@ -68,15 +68,14 @@ object PageRank {
   def runPrepared(weighted: DataFrame, nodes: DataFrame, rounds: Int,
                   damping: Double = 0.85,
                   trackDeltas: Boolean = true,
-                  broadcastState: Boolean = true,
-                  truncate: Boolean = true): (DataFrame, Seq[Double]) = {
+                  broadcastState: Boolean = true): (DataFrame, Seq[Double]) = {
     require(rounds >= 1, s"need rounds >= 1, got $rounds")
     require(damping > 0 && damping < 1, s"need 0 < damping < 1, got $damping")
     // empty graph would otherwise surface as an NPE reading the delta agg
     require(weighted.limit(1).count() == 1, "page-rank needs a non-empty edge frame")
     // Fixed-round callers (trackDeltas = false) run the whole loop as ONE
-    // action cascade: LAZY localCheckpoints still truncate lineage when
-    // they materialize, but the per-round driver sync disappears — the
+    // action cascade: LAZY cuts still cut lineage when they materialize,
+    // but the per-round driver sync disappears — the
     // graph_betweenness fusion lesson. Lazy checkpoints carry no size
     // stats for AQE, so on THAT path only the two node-frame-bounded join
     // sides get explicit broadcast hints. Delta-tracking callers keep
@@ -89,14 +88,11 @@ object PageRank {
     // GATED (VERDICT r12 #1): callers pass `broadcastState = false` when
     // the node frame exceeds the broadcast budget (the catalog faces
     // route Graph.nodeHintGate's footer-exact node count here) and the
-    // loop runs co-partitioned on the node key instead. `truncate=false`
-    // skips the checkpoints so PlanQualitySpec can read the loop's joins
-    // in one visible plan — execution always truncates.
+    // loop runs co-partitioned on the node key instead. PlanQualitySpec
+    // reads the loop's joins in one visible plan under Materialize.unrolled.
     def hinted(df: DataFrame): DataFrame =
       if (trackDeltas || !broadcastState) df else broadcast(df)
-    def ckpt(df: DataFrame): DataFrame =
-      if (truncate) df.localCheckpoint(trackDeltas) else df
-    var ranks = ckpt(nodes.withColumn("rank", lit(1.0)))
+    var ranks = Materialize.cut(nodes.withColumn("rank", lit(1.0)), eager = trackDeltas)
     val deltas = Seq.newBuilder[Double]
     for (_ <- 1 to rounds) {
       val contribs = weighted
@@ -107,9 +103,10 @@ object PageRank {
         // face's DuckDB twin), where sum(double) would drift an ulp with
         // shuffle-merge order and compound across rounds
         .agg(FixedPoint.qsum(col("rank") / col("outdeg")).as("mass"))
-      val next = ckpt(nodes.join(hinted(contribs), Seq("node"), "left")
+      val next = Materialize.cut(nodes.join(hinted(contribs), Seq("node"), "left")
         .select(col("node"),
-          (lit(1 - damping) + lit(damping) * coalesce(col("mass"), lit(0.0))).as("rank")))
+          (lit(1 - damping) + lit(damping) * coalesce(col("mass"), lit(0.0))).as("rank")),
+        eager = trackDeltas)
       if (trackDeltas)
         deltas += next.join(ranks.select(col("node"), col("rank").as("prev")), "node")
           .agg(max(abs(col("rank") - col("prev")))).head.getDouble(0)

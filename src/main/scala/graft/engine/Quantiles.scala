@@ -85,8 +85,8 @@ object Quantiles {
     // the printed plan BE the executed shape; both frames are bucket-/
     // group-bounded (never row-count-sized), so the materialization is
     // metadata-weight.
-    val cnts = base.groupBy(col(g), bkt.as("__b")).agg(count(lit(1)).as("__c"))
-      .localCheckpoint(false)
+    val cnts = Materialize.cut(
+      base.groupBy(col(g), bkt.as("__b")).agg(count(lit(1)).as("__c")), eager = false)
     val win = Window.partitionBy(g).orderBy("__b")
       .rowsBetween(Window.unboundedPreceding, -1)
     val cum = cnts.withColumn("__before", coalesce(sum("__c").over(win), lit(0L)))
@@ -109,12 +109,12 @@ object Quantiles {
         col("__e.__side").as("__side"), col("__e.__r").as("__r"))
     // locate each rank's bucket + in-bucket offset (ranks is group-count
     // sized — it broadcasts; the histogram streams)
-    val located = cum.join(broadcast(ranks),
+    val located = Materialize.cut(cum.join(broadcast(ranks),
         col(g) === col("__g") && col("__r") > col("__before") &&
           col("__r") <= col("__before") + col("__c"))
       .select(col(g), col("__p"), col("__h"), col("__side"),
-        col("__b"), (col("__r") - col("__before")).cast("int").as("__off"))
-      .localCheckpoint(false)
+        col("__b"), (col("__r") - col("__before")).cast("int").as("__off")),
+      eager = false)
     // 3. gather ONLY the target buckets, sort each, index the exact rank.
     // RUNTIME skew guard (ADVICE r12 — the scaladoc note alone detected
     // nothing): the histogram already carries every bucket's count, so a

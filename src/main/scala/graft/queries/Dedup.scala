@@ -3,7 +3,7 @@ package graft.queries
 import org.apache.spark.sql.{Column, DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.expressions.Window
-import graft.engine.{FixedPoint => FP, Tables, TextFunctions => T}
+import graft.engine.{FixedPoint => FP, Materialize, Tables, TextFunctions => T}
 import graft.engine.Tables.{load => t}
 
 /** Deduplication catalog over `documents` (builder-prompt first-class
@@ -51,8 +51,8 @@ object Dedup {
       val c = corpus(s, d).select("doc_id", "text")
       // benchmark gram set: tiny at any corpus scale, materialized once,
       // derived by the SAME fold the per-batch flagging applies
-      val evalGrams = graft.streaming.Streams
-        .benchmarkGrams(c.filter(isEval)).localCheckpoint()
+      val evalGrams = Materialize.cut(
+        graft.streaming.Streams.benchmarkGrams(c.filter(isEval)), eager = true)
       val train = c.filter(!isEval)
       graft.streaming.StreamHarness.replayForeach(s,
           (0 to 2).map(b => train.filter(pmod(col("doc_id"), lit(3)) === b))) { (df, batchId) =>
@@ -71,7 +71,7 @@ object Dedup {
     * Catalyst from inlining the (large) hash expression tree into every
     * consumer. At scale this is the "materialize the signature table" step
     * every LSH pipeline has (persist or write intermediate). Measured r6:
-    * an eager `localCheckpoint()` here is NET SLOWER (+0.5-1 s warm on the
+    * an eager lineage cut here is NET SLOWER (+0.5-1 s warm on the
     * CC consumers) — the extra materialization job costs more than the
     * partial cold-cache races it avoids at this size; cache population is
     * per-partition, so most racing scans still hit warm blocks. */
@@ -184,7 +184,7 @@ object Dedup {
         struct(col("b").as("a"), col("a").as("b")))).as("e"))
       .select(col("e.a").as("a"), col("e.b").as("b"))
       .cache()
-    // Iteration state is localCheckpoint()ed each round, not cache()d: an
+    // Iteration state is cut (Materialize.cut) each round, not cache()d: an
     // eager checkpoint physically truncates the plan to the materialized
     // blocks, so round r's plan is always two joins deep. Chained cache()
     // keeps the full nested lineage in the plan — one cache-lookup miss
@@ -197,8 +197,8 @@ object Dedup {
     // carrying it through every round just inflates the join/checkpoint
     // working set (at 100 TB the active subgraph is orders of magnitude
     // smaller than the corpus). Singletons rejoin in ONE pass at the end.
-    var labels = sym.select(col("a").as("doc_id")).distinct()
-      .select(col("doc_id"), col("doc_id").as("cid")).localCheckpoint()
+    var labels = Materialize.cut(sym.select(col("a").as("doc_id")).distinct()
+      .select(col("doc_id"), col("doc_id").as("cid")), eager = true)
     var changed = 1L
     var rounds = 0
     while (changed > 0 && rounds < 25) {
@@ -210,16 +210,14 @@ object Dedup {
       // Checkpointed BEFORE the halving self-join: `propagated` appears on
       // both sides of that join, and an unmaterialized frame in a plan twice
       // runs its edge⋈label join twice per round.
-      val propagated = labels.join(nbrMin, Seq("doc_id"), "left")
+      val propagated = Materialize.cut(labels.join(nbrMin, Seq("doc_id"), "left")
         .select(col("doc_id"), col("cid").as("old"),
-          least(col("cid"), coalesce(col("nmin"), col("cid"))).as("cid"))
-        .localCheckpoint()
+          least(col("cid"), coalesce(col("nmin"), col("cid"))).as("cid")), eager = true)
       // path halving: cid := cid's cid (labels form a total map, so inner);
       // collapses label chains geometrically → O(log diameter) rounds
-      val next = propagated
+      val next = Materialize.cut(propagated
         .join(propagated.select(col("doc_id").as("cid"), col("cid").as("pcid")), "cid")
-        .select(col("doc_id"), col("old"), col("pcid").as("cid"))
-        .localCheckpoint()
+        .select(col("doc_id"), col("old"), col("pcid").as("cid")), eager = true)
       changed = next.filter(col("cid") =!= col("old")).count()
       labels = next.select("doc_id", "cid")
       rounds += 1

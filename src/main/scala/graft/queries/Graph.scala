@@ -3,7 +3,7 @@ package graft.queries
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.expressions.Window
-import graft.engine.{FixedPoint => FP, Tables}
+import graft.engine.{FixedPoint => FP, Materialize, Tables}
 import graft.engine.Tables.{load => t}
 
 /** Graph-shaped analytics over the star schema: the customer→supplier
@@ -18,7 +18,7 @@ import graft.engine.Tables.{load => t}
   * which everything is per-node aggregation (partial→final, no joins wider
   * than edge⋈degree on the SOURCE key, which co-partitions with the edge
   * shuffle). A full PageRank loop is this step iterated with
-  * localCheckpoint() per round, exactly like dd_clusters' pointer jumping —
+  * a lineage cut (Materialize.cut) per round, exactly like dd_clusters' pointer jumping —
   * each round is one co-partitioned join + one aggregation, O(log) rounds
   * for rank convergence at fixed damping.
   */
@@ -135,7 +135,7 @@ object Graph {
     val tot = tg.groupBy("ca").agg(sum("w").as("tot"))
     val own = kic.filter(col("cb") === col("ca"))
       .select(col("src"), col("kic").as("kia"))
-    val moves = kic.filter(col("cb") =!= col("ca") && col("src") % 2 === 0)
+    val moves = Materialize.cut(kic.filter(col("cb") =!= col("ca") && col("src") % 2 === 0)
       .join(hint(own), Seq("src"), "left").na.fill(0L, Seq("kia"))
       .join(hint(deg), "src")
       .join(hint(tot.select(col("ca"), col("tot").as("tot_a"))), "ca")
@@ -148,8 +148,7 @@ object Graph {
       .withColumn("rn", row_number().over(
         Window.partitionBy("src").orderBy(col("gain").desc, col("cb").asc)))
       .filter(col("rn") === 1)
-      .select(col("src").as("node"), col("cb").as("nc"), col("gain"))
-      .localCheckpoint()
+      .select(col("src").as("node"), col("cb").as("nc"), col("gain")), eager = true)
     val newComm = comm.join(hint(moves.select("node", "nc")), Seq("node"), "left")
       .select(col("node"), coalesce(col("nc"), col("comm")).as("comm"))
     val tgNew = tagged(newComm).cache()
@@ -215,28 +214,23 @@ object Graph {
     * shape. Results are hint-independent; PlanQualitySpec pins both that
     * and the plans' join strategies. */
   private[graft] def betweennessPlan(adj: DataFrame, sources: DataFrame,
-                                     broadcastState: Boolean,
-                                     truncate: Boolean = true): DataFrame = {
+                                     broadcastState: Boolean): DataFrame = {
     def hint(df: DataFrame): DataFrame = if (broadcastState) broadcast(df) else df
-    // truncate=false keeps the whole loop in ONE visible logical plan —
-    // explain-only (PlanQualitySpec asserts join strategies through it);
-    // execution always runs truncated
-    def ckpt(df: DataFrame): DataFrame = if (truncate) df.localCheckpoint(false) else df
-    // LAZY localCheckpoints throughout (the graph_kcore fusion lesson):
+    // LAZY cuts throughout (the graph_kcore fusion lesson):
     // eager ones make every round a separate driver action — 16 jobs of
     // mostly fixed overhead, measured 16.6 s median at sf0.1; lazy ones
     // materialize in the single final action's cascade while still
     // truncating lineage (5.9 s), and the broadcast hints finish the job
     // (3.0 s). State frames are source×node-sized.
-    var level = ckpt(sources.select(col("node").as("s0"), col("node").as("v"),
-      lit(1L).as("sigma")))
-    var all = ckpt(level.withColumn("dist", lit(0)))
+    var level = Materialize.cut(sources.select(col("node").as("s0"), col("node").as("v"),
+      lit(1L).as("sigma")), eager = false)
+    var all = Materialize.cut(level.withColumn("dist", lit(0)), eager = false)
     for (t <- 1 to 4) {
       val cand = hint(level).join(adj, level("v") === adj("src"))
         .groupBy(col("s0"), col("dst").as("v"))
         .agg(sum(col("sigma")).as("sigma"))
-      level = ckpt(cand.join(hint(all), Seq("s0", "v"), "left_anti"))
-      all = ckpt(all.union(level.withColumn("dist", lit(t))))
+      level = Materialize.cut(cand.join(hint(all), Seq("s0", "v"), "left_anti"), eager = false)
+      all = Materialize.cut(all.union(level.withColumn("dist", lit(t))), eager = false)
     }
     // backward: δ = 0 at the depth bound, then accumulate down-level
     var delta = all.filter(col("dist") === 4)
@@ -253,10 +247,10 @@ object Graph {
         .groupBy(lower("s0"), lower("v"))
         .agg(FP.qsum(col("sigma").cast("double") * (lit(1.0) + col("delta"))
           / col("usigma")).as("delta"))
-      delta = ckpt(lower.select(col("s0"), col("v"))
+      delta = Materialize.cut(lower.select(col("s0"), col("v"))
         .join(contrib, Seq("s0", "v"), "left")
         .select(col("s0"), col("v"),
-          coalesce(col("delta"), lit(0.0)).as("delta")))
+          coalesce(col("delta"), lit(0.0)).as("delta")), eager = false)
       delta
     }
     deltas.reduce(_.union(_))
@@ -272,12 +266,11 @@ object Graph {
     * gate decision — the PlanQualitySpec hook for pinning the
     * co-partitioned (above-gate) variant against the broadcast one. */
   private[graft] def betweennessAt(s: SparkSession, d: String,
-                                   broadcastState: Boolean,
-                                   truncate: Boolean = true): DataFrame = {
+                                   broadcastState: Boolean): DataFrame = {
     val sources = t(s, d, "supplier").filter(col("s_nationkey") === 3)
       .select((col("s_suppkey") * 2 + 1).as("node"))
       .orderBy("node").limit(4)
-    betweennessPlan(symEdges(s, d), sources, broadcastState, truncate)
+    betweennessPlan(symEdges(s, d), sources, broadcastState)
   }
 
   /** Five fixed rank rounds (graph_rank_converged) at a forced gate
@@ -290,11 +283,10 @@ object Graph {
     * layout, not 1/outdeg: the per-round rank/outdeg stays a single IEEE
     * divide, bit-identical to the oracle's replay. */
   private[graft] def rankConvergedAt(s: SparkSession, d: String,
-                                     broadcastState: Boolean,
-                                     truncate: Boolean = true): DataFrame = {
+                                     broadcastState: Boolean): DataFrame = {
     val (ranks, _) = graft.engine.PageRank.runPrepared(
       weightedLayout(s, d), nodesLayout(s, d), rounds = 5,
-      trackDeltas = false, broadcastState = broadcastState, truncate = truncate)
+      trackDeltas = false, broadcastState = broadcastState)
     ranks.filter(col("node") % 2 === 1)
       .select(((col("node") - 1) / 2).cast("bigint").as("s_suppkey"),
         round(col("rank"), 4).as("rank"))
@@ -314,10 +306,8 @@ object Graph {
     * attractive communities and DROP Q (measured here: −0.003 → −0.068
     * with both sides moving; +Q with one side). */
   private[graft] def louvainMoveAt(s: SparkSession, d: String,
-                                   broadcastState: Boolean,
-                                   truncate: Boolean = true): DataFrame = {
+                                   broadcastState: Boolean): DataFrame = {
     def hint(df: DataFrame): DataFrame = if (broadcastState) broadcast(df) else df
-    def ckpt(df: DataFrame): DataFrame = if (truncate) df.localCheckpoint() else df
     val e = symEdges(s, d)
     val comm = t(s, d, "customer")
         .select((col("c_custkey") * 2).as("node"),
@@ -344,7 +334,7 @@ object Graph {
     val tot = tg.groupBy("ca").agg(count(lit(1)).as("tot"))
     val own = kic.filter(col("cb") === col("ca"))
       .select(col("src"), col("kic").as("kia"))
-    val moves = ckpt(kic.filter(col("cb") =!= col("ca") && col("src") % 2 === 0)
+    val moves = Materialize.cut(kic.filter(col("cb") =!= col("ca") && col("src") % 2 === 0)
       .join(hint(own), Seq("src"), "left").na.fill(0L, Seq("kia"))
       .join(hint(deg), "src")
       .join(hint(tot.select(col("ca"), col("tot").as("tot_a"))), "ca")
@@ -357,7 +347,7 @@ object Graph {
       .withColumn("rn", row_number().over(
         Window.partitionBy("src").orderBy(col("gain").desc, col("cb").asc)))
       .filter(col("rn") === 1)
-      .select(col("src").as("node"), col("cb").as("nc"), col("gain")))
+      .select(col("src").as("node"), col("cb").as("nc"), col("gain")), eager = true)
     val newComm = comm.join(hint(moves.select("node", "nc")), Seq("node"), "left")
       .select(col("node"), coalesce(col("nc"), col("comm")).as("comm"))
     qStatsOf(tg, "0")
@@ -383,10 +373,8 @@ object Graph {
     * only below the gate; above it (the 100 TB-node shape) labels stay
     * co-partitioned with the adjacency — the engine.PageRank layout. */
   private[graft] def lpaAt(s: SparkSession, d: String,
-                           broadcastState: Boolean,
-                           truncate: Boolean = true): DataFrame = {
+                           broadcastState: Boolean): DataFrame = {
     def hint(df: DataFrame): DataFrame = if (broadcastState) broadcast(df) else df
-    def ckpt(df: DataFrame): DataFrame = if (truncate) df.localCheckpoint(false) else df
     // ONE src-keyed exchange up front, checkpointed (OPTIMIZATION r15,
     // guide §2.4 "share one exchange"): hash(src) is preserved through
     // the checkpoint (LogicalRDD keeps outputPartitioning) and SATISFIES
@@ -396,9 +384,9 @@ object Graph {
     // per-round keyspace exchanges while labels broadcast. Above the
     // gate the dst-keyed label join re-clusters anyway (the co-partitioned
     // 100 TB shape, unchanged).
-    val e = ckpt(symEdges(s, d).repartition(col("src")))
-    var labels = ckpt(e.select(col("src").as("node")).distinct()
-      .withColumn("lbl", col("node")))
+    val e = Materialize.cut(symEdges(s, d).repartition(col("src")), eager = false)
+    var labels = Materialize.cut(e.select(col("src").as("node")).distinct()
+      .withColumn("lbl", col("node")), eager = false)
     val rows = (1 to 4).map { round =>
       val p = if (round % 2 == 1) 0 else 1 // customers even, suppliers odd
       val cnt = e.filter(col("src") % 2 === p)
@@ -409,7 +397,7 @@ object Graph {
         .groupBy("src").agg(min(col("lbl")).as("lbl"))
         .select(col("src").as("node"), col("lbl"))
       val prev = labels
-      labels = ckpt(labels.filter(col("node") % 2 =!= p).union(upd))
+      labels = Materialize.cut(labels.filter(col("node") % 2 =!= p).union(upd), eager = false)
       labels.join(hint(prev.withColumnRenamed("lbl", "prev")), "node")
         .agg(sum(when(col("lbl") =!= col("prev"), 1L).otherwise(0L)).as("n_moved"),
              countDistinct("lbl").as("n_communities"))
@@ -423,8 +411,8 @@ object Graph {
     * decision — the PlanQualitySpec hook (the [[betweennessAt]]
     * precedent). `broadcastState` hints every node-sized label/member/
     * residue frame into the edge joins; false = the co-partitioned
-    * 100 TB-node shape. `truncate=false` keeps the loops in one visible
-    * logical plan for explain-only assertions.
+    * 100 TB-node shape. Under [[Materialize.unrolled]] the loops show as
+    * one logical plan for explain-only assertions.
     *
     * Phase p colors the residue of phase p-1: FORWARD min-label flood
     * (R rounds), BACKWARD frontier membership (R rounds, the sound
@@ -436,7 +424,6 @@ object Graph {
     * shape: 6.4 s -> ~2 s. */
   private[graft] def sccColoringAt(s: SparkSession, d: String,
                                    broadcastState: Boolean,
-                                   truncate: Boolean = true,
                                    // explain-only override: an UNTRUNCATED
                                    // two-phase plan squares the unrolled
                                    // lineage (each phase references the
@@ -447,37 +434,36 @@ object Graph {
     val R = 4
     val Phases = phases
     def hint(df: DataFrame): DataFrame = if (broadcastState) broadcast(df) else df
-    def ckpt(df: DataFrame): DataFrame = if (truncate) df.localCheckpoint(false) else df
-    val de0 = if (truncate) dirEdges(s, d).localCheckpoint() else dirEdges(s, d)
-    val nodes = ckpt(de0.select(col("src").as("node"))
-      .union(de0.select(col("dst").as("node"))).distinct())
+    val de0 = Materialize.cut(dirEdges(s, d), eager = true)
+    val nodes = Materialize.cut(de0.select(col("src").as("node"))
+      .union(de0.select(col("dst").as("node"))).distinct(), eager = false)
     var remaining = nodes
     var de = de0
     var member: DataFrame = null
     var phaseCensus: DataFrame = null
     for (ph <- 1 to Phases) {
-      var f = ckpt(remaining.withColumn("lbl", col("node")))
+      var f = Materialize.cut(remaining.withColumn("lbl", col("node")), eager = false)
       for (_ <- 1 to R) {
         val m = de.join(hint(f.select(col("node").as("src"), col("lbl"))), "src")
           .groupBy(col("dst").as("node")).agg(min("lbl").as("ml"))
-        f = ckpt(f.join(hint(m), Seq("node"), "left")
+        f = Materialize.cut(f.join(hint(m), Seq("node"), "left")
           .select(col("node"),
-            least(col("lbl"), coalesce(col("ml"), col("lbl"))).as("lbl")))
+            least(col("lbl"), coalesce(col("ml"), col("lbl"))).as("lbl")), eager = false)
       }
-      var mem = ckpt(f.filter(col("lbl") === col("node"))
-        .select(col("node"), col("node").as("scc")))
+      var mem = Materialize.cut(f.filter(col("lbl") === col("node"))
+        .select(col("node"), col("node").as("scc")), eager = false)
       var frontier = mem
       for (_ <- 1 to R) {
-        val nw = ckpt(de
+        val nw = Materialize.cut(de
           .join(hint(frontier.select(col("node").as("dst"), col("scc"))), "dst")
           .select(col("src").as("node"), col("scc"))
           .join(hint(f), "node").filter(col("scc") === col("lbl"))
           .select("node", "scc").distinct()
-          .join(hint(mem.select("node")), Seq("node"), "left_anti"))
-        mem = ckpt(mem.union(nw))
+          .join(hint(mem.select("node")), Seq("node"), "left_anti"), eager = false)
+        mem = Materialize.cut(mem.union(nw), eager = false)
         frontier = nw
       }
-      member = if (member == null) mem else ckpt(member.union(mem))
+      member = if (member == null) mem else Materialize.cut(member.union(mem), eager = false)
       val pc = mem.agg(count(lit(1)).as(s"n_settled_p$ph"))
       phaseCensus = if (phaseCensus == null) pc else phaseCensus.crossJoin(pc)
       if (ph < Phases) {
@@ -485,11 +471,12 @@ object Graph {
         // residue subgraph the next phase recolors. Both frames stay
         // node-/edge-layout-bounded; the anti/semi lookup sides are the
         // node-sized frames the gate governs.
-        remaining = ckpt(remaining.join(hint(mem.select("node")), Seq("node"), "left_anti"))
-        de = ckpt(de
+        remaining = Materialize.cut(
+          remaining.join(hint(mem.select("node")), Seq("node"), "left_anti"), eager = false)
+        de = Materialize.cut(de
           .join(hint(remaining.select(col("node").as("src"))), Seq("src"), "left_semi")
           .join(hint(remaining.select(col("node").as("dst"))), Seq("dst"), "left_semi")
-          .select("src", "dst"))
+          .select("src", "dst"), eager = false)
       }
     }
     val census = nodes.agg(count(lit(1)).as("n_nodes"))
@@ -783,8 +770,8 @@ object Graph {
       for (_ <- 1 to 4) {
         val relaxed = dist.join(adj, dist("node") === adj("src"))
           .select(col("dst").as("node"), (dist("dist") + col("w")).as("dist"))
-        dist = dist.union(relaxed).groupBy("node").agg(min("dist").as("dist"))
-          .localCheckpoint()
+        dist = Materialize.cut(
+          dist.union(relaxed).groupBy("node").agg(min("dist").as("dist")), eager = true)
       }
       adj.unpersist()
       dist.filter(col("node") % 2 === 1)
@@ -929,10 +916,10 @@ object Graph {
     // semantics, measured rather than assumed; denser social graphs
     // peel for many rounds under the identical loop). Per round: one
     // degree hash-agg + two semi-restricting joins on the keys the
-    // previous round just shuffled, with LAZY localCheckpoints on both
+    // previous round just shuffled, with LAZY lineage cuts on both
     // the survivor set and the restricted edges so the round runs as
     // exactly ONE driver action — the union-agg counter job below
-    // materializes (and lineage-truncates) both snapshots as a side
+    // materializes (and lineage-cuts) both snapshots as a side
     // effect and carries both counters across in a single sync. The
     // previous shape (eager checkpoint + keep.count() + e.count() =
     // three driver syncs/round, with the degree agg recomputed in each
@@ -958,14 +945,13 @@ object Graph {
       // collect + build + distribute) cost more than sort-merging a
       // 240k-row edge frame across 32 partitions ever does, and the
       // restriction joins land on keys the previous round just shuffled.
-      var e = symEdges(s, d).localCheckpoint()
+      var e = Materialize.cut(symEdges(s, d), eager = true)
       val rows = (1 to 5).map { round =>
-        val keep = e.groupBy("src").agg(count(lit(1)).as("deg"))
-          .filter(col("deg") >= 30).select(col("src").as("node"))
-          .localCheckpoint(false)
-        e = e.join(keep.select(col("node").as("src")), "src")
+        val keep = Materialize.cut(e.groupBy("src").agg(count(lit(1)).as("deg"))
+          .filter(col("deg") >= 30).select(col("src").as("node")), eager = false)
+        e = Materialize.cut(e.join(keep.select(col("node").as("src")), "src")
           .join(keep.select(col("node").as("dst")), "dst")
-          .select("src", "dst").localCheckpoint(false)
+          .select("src", "dst"), eager = false)
         keep.agg(count(lit(1)).as("n_nodes"))
           .crossJoin(e.agg((count(lit(1)) / 2).cast("long").as("n_edges")))
           .select(lit(round.toLong).as("round"), col("n_nodes"), col("n_edges"))
@@ -1124,8 +1110,8 @@ object Graph {
       val (tgn1, st1) = louvainPass(e1, comm1, twoM, level = 1, hint)
       // contraction: endpoints mapped to their post-move communities, one
       // weight-sum groupBy; tgn1 already carries the mapped endpoints
-      val e2 = tgn1.groupBy(col("ca").as("src"), col("cb").as("dst"))
-        .agg(sum("w").as("w")).localCheckpoint(false)
+      val e2 = Materialize.cut(tgn1.groupBy(col("ca").as("src"), col("cb").as("dst"))
+        .agg(sum("w").as("w")), eager = false)
       val comm2 = e2.select(col("src").as("node")).distinct()
         .select(col("node"), col("node").as("comm"))
       val (_, st2) = louvainPass(e2, comm2, twoM, level = 2, hint)
@@ -1176,8 +1162,8 @@ object Graph {
         val tm = row.getAs[Long]("two_m")
         continue = level < maxLevels && dq * 10000L >= tm * tm
         if (continue) {
-          e = tgn.groupBy(col("ca").as("src"), col("cb").as("dst"))
-            .agg(sum("w").as("w")).localCheckpoint(false)
+          e = Materialize.cut(tgn.groupBy(col("ca").as("src"), col("cb").as("dst"))
+            .agg(sum("w").as("w")), eager = false)
           comm = e.select(col("src").as("node")).distinct()
             .select(col("node"), col("node").as("comm"))
         }
@@ -1298,10 +1284,10 @@ object Graph {
       val P = 1000000007L
       val adj = symEdges(s, d)
       val adjL = adjListLayout(s, d)
-      val walks0 = adj.filter(col("src") % 2 === 0)
+      val walks0 = Materialize.cut(adj.filter(col("src") % 2 === 0)
         .select(col("src").as("walk")).distinct()
-        .withColumn("cur", col("walk").cast("long"))
-        .localCheckpoint() // stats → AQE broadcasts the walk-sized frontier
+        .withColumn("cur", col("walk").cast("long")),
+        eager = true) // stats → AQE broadcasts the walk-sized frontier
       // Hop choice = an argmin FOLD over the node's sorted neighbor array
       // (the CSR-ish adjlist layout): one row in, one row out, the hub
       // fan-out never materializes as rows at all. Plan iterations, both
@@ -1316,7 +1302,7 @@ object Graph {
       // the choice still equals the lexicographic (h, dst) minimum the
       // oracle's row_number replays; h stays injective in dst below P.
       val steps = (1 to 3).scanLeft(walks0) { (w, step) =>
-        w.join(adjL, col("cur") === col("node"))
+        Materialize.cut(w.join(adjL, col("cur") === col("node"))
           .select(col("walk"),
             aggregate(col("nbrs"),
               struct(lit(Long.MaxValue).as("h"), lit(-1L).as("dst")),
@@ -1325,8 +1311,8 @@ object Graph {
                   + pmod(v, lit(P)) * 2246822519L + lit(step.toLong)) % P
                 when(h < acc.getField("h"),
                   struct(h.as("h"), v.as("dst"))).otherwise(acc)
-              }).getField("dst").as("cur"))
-          .localCheckpoint() // step i+1 and the census both read it
+              }).getField("dst").as("cur")),
+          eager = true) // step i+1 and the census both read it
       }.drop(1)
       steps.zipWithIndex.map { case (w, i) =>
         w.agg(count(lit(1)).as("n_walks"),
@@ -1346,8 +1332,8 @@ object Graph {
     // over the SAME committed (src, dst, outdeg) + nodes layouts that
     // graph_rank_converged reads: per round one co-partitioned edge⋈rank
     // join + one per-dst qsum aggregate + the node-frame left join that
-    // re-injects (1−β)·seed instead of the uniform floor, localCheckpoint
-    // truncating lineage so plan depth is round-invariant. r0 IS the seed
+    // re-injects (1−β)·seed instead of the uniform floor, a lineage cut
+    // per round so plan depth is round-invariant. r0 IS the seed
     // vector (mass 1 per seed — PPR is scale-invariant, so the 1/|S|
     // normalization is a constant factor both engines skip identically).
     // Non-seed nodes can only acquire rank through edges: n_pos in the
@@ -1366,25 +1352,23 @@ object Graph {
     * no stats) ONLY below the gate; above it the loop joins
     * co-partitioned on the node key. */
   private[graft] def pprAt(s: SparkSession, d: String,
-                           broadcastState: Boolean,
-                           truncate: Boolean = true): DataFrame = {
+                           broadcastState: Boolean): DataFrame = {
     def hint(df: DataFrame): DataFrame = if (broadcastState) broadcast(df) else df
-    def ckpt(df: DataFrame): DataFrame = if (truncate) df.localCheckpoint(false) else df
     val W = weightedLayout(s, d)
     val nodes = nodesLayout(s, d)
     val seeds = t(s, d, "customer").filter(col("c_nationkey") === 3)
       .select((col("c_custkey") * 2).as("node"), lit(1.0).as("sv"))
-    val seeded = ckpt(nodes.join(seeds, Seq("node"), "left")
-      .select(col("node"), coalesce(col("sv"), lit(0.0)).as("sv")))
+    val seeded = Materialize.cut(nodes.join(seeds, Seq("node"), "left")
+      .select(col("node"), coalesce(col("sv"), lit(0.0)).as("sv")), eager = false)
     var r = seeded.select(col("node"), col("sv").as("rank"))
     for (_ <- 1 to 4) {
       val mass = W.join(hint(r), W("src") === r("node"))
         .groupBy(col("dst"))
         .agg(FP.qsum(col("rank") / col("outdeg")).as("mass"))
-      r = ckpt(seeded.join(hint(mass), seeded("node") === mass("dst"), "left")
+      r = Materialize.cut(seeded.join(hint(mass), seeded("node") === mass("dst"), "left")
         .select(seeded("node"),
           ((lit(1.0) - lit(0.85)) * col("sv")
-            + lit(0.85) * coalesce(col("mass"), lit(0.0))).as("rank")))
+            + lit(0.85) * coalesce(col("mass"), lit(0.0))).as("rank")), eager = false)
     }
     val census = r.agg(
       count(when(col("rank") > 0, 1)).as("n_pos"),

@@ -3,7 +3,7 @@ package graft.queries
 import org.apache.spark.sql.{Column, DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.expressions.Window
-import graft.engine.{FixedPoint => FP, Tables}
+import graft.engine.{FixedPoint => FP, Materialize, Tables}
 import graft.engine.Tables.{load => t}
 
 /** Core relational operator catalog — SURVEY.md §2.2 (projections/filters),
@@ -1326,15 +1326,13 @@ object Relational {
           col("l_quantity").cast("long").as("w")).cache()
       // totals + distinct-price census in one pass (two-level agg: partial
       // dedup on (flag, price) map-side, ONE pair-keyed exchange)
-      val tots = base.groupBy("flag")
-        .agg(sum("w").as("totw"), countDistinct(col("price")).as("n_prices"))
-        .localCheckpoint(false)
+      val tots = Materialize.cut(base.groupBy("flag")
+        .agg(sum("w").as("totw"), countDistinct(col("price")).as("n_prices")), eager = false)
       val bkt = floor(col("price") / lit(64.0)).cast("long")
       // phase 1: weighted bucket histogram (codegen hash-agg, partial-agg
       // friendly; ~1.6k buckets/flag at the integer-dollar domain)
-      val hist = base.groupBy(col("flag"), bkt.as("__b"))
-        .agg(sum("w").as("__bw"), count(lit(1)).as("__bc"))
-        .localCheckpoint(false)
+      val hist = Materialize.cut(base.groupBy(col("flag"), bkt.as("__b"))
+        .agg(sum("w").as("__bw"), count(lit(1)).as("__bc")), eager = false)
       val hwin = Window.partitionBy("flag").orderBy("__b")
         .rowsBetween(Window.unboundedPreceding, -1)
       // the flag's crossing bucket: first whose INCLUSIVE cum reaches

@@ -3,7 +3,7 @@ package graft.queries
 import org.apache.spark.sql.{Column, DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.expressions.Window
-import graft.engine.{Commits => C, FixedPoint => FP, Tables}
+import graft.engine.{Commits => C, FixedPoint => FP, Materialize, Tables}
 import graft.engine.Tables.{load => t}
 
 /** Scale-path operators beyond the reference's surface: skew-salted joins,
@@ -1120,7 +1120,7 @@ object ScaleOps {
         s.read.parquet(added.map(a => s"$table/$a"): _*)
           .agg(count(lit(1)).as("n_rows_added"))
           .select(lit(v.toLong).as("version"),
-            lit(C.manifestEntries(table, v).size.toLong).as("n_files"),
+            lit(C.resolve(table, v).size.toLong).as("n_files"),
             lit(added.size.toLong).as("n_files_added"),
             lit(removed.size.toLong).as("n_files_removed"),
             col("n_rows_added"))
@@ -1159,7 +1159,7 @@ object ScaleOps {
       }
       def row(name: String, tbl: String) = {
         val v = C.latestVersion(tbl)
-        val entries = C.manifestEntries(tbl, v)
+        val entries = C.resolve(tbl, v)
         val shared = entries.count(_.startsWith("../"))
         C.read(s, tbl).agg(count(lit(1)).as("n_rows"))
           .select(lit(name).as("tbl"), lit(v.toLong).as("version"),
@@ -1402,7 +1402,7 @@ object ScaleOps {
       // audit the committed log: metadata-sized driver reads (the
       // FileSkipping / Delta-log-read exception), data stays distributed
       val latest = C.latestVersion(table)
-      val published = (1 to latest).flatMap(v => C.manifestEntries(table, v)).toSet
+      val published = (1 to latest).flatMap(v => C.resolve(table, v)).toSet
       val staged = Option(new java.io.File(table, "data").listFiles())
         .map(_.toSeq).getOrElse(Seq.empty).map("data/" + _.getName).sorted
       val orphans = staged.filterNot(published)
@@ -1419,7 +1419,7 @@ object ScaleOps {
           lit(orphans.size.toLong).as("n_orphaned"),
           col("orphan_rows"),
           lit(orphans.nonEmpty &&
-              orphans.forall(o => !C.manifestEntries(table, latest).contains(o)))
+              orphans.forall(o => !C.resolve(table, latest).contains(o)))
             .as("aborted_invisible"))
     }),
 
@@ -1562,9 +1562,9 @@ object ScaleOps {
       val P = 1000000007L
       val K = 256
       val o = t(s, d, "orders")
-      def retained(yr: Int) = o.filter(year(col("o_orderdate")) === yr)
+      def retained(yr: Int) = Materialize.cut(o.filter(year(col("o_orderdate")) === yr)
         .select((pmod(col("o_custkey"), lit(P)) * 2654435761L % P).as("h"))
-        .distinct().orderBy("h").limit(K).localCheckpoint(false)
+        .distinct().orderBy("h").limit(K), eager = false)
       val ra = retained(1995)
       val rb = retained(1996)
       def base(r: DataFrame, sfx: String) = r
@@ -1574,12 +1574,12 @@ object ScaleOps {
             .otherwise(col("hk") / lit(P.toDouble)).as(s"t$sfx"))
       val sa = base(ra, "a")
       val sb = base(rb, "b")
-      val t0f = sa.crossJoin(sb)
-        .select(least(col("ta"), col("tb")).as("t0")).localCheckpoint(false)
+      val t0f = Materialize.cut(sa.crossJoin(sb)
+        .select(least(col("ta"), col("tb")).as("t0")), eager = false)
       // union: retain below θ0, trim to K (the DataSketches theta-union)
-      val below = ra.union(rb).distinct()
+      val below = Materialize.cut(ra.union(rb).distinct()
         .crossJoin(broadcast(t0f)).filter(col("h") < col("t0") * P)
-        .select("h").localCheckpoint(false)
+        .select("h"), eager = false)
       val un = below.agg(count(lit(1)).as("n_below"))
       val ru = below.orderBy("h").limit(K)
       val su = ru.agg(count(lit(1)).as("nu"), max("h").as("hku"))
@@ -1595,7 +1595,7 @@ object ScaleOps {
       val si = derived(ra.intersect(rb))
       val sd = derived(ra.except(rb))
       // ONE exact hash-agg: per-custkey year flags → every truth column
-      val ex = o.filter(year(col("o_orderdate")).isin(1995, 1996))
+      val ex = Materialize.cut(o.filter(year(col("o_orderdate")).isin(1995, 1996))
         .groupBy("o_custkey")
         .agg(max(when(year(col("o_orderdate")) === 1995, 1).otherwise(0)).as("ina"),
              max(when(year(col("o_orderdate")) === 1996, 1).otherwise(0)).as("inb"))
@@ -1603,8 +1603,8 @@ object ScaleOps {
              sum("inb").cast("bigint").as("xb"),
              count(lit(1)).as("xu"),
              sum(col("ina") * col("inb")).cast("bigint").as("xi"),
-             sum(col("ina") * (lit(1) - col("inb"))).cast("bigint").as("xd"))
-        .localCheckpoint(false)
+             sum(col("ina") * (lit(1) - col("inb"))).cast("bigint").as("xd")),
+        eager = false)
       Seq(
         sa.crossJoin(broadcast(ex)).select(lit("a").as("op"),
           col("na").cast("bigint").as("n_retained"), round(col("ta"), 6).as("theta"),

@@ -3,7 +3,7 @@ package graft.queries
 import org.apache.spark.sql.{Column, DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.expressions.Window
-import graft.engine.{FixedPoint => FP, Tables, Vectors => V}
+import graft.engine.{FixedPoint => FP, Materialize, Tables, Vectors => V}
 import graft.engine.Tables.{load => t}
 
 /** Similarity-search catalog over `embeddings` (builder-prompt first-class
@@ -109,16 +109,14 @@ object Similarity {
     * via the pivot self-join (sum-of-degree² rows, never vector×vector),
     * score pool = candidates ∪ current edges, keep each node's top-k.
     * Per-node lists only ever improve, so recall is provably monotone.
-    * LAZY checkpoints: callers run the whole build as one action cascade
-    * (`truncate = false` skips them so plan audits see the full lineage —
-    * the Graph.betweennessPlan precedent).
+    * LAZY cuts: callers run the whole build as one action cascade (plan
+    * audits see the full lineage under [[Materialize.unrolled]] — the
+    * Graph.betweennessPlan precedent).
     * The vector lookup sides are corpus-row-count frames — hinted below
     * [[embHintGate]] so the candidate frame never sort-merge-shuffles to
     * fetch endpoints' vectors; above the gate they run co-partitioned on
     * the vector key (VERDICT r13 #1 — a comment was not a gate). */
-  private def nnDescentGraphs(e: DataFrame, k: Int, bcVec: Boolean,
-                              truncate: Boolean = true): Seq[DataFrame] = {
-    def ckpt(df: DataFrame): DataFrame = if (truncate) df.localCheckpoint(false) else df
+  private def nnDescentGraphs(e: DataFrame, k: Int, bcVec: Boolean): Seq[DataFrame] = {
     val hint = hintIf(bcVec) _
     val cnt = e.agg(count(lit(1)).as("n"))
     val ea = e.select(col("vec_id").as("a"), col("v").as("va"))
@@ -133,7 +131,7 @@ object Similarity {
         ((col("a") + ((col("a") * lit(2654435761L)) % lit(1000000007L)
           + col("r") * lit(40503L)) % (col("n") - 1) + 1) % col("n")).as("b"))
       .distinct()
-    val g0 = ckpt(withCos(init))
+    val g0 = Materialize.cut(withCos(init), eager = false)
     var g = g0
     g0 +: (1 to 2).map { _ =>
       val u = g.select(col("a").as("p"), col("b").as("x"))
@@ -145,10 +143,10 @@ object Similarity {
         .select(col("u1.x").as("a"), col("u2.x").as("b"))
         .filter(col("a") =!= col("b"))
       val pool = cand.union(g.select("a", "b")).distinct()
-      g = ckpt(withCos(pool)
+      g = Materialize.cut(withCos(pool)
         .withColumn("rn", row_number().over(
           Window.partitionBy("a").orderBy(col("cos_raw").desc, col("b").asc)))
-        .filter(col("rn") <= k).select("a", "b", "cos_raw"))
+        .filter(col("rn") <= k).select("a", "b", "cos_raw"), eager = false)
       g
     }
   }
@@ -163,7 +161,6 @@ object Similarity {
     * the planner falls back to its own choice instead of being forced
     * into a driver-side broadcast build). */
   private def exactKnnSample(e: DataFrame, k: Int, bcVec: Boolean,
-                             truncate: Boolean = true,
                              residue: Int = 0): DataFrame = {
     // bounded top-k aggregate instead of the all-pairs rank window
     // (OPTIMIZATION r15, guide §2.3 aggregate-before-shuffle): the window
@@ -185,7 +182,7 @@ object Similarity {
       .withColumn("cos_raw", V.cosine(col("va"), col("vb")))
       .groupBy("a").agg(topk(col("b"), col("cos_raw")).as("__nn"))
       .select(col("a"), explode(col("__nn")).as("b"))
-    if (truncate) gt.localCheckpoint(false) else gt
+    Materialize.cut(gt, eager = false)
   }
 
   /** The committed kNN-graph layout (a, b): NN-descent's final round-2
@@ -284,11 +281,11 @@ object Similarity {
         ((col("qid") + ((col("qid") * lit(2654435761L)) % lit(1000000007L)
           + col("r") * lit(40503L)) % (col("n") - 1) + 1) % col("n")).as("cand"))
       .distinct()
-    val s0 = score(entries).localCheckpoint(false)
+    val s0 = Materialize.cut(score(entries), eager = false)
     beams.map { beam =>
-      var b = beamTop(s0, beam).localCheckpoint(false)
+      var b = Materialize.cut(beamTop(s0, beam), eager = false)
       val rows = census(0, b) +: (1 to rounds).map { r =>
-        b = beamTop(score(beamExpand(b, g)), beam).localCheckpoint(false)
+        b = Materialize.cut(beamTop(score(beamExpand(b, g)), beam), eager = false)
         census(r, b)
       }
       (beam, rows)
@@ -351,9 +348,7 @@ object Similarity {
                                stages: Seq[Stage],
                                entryStride: Int, exact: DataFrame,
                                k: Int, entries: Int = 4,
-                               bcVec: Boolean = true,
-                               truncate: Boolean = true): DataFrame = {
-    def ckpt(df: DataFrame): DataFrame = if (truncate) df.localCheckpoint(false) else df
+                               bcVec: Boolean = true): DataFrame = {
     val hint = hintIf(bcVec) _
     val q = e.filter(col("vec_id") % 50 === 0)
       .select(col("vec_id").as("qid"), col("v").as("qv"))
@@ -393,9 +388,9 @@ object Similarity {
       .distinct()
     // round r's stage, flattened from the stack
     val perRound: Seq[Stage] = stages.flatMap(st => Seq.fill(st.rounds)(st))
-    var scNew = ckpt(score(entryFrame))
+    var scNew = Materialize.cut(score(entryFrame), eager = false)
     var vis = scNew
-    var b = ckpt(top(vis, stages.head.beam))
+    var b = Materialize.cut(top(vis, stages.head.beam), eager = false)
     val rows = census(0, stages.head.label, scNew, b) +:
       perRound.zipWithIndex.map { case (Stage(stage, g, width, _, expand), i) =>
         val r = i + 1
@@ -405,10 +400,10 @@ object Similarity {
         val pool = fr.join(g, fr("cand") === g("a"))
           .select(col("qid"), g("b").as("cand"))
           .filter(col("cand") =!= col("qid")).distinct()
-        scNew = ckpt(score(pool.join(vis.select(col("qid"), col("cand")),
-            Seq("qid", "cand"), "left_anti")))
-        vis = ckpt(vis.union(scNew))
-        b = ckpt(top(vis, width))
+        scNew = Materialize.cut(score(pool.join(vis.select(col("qid"), col("cand")),
+            Seq("qid", "cand"), "left_anti")), eager = false)
+        vis = Materialize.cut(vis.union(scNew), eager = false)
+        b = Materialize.cut(top(vis, width), eager = false)
         census(r, stage, scNew, b)
       }
     rows.reduce(_.union(_))
@@ -427,8 +422,7 @@ object Similarity {
                                   l0b: Int, l0r: Int, l0e: Int,
                                   entries: Int = 4,
                                   l0r2: Int = 0, l0e2: Int = 0,
-                                  bcVec: Option[Boolean] = None,
-                                  truncate: Boolean = true): DataFrame = {
+                                  bcVec: Option[Boolean] = None): DataFrame = {
     // corpus-row lookup hints route through embHintGate unless a plan
     // audit forces a variant (PlanQualitySpec pins both shapes)
     val bc = bcVec.getOrElse(embHintGate(d))
@@ -440,8 +434,8 @@ object Similarity {
         Stage("l2", coarseKnnLayout(s, d, e, 64), l2b, 1),
         Stage("l1", coarseKnnLayout(s, d, e), l1b, l1r),
         Stage("l0", g0, l0b, l0r, expand = l0e)) ++ tail,
-      entryStride = 64, exactKnnSample(e, 8, bc, truncate), k = 8,
-      entries = entries, bcVec = bc, truncate = truncate)
+      entryStride = 64, exactKnnSample(e, 8, bc), k = 8,
+      entries = entries, bcVec = bc)
       .orderBy("round")
   }
 
@@ -514,10 +508,8 @@ object Similarity {
     * the same vectors run in one batch — the stream ≡ batch twin
     * FacesInvariantSpec pins for the append face. */
   private def searchThenLink(e: DataFrame, gbEdges: DataFrame, q: DataFrame,
-                             hinted: Boolean,
-                             truncate: Boolean = true): DataFrame = {
+                             hinted: Boolean): DataFrame = {
     val k = 8
-    def ckpt(df: DataFrame): DataFrame = if (truncate) df.localCheckpoint(false) else df
     val hint = hintIf(hinted) _
     val cntB = e.filter(col("vec_id") % 2 === 0).agg(count(lit(1)).as("n"))
     // NARROW FRONTIER (OPTIMIZATION r15, guide §8): unlike the flat census
@@ -551,7 +543,7 @@ object Similarity {
     // the adjacency, its endpoint aliased once to a name the frontier
     // (qid, cand) can never carry, so `col("__nbr")` below resolves
     // uniquely by NAME — a dataset-qualified gbEdges("b") trips
-    // DetectAmbiguousSelfJoin on the untruncated lineage (gbEdges appears
+    // DetectAmbiguousSelfJoin on the unrolled lineage (gbEdges appears
     // in every prior round)
     val adj = gbEdges.select(col("a"), col("b").as("__nbr"))
     def expand(b0: DataFrame): DataFrame = {
@@ -560,15 +552,13 @@ object Similarity {
           .select(col("qid"), col("__nbr").as("cand")))
         .filter(col("cand") =!= col("qid")).distinct()
     }
-    var b = ckpt(top(score(entries)))
-    for (_ <- 1 to 3) b = ckpt(top(score(expand(b))))
+    var b = Materialize.cut(top(score(entries)), eager = false)
+    for (_ <- 1 to 3) b = Materialize.cut(top(score(expand(b))), eager = false)
     b.select(col("qid").as("a"), col("cand").as("b"), col("cos"))
   }
 
-  private[graft] def indexInsertAt(s: SparkSession, d: String, hinted: Boolean,
-                                   truncate: Boolean = true): DataFrame = {
+  private[graft] def indexInsertAt(s: SparkSession, d: String, hinted: Boolean): DataFrame = {
     val k = 8
-    def ckpt(df: DataFrame): DataFrame = if (truncate) df.localCheckpoint(false) else df
     val hint = hintIf(hinted) _
     val e = emb(s, d).select(col("vec_id"), col("v")).cache()
     val ea = e.select(col("vec_id").as("a"), col("v").as("va"))
@@ -581,7 +571,7 @@ object Similarity {
     val gbEdges = coarseKnnLayout(s, d, e, 2)
     val q = e.filter(col("vec_id") % 2 === 1)
       .select(col("vec_id").as("qid"), col("v").as("qv"))
-    val ins = searchThenLink(e, gbEdges, q, hinted, truncate)
+    val ins = searchThenLink(e, gbEdges, q, hinted)
     val back = ins.select(col("b").as("a"), col("a").as("b"), col("cos"))
     val pruned = rescore(gbEdges).union(back)
       .withColumn("rn", row_number().over(
@@ -621,10 +611,10 @@ object Similarity {
       .withColumn("rn", row_number().over(
         Window.partitionBy("a").orderBy(col("cos").desc, col("b").asc)))
       .filter(col("rn") <= k).select("a", "b", "cos")
-    val inserted = ckpt(pruned.union(refined))
+    val inserted = Materialize.cut(pruned.union(refined), eager = false)
     val rebuilt = rescore(knnGraphLayout(s, d, e))
-    val exB = exactKnnSample(e, k, hinted, truncate)
-    val exN = exactKnnSample(e, k, hinted, truncate, residue = 25)
+    val exB = exactKnnSample(e, k, hinted)
+    val exN = exactKnnSample(e, k, hinted, residue = 25)
     def census(variant: String, g: DataFrame, cohort: String, par: Int,
                ex: DataFrame): DataFrame = {
       val cg = g.filter(col("a") % 2 === par)
@@ -688,8 +678,8 @@ object Similarity {
 
   /** The sim_triplet_mining body at an explicit gate decision: `hinted`
     * routes the two corpus-row lookup hints (the anchor query frame and
-    * the candidate label+vector frame). No truncate knob — the face has
-    * no iterative checkpoints, so the full plan is audit-visible as-is. */
+    * the candidate label+vector frame). The face cuts no lineage, so its
+    * full plan is audit-visible without [[Materialize.unrolled]]. */
   private[graft] def tripletMiningAt(s: SparkSession, d: String,
                                      hinted: Boolean): DataFrame = {
     val hint = hintIf(hinted) _
@@ -732,17 +722,16 @@ object Similarity {
   /** The sim_nndescent body at an explicit gate decision (the
     * Graph.rankConvergedAt precedent): `hinted` routes every
     * corpus-row-sized lookup hint (NN-descent endpoint vectors, the
-    * exact-kNN query frame, the recall-census exact frame); `truncate =
-    * false` skips the loop's lazy checkpoints so a plan audit sees the
-    * full unrolled lineage. The face passes embHintGate; PlanQualitySpec
+    * exact-kNN query frame, the recall-census exact frame); under
+    * [[Materialize.unrolled]] a plan audit sees the loop's full lineage.
+    * The face passes embHintGate; PlanQualitySpec
     * pins hinted-below-gate AND co-partitioned-above-gate shapes with
     * gate-independent results. */
-  private[graft] def nndescentAt(s: SparkSession, d: String, hinted: Boolean,
-                                 truncate: Boolean = true): DataFrame = {
+  private[graft] def nndescentAt(s: SparkSession, d: String, hinted: Boolean): DataFrame = {
     val k = 8
     val e = emb(s, d).select(col("vec_id"), col("v")).cache()
-    val graphs = nnDescentGraphs(e, k, hinted, truncate)
-    val exact = exactKnnSample(e, k, hinted, truncate)
+    val graphs = nnDescentGraphs(e, k, hinted)
+    val exact = exactKnnSample(e, k, hinted)
     def census(round: Int, g: DataFrame): DataFrame =
       g.agg(count(lit(1)).as("n_edges"),
           FP.qround(FP.qmean(col("cos_raw")), 4).as("avg_cos"))
@@ -1720,7 +1709,7 @@ object Similarity {
     // lower in the true top-k order). Scale shape: the candidate join is
     // keyed on the pivot node — sum-of-degree² rows per round, NEVER
     // vector×vector — the per-node truncate is one window on the node
-    // key, and rounds localCheckpoint (the engine.PageRank loop
+    // key, and rounds cut lineage (the engine.PageRank loop
     // discipline). Recall is measured in-row against exact kNN on the
     // deterministic 2%-sample (the sim_knn_join shape); the oracle
     // unrolls both rounds as CTEs and replays the identical candidate

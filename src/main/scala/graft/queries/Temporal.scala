@@ -151,11 +151,11 @@ object Temporal {
       // restart replay: batch 1 re-delivered (at-least-once) → re-merge
       // against v2 and re-attempt v3; the claim must lose and v3's
       // manifest must not move — table state provably unchanged
-      val before = C.manifestEntries(work, 3)
+      val before = C.resolve(work, 3)
       val restaged = C.stage(merged(frames(1), 2)._1, work, "m1-replay")
       require(!C.commitExactlyOnceReplace(work, 3, Seq(restaged)),
         "a replayed CDC batch must lose the version claim")
-      require(C.manifestEntries(work, 3) == before,
+      require(C.resolve(work, 3) == before,
         "a lost CDC claim must leave the manifest untouched")
       require(C.latestVersion(work) == 4, "3 CDC batches over init must land at v4")
     }
@@ -391,7 +391,7 @@ object Temporal {
       (1 to 4).map { v =>
         C.read(s, table, v).agg(count(lit(1)).as("n_rows"))
           .select(lit(v.toLong).as("version"),
-            lit(C.manifestEntries(table, v).size.toLong).as("n_files"), col("n_rows"))
+            lit(C.resolve(table, v).size.toLong).as("n_files"), col("n_rows"))
       }.reduce(_.union(_))
         .crossJoin(broadcast(t(s, d, "events").agg(count(lit(1)).as("__n_events"))))
         .select(col("version"), col("n_files"), col("n_rows"),
@@ -415,7 +415,7 @@ object Temporal {
     "st_cdc_upsert" -> ((s, d) => {
       val table = cdcScenario(s, d)
       val replayRejected =
-        !C.commitExactlyOnceReplace(table, 3, C.manifestEntries(table, 3))
+        !C.commitExactlyOnceReplace(table, 3, C.resolve(table, 3))
       (2 to 4).map { v =>
         C.read(s, table, v)
           .agg(count(lit(1)).as("n_keys"),

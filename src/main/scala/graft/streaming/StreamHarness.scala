@@ -31,20 +31,21 @@ import graft.engine.Layouts
   */
 object StreamHarness {
 
-  /** Drain everything available with a hard deadline (ADVICE r10): an
-    * unbounded drain can block indefinitely (e.g. a staged file the source
-    * never picks up), and a scenario builder must fail loudly rather than
-    * hang the session. */
-  private def drainWithin(q: StreamingQuery, timeoutSec: Int = 120): Unit = {
-    val worker = new Thread(() => q.processAllAvailable())
+  /** Runs `op` (a drain or a stop) on a daemon thread and waits for it at
+    * most `deadlineSec` (ADVICE r10): an unbounded drain can block
+    * indefinitely (e.g. a staged file the source never picks up), and so
+    * can `StreamingQuery.stop()`, which waits for the stream thread with
+    * no deadline of its own. A scenario builder must fail loudly rather
+    * than hang the session. `op`'s own exception is rethrown. */
+  private def within(what: String, deadlineSec: Int)(op: => Unit): Unit = {
+    @volatile var failure: Option[Throwable] = None
+    val worker = new Thread(() => try op catch { case t: Throwable => failure = Some(t) })
     worker.setDaemon(true)
     worker.start()
-    worker.join(timeoutSec * 1000L)
-    if (worker.isAlive) {
-      q.stop()
-      throw new IllegalStateException(
-        s"stream did not drain within ${timeoutSec}s — scenario aborted")
-    }
+    worker.join(deadlineSec * 1000L)
+    if (worker.isAlive) throw new IllegalStateException(
+      s"stream did not $what within ${deadlineSec}s — scenario aborted")
+    failure.foreach(t => throw t)
   }
 
   /** Stage each of `batches` as ONE parquet file in a private scratch dir,
@@ -52,8 +53,14 @@ object StreamHarness {
     * the sink and gets a fresh checkpoint dir), then move the files in one
     * per trigger, draining each trigger before the next — batch i is
     * micro-batch i. The query is stopped and the scratch dir deleted even
-    * when a drain or the sink throws. */
+    * when a drain or the sink throws; every drain and the stop must finish
+    * within 120 s. */
   def replay(s: SparkSession, batches: Seq[DataFrame])(
+      start: (DataFrame, String) => StreamingQuery): Unit =
+    replayWithin(s, batches, deadlineSec = 120)(start)
+
+  /** [[replay]] with its drain and stop deadline given (tests shorten it). */
+  private[graft] def replayWithin(s: SparkSession, batches: Seq[DataFrame], deadlineSec: Int)(
       start: (DataFrame, String) => StreamingQuery): Unit = {
     val scratch = java.nio.file.Files.createTempDirectory("graft_replay-").toFile
     try {
@@ -69,8 +76,8 @@ object StreamHarness {
         new java.io.File(scratch, "ckpt").getPath)
       try staged.zipWithIndex.foreach { case (f, i) =>
         java.nio.file.Files.move(f.toPath, new java.io.File(watch, s"b$i.parquet").toPath)
-        drainWithin(q)
-      } finally q.stop()
+        within("drain", deadlineSec)(q.processAllAvailable())
+      } finally within("stop", deadlineSec)(q.stop())
     } finally Layouts.rmTree(scratch)
   }
 

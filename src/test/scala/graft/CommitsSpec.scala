@@ -57,7 +57,7 @@ class CommitsSpec extends AnyFunSuite with SharedSparkSpec {
     assert(res.isLeft, "a rewrite whose read snapshot moved must abort")
     // the aborted writer's path is referenced by NO manifest, at any version
     (1 to Commits.latestVersion(t)).foreach { v =>
-      assert(!Commits.manifestEntries(t, v).contains(compacted),
+      assert(!Commits.resolve(t, v).contains(compacted),
         s"aborted staged path leaked into manifest v$v")
     }
     assert(Commits.read(spark, t).count() == 15)
@@ -69,7 +69,7 @@ class CommitsSpec extends AnyFunSuite with SharedSparkSpec {
     val compacted = Commits.stage(
       spark.read.parquet(Commits.snapshotFiles(t, 1): _*).coalesce(1), t, "compactor")
     assert(Commits.commitRewrite(t, 1, Seq(compacted)) == Right(2))
-    assert(Commits.manifestEntries(t, 2) == Seq(compacted))
+    assert(Commits.resolve(t, 2) == Seq(compacted))
     assert(Commits.read(spark, t).count() == 10)
   }
 
@@ -88,7 +88,7 @@ class CommitsSpec extends AnyFunSuite with SharedSparkSpec {
     Commits.commitAppend(src, 1, Seq(Commits.stage(df(10 until 15), src, "w2")))
     assert(Commits.shallowClone(src, dst) == 1)
     // metadata-only: every clone entry points back into src, none copied
-    val entries = Commits.manifestEntries(dst, 1)
+    val entries = Commits.resolve(dst, 1)
     assert(entries.nonEmpty && entries.forall(_.startsWith("../src/")))
     assert(Commits.read(spark, dst).count() == 15)
     // diverge both sides: clone append invisible to src, src append invisible to clone
@@ -112,7 +112,7 @@ class CommitsSpec extends AnyFunSuite with SharedSparkSpec {
     val crashed = new java.io.File(s"$t/_log/v00002.txt")
     assert(crashed.createNewFile(), "simulated crash claim must land")
     val e = intercept[IllegalArgumentException] {
-      Commits.manifestEntries(t, 2)
+      Commits.resolve(t, 2)
     }
     assert(e.getMessage.contains("zero-byte"),
       s"half-written manifest must be rejected loudly, got: ${e.getMessage}")
@@ -151,7 +151,7 @@ class CommitsSpec extends AnyFunSuite with SharedSparkSpec {
     assert(Commits.commitExactlyOnce(t, 3, Seq(b1replay)),
       "the replay of a crashed (never-durable) commit must WIN, not skip")
     assert(Commits.latestVersion(t) == 3)
-    assert(Commits.manifestEntries(t, 3).contains(b1replay))
+    assert(Commits.resolve(t, 3).contains(b1replay))
     assert(Commits.read(spark, t).count() == 15, "healed log serves the full state")
     // a SECOND replay of the same batch now loses: the heal was the commit
     val b1again = Commits.stage(df(10 until 15), t, "b1-again")
@@ -236,10 +236,10 @@ class CommitsSpec extends AnyFunSuite with SharedSparkSpec {
     assert(Commits.commitExactlyOnce(t, 3, Seq(b1)), "batch 1 first delivery wins v3")
     // restart replays: both batches re-delivered — claims fail, no content
     // is written, and the table state is byte-identical
-    val before = Commits.manifestEntries(t, 3)
+    val before = Commits.resolve(t, 3)
     assert(!Commits.commitExactlyOnce(t, 2, Seq(b0)), "replayed batch 0 must lose")
     assert(!Commits.commitExactlyOnce(t, 3, Seq(b1)), "replayed batch 1 must lose")
-    assert(Commits.manifestEntries(t, 3) == before, "a lost claim must not touch the log")
+    assert(Commits.resolve(t, 3) == before, "a lost claim must not touch the log")
     assert(Commits.latestVersion(t) == 3)
     assert(Commits.read(spark, t).count() == 15, "exactly-once: no duplicates, no losses")
   }
@@ -257,11 +257,11 @@ class CommitsSpec extends AnyFunSuite with SharedSparkSpec {
       "older versions stay time-travel readable")
     // restart replay: batch 1 re-merged into a fresh staged copy — the
     // claim must lose and the published state must not move
-    val before = Commits.manifestEntries(t, 3)
+    val before = Commits.resolve(t, 3)
     val s1replay = Commits.stage(df(0 until 7), t, "m1-replay")
     assert(!Commits.commitExactlyOnceReplace(t, 3, Seq(s1replay)),
       "a replayed CDC batch must lose its version claim")
-    assert(Commits.manifestEntries(t, 3) == before, "the lost claim touched the manifest")
+    assert(Commits.resolve(t, 3) == before, "the lost claim touched the manifest")
     assert(Commits.read(spark, t).count() == 7)
     // crash heal applies to replace commits too: a DEAD (aged past the
     // grace window) zero-byte v4 claim is healed by the replay instead of
@@ -468,7 +468,7 @@ class CommitsSpec extends AnyFunSuite with SharedSparkSpec {
     (1 to 7).foreach { v =>
       val (files, cv, tail) = Commits.resolveStats(t, v)
       assert(files == Commits.replay(t, v), s"v$v: checkpoint-resolve must equal full replay")
-      assert(Commits.manifestEntries(t, v) == expected(v - 1), s"v$v: wrong file set")
+      assert(Commits.resolve(t, v) == expected(v - 1), s"v$v: wrong file set")
       assert(!files.contains(stale), s"aborted rewrite leaked into v$v")
       assert((cv, tail) == (if (v >= 4) (4, v - 4) else (0, v)), s"v$v: wrong checkpoint use")
       assert(Commits.read(spark, t, v).schema ==
@@ -489,7 +489,7 @@ class CommitsSpec extends AnyFunSuite with SharedSparkSpec {
     val cloneExpected = Seq(shared, shared :+ cl).map(_.sorted)
     (1 to 2).foreach { v =>
       assert(Commits.resolve(dst, v) == Commits.replay(dst, v), s"clone v$v: resolve ≢ replay")
-      assert(Commits.manifestEntries(dst, v) == cloneExpected(v - 1), s"clone v$v: wrong file set")
+      assert(Commits.resolve(dst, v) == cloneExpected(v - 1), s"clone v$v: wrong file set")
       assert(Commits.read(spark, dst, v).schema ==
         spark.read.parquet(Commits.snapshotFiles(dst, v): _*).schema, s"clone v$v: footer schema ≢ inferred")
     }

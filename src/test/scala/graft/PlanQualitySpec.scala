@@ -538,11 +538,11 @@ class PlanQualitySpec extends AnyFunSuite with SharedSparkSpec {
     val saved = spark.conf.get(thresholdKey)
     val (pHinted, pCo) = try {
       spark.conf.set(thresholdKey, "-1")
-      (graft.queries.Graph
-        .betweennessAt(spark, d, broadcastState = true, truncate = false)
+      (graft.engine.Materialize.unrolled(graft.queries.Graph
+        .betweennessAt(spark, d, broadcastState = true))
         .queryExecution.sparkPlan.toString,
-       graft.queries.Graph
-        .betweennessAt(spark, d, broadcastState = false, truncate = false)
+       graft.engine.Materialize.unrolled(graft.queries.Graph
+        .betweennessAt(spark, d, broadcastState = false))
         .queryExecution.sparkPlan.toString)
     } finally spark.conf.set(thresholdKey, saved)
     assert("BroadcastHashJoin".r.findAllIn(pHinted).length >= 7,
@@ -605,7 +605,7 @@ class PlanQualitySpec extends AnyFunSuite with SharedSparkSpec {
     // explain one phase (an untruncated two-phase plan squares the
     // unrolled lineage); the hint routing is identical per phase
     pinGate("graph_scc_coloring",
-      h => graft.queries.Graph.sccColoringAt(spark, d, h, truncate = false, phases = 1),
+      h => graft.engine.Materialize.unrolled(graft.queries.Graph.sccColoringAt(spark, d, h, phases = 1)),
       h => graft.queries.Graph.sccColoringAt(spark, d, h),
       // forward: 2 hints × 4 rounds; backward: 3 hints × 4 rounds
       minHintedBhj = 20)
@@ -613,7 +613,7 @@ class PlanQualitySpec extends AnyFunSuite with SharedSparkSpec {
 
   test("graph_lpa_communities: label-table hints gated; co-partitioned above; gate-independent results") {
     pinGate("graph_lpa_communities",
-      h => graft.queries.Graph.lpaAt(spark, d, h, truncate = false),
+      h => graft.engine.Materialize.unrolled(graft.queries.Graph.lpaAt(spark, d, h)),
       h => graft.queries.Graph.lpaAt(spark, d, h),
       // 4 rounds × (edge⋈labels + census prev-join)
       minHintedBhj = 8)
@@ -621,7 +621,7 @@ class PlanQualitySpec extends AnyFunSuite with SharedSparkSpec {
 
   test("graph_louvain_move: lookup-side hints gated; co-partitioned above; gate-independent results") {
     pinGate("graph_louvain_move",
-      h => graft.queries.Graph.louvainMoveAt(spark, d, h, truncate = false),
+      h => graft.engine.Materialize.unrolled(graft.queries.Graph.louvainMoveAt(spark, d, h)),
       h => graft.queries.Graph.louvainMoveAt(spark, d, h),
       // own/deg/tot_a/tot_b on the move frame + the newComm map + the
       // tagged endpoint joins
@@ -630,7 +630,7 @@ class PlanQualitySpec extends AnyFunSuite with SharedSparkSpec {
 
   test("graph_rank_converged: lazy-path rank hints gated; co-partitioned above; gate-independent results") {
     pinGate("graph_rank_converged",
-      h => graft.queries.Graph.rankConvergedAt(spark, d, h, truncate = false),
+      h => graft.engine.Materialize.unrolled(graft.queries.Graph.rankConvergedAt(spark, d, h)),
       h => graft.queries.Graph.rankConvergedAt(spark, d, h),
       // 5 rounds × (edge⋈rank + node⋈mass)
       minHintedBhj = 10)
@@ -638,7 +638,7 @@ class PlanQualitySpec extends AnyFunSuite with SharedSparkSpec {
 
   test("graph_ppr: rank/mass hints gated; co-partitioned above; gate-independent results") {
     pinGate("graph_ppr",
-      h => graft.queries.Graph.pprAt(spark, d, h, truncate = false),
+      h => graft.engine.Materialize.unrolled(graft.queries.Graph.pprAt(spark, d, h)),
       h => graft.queries.Graph.pprAt(spark, d, h),
       // 4 rounds × (edge⋈rank + seeded⋈mass) + the seed left join
       minHintedBhj = 8)
@@ -652,7 +652,7 @@ class PlanQualitySpec extends AnyFunSuite with SharedSparkSpec {
 
   test("sim_nndescent: endpoint-lookup hints gated; co-partitioned above; gate-independent results") {
     pinGate("sim_nndescent",
-      h => graft.queries.Similarity.nndescentAt(spark, d, h, truncate = false),
+      h => graft.engine.Materialize.unrolled(graft.queries.Similarity.nndescentAt(spark, d, h)),
       h => graft.queries.Similarity.nndescentAt(spark, d, h),
       // 3 scored graphs × (⋈ea + ⋈eb) + 3 recall censuses ⋈exact
       minHintedBhj = 9)
@@ -663,9 +663,9 @@ class PlanQualitySpec extends AnyFunSuite with SharedSparkSpec {
     // squares the visited-set lineage); the hint routing is identical per
     // round. Execution runs the face's committed schedule on both sides.
     pinGate("sim_hnsw_levels",
-      h => graft.queries.Similarity.hnswLevelsAt(spark, d, l2b = 5, l1b = 7,
+      h => graft.engine.Materialize.unrolled(graft.queries.Similarity.hnswLevelsAt(spark, d, l2b = 5, l1b = 7,
         l1r = 1, l0b = 9, l0r = 1, l0e = 8, entries = 3,
-        bcVec = Some(h), truncate = false),
+        bcVec = Some(h))),
       h => graft.queries.Similarity.hnswLevelsAt(spark, d, l2b = 5, l1b = 7,
         l1r = 1, l0b = 9, l0r = 5, l0e = 8, entries = 3, bcVec = Some(h)),
       // 4 scoring rounds × (⋈cv + ⋈q) + 4 censuses ⋈exact
@@ -730,7 +730,7 @@ class PlanQualitySpec extends AnyFunSuite with SharedSparkSpec {
 
   test("sim_index_insert: edge-rescore/beam/census lookup hints gated; co-partitioned above; gate-independent results") {
     pinGate("sim_index_insert",
-      h => graft.queries.Similarity.indexInsertAt(spark, d, h, truncate = false),
+      h => graft.engine.Materialize.unrolled(graft.queries.Similarity.indexInsertAt(spark, d, h)),
       h => graft.queries.Similarity.indexInsertAt(spark, d, h),
       // 2 edge re-scores × 2 lookup sides + 4 beam-scoring rounds ×
       // 2 lookup sides (cand vector + query vector — the r15 narrow
@@ -745,8 +745,8 @@ class PlanQualitySpec extends AnyFunSuite with SharedSparkSpec {
     // at a corpus/2-sized insert batch that was 72 MB of the catalog's
     // largest shuffle (448/448 qid-exchanges carried qv in the r15
     // before-plan, kept in the git history of round 15).
-    val p = graft.queries.Similarity.indexInsertAt(spark, d,
-        graft.queries.Similarity.embHintGate(d), truncate = false)
+    val p = graft.engine.Materialize.unrolled(graft.queries.Similarity.indexInsertAt(spark, d,
+        graft.queries.Similarity.embHintGate(d)))
       .queryExecution.explainString(org.apache.spark.sql.execution.FormattedMode)
     val exchangeInputs = """\(\d+\) Exchange\s*\nInput \[\d+\]: \[([^\]]*)\]""".r
       .findAllMatchIn(p).map(_.group(1)).toSeq

@@ -750,4 +750,25 @@ class StreamingSpec extends AnyFunSuite with SharedSparkSpec {
     assert(out.count() == 4) // (1,click),(1,view),(2,click),(2,view)
     assert(out.groupBy("user_id", "event_type").count().filter(col("count") > 1).count() == 0)
   }
+
+  test("replay fails at its deadline when the stream's stop() never returns") {
+    import spark.implicits._
+    val unblock = new java.util.concurrent.CountDownLatch(1)
+    // drains return at once; stop() waits like a wedged stream thread
+    val wedged = java.lang.reflect.Proxy.newProxyInstance(getClass.getClassLoader,
+      Array[Class[_]](classOf[org.apache.spark.sql.streaming.StreamingQuery]),
+      (_: AnyRef, m: java.lang.reflect.Method, _: Array[AnyRef]) => {
+        if (m.getName == "stop") unblock.await()
+        null
+      }).asInstanceOf[org.apache.spark.sql.streaming.StreamingQuery]
+    val t0 = System.nanoTime()
+    try {
+      val e = intercept[IllegalStateException] {
+        graft.streaming.StreamHarness.replayWithin(spark, Seq(Seq(1L).toDF("a")),
+          deadlineSec = 2)((_, _) => wedged)
+      }
+      assert(e.getMessage.contains("did not stop within 2s"), e.getMessage)
+      assert((System.nanoTime() - t0) / 1e9 < 60, "replay must not wait past its deadline")
+    } finally unblock.countDown()
+  }
 }
