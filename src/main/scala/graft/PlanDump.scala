@@ -402,11 +402,12 @@ object PlanDump {
       "data-sized hash-agg), community contraction as ONE groupBy on the " +
       "mapped endpoints, second pass on the communities²-bounded coarse " +
       "graph — each level shrinks the frame the next one touches."),
-    "graph_kcore" -> ("k-core peel, r11 fusion: all five rounds run as ONE " +
-      "action cascade — survivor sets and restricted edges are lazy " +
-      "checkpoints consumed by both the next round and the round's 1-row " +
-      "counter frame; the final plan is counter crossJoins over " +
-      "checkpointed rounds, zero per-round driver syncs."),
+    "graph_kcore" -> ("k-core peel: survivor sets and restricted edges are " +
+      "lazy checkpoints (each still runs its shuffle and broadcast stages " +
+      "when it is taken, under AQE), the survivor set broadcasts into both " +
+      "restriction joins below nodeHintGate, and the final plan is ONE " +
+      "grouped counter aggregate over the union of the checkpointed rounds " +
+      "and a 5-row zero frame — no per-round counter joins."),
     "st_cdc_upsert" -> ("Streaming CDC upsert audit: per-version keyed " +
       "states read straight off the exactly-once manifest log; the " +
       "replay probe re-attempts batch 1's version claim each run (a " +

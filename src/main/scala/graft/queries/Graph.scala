@@ -216,12 +216,12 @@ object Graph {
   private[graft] def betweennessPlan(adj: DataFrame, sources: DataFrame,
                                      broadcastState: Boolean): DataFrame = {
     def hint(df: DataFrame): DataFrame = if (broadcastState) broadcast(df) else df
-    // LAZY cuts throughout (the graph_kcore fusion lesson):
-    // eager ones make every round a separate driver action — 16 jobs of
-    // mostly fixed overhead, measured 16.6 s median at sf0.1; lazy ones
-    // materialize in the single final action's cascade while still
-    // truncating lineage (5.9 s), and the broadcast hints finish the job
-    // (3.0 s). State frames are source×node-sized.
+    // LAZY cuts throughout: eager ones measured 16.6 s median at sf0.1,
+    // lazy ones 5.9 s, and the broadcast hints finish the job (3.0 s).
+    // A lazy cut is not deferred to the final action under AQE: it still
+    // runs its frame's shuffle and broadcast stages at the call (ROADMAP
+    // "A lazy cut is not lazy under AQE"), so the rounds' jobs run here.
+    // State frames are source×node-sized.
     var level = Materialize.cut(sources.select(col("node").as("s0"), col("node").as("v"),
       lit(1L).as("sigma")), eager = false)
     var all = Materialize.cut(level.withColumn("dist", lit(0)), eager = false)
@@ -363,12 +363,57 @@ object Graph {
           (col("two_m") * col("two_m")).cast("double"), 6).as("q_after"))
   }
 
+  /** k-core peeling (graph_kcore, k = 30, five rounds) at a forced gate
+    * decision — the PlanQualitySpec hook. The survivor set and the
+    * restricted edges are LAZY cuts, each consumed by the next round and
+    * by the counter aggregate. A lazy cut still runs its frame's shuffle
+    * and broadcast stages at the call under AQE (ROADMAP "A lazy cut is
+    * not lazy under AQE": 19–23 jobs inside this function per run at
+    * sf0.01 with the five 1-row counter frames), so the lever is fewer
+    * stages per round, not moving them to the final action:
+    *  - ONE counter aggregate: each round contributes (round, 1, 0) per
+    *    survivor and (round, 0, 1) per directed edge, a 5-row zero frame
+    *    keeps the row of a round that peels everything, and one
+    *    groupBy(round) sums them, so the counters add no join and no
+    *    single-partition exchange per round.
+    *  - The node-sized survivor set BROADCASTS into both restriction joins
+    *    below [[nodeHintGate]]; above it they stay unhinted and sort-merge
+    *    on the keys the degree agg just shuffled. A/B on a 4-core VM,
+    *    warm local[4], function + noop write, alternating variants, same
+    *    rows: unhinted vs hinted p50 1097 vs 919 ms at sf0.01 (20 runs)
+    *    and 2670 vs 2107 ms at sf0.1 (8 runs); function jobs 19–22 → 11.
+    *    The r11 note that measured the hint slower (sf0.1, 32 cores:
+    *    hinted 3.01 s vs unhinted 2.37 s) cannot be re-measured on a
+    *    4-core VM; at 100× the node count the gate, not the hint, is what
+    *    bounds the broadcast. */
+  private[graft] def kcoreAt(s: SparkSession, d: String,
+                             broadcastState: Boolean): DataFrame = {
+    import s.implicits._
+    def hint(df: DataFrame): DataFrame = if (broadcastState) broadcast(df) else df
+    var e = Materialize.cut(symEdges(s, d), eager = true)
+    val counters = (1 to 5).flatMap { round =>
+      val keep = Materialize.cut(e.groupBy("src").agg(count(lit(1)).as("deg"))
+        .filter(col("deg") >= 30).select(col("src").as("node")), eager = false)
+      e = Materialize.cut(e.join(hint(keep.select(col("node").as("src"))), "src")
+        .join(hint(keep.select(col("node").as("dst"))), "dst")
+        .select("src", "dst"), eager = false)
+      Seq(keep.select(lit(round.toLong).as("round"), lit(1L).as("n"), lit(0L).as("m")),
+        e.select(lit(round.toLong).as("round"), lit(0L).as("n"), lit(1L).as("m")))
+    }
+    val zero = (1L to 5L).map(r => (r, 0L, 0L)).toDF("round", "n", "m")
+    counters.foldLeft(zero)(_.union(_))
+      .groupBy("round")
+      .agg(sum("n").as("n_nodes"), (sum("m") / 2).cast("long").as("n_edges"))
+      .orderBy("round")
+  }
+
   /** Semi-synchronous LPA (graph_lpa_communities) at a forced gate
-    * decision — the PlanQualitySpec hook. ALL FOUR ROUNDS IN ONE ACTION
-    * (r11, the kcore fusion): label snapshots are LAZY checkpoints
-    * consumed by the next round and the round's 1-row counter frame; the
-    * four per-round head() syncs — the jitter amplifier the bench
-    * retries punish — disappear into the single final cascade. The
+    * decision — the PlanQualitySpec hook. Label snapshots are LAZY
+    * checkpoints consumed by the next round and the round's 1-row counter
+    * frame, so no round blocks on a collect of its own. A lazy cut
+    * is not deferred under AQE: each still runs its frame's shuffle and
+    * broadcast stages at the call (ROADMAP "A lazy cut is not lazy under
+    * AQE": 22 jobs inside this function at sf0.01). The
     * ~node-count label table rides the broadcast side of the edge join
     * only below the gate; above it (the 100 TB-node shape) labels stay
     * co-partitioned with the adjacency — the engine.PageRank layout. */
@@ -915,49 +960,10 @@ object Graph {
     // (the spec asserts convergence IS reached — the termination
     // semantics, measured rather than assumed; denser social graphs
     // peel for many rounds under the identical loop). Per round: one
-    // degree hash-agg + two semi-restricting joins on the keys the
-    // previous round just shuffled, with LAZY lineage cuts on both
-    // the survivor set and the restricted edges so the round runs as
-    // exactly ONE driver action — the union-agg counter job below
-    // materializes (and lineage-cuts) both snapshots as a side
-    // effect and carries both counters across in a single sync. The
-    // previous shape (eager checkpoint + keep.count() + e.count() =
-    // three driver syncs/round, with the degree agg recomputed in each
-    // join branch AND the count) was the bench's per-round-jitter
-    // amplifier — the r9 verdict's #1 (921 ms warm GC, retried);
-    // graph_lpa_communities proved the one-job-per-round fusion. The
-    // oracle unrolls the same five rounds as CTEs.
-    "graph_kcore" -> ((s, d) => {
-      // ALL FIVE ROUNDS IN ONE ACTION (r11, the rank_converged /
-      // betweenness fusion finishing what r10's per-round union-agg
-      // started): the survivor set and restricted edges are LAZY
-      // checkpoints consumed twice each — by the next round and by the
-      // round's 1-row counter frame — so materialization happens exactly
-      // once per frame inside the single final cascade, and the 5 driver
-      // syncs/run disappear. Those syncs were the remaining retry magnet:
-      // at a ~2 s warm cost each sync is a host-noise sampling point, and
-      // the driver rounds (r9, r10) re-sampled kcore into retries that
-      // all 16 archived builder runs never showed. Measured here at
-      // sf0.1: 5-sync shape 3.06 s warm median → fused 1.4 s.
-      // NO broadcast hints on the survivor set, measured (sf0.1, same
-      // noisy-host window): hinted 3.01 s median vs unhinted 2.37 — ten
-      // per-run broadcast exchanges (2 joins × 5 rounds, each a driver
-      // collect + build + distribute) cost more than sort-merging a
-      // 240k-row edge frame across 32 partitions ever does, and the
-      // restriction joins land on keys the previous round just shuffled.
-      var e = Materialize.cut(symEdges(s, d), eager = true)
-      val rows = (1 to 5).map { round =>
-        val keep = Materialize.cut(e.groupBy("src").agg(count(lit(1)).as("deg"))
-          .filter(col("deg") >= 30).select(col("src").as("node")), eager = false)
-        e = Materialize.cut(e.join(keep.select(col("node").as("src")), "src")
-          .join(keep.select(col("node").as("dst")), "dst")
-          .select("src", "dst"), eager = false)
-        keep.agg(count(lit(1)).as("n_nodes"))
-          .crossJoin(e.agg((count(lit(1)) / 2).cast("long").as("n_edges")))
-          .select(lit(round.toLong).as("round"), col("n_nodes"), col("n_edges"))
-      }
-      rows.reduce(_.union(_)).orderBy("round")
-    }),
+    // degree hash-agg + two semi-restricting joins, with LAZY lineage
+    // cuts on the survivor set and the restricted edges. The oracle
+    // unrolls the same five rounds as CTEs.
+    "graph_kcore" -> ((s, d) => kcoreAt(s, d, nodeHintGate(s, d))),
 
     // ---- label-propagation community detection (Raghavan '07), the
     // catalog's community face beside the CONNECTIVITY closure (dd_clusters

@@ -109,9 +109,11 @@ object Similarity {
     * via the pivot self-join (sum-of-degree² rows, never vector×vector),
     * score pool = candidates ∪ current edges, keep each node's top-k.
     * Per-node lists only ever improve, so recall is provably monotone.
-    * LAZY cuts: callers run the whole build as one action cascade (plan
-    * audits see the full lineage under [[Materialize.unrolled]] — the
-    * Graph.betweennessPlan precedent).
+    * LAZY cuts (plan audits see the full lineage under
+    * [[Materialize.unrolled]] — the Graph.betweennessPlan precedent). Under
+    * AQE a lazy cut still runs its frame's shuffle and broadcast stages
+    * when it is taken, so the build's jobs run here, not in one final
+    * action (ROADMAP "A lazy cut is not lazy under AQE").
     * The vector lookup sides are corpus-row-count frames — hinted below
     * [[embHintGate]] so the candidate frame never sort-merge-shuffles to
     * fetch endpoints' vectors; above the gate they run co-partitioned on
@@ -894,32 +896,37 @@ object Similarity {
     // re-rank of the relevance shortlist by λ·rel − (1−λ)·max-sim-to-
     // selected — the "don't show five copies of the same doc" stage every
     // retrieval endpoint runs after ANN. Execution split mirrors a real
-    // serving head: the SHORTLIST (top-20 exact cosine) and its 20×20
-    // pairwise-sim matrix are computed distributed, then the 5-step greedy
-    // runs driver-side over that k-bounded frame — re-ranking happens on
-    // the head because its input is output-sized BY CONSTRUCTION (the
-    // documented metadata-sized-collect class, like the Count–Min point
-    // probes). Determinism: rel and sim are rounded-6 before the greedy,
-    // every score is the same IEEE sequence on both engines, ties break on
-    // vec_id; the oracle unrolls the identical 5 selections as CTEs.
+    // serving head: the query vector and the SHORTLIST (top-20 exact
+    // cosine) are each collected once (two jobs; the query vector scores
+    // the corpus as a literal), then the 20×20
+    // pairwise-sim matrix and the 5-step greedy run on the head — its
+    // input is output-sized BY CONSTRUCTION (the documented
+    // metadata-sized-collect class, like the Count–Min point probes). The
+    // 190 similarities are the same Spark expression over a local frame of
+    // the collected pairs, which the optimizer folds into the local
+    // relation, so they cost no job. Determinism: rel and sim are
+    // rounded-6 before the greedy, every score is the same IEEE sequence
+    // on both engines, ties break on vec_id; the oracle unrolls the
+    // identical 5 selections as CTEs.
     "sim_mmr_diversify" -> ((s, d) => {
       import s.implicits._
       val lam = 0.5
       val e = emb(s, d)
-      val q = e.filter(col("vec_id") === 0).select(col("v").as("qv"))
-      val cands = e.crossJoin(broadcast(q)).filter(col("vec_id") =!= 0)
-        .withColumn("rel", round(V.cosine(col("v"), col("qv")), 6))
+      val qv = e.filter(col("vec_id") === 0).select("v").collect().head.getSeq[Double](0).toSeq
+      val cands = e.filter(col("vec_id") =!= 0)
+        .withColumn("rel", round(V.cosine(col("v"), typedLit(qv)), 6))
         .orderBy(col("rel").desc, col("vec_id")).limit(20)
-        .select("vec_id", "v", "rel").cache()
-      val sims = cands.as("x").crossJoin(cands.as("y"))
-        .filter(col("x.vec_id") < col("y.vec_id"))
-        .select(col("x.vec_id").as("a"), col("y.vec_id").as("b"),
-          round(V.cosine(col("x.v"), col("y.v")), 6).as("sim"))
+        .select("vec_id", "v", "rel").collect()
+        .map(r => (r.getLong(0), r.getSeq[Double](1).toSeq, r.getDouble(2)))
+      val pairs = for (x <- cands.toSeq; y <- cands if x._1 < y._1) yield (x._1, x._2, y._1, y._2)
+      // cosine and round stay Spark's expressions (ADVICE r9: one rounding
+      // implementation per face), evaluated over the collected pairs
+      val sims = pairs.toDF("a", "va", "b", "vb")
+        .select(col("a"), col("b"), round(V.cosine(col("va"), col("vb")), 6).as("sim"))
         .collect().map(r => ((r.getLong(0), r.getLong(1)), r.getDouble(2))).toMap
       def simOf(x: Long, y: Long): Double = if (x < y) sims((x, y)) else sims((y, x))
       val pool = scala.collection.mutable.LinkedHashMap(
-        cands.select("vec_id", "rel").collect()
-          .map(r => r.getLong(0) -> r.getDouble(1)): _*)
+        cands.map { case (vid, _, rel) => vid -> rel }.toIndexedSeq: _*)
       val picked = scala.collection.mutable.ArrayBuffer[Long]()
       val out = (1 to 5).map { k =>
         val (vid, rel, score) = pool.toSeq.map { case (c, rel) =>

@@ -65,7 +65,7 @@ class PlanDriftSpec extends AnyFunSuite with SharedSparkSpec {
     // r9: reads the per-sf scored-pair layout — only the 1-row census BNLJ
     "graph_adamic_adar" -> Seq(0, 0, 0, 1, 0, 0, 0, 0),
     "graph_bfs_layers" -> Seq(0, 0, 0, 0, 0, 1, 1, 0),
-    "graph_kcore" -> Seq(0, 0, 0, 5, 0, 0, 0, 10),
+    "graph_kcore" -> Seq(0, 0, 0, 0, 0, 1, 1, 0),
     "graph_rank_converged" -> Seq(0, 0, 0, 0, 0, 0, 1, 0),
     "graph_sssp_bounded" -> Seq(0, 0, 0, 0, 0, 0, 1, 0),
     "json_map_explode" -> Seq(0, 0, 0, 0, 0, 0, 1, 0),

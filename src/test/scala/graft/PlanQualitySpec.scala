@@ -619,6 +619,14 @@ class PlanQualitySpec extends AnyFunSuite with SharedSparkSpec {
       minHintedBhj = 8)
   }
 
+  test("graph_kcore: survivor-set hints gated; co-partitioned above; gate-independent results") {
+    pinGate("graph_kcore",
+      h => graft.engine.Materialize.unrolled(graft.queries.Graph.kcoreAt(spark, d, h)),
+      h => graft.queries.Graph.kcoreAt(spark, d, h),
+      // 5 rounds × (src and dst restriction joins)
+      minHintedBhj = 10)
+  }
+
   test("graph_louvain_move: lookup-side hints gated; co-partitioned above; gate-independent results") {
     pinGate("graph_louvain_move",
       h => graft.engine.Materialize.unrolled(graft.queries.Graph.louvainMoveAt(spark, d, h)),
