@@ -1,51 +1,63 @@
 package graft
 
-import graft.engine.Materialize
+import org.apache.spark.sql.SparkSession
+
+import graft.engine.{Materialize, Telemetry}
 
 /** Benchmark main: runs every catalog query on SPARK_GRAFT_SF_DIR and prints
   * per-query JSON plus a FINAL short self-contained totals line.
   *
   * Each query is materialized through the `noop` sink — a count() would let
   * column pruning skip the projected expressions entirely (a projection
-  * benchmark that never computes the projection). Queries run in sorted name
-  * order; JVM/codegen warmup is amortized by a single untimed warmup query.
+  * benchmark that never computes the projection). JVM/codegen warmup is
+  * amortized by a single untimed warmup query.
+  *
+  * Passes: one cold pass, then three warm passes, each over every query in
+  * sorted name order. A query's `warm` is the median of its three warm
+  * runs, so a wave of host noise, which hits a contiguous time band, lands
+  * in at most one of them. Every run is measured by `Telemetry.during`
+  * (its barrier is outside the timed window) and followed by
+  * `Materialize.release`.
   *
   * Output protocol (the driver keeps the TAIL of stdout, ~2 KB):
   *   line 1: the full per-query JSON (large — may be truncated at the front)
   *   line 2 (LAST): a ≤120-char self-contained totals line
-  *     {"metric":"total","value":S,"unit":"sec","cold_total":C,"n":N,"retried":K}
+  *     {"metric":"total","value":S,"unit":"sec","cold_total":C,"n":N}
   *   so any tail capture always contains one complete parseable JSON object.
-  *
-  * Outlier handling: round 1/2 both showed sporadic in-bench inflation
-  * (a query reading 3–36× its isolated time while its plan is clean —
-  * GC storm / codegen-cache churn across ~200 compiled plans). If a warm
-  * run exceeds max(2 s, 3× the running median of warm times), we clear
-  * caches, System.gc(), and re-run once, reporting the min of the two —
-  * the steady-state number the plan actually earns. Retried names and
-  * per-query gc/codegen-compile deltas are written to bench_detail.json
+  * Per-query warm min/max, gc/codegen-compile deltas and the jobs, stages,
+  * tasks and byte volumes of the first warm pass go to bench_detail.json
   * (a file, NOT stdout — stderr proved invisible to the driver in round 2).
   */
 object Bench {
+
+  /** One run of catalog query `name` through the noop sink: its wall
+    * seconds and what its jobs did. A failing query is reported on stderr
+    * and measured as far as it got. Ends with `Materialize.release`:
+    * without it the dead checkpoint blocks of the iterative queries
+    * accumulate into eviction churn that read as inflated times (r6:
+    * dd_clusters 7.7 s in-bench vs 3.2 s isolated), and a non-blocking
+    * unpersist let the next timed run race the removal (r7: 2-5× spikes on
+    * the cache-heavy st_*, emb_* queries). */
+  def runOnce(spark: SparkSession, sfDir: String, name: String): (Double, Telemetry.Run) = {
+    var secs = 0.0
+    val run = Telemetry.during(spark) {
+      val t0 = System.nanoTime()
+      try SparkEntry.queries(name)(spark, sfDir).write.format("noop").mode("overwrite").save()
+      catch { case e: Throwable => System.err.println(s"BENCH FAIL $name: $e") }
+      secs = (System.nanoTime() - t0) / 1e9
+    }
+    Materialize.release(spark)
+    (secs, run)
+  }
+
   def main(args: Array[String]): Unit = {
     val sfDir = sys.env.getOrElse("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
     val detailPath = sys.env.getOrElse("SPARK_GRAFT_BENCH_DETAIL", "bench_detail.json")
     val spark = graft.engine.Tables.localSession("graft-bench")
     spark.sparkContext.setLogLevel("WARN")
 
-    def run(name: String): Unit =
-      SparkEntry.queries(name)(spark, sfDir)
-        .write.format("noop").mode("overwrite").save()
-
-    // Materialize.release after every run (the warm run must not reuse the
-    // query's own caches either). Without it the dead checkpoint blocks of
-    // the iterative queries accumulate into eviction churn that read as
-    // inflated cold AND warm times (r6: dd_clusters 7.7 s in-bench vs 3.2 s
-    // isolated, graph_triangles 7.7 vs 3.8 — QProbe, 5 runs), and a
-    // non-blocking unpersist let the next timed run race the removal (r7:
-    // 2-5× spikes on the cache-heavy st_*, emb_* queries).
-
     // untimed warmup: JVM + parquet footer reads + codegen paths
-    try run("q1_agg") catch { case _: Throwable => () }
+    runOnce(spark, sfDir, "q1_agg")
 
     import java.util.Locale
     import scala.jdk.CollectionConverters._
@@ -57,22 +69,14 @@ object Bench {
     def codegenCompiles(): Long =
       org.apache.spark.metrics.source.CodegenMetrics.METRIC_COMPILATION_TIME.getCount
 
-    final case class QRes(name: String, cold: Double, warm: Double,
-                          gcColdMs: Long, gcWarmMs: Long, cgWarmCompiles: Long, retried: Boolean,
-                          startSec: Double)
+    final case class Sample(secs: Double, run: Telemetry.Run, gcMs: Long, compiles: Long)
+    final case class QRes(name: String, cold: Sample, warms: Seq[Sample]) {
+      val warm: Double = warms.map(_.secs).sorted.apply(warms.size / 2)
+    }
 
-    // wall-clock origin for per-query start offsets (VERDICT r13 #6): a
-    // host-noise wave hits a CONTIGUOUS time band; with each query's start
-    // offset in bench_detail.json the band is read directly from
-    // timestamps instead of inferred from alphabetical adjacency
-    val benchT0 = System.nanoTime()
-    val warmTimes = scala.collection.mutable.ArrayBuffer.empty[Double]
-    def runningMedian(): Double =
-      if (warmTimes.isEmpty) Double.MaxValue
-      else { val s = warmTimes.sorted; s(s.length / 2) }
-
+    val names = SparkEntry.queries.keys.toSeq.sorted
     var sinceGc = 0
-    val results = SparkEntry.queries.keys.toSeq.sorted.map { name =>
+    def pass(label: String): Seq[Sample] = names.map { name =>
       // Periodic untimed full GC: across ~250 queries the heap accumulates
       // dead broadcast/codegen/block-manager tenured garbage faster than
       // G1's concurrent cycle retires it on a busy machine; the resulting
@@ -82,51 +86,20 @@ object Bench {
       // measurement window.
       sinceGc += 1
       if (sinceGc >= 16) { System.gc(); sinceGc = 0 }
-      val startSec = (System.nanoTime() - benchT0) / 1e9
-      def timed(): Double = {
-        val t0 = System.nanoTime()
-        try run(name) catch { case e: Throwable => System.err.println(s"BENCH FAIL $name: $e") }
-        (System.nanoTime() - t0) / 1e9
-      }
-      val gc0 = gcMillis()
-      val cold = timed()
-      Materialize.release(spark)
-      val gc1 = gcMillis(); val cg1 = codegenCompiles()
-      var warm = timed()
-      Materialize.release(spark)
-      val gc2 = gcMillis(); val cg2 = codegenCompiles()
-      // Inflation guard: a warm run reading far above the catalog median AND
-      // above its OWN cold run is a JVM-state artifact (GC storm, codegen
-      // churn), not the plan — re-measure once and keep the min. The own-cold
-      // test is what r5's guard lacked: a genuinely expensive iterative query
-      // (dd_clusters, warm ≈ cold ≈ 3.5 s) tripped the absolute 2 s bar on
-      // EVERY bench, burning a pointless retry and reporting as instability
-      // (13 "retried" vs the ≤5 target, none of them actual artifacts).
-      // The second clause (warm > 2× threshold) catches what r6 showed the
-      // first cannot: when the JVM-state artifact inflates cold AND warm
-      // together (dd_clusters cold 14.4 s / warm 7.7 s in-bench, vs 3.2 s
-      // median isolated — QProbe, 5 runs), warm stays below 1.3×cold and the
-      // guard never fired. A warm run at double the catalog-relative bar is
-      // artifact regardless of what its own cold run did.
-      val threshold = math.max(2.0, 3.0 * runningMedian())
-      val retried = (warm > threshold && warm > 1.3 * cold) || warm > 2.0 * threshold
-      if (retried) {
-        System.gc()
-        val again = timed()
-        Materialize.release(spark)
-        System.err.println(f"[bench] RETRY $name%-24s first=$warm%8.3fs retry=$again%8.3fs")
-        warm = math.min(warm, again)
-      }
-      warmTimes += warm
-      System.err.println(f"[bench] $name%-28s cold=$cold%8.3fs (gc=${gc1 - gc0}%5dms) warm=$warm%8.3fs (gc=${gc2 - gc1}%5dms)")
-      QRes(name, cold, warm, gc1 - gc0, gc2 - gc1, cg2 - cg1, retried, startSec)
+      val gc0 = gcMillis(); val cg0 = codegenCompiles()
+      val (secs, run) = runOnce(spark, sfDir, name)
+      val sample = Sample(secs, run, gcMillis() - gc0, codegenCompiles() - cg0)
+      System.err.println(f"[bench] $label%-5s $name%-28s $secs%8.3fs (gc=${sample.gcMs}%5dms)")
+      sample
     }
+    val cold = pass("cold")
+    val warms = Seq("warm1", "warm2", "warm3").map(pass)
+    val results = names.indices.map(i => QRes(names(i), cold(i), warms.map(_(i))))
 
     def ms(x: Double): String = String.format(Locale.ROOT, "%.3f", Double.box(x))
     val qs = results.map(r => "\"" + r.name + "\":" + ms(r.warm)).mkString("{", ",", "}")
-    val retriedNames = results.filter(_.retried).map(_.name)
     val total = results.map(_.warm).sum
-    val coldTotal = results.map(_.cold).sum
+    val coldTotal = results.map(_.cold.secs).sum
 
     // PER-QUERY REGRESSION GUARD (VERDICT r12 #6): the r12 heap/tmpfs fix
     // made per-query warm times trustworthy for the first time — freeze
@@ -202,22 +175,24 @@ object Bench {
     // bench_detail.json: full per-query diagnostics + worst-5 breakdown.
     // Written to a file so it survives regardless of what stdout capture keeps.
     try {
-      val worst = results.sortBy(-_.warm).take(5)
+      def record(r: QRes): String = {
+        val w = r.warms.head; val v = w.run
+        s""""name":"${r.name}","cold":${ms(r.cold.secs)},"warm":${ms(r.warm)},""" +
+          s""""warm_min":${ms(r.warms.map(_.secs).min)},"warm_max":${ms(r.warms.map(_.secs).max)},""" +
+          s""""gcColdMs":${r.cold.gcMs},"gcWarmMs":${w.gcMs},"codegenWarmCompiles":${w.compiles},""" +
+          s""""jobs":${v.jobs},"stages":${v.stages},"tasks":${v.tasks},""" +
+          s""""input_mb":${ms(Telemetry.mb(v.inputBytes))},"shuffle_write_mb":${ms(Telemetry.mb(v.shuffleWriteBytes))},""" +
+          s""""shuffle_read_mb":${ms(Telemetry.mb(v.shuffleReadBytes))},"spill_mb":${ms(Telemetry.mb(v.spillBytes))}"""
+      }
       val detail = new StringBuilder
-      detail ++= "{\n  \"retried\": ["
-      detail ++= retriedNames.map("\"" + _ + "\"").mkString(",")
-      detail ++= "],\n  \"budget_flags\": ["
+      detail ++= "{\n  \"budget_flags\": ["
       detail ++= budgetFlags.map("\"" + _ + "\"").mkString(",")
       detail ++= s"],\n  \"budget_window_inflation\": ${ms(budgetInflation)},"
       detail ++= s"\n  \"budget_window_inflation_raw\": ${ms(budgetInflationRaw)},"
       detail ++= "\n  \"worst5\": [\n"
-      detail ++= worst.map(r =>
-        s"""    {"name":"${r.name}","warm":${ms(r.warm)},"cold":${ms(r.cold)},"gcWarmMs":${r.gcWarmMs},"codegenWarmCompiles":${r.cgWarmCompiles}}"""
-      ).mkString(",\n")
+      detail ++= results.sortBy(-_.warm).take(5).map(r => "    {" + record(r) + "}").mkString(",\n")
       detail ++= "\n  ],\n  \"queries\": [\n"
-      detail ++= results.map(r =>
-        s"""    {"name":"${r.name}","startSec":${ms(r.startSec)},"cold":${ms(r.cold)},"warm":${ms(r.warm)},"gcColdMs":${r.gcColdMs},"gcWarmMs":${r.gcWarmMs},"codegenWarmCompiles":${r.cgWarmCompiles},"retried":${r.retried}}"""
-      ).mkString(",\n")
+      detail ++= results.map(r => "    {" + record(r) + "}").mkString(",\n")
       detail ++= "\n  ]\n}\n"
       java.nio.file.Files.write(java.nio.file.Paths.get(detailPath),
         detail.toString.getBytes("UTF-8"))
@@ -225,8 +200,8 @@ object Bench {
 
     // Full line first (humans / detail), short self-contained line LAST —
     // the driver's tail capture must always end on a complete JSON object.
-    println(s"""{"metric":"total","value":${ms(total)},"unit":"sec","cold_total":${ms(coldTotal)},"sf":"$sfDir","retried":[${retriedNames.map("\"" + _ + "\"").mkString(",")}],"budget_flags":[${budgetFlags.map("\"" + _ + "\"").mkString(",")}],"budget_window_inflation":${ms(budgetInflation)},"budget_window_inflation_raw":${ms(budgetInflationRaw)},"queries":$qs}""")
-    println(s"""{"metric":"total","value":${ms(total)},"unit":"sec","cold_total":${ms(coldTotal)},"n":${results.size},"retried":${retriedNames.size}}""")
+    println(s"""{"metric":"total","value":${ms(total)},"unit":"sec","cold_total":${ms(coldTotal)},"sf":"$sfDir","budget_flags":[${budgetFlags.map("\"" + _ + "\"").mkString(",")}],"budget_window_inflation":${ms(budgetInflation)},"budget_window_inflation_raw":${ms(budgetInflationRaw)},"queries":$qs}""")
+    println(s"""{"metric":"total","value":${ms(total)},"unit":"sec","cold_total":${ms(coldTotal)},"n":${results.size}}""")
     spark.stop()
   }
 }

@@ -1,14 +1,17 @@
 package graft
 
 import org.apache.spark.sql.functions._
-import graft.engine.{Materialize, Tables}
+import graft.engine.Tables
 
 /** Scratch probe main for ad-hoc plan/perf checks (not part of the API).
   * Usage: sbt "runMain graft.Probe <sfDir> [MODE|query ...]" where MODE is
-  * HASHBENCH | SIGBENCH | COSBENCH | JWBENCH | CLEAR, and any
-  * other arg is a catalog query name timed through the noop sink. The
-  * *BENCH modes race each native codegen expression against its composed /
-  * UDF alternative on an inflated corpus — the README showcase numbers. */
+  * HASHBENCH | SIGBENCH | COSBENCH | JWBENCH, and any other arg is a
+  * catalog query name: one untimed run, then 5 runs through
+  * `Bench.runOnce` (noop sink, `Telemetry`, `Materialize.release`),
+  * printing min / median / max seconds and what the last run's jobs did.
+  * The *BENCH modes race each native codegen expression against its
+  * composed / UDF alternative on an inflated corpus — the README showcase
+  * numbers. */
 object Probe {
   def time[A](label: String)(f: => A): A = {
     val t0 = System.nanoTime(); val r = f
@@ -19,8 +22,7 @@ object Probe {
     spark.sparkContext.setLogLevel("ERROR")
     val d = if (args.nonEmpty) args(0) else "/root/testdata/sf0.01"
     for (name <- args.drop(1)) {
-      if (name == "CLEAR") Materialize.release(spark)
-      else if (name == "HASHBENCH") {
+      if (name == "HASHBENCH") {
         // microbench: native vs composed token hashing over an inflated
         // corpus (documents × 40 replicas), isolating the expression cost
         // from scan/JVM overhead. sum(size) forces full evaluation.
@@ -102,8 +104,10 @@ object Probe {
         pairs.unpersist()
       }
       else {
-        val fn = SparkEntry.queries(name)
-        time(name) { fn(spark, d).write.format("noop").mode("overwrite").save() }
+        Bench.runOnce(spark, d, name)
+        val runs = (1 to 5).map(_ => Bench.runOnce(spark, d, name))
+        val ts = runs.map(_._1).sorted
+        println(f"[probe] $name%-24s n=5 min=${ts.head}%7.3f med=${ts(2)}%7.3f max=${ts.last}%7.3f s ${runs.last._2}")
       }
     }
     spark.stop()

@@ -50,9 +50,10 @@ import org.apache.spark.sql.functions._
   *
   * Scale shape: identical to sum/avg — one (long, long) mergeable partial
   * state per group; no collect_list, no sort, no decimal arithmetic.
-  * Cost: `graft.Probe QSUMBENCH` (12M rows, sf0.1 × 20, warm) measures
-  * 1.08 s fixed-point vs 1.06 s plain double sum — ~2%; the floor+long
-  * path stays inside whole-stage codegen. */
+  * Cost: a QSUMBENCH microbenchmark (12M rows, sf0.1 × 20, warm; a Probe
+  * mode until commit 83bfbf8 removed it) measured 1.08 s fixed-point vs
+  * 1.06 s plain double sum — ~2%; the floor+long path stays inside
+  * whole-stage codegen. */
 object FixedPoint {
   private def p(bits: Int): Double = (1L << bits).toDouble
 

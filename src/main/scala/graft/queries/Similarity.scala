@@ -1761,8 +1761,9 @@ object Similarity {
     // ---- beam-width/recall sweep (VERDICT r10 #8) — the tuning curve an
     // ANN operator publishes before picking a serving beam: the SAME
     // 3-round search at beam 2 / 4 / 8 over the one committed kNN-graph
-    // layout, final-round stats per width, all in ONE action cascade (the
-    // tx_bpe_sweep shape). Recall is monotone in beam width — a wider beam
+    // layout, final-round stats per width in one frame (the tx_bpe_sweep
+    // shape); under AQE each round's lazy cut runs its frame's stages at
+    // the call, not at the final action. Recall is monotone in beam width — a wider beam
     // keeps a superset of scored candidates every round (spec-pinned) —
     // and the candidate budget column makes the recall-vs-work trade
     // explicit in-row.

@@ -2,7 +2,7 @@ package graft
 
 import org.apache.spark.sql.functions._
 import org.scalatest.funsuite.AnyFunSuite
-import graft.engine.Commits
+import graft.engine.{Commits, Telemetry}
 
 /** Drives the optimistic-concurrency commit protocol's interleavings
   * directly (the etl_commit_conflict face audits the same properties from
@@ -500,10 +500,10 @@ class CommitsSpec extends AnyFunSuite with SharedSparkSpec {
     val t = freshTable()
     Commits.init(t, Commits.stage(df(0 until 10), t, "base"))
     Commits.commitAppend(t, 1, Seq(Commits.stage(df(10 until 15), t, "w2")))
-    assert(jobsDuring(Commits.read(spark, t).schema) == 0)
-    assert(jobsDuring(Commits.read(spark, t, 1).schema) == 0)
+    assert(Telemetry.during(spark)(Commits.read(spark, t).schema).jobs == 0)
+    assert(Telemetry.during(spark)(Commits.read(spark, t, 1).schema).jobs == 0)
     // control: the listener does see the inference job of a schema-less read
-    assert(jobsDuring(spark.read.parquet(Commits.snapshotFiles(t, 2): _*).schema) >= 1)
+    assert(Telemetry.during(spark)(spark.read.parquet(Commits.snapshotFiles(t, 2): _*).schema).jobs >= 1)
     assert(Commits.read(spark, t).count() == 15 && Commits.read(spark, t, 1).count() == 10)
   }
 

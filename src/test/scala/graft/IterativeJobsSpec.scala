@@ -1,6 +1,7 @@
 package graft
 
 import org.scalatest.funsuite.AnyFunSuite
+import graft.engine.Telemetry
 
 /** Job-count pins for the two iterative queries of the perfbench catalog
   * workload, whose time is mostly the fixed cost of each Spark job.
@@ -20,7 +21,7 @@ class IterativeJobsSpec extends AnyFunSuite with SharedSparkSpec {
     * publishes the query's /tmp layouts. */
   private def counts(body: => Unit): Seq[Int] = {
     body
-    (1 to runs).map(_ => jobsDuring(body))
+    (1 to runs).map(_ => Telemetry.during(spark)(body).jobs)
   }
 
   test("graph_kcore: function + noop write runs at most 17 jobs (sf0.01)") {

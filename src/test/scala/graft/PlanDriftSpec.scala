@@ -102,8 +102,9 @@ class PlanDriftSpec extends AnyFunSuite with SharedSparkSpec {
     "graph_jaccard_linkpred" -> Seq(2, 0, 0, 0, 0, 2, 0, 0),
     "graph_betweenness" -> Seq(0, 0, 0, 0, 0, 1, 0, 0),
     "st_exactly_once_sink" -> Seq(0, 0, 0, 1, 0, 0, 0, 5),
-    // r11 additions: the fused kcore (one action cascade — counter
-    // crossJoins over checkpointed rounds), the layout-read prefix
+    // r11 additions: the fused kcore (one grouped counter aggregate
+    // over lazily cut rounds, whose stages run at each cut under AQE,
+    // so the pin counts only the final plan), the layout-read prefix
     // filter, the kNN-graph search family, two-level Louvain, and the
     // CDC table's two readers
     "dd_prefix_filter" -> Seq(4, 0, 0, 1, 0, 2, 1, 1),

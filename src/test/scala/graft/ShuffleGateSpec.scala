@@ -2,7 +2,7 @@ package graft
 
 import org.apache.spark.sql.functions._
 import org.scalatest.funsuite.AnyFunSuite
-import graft.engine.Tables
+import graft.engine.{Tables, Telemetry}
 
 /** Shuffle-volume REGRESSION GATE (VERDICT r6 item 8): SHUFFLE.md is a
   * snapshot, this is the tripwire. For a pinned subset of relational
@@ -18,15 +18,14 @@ import graft.engine.Tables
   * pruned scans of ~1 MB files read a few KB), which would make a ratio
   * gate an artifact detector. Volumes are data-byte counts, not timings:
   * stable under load, no flake surface. Measured on the shared local[4]
-  * test session via ShuffleAudit.Meter (the instrument behind SHUFFLE.md).
+  * test session by `Telemetry.during`, which counts the measured call's
+  * job group only (suites share the session and run in parallel).
   */
 class ShuffleGateSpec extends AnyFunSuite with SharedSparkSpec {
-  private lazy val meter = new ShuffleAudit.Meter(spark)
   private val d = "/root/testdata/sf0.01"
 
-  private def measureQuery(name: String): ShuffleAudit.Volumes = {
-    val v = meter.measure(
-      SparkEntry.queries(name)(spark, d).write.format("noop").mode("overwrite").save())
+  private def measure(df: => org.apache.spark.sql.DataFrame): Telemetry.Run = {
+    val v = Telemetry.during(spark)(df.write.format("noop").mode("overwrite").save())
     spark.sharedState.cacheManager.clearCache()
     v
   }
@@ -50,13 +49,14 @@ class ShuffleGateSpec extends AnyFunSuite with SharedSparkSpec {
 
   test("pinned relational queries stay under their shuffle:input ratio bounds") {
     for ((name, bound) <- bounds) {
-      val v = measureQuery(name)
-      info(f"$name%-20s in=${v.inputMB}%8.3f MB shuffleW=${v.shuffleWriteMB}%8.3f MB (bound $bound MB)")
-      assert(v.inputMB > 0, s"$name read nothing — measurement broken")
-      assert(v.shuffleWriteMB <= bound,
-        s"$name shuffled ${v.shuffleWriteMB} MB, over the pinned ${bound} MB — " +
+      val v = measure(SparkEntry.queries(name)(spark, d))
+      val (in, shuffleW) = (Telemetry.mb(v.inputBytes), Telemetry.mb(v.shuffleWriteBytes))
+      info(f"$name%-20s in=$in%8.3f MB shuffleW=$shuffleW%8.3f MB (bound $bound MB)")
+      assert(in > 0, s"$name read nothing — measurement broken")
+      assert(shuffleW <= bound,
+        s"$name shuffled $shuffleW MB, over the pinned ${bound} MB — " +
           "a join lost its broadcast or an aggregation lost its partial step")
-      assert(v.spilledMB == 0.0, s"$name spilled ${v.spilledMB} MB to disk")
+      assert(v.spillBytes == 0L, s"$name spilled ${Telemetry.mb(v.spillBytes)} MB to disk")
     }
   }
 
@@ -82,12 +82,12 @@ class ShuffleGateSpec extends AnyFunSuite with SharedSparkSpec {
         .join(n, s("s_nationkey") === n("n_nationkey"))
         .groupBy(col("n_name"))
         .agg(sum(col("l_extendedprice") * (lit(1.0) - col("l_discount"))).as("revenue"))
-      val v = meter.measure(broken.write.format("noop").mode("overwrite").save())
-      spark.sharedState.cacheManager.clearCache()
-      info(f"broken-broadcast q5 shape: in=${v.inputMB}%8.3f MB shuffleW=${v.shuffleWriteMB}%8.3f MB")
+      val v = measure(broken)
+      val (in, shuffleW) = (Telemetry.mb(v.inputBytes), Telemetry.mb(v.shuffleWriteBytes))
+      info(f"broken-broadcast q5 shape: in=$in%8.3f MB shuffleW=$shuffleW%8.3f MB")
       val bound = bounds.toMap.apply("q5_region_volume")
-      assert(v.shuffleWriteMB > bound,
-        s"un-broadcast 5-way join shuffled ${v.shuffleWriteMB} MB, NOT over the $bound MB gate — gate is toothless")
+      assert(shuffleW > bound,
+        s"un-broadcast 5-way join shuffled $shuffleW MB, NOT over the $bound MB gate — gate is toothless")
     } finally {
       def restore(key: String, v: Option[String]): Unit =
         v match { case Some(x) => conf.set(key, x); case None => conf.unset(key) }

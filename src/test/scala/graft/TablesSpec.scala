@@ -4,16 +4,16 @@ import java.io.File
 
 import org.scalatest.funsuite.AnyFunSuite
 
-import graft.engine.{Layouts, Tables}
+import graft.engine.{Layouts, Tables, Telemetry}
 
 /** `Tables.parquet` opens a parquet table from one footer read on the
   * driver instead of Spark's one-task schema-inference job. Its contract is
   * that nothing else changes: the schema is the one `spark.read.parquet`
   * infers (same footer, same converter flags), no Spark job runs, the
   * `events` nanos branch of `Tables.load` still fires, and a table
-  * rewritten in place is seen at once (there is no cache). The last test
-  * keeps base tables, committed layouts and commit-log snapshots on that
-  * one path.
+  * rewritten in place is seen at once (there is no cache). The source
+  * scans keep base tables, committed layouts and commit-log snapshots on
+  * that one path, and keep `Telemetry` scopes out of engine code.
   */
 class TablesSpec extends AnyFunSuite with SharedSparkSpec {
   private val sfs = Seq("/root/testdata/sf0.001", "/root/testdata/sf0.01")
@@ -52,9 +52,9 @@ class TablesSpec extends AnyFunSuite with SharedSparkSpec {
 
   test("(b) Tables.load opens all ten tables without a Spark job") {
     val d = sfs.head
-    assert(jobsDuring(Tables.names.foreach(n => Tables.load(spark, d, n).schema)) == 0)
+    assert(Telemetry.during(spark)(Tables.names.foreach(n => Tables.load(spark, d, n).schema)).jobs == 0)
     // control: the listener does see a schema-inference job
-    assert(jobsDuring(spark.read.parquet(s"$d/orders.parquet").schema) >= 1)
+    assert(Telemetry.during(spark)(spark.read.parquet(s"$d/orders.parquet").schema).jobs >= 1)
   }
 
   test("(c) Tables.load floors a TIMESTAMP(NANOS) events.ts to microseconds") {
@@ -110,7 +110,7 @@ class TablesSpec extends AnyFunSuite with SharedSparkSpec {
       val path = Layouts.path(d, "graph/symnodes")
       graft.queries.Graph.nodeCount(spark, d) // publishes the layout on first use
       var n = -1L
-      assert(jobsDuring { n = graft.queries.Graph.nodeCount(spark, d) } == 0, d)
+      assert(Telemetry.during(spark) { n = graft.queries.Graph.nodeCount(spark, d) }.jobs == 0, d)
       assert(n == spark.read.parquet(path).count(), d)
       assert(n > 0, d)
     }
@@ -151,5 +151,15 @@ class TablesSpec extends AnyFunSuite with SharedSparkSpec {
     val inCommits = sites(".read.parquet(").filter(_._1 == "engine/Commits.scala")
     assert(inCommits.isEmpty,
       s"Commits opens parquet without Tables.parquet: ${inCommits.mkString("; ")}")
+  }
+
+  test("no query, streaming or engine code opens a Telemetry scope") {
+    // a nested job group takes a call's jobs away from a caller that
+    // attributes them by its own group
+    val scoped = sites("Telemetry.").filter { case (f, _) =>
+      f.startsWith("queries/") || f.startsWith("streaming/") ||
+        (f.startsWith("engine/") && f != "engine/Telemetry.scala")
+    }
+    assert(scoped.isEmpty, s"Telemetry used outside mains: ${scoped.mkString("; ")}")
   }
 }

@@ -16,9 +16,12 @@ in-bench 1.26 s (isolated median 0.72) and dd_winnowing at 2.07 (isolated
 caught. The budget is therefore the PER-QUERY MEDIAN across at least two
 quiet runs (for an even count, the lower-middle: ties err toward the
 tighter budget); a query present in only some runs (a face added between
-them) takes the median of the runs that have it. Regenerate ONLY from
-quiet fresh-layout runs (retried should be empty or tiny) and review the
-diff like any plan change.
+them) takes the median of the runs that have it. Each run's `warm` is
+already the median of graft.Bench's three warm passes; regenerate ONLY
+from quiet fresh-layout runs and review the diff like any plan change. A
+quiet run has narrow per-query warm_max - warm_min spreads: the script
+prints, per run, how many queries of >= 0.2 s spread by more than 10% of
+their warm time, and the widest of them.
 """
 import argparse
 import json
@@ -35,13 +38,18 @@ def main() -> None:
         print("WARNING: single-run freeze — transients become budgets (VERDICT r13 #2); pass >=2 quiet runs")
 
     per_query: dict[str, list[float]] = {}
-    retried: set[str] = set()
     for path in args.details:
         with open(path) as f:
             detail = json.load(f)
+        wide = []
         for q in detail["queries"]:
             per_query.setdefault(q["name"], []).append(q["warm"])
-        retried.update(detail.get("retried", []))
+            spread = q["warm_max"] - q["warm_min"]
+            if q["warm"] >= 0.2 and spread > 0.1 * q["warm"]:
+                wide.append((spread / q["warm"], q["name"]))
+        wide.sort(reverse=True)
+        print(f"{path}: {len(wide)} queries >= 0.2 s spread > 10% of warm; widest: "
+              + ", ".join(f"{n} {r:.0%}" for r, n in wide[:5]))
 
     doc = {
         "_sf": args.sf,
@@ -50,8 +58,6 @@ def main() -> None:
                   f"{len(args.details)} quiet run(s); Bench flags warm > 1.5x the "
                   "inflation-adjusted budget with 0.75 s absolute excess"),
     }
-    if retried:
-        doc["_retried_at_generation"] = sorted(retried)
     for name in sorted(per_query):
         times = sorted(per_query[name])
         doc[name] = round(times[(len(times) - 1) // 2], 3)
