@@ -66,7 +66,7 @@ object PlanDump {
       "explode into one (gram → distinct-doc) hash-agg, then a gram-key shuffle join " +
       "back and a per-doc re-aggregate — fact⋈dim layout, never doc×doc."),
     "layout_file_skipping" -> ("File-stats data skipping: the scan's InMemoryFileIndex " +
-      "lists ONLY the manifest-surviving files (subset of the 8-file layout); the exact " +
+      "lists ONLY the footer-surviving files (subset of the 8-file layout); the exact " +
       "band predicate still pushes down within them."),
     "pp_dynamic_pruning" -> ("Dynamic partition pruning: the era predicate on the year dim " +
       "becomes a dynamicpruning subquery in the fact scan's PartitionFilters — the year " +
@@ -517,7 +517,8 @@ object PlanDump {
     sb.append("at 100 TB.\n\n")
     sb.append("Expression-level note: `Vectors.cosine` dispatches to the native fused\n")
     sb.append("`cosine_sim` Catalyst expression (one codegen'd loop for dot + both\n")
-    sb.append("norms). `graft.Probe COSBENCH` (800k pairs × 64 dims, sf0.01, warm)\n")
+    sb.append("norms). The `COSBENCH` Probe mode (800k pairs × 64 dims, sf0.01, warm;\n")
+    sb.append("last present in commit c68a309, removed in the commit after it)\n")
     sb.append("measures ~5× over the composed three-fold form: 0.21s vs 1.06s —\n")
     sb.append("every similarity/k-NN/near-dup query inherits this.\n")
     for ((name, note) <- picks) {

@@ -64,12 +64,7 @@ object Layouts {
 
   /** The path of layout `name` of `d`, published by `build` if absent. */
   def publish(s: SparkSession, d: String, name: String)(build: String => Unit): String =
-    publishAt(s, path(d, name))(build)
-
-  /** [[publish]] at a path derived from a published layout's (a stats
-    * manifest beside its table). */
-  private[engine] def publishAt(s: SparkSession, path: String)(build: String => Unit): String =
-    publishWith(path, p => s.catalog.refreshByPath(p))(build)
+    publishWith(path(d, name), p => s.catalog.refreshByPath(p))(build)
 
   /** The commit rule, with the listing refresh passed in (tests run it
     * without a session). Returns `path` at once if it exists. Otherwise

@@ -90,8 +90,7 @@ object PageRank {
     // route Graph.nodeHintGate's footer-exact node count here) and the
     // loop runs co-partitioned on the node key instead. PlanQualitySpec
     // reads the loop's joins in one visible plan under Materialize.unrolled.
-    def hinted(df: DataFrame): DataFrame =
-      if (trackDeltas || !broadcastState) df else broadcast(df)
+    val hinted = Broadcasts.hint(broadcastState && !trackDeltas) _
     var ranks = Materialize.cut(nodes.withColumn("rank", lit(1.0)), eager = trackDeltas)
     val deltas = Seq.newBuilder[Double]
     for (_ <- 1 to rounds) {

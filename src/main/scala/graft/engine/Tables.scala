@@ -4,9 +4,12 @@ import scala.jdk.CollectionConverters._
 
 import org.apache.hadoop.conf.Configuration
 import org.apache.hadoop.fs.{FileStatus, Path}
+import org.apache.parquet.column.statistics.Statistics
 import org.apache.parquet.format.converter.ParquetMetadataConverter.{NO_FILTER, SKIP_ROW_GROUPS}
 import org.apache.parquet.hadoop.Footer
+import org.apache.parquet.hadoop.metadata.{ColumnChunkMetaData, ParquetMetadata}
 import org.apache.parquet.hadoop.util.HadoopInputFile
+import org.apache.parquet.schema.LogicalTypeAnnotation.IntLogicalTypeAnnotation
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.execution.datasources.parquet.{ParquetFileFormat, ParquetFooterReader, ParquetToSparkSchemaConverter}
 
@@ -25,20 +28,6 @@ object Tables {
   val names: Seq[String] = Seq(
     "region", "nation", "customer", "supplier", "part",
     "orders", "lineitem", "events", "documents", "embeddings")
-
-  /** On-disk parquet bytes of table `name` under `sfDir` (single file or
-    * directory of part-files) — the no-Spark-job size probe behind the
-    * scaled-table broadcast-hint gates (Similarity.embRowsUpperBound
-    * among them). 0 for a missing
-    * table, which every gate treats as "small" (hint stands — the
-    * test-data layout always materializes the table it reads). */
-  def bytesOnDisk(sfDir: String, name: String): Long = {
-    val f = new java.io.File(sfDir, s"$name.parquet")
-    if (f.isFile) f.length()
-    else Option(f.listFiles())
-      .map(_.filter(_.getName.endsWith(".parquet")).map(_.length()).sum)
-      .getOrElse(0L)
-  }
 
   def load(spark: SparkSession, sfDir: String, name: String): DataFrame = {
     // events.ts has shipped as parquet TIMESTAMP(NANOS) in some data drops
@@ -87,12 +76,46 @@ object Tables {
 
   /** Exact row count of the parquet table at `path` with no Spark job: the
     * sum of the row-group row counts in its data files' footers. */
-  def rowCount(s: SparkSession, path: String): Long = {
+  def rowCount(s: SparkSession, path: String): Long =
+    footers(s, path).map(_._2.getBlocks.asScala.map(_.getRowCount).sum).sum
+
+  /** Per data file of the parquet table at `path`, sorted by path: the
+    * file and the [min, max] of numeric column `column` over its row
+    * groups, from footer statistics, with no Spark job. None when the
+    * footer cannot bound the column (a row group with no min/max, only
+    * nulls, or a non-numeric, decimal or unsigned type): such a file must
+    * count as holding any value. */
+  def ranges(s: SparkSession, path: String,
+      column: String): Seq[(String, Option[(Double, Double)])] =
+    footers(s, path).map { case (f, footer) =>
+      val groups = footer.getBlocks.asScala.toSeq.map(_.getColumns.asScala
+        .find(_.getPath.toDotString == column).flatMap(numericRange))
+      f.getPath.toString ->
+        (if (groups.nonEmpty && groups.forall(_.isDefined))
+          Some((groups.flatten.map(_._1).min, groups.flatten.map(_._2).max))
+        else None)
+    }
+
+  private def numericRange(c: ColumnChunkMetaData): Option[(Double, Double)] = {
+    val st: Statistics[_] = c.getStatistics
+    val signed = c.getPrimitiveType.getLogicalTypeAnnotation match {
+      case null => true
+      case i: IntLogicalTypeAnnotation => i.isSigned
+      case _ => false
+    }
+    if (!signed || st == null || st.isEmpty || !st.hasNonNullValue) None
+    else (st.genericGetMin, st.genericGetMax) match {
+      case (lo: Number, hi: Number) => Some((lo.doubleValue, hi.doubleValue))
+      case _ => None
+    }
+  }
+
+  /** The data files under `path` (summaries skipped) with their full
+    * footers. */
+  private def footers(s: SparkSession, path: String): Seq[(FileStatus, ParquetMetadata)] = {
     val conf = s.sessionState.newHadoopConf()
     leaves(conf, Seq(path)).filterNot(f => summaries.contains(f.getPath.getName))
-      .map(f => ParquetFooterReader.readFooter(HadoopInputFile.fromStatus(f, conf), NO_FILTER)
-        .getBlocks.asScala.map(_.getRowCount).sum)
-      .sum
+      .map(f => f -> ParquetFooterReader.readFooter(HadoopInputFile.fromStatus(f, conf), NO_FILTER))
   }
 
   private val summaries = Seq("_common_metadata", "_metadata")

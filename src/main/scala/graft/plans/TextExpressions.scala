@@ -25,8 +25,9 @@ import org.apache.spark.unsafe.types.UTF8String
   * UTF8String allocation per CHARACTER) plus two nested interpreted lambda
   * evaluators per token. This expression is a single scan over the UTF-16
   * units inside whole-stage codegen — measured 18× faster on a 200k-doc
-  * corpus (`graft.Probe <sfdir> HASHBENCH`: composed 9.3 s vs native 0.51 s
-  * steady-state), which on a trillion-token corpus is the difference between
+  * corpus (composed 9.3 s vs native 0.51 s steady-state, by the
+  * `HASHBENCH` Probe mode, last present in commit c68a309 and removed in
+  * the commit after it), which on a trillion-token corpus is the difference between
   * a week and half a day for the signature stage.
   */
 case class TokenHashes(child: Expression) extends UnaryExpression
@@ -57,7 +58,8 @@ case class TokenHashes(child: Expression) extends UnaryExpression
   * component j = min over shingles of (a_j·s + b_j) mod P with
   * a_j = 2654435761·(j+1) mod P, b_j = (j·40503 + 17) mod P; fewer than 3
   * tokens → all components NULL. Measured 56× on a 200k-doc corpus
-  * (`graft.Probe <sfdir> SIGBENCH`): composed 31.6 s vs native sub-second —
+  * (the `SIGBENCH` Probe mode, last present in commit c68a309 and removed
+  * in the commit after it): composed 31.6 s vs native sub-second —
   * the dominant cost of the LSH dedup pipeline at corpus scale.
   */
 case class MinHashSig(child: Expression) extends UnaryExpression {

@@ -83,8 +83,9 @@ object Dedup {
     * token/shingle columns or lambda trees. Semantics identical to the
     * composed `minhashSigFromShingles(shinglesFromHashes(tokenHashes))`
     * (property-checked in PlansSpec); measured 56× on the signature stage
-    * (`Probe SIGBENCH`). The staging-contract concern (TextFunctions) is
-    * moot here — a native expression evaluates once wherever it sits. */
+    * (the `SIGBENCH` Probe mode, last present in commit c68a309). The
+    * staging-contract concern (TextFunctions) is moot here — a native
+    * expression evaluates once wherever it sits. */
   private def stagedSigs(docs: DataFrame): DataFrame =
     docs.select(col("doc_id"),
       graft.plans.GraftExtensions.minhashSig(T.tokenHashes(col("text"))).as("sig"))

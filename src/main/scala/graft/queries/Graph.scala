@@ -3,7 +3,7 @@ package graft.queries
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.expressions.Window
-import graft.engine.{FixedPoint => FP, Materialize, Tables}
+import graft.engine.{Broadcasts, FixedPoint => FP, Materialize, Tables}
 import graft.engine.Tables.{load => t}
 
 /** Graph-shaped analytics over the star schema: the customer→supplier
@@ -111,13 +111,15 @@ object Graph {
     * load-bearing for level 2's singleton start). All lookup sides
     * (node→comm map, degrees, community totals) are node-/community-
     * bounded and broadcast ONLY below the caller's nodeHintGate decision
-    * (`hint`, r12 #1 — above it every lookup joins co-partitioned); the
-    * only data-sized frame is the tagged edge set, hash-aggregated once.
+    * (`broadcastState`, r12 #1 — above it every lookup joins
+    * co-partitioned); the only data-sized frame is the tagged edge set,
+    * hash-aggregated once.
     * Returns (post-move tagged edges — reused by the contraction,
     * cached) and the 1-row stats frame. */
   private def louvainPass(e: DataFrame, comm: DataFrame, twoM: DataFrame,
                           level: Int,
-                          hint: DataFrame => DataFrame): (DataFrame, DataFrame) = {
+                          broadcastState: Boolean): (DataFrame, DataFrame) = {
+    val hint = Broadcasts.hint(broadcastState) _
     def tagged(cm: DataFrame) = e
       .join(hint(cm.select(col("node").as("src"), col("comm").as("ca"))), "src")
       .join(hint(cm.select(col("node").as("dst"), col("comm").as("cb"))), "dst")
@@ -180,31 +182,18 @@ object Graph {
   private val louvainStatsCols = Seq("level", "n_moved", "sum_gain_scaled",
     "n_comm_before", "n_comm_after", "q_before", "q_after")
 
-  /** Max state rows (sources × nodes) the betweenness loop may BROADCAST:
-    * ~4e6 rows ≈ 64 MB serialized — comfortably inside executor memory
-    * and the 8 GB broadcast cap with a wide margin for the estimate's
-    * slack. Above it the loop runs co-partitioned. */
-  private[graft] val BcStateRowLimit = 4000000L
-
   /** Shared gate for every NODE-sized broadcast hint in the iterative
-    * graph closures (VERDICT r12 #1): true while the committed node
-    * layout's exact row count fits the broadcast budget. An explicit
-    * `broadcast()` hint OVERRIDES AQE's size-based fallback, so an
-    * ungated hint on a node-sized frame is a 100×-scale failure (driver
-    * OOM / the 8 GB broadcast cap) where the unhinted plan would merely
-    * shuffle — the exact defect r11 closed for betweenness. Every face
-    * that hints a node-bounded state frame (scc coloring, lpa, the
-    * louvain passes, the two rank loops) must route the hint through
-    * this gate; above it the loop runs co-partitioned on the node key.
-    * The count is EXACT (ADVICE r11: a bytes-derived estimate could
-    * undercount under dictionary/delta encodings and let the gate
-    * broadcast oversized state) and costs zero Spark jobs: it sums the
-    * row-group row counts in the committed node layout's footers. */
+    * graph closures: true while the committed node layout's exact row
+    * count fits [[Broadcasts.NodeStateRows]]. Every face that hints a
+    * node-bounded state frame (scc coloring, lpa, kcore, the louvain
+    * passes, the two rank loops) routes the hint through this gate; above
+    * it the loop runs co-partitioned on the node key. The count is EXACT
+    * (a bytes-derived estimate could undercount under dictionary/delta
+    * encodings and let the gate broadcast oversized state) and costs zero
+    * Spark jobs: it sums the row-group row counts in the node layout's
+    * footers. */
   private[graft] def nodeHintGate(s: SparkSession, d: String): Boolean =
-    nodeCount(s, d) <= BcStateRowLimit
-
-  private[graft] def nodeCount(s: SparkSession, d: String): Long =
-    Tables.rowCount(s, nodesPath(s, d))
+    Broadcasts.fits(s, nodesPath(s, d), Broadcasts.NodeStateRows)
 
   /** The sampled-bounded Brandes plan (graph_betweenness), parameterized
     * by whether the O(sources × nodes) state frames carry broadcast hints
@@ -215,7 +204,7 @@ object Graph {
     * and the plans' join strategies. */
   private[graft] def betweennessPlan(adj: DataFrame, sources: DataFrame,
                                      broadcastState: Boolean): DataFrame = {
-    def hint(df: DataFrame): DataFrame = if (broadcastState) broadcast(df) else df
+    val hint = Broadcasts.hint(broadcastState) _
     // LAZY cuts throughout: eager ones measured 16.6 s median at sf0.1,
     // lazy ones 5.9 s, and the broadcast hints finish the job (3.0 s).
     // A lazy cut is not deferred to the final action under AQE: it still
@@ -307,7 +296,7 @@ object Graph {
     * with both sides moving; +Q with one side). */
   private[graft] def louvainMoveAt(s: SparkSession, d: String,
                                    broadcastState: Boolean): DataFrame = {
-    def hint(df: DataFrame): DataFrame = if (broadcastState) broadcast(df) else df
+    val hint = Broadcasts.hint(broadcastState) _
     val e = symEdges(s, d)
     val comm = t(s, d, "customer")
         .select((col("c_custkey") * 2).as("node"),
@@ -389,7 +378,7 @@ object Graph {
   private[graft] def kcoreAt(s: SparkSession, d: String,
                              broadcastState: Boolean): DataFrame = {
     import s.implicits._
-    def hint(df: DataFrame): DataFrame = if (broadcastState) broadcast(df) else df
+    val hint = Broadcasts.hint(broadcastState) _
     var e = Materialize.cut(symEdges(s, d), eager = true)
     val counters = (1 to 5).flatMap { round =>
       val keep = Materialize.cut(e.groupBy("src").agg(count(lit(1)).as("deg"))
@@ -419,7 +408,7 @@ object Graph {
     * co-partitioned with the adjacency — the engine.PageRank layout. */
   private[graft] def lpaAt(s: SparkSession, d: String,
                            broadcastState: Boolean): DataFrame = {
-    def hint(df: DataFrame): DataFrame = if (broadcastState) broadcast(df) else df
+    val hint = Broadcasts.hint(broadcastState) _
     // ONE src-keyed exchange up front, checkpointed (OPTIMIZATION r15,
     // guide §2.4 "share one exchange"): hash(src) is preserved through
     // the checkpoint (LogicalRDD keeps outputPartitioning) and SATISFIES
@@ -478,7 +467,7 @@ object Graph {
                                    phases: Int = 2): DataFrame = {
     val R = 4
     val Phases = phases
-    def hint(df: DataFrame): DataFrame = if (broadcastState) broadcast(df) else df
+    val hint = Broadcasts.hint(broadcastState) _
     val de0 = Materialize.cut(dirEdges(s, d), eager = true)
     val nodes = Materialize.cut(de0.select(col("src").as("node"))
       .union(de0.select(col("dst").as("node"))).distinct(), eager = false)
@@ -595,7 +584,7 @@ object Graph {
   }
 
   /** The distinct node ids of the symmetric edge frame, committed per sf. */
-  private def nodesPath(s: SparkSession, d: String): String =
+  private[graft] def nodesPath(s: SparkSession, d: String): String =
     graft.engine.Layouts.publish(s, d, "graph/symnodes") { out =>
       val e = symEdges(s, d)
       e.select(col("src").as("node")).union(e.select(col("dst").as("node")))
@@ -1111,16 +1100,15 @@ object Graph {
       val twoM = e1.agg(sum("w").as("two_m"))
       // node-sized lookup hints gated (r12 #1); the gate decision is
       // per-snapshot, shared by both levels
-      val hint: DataFrame => DataFrame =
-        if (nodeHintGate(s, d)) df => broadcast(df) else identity
-      val (tgn1, st1) = louvainPass(e1, comm1, twoM, level = 1, hint)
+      val bc = nodeHintGate(s, d)
+      val (tgn1, st1) = louvainPass(e1, comm1, twoM, level = 1, bc)
       // contraction: endpoints mapped to their post-move communities, one
       // weight-sum groupBy; tgn1 already carries the mapped endpoints
       val e2 = Materialize.cut(tgn1.groupBy(col("ca").as("src"), col("cb").as("dst"))
         .agg(sum("w").as("w")), eager = false)
       val comm2 = e2.select(col("src").as("node")).distinct()
         .select(col("node"), col("node").as("comm"))
-      val (_, st2) = louvainPass(e2, comm2, twoM, level = 2, hint)
+      val (_, st2) = louvainPass(e2, comm2, twoM, level = 2, bc)
       st1.union(st2)
         .select(louvainStatsCols.map(col): _*).orderBy("level")
     }),
@@ -1153,14 +1141,13 @@ object Graph {
             col("s_nationkey").cast("long").as("comm")))
       val twoM = e.agg(sum("w").as("two_m"))
       // node-sized lookup hints gated (r12 #1), shared by every level
-      val hint: DataFrame => DataFrame =
-        if (nodeHintGate(s, d)) df => broadcast(df) else identity
+      val bc = nodeHintGate(s, d)
       val rows = scala.collection.mutable.ArrayBuffer.empty[org.apache.spark.sql.Row]
       var schema: org.apache.spark.sql.types.StructType = null
       var level = 1
       var continue = true
       while (continue && level <= maxLevels) {
-        val (tgn, stats) = louvainPass(e, comm, twoM, level, hint)
+        val (tgn, stats) = louvainPass(e, comm, twoM, level, bc)
         schema = stats.schema
         val row = stats.collect().head // the level's ONE action cascade
         rows += row
@@ -1255,15 +1242,15 @@ object Graph {
       val sources = t(s, d, "supplier").filter(col("s_nationkey") === 3)
         .select((col("s_suppkey") * 2 + 1).as("node"))
         .orderBy("node").limit(4)
-      // broadcast the state frames only while the O(sources × nodes)
-      // estimate fits the broadcast budget (VERDICT r10 #5): above it the
+      // broadcast the state frames only while the 4 sources × nodes
+      // state fits the node-state budget (VERDICT r10 #5): above it the
       // frontier/visited/delta frames join the adjacency CO-PARTITIONED
       // on the node key instead — same results (PlanQualitySpec pins
       // both), the plan just trades per-round broadcasts for shuffles the
       // way a true 100 TB-node run must. The node count costs zero Spark
       // jobs (the node layout's footers, as in nodeHintGate).
-      betweennessPlan(adj, sources,
-        broadcastState = 4L * nodeCount(s, d) <= BcStateRowLimit)
+      betweennessPlan(adj, sources, broadcastState =
+        Broadcasts.fits(s, nodesPath(s, d), Broadcasts.NodeStateRows / 4))
     }),
 
     // ---- deterministic random-walk corpus (DeepWalk / node2vec, the
@@ -1359,7 +1346,7 @@ object Graph {
     * co-partitioned on the node key. */
   private[graft] def pprAt(s: SparkSession, d: String,
                            broadcastState: Boolean): DataFrame = {
-    def hint(df: DataFrame): DataFrame = if (broadcastState) broadcast(df) else df
+    val hint = Broadcasts.hint(broadcastState) _
     val W = weightedLayout(s, d)
     val nodes = nodesLayout(s, d)
     val seeds = t(s, d, "customer").filter(col("c_nationkey") === 3)

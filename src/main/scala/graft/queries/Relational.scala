@@ -3,7 +3,8 @@ package graft.queries
 import org.apache.spark.sql.{Column, DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.expressions.Window
-import graft.engine.{FixedPoint => FP, Materialize, Tables}
+import graft.engine.{Broadcasts, FixedPoint => FP, Materialize}
+import graft.engine.Broadcasts.hint
 import graft.engine.Tables.{load => t}
 
 /** Core relational operator catalog — SURVEY.md §2.2 (projections/filters),
@@ -25,34 +26,20 @@ object Relational {
   type Q = (SparkSession, String) => DataFrame
   private def r4(c: Column) = round(c, 4)
 
-  /** Max on-disk parquet bytes at which a SCALED table (or a frame derived
-    * from one) may carry an explicit broadcast hint: 256 MB on disk is
-    * ≲1-2 GB deserialized — comfortably inside executor memory and the
-    * 8 GB broadcast cap. */
-  private[graft] val BcTableByteLimit = 256L << 20
-
-  /** Broadcast-hint gate for SCALED join sides — the relational edition
-    * of Graph.nodeHintGate / Similarity.embHintGate (the ungated-hint
-    * class VERDICT r12/r13 found twice, closed here proactively): TPC-H
-    * customer / supplier / part GROW with scale factor, so an explicit
-    * hint on them — or on a frame derived from them (supplier⋈nation,
-    * a p_type slice) — overrides AQE's size-based fallback exactly where
-    * it must not. Below [[BcTableByteLimit]] of the BASE table's on-disk
-    * bytes the hint stands (the star-join shape every TPC-H plan wants at
-    * bench scale — PlanDriftSpec's fingerprints are taken below the
-    * gate); above it the hint is dropped and Catalyst's stats-based
-    * choice decides: broadcast while the actual side is genuinely small,
-    * shuffle beyond. Keying on the BASE table over-counts filtered
-    * slices, which errs toward shuffling — the established direction.
-    * nation (25 rows) and region (5) are constant at EVERY scale factor
-    * per the TPC-H spec, so their hints stay unconditional, as do 1-row /
-    * group-count-sized aggregate frames. PlanQualitySpec pins both
-    * shapes and gate-independent results on the q3 representative. */
-  private[graft] def scaledHintOn(d: String, table: String): Boolean =
-    Tables.bytesOnDisk(d, table) <= BcTableByteLimit
-
-  private def scaledHint(d: String, table: String)(df: DataFrame): DataFrame =
-    if (scaledHintOn(d, table)) broadcast(df) else df
+  /** Broadcast-hint gate for SCALED join sides (the relational edition of
+    * Graph.nodeHintGate / Similarity.embHintGate): TPC-H customer /
+    * supplier / part GROW with scale factor, so a hint on them, or on a
+    * frame derived from one (supplier⋈nation, a p_type slice), routes
+    * through [[Broadcasts.fits]] on the BASE table's exact row count
+    * against [[Broadcasts.TableRows]]. Below it the hint stands (the
+    * star-join shape every TPC-H plan wants at bench scale —
+    * PlanDriftSpec's fingerprints are taken below the gate). nation (25
+    * rows) and region (5) are constant at EVERY scale factor per the
+    * TPC-H spec, so their hints stay unconditional, as do 1-row /
+    * group-count-sized aggregate frames. PlanQualitySpec pins both shapes
+    * and gate-independent results on the q3 representative. */
+  private[graft] def scaledHintOn(s: SparkSession, d: String, table: String): Boolean =
+    Broadcasts.fits(s, s"$d/$table.parquet", Broadcasts.TableRows)
 
   /** q3_shipping_priority at an explicit gate decision (the
     * Graph.rankConvergedAt precedent) — the representative PlanQualitySpec
@@ -61,7 +48,7 @@ object Relational {
     val c = t(s, d, "customer").filter(col("c_mktsegment") === "BUILDING")
     val o = t(s, d, "orders")
     val l = t(s, d, "lineitem")
-    val ch = if (hinted) broadcast(c) else c
+    val ch = hint(hinted)(c)
     l.join(o, l("l_orderkey") === o("o_orderkey"))
       .join(ch, o("o_custkey") === c("c_custkey"))
       .groupBy("l_orderkey", "o_orderdate", "o_orderpriority")
@@ -126,7 +113,7 @@ object Relational {
     }),
 
     // ---- TPC-H-Q3 shape: selective join + agg + top-10 by revenue.
-    "q3_shipping_priority" -> ((s, d) => q3At(s, d, scaledHintOn(d, "customer"))),
+    "q3_shipping_priority" -> ((s, d) => q3At(s, d, scaledHintOn(s, d, "customer"))),
 
     // ---- TPC-H-Q6 shape: pure scan-side filter + single global aggregate.
     "q6_forecast_revenue" -> ((s, d) =>
@@ -152,7 +139,7 @@ object Relational {
       val li = t(s, d, "lineitem")
       li.join(ord, col("l_orderkey") === col("o_orderkey"))
         .join(t(s, d, "customer"), col("o_custkey") === col("c_custkey"))
-        .join(scaledHint(d, "supplier")(sup),
+        .join(hint(scaledHintOn(s, d, "supplier"))(sup),
           col("l_suppkey") === col("s_suppkey") && col("c_nationkey") === col("s_nationkey"))
         .join(broadcast(nation), col("s_nationkey") === col("n_nationkey"))
         .groupBy("n_name")
@@ -330,12 +317,12 @@ object Relational {
         .select(col("c_custkey").as("ck"), col("r_name"))
       val qv = FP.q(col("l_extendedprice") * (lit(1.0) - col("l_discount")), 20)
       t(s, d, "lineitem")
-        .join(scaledHint(d, "part")(t(s, d, "part").filter(col("p_type") === "PROMO")),
+        .join(hint(scaledHintOn(s, d, "part"))(t(s, d, "part").filter(col("p_type") === "PROMO")),
           col("l_partkey") === col("p_partkey"))
         .join(t(s, d, "orders"), col("l_orderkey") === col("o_orderkey"))
         .join(custRegion, col("o_custkey") === col("ck"))
         .filter(col("r_name") === "AMERICA")
-        .join(scaledHint(d, "supplier")(suppNation), col("l_suppkey") === col("sk"))
+        .join(hint(scaledHintOn(s, d, "supplier"))(suppNation), col("l_suppkey") === col("sk"))
         .groupBy(year(col("o_orderdate")).cast("bigint").as("o_year"))
         .agg(
           (sum(when(col("supp_nation") === "NATION_3", qv).otherwise(lit(0L))).cast("double") /
@@ -461,7 +448,7 @@ object Relational {
         .agg(min(col("cost_q")).as("min_q"))
       regOffers
         .join(minPer, col("o_pk") === col("m_pk") && col("cost_q") === col("min_q"))
-        .join(scaledHint(d, "part")(t(s, d, "part")
+        .join(hint(scaledHintOn(s, d, "part"))(t(s, d, "part")
             .filter(col("p_size").between(10, 20) && col("p_type") === "SMALL")),
           col("o_pk") === col("p_partkey"))
         .select(col("p_partkey"), col("p_name"), col("s_name"), col("n_name"),
@@ -479,7 +466,7 @@ object Relational {
     // supplier/nation broadcast; lineitem⋈orders is the one big join.
     "q9_product_profit" -> ((s, d) => {
       t(s, d, "lineitem")
-        .join(scaledHint(d, "part")(t(s, d, "part").filter(col("p_name").like("%red%"))),
+        .join(hint(scaledHintOn(s, d, "part"))(t(s, d, "part").filter(col("p_name").like("%red%"))),
           col("l_partkey") === col("p_partkey"))
         .join(t(s, d, "orders"), col("l_orderkey") === col("o_orderkey"))
         .join(t(s, d, "supplier"), col("l_suppkey") === col("s_suppkey"))
@@ -508,7 +495,8 @@ object Relational {
           col("s_nationkey") === col("n_nationkey"))
         .select(col("s_suppkey").as("ns_sk"))
       val perPart = t(s, d, "lineitem")
-        .join(scaledHint(d, "supplier")(natSupp), col("l_suppkey") === col("ns_sk"), "left_semi")
+        .join(hint(scaledHintOn(s, d, "supplier"))(natSupp),
+          col("l_suppkey") === col("ns_sk"), "left_semi")
         .groupBy(col("l_partkey").as("p_partkey"))
         .agg(sum(FP.q(col("l_extendedprice"), 20)).cast("bigint").as("vq"))
       val total = perPart.agg(sum(col("vq")).as("tq"))
@@ -577,8 +565,9 @@ object Relational {
       val blocked = t(s, d, "supplier").filter(col("s_acctbal") < 0)
         .select(col("s_suppkey"))
       pairs
-        .join(scaledHint(d, "supplier")(blocked), col("l_suppkey") === col("s_suppkey"), "left_anti")
-        .join(scaledHint(d, "part")(t(s, d, "part").filter(
+        .join(hint(scaledHintOn(s, d, "supplier"))(blocked),
+          col("l_suppkey") === col("s_suppkey"), "left_anti")
+        .join(hint(scaledHintOn(s, d, "part"))(t(s, d, "part").filter(
             col("p_brand") =!= "Brand#5" && col("p_type") =!= "PROMO" &&
               col("p_size").isin(1, 5, 10, 15, 20, 25))),
           col("l_partkey") === col("p_partkey"))
@@ -597,7 +586,7 @@ object Relational {
     "q20_excess_suppliers" -> ((s, d) => {
       val shipped = t(s, d, "lineitem")
         .filter(year(col("l_shipdate")) === 1997)
-        .join(scaledHint(d, "part")(t(s, d, "part").filter(col("p_name").like("small%"))
+        .join(hint(scaledHintOn(s, d, "part"))(t(s, d, "part").filter(col("p_name").like("small%"))
             .select(col("p_partkey"))),
           col("l_partkey") === col("p_partkey"), "left_semi")
       val perPS = shipped
@@ -1063,7 +1052,7 @@ object Relational {
     // 100 TB fact side; only the 6-group agg shuffles).
     "j1_join_broadcast" -> ((s, d) => {
       val l = t(s, d, "lineitem")
-      val p = scaledHint(d, "part")(t(s, d, "part"))
+      val p = hint(scaledHintOn(s, d, "part"))(t(s, d, "part"))
       l.join(p, l("l_partkey") === p("p_partkey"))
         .groupBy("p_brand")
         // fixed-point (q*-family bits): tightest sf0.01 margin in the r6

@@ -868,13 +868,14 @@ object ScaleOps {
     // ---- per-file min/max data skipping (engine.FileSkipping): the
     // layout twin of pp_partition_pruned for keys too continuous to
     // directory-partition on. lineitem is written once per sf range-
-    // clustered on l_extendedprice into 8 files plus a one-row-per-file
-    // (min,max,count) manifest — the Delta/Iceberg stats-log pattern — and
-    // the price-band query reads ONLY the files whose envelope intersects
-    // the band (FileSkippingSpec asserts strictly fewer files than the
-    // layout holds, and agreement with the unpruned scan). The surviving-
-    // file list is a metadata-sized driver decision, like reading a
-    // transaction log; the data path stays distributed.
+    // clustered on l_extendedprice into 8 files, whose parquet footers
+    // carry each file's (min,max) — the Delta/Iceberg stats-log pattern
+    // with no log to write — and the price-band query reads ONLY the
+    // files whose envelope intersects the band (FileSkippingSpec asserts
+    // strictly fewer files than the layout holds, and agreement with the
+    // unpruned scan). The surviving-file list is a metadata-sized driver
+    // decision, like reading a transaction log; the data path stays
+    // distributed.
     "layout_file_skipping" -> ((s, d) => {
       graft.engine.Layouts.committed(s, d, "filestats/lineitem",
           graft.engine.FileSkipping.prunedRead(_, _, "l_extendedprice", 2000.0, 15000.0)) { out =>

@@ -3,7 +3,7 @@ package graft.queries
 import org.apache.spark.sql.{Column, DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.expressions.Window
-import graft.engine.{FixedPoint => FP, Materialize, Tables, Vectors => V}
+import graft.engine.{Broadcasts, FixedPoint => FP, Materialize, Vectors => V}
 import graft.engine.Tables.{load => t}
 
 /** Similarity-search catalog over `embeddings` (builder-prompt first-class
@@ -62,30 +62,10 @@ object Similarity {
   private def l2sq(a: Column, b: Column): Column =
     aggregate(zip_with(a, b, (x, y) => (x - y) * (x - y)), lit(0.0), (ac, x) => ac + x)
 
-  /** Max corpus rows whose (id, 64-double vector) lookup frame may carry a
-    * broadcast hint: 1e6 rows × ~550 B serialized ≈ 0.5 GB — inside
-    * executor memory and the 8 GB broadcast cap with wide margin for the
-    * estimate's slack. Deliberately tighter than Graph.BcStateRowLimit's
-    * row bound because a vector row is ~30× a (node, rank) row. */
-  private[graft] val BcVecRowLimit = 1000000L
-
-  /** Corpus-row UPPER bound with no Spark job: embeddings.parquet file
-    * bytes / 64. Measured ≥380 B/row at every test sf, and 64 B/row is an
-    * unreachable floor for a 64-double array column even under
-    * byte-stream-split + dictionary encodings — so the estimate only ever
-    * OVERcounts, erring toward skipping the hint. Bytes, not a footer
-    * count, because the gate must answer BEFORE the first layout is built
-    * (nnDescentGraphs is itself the layout builder). */
-  private[graft] def embRowsUpperBound(d: String): Long =
-    Tables.bytesOnDisk(d, "embeddings") / 64
-
   /** Shared gate for every CORPUS-ROW-sized broadcast hint in the ANN
-    * module (VERDICT r13 #1 — the twin of Graph.nodeHintGate, one module
-    * over): true while the embedding corpus's row upper bound fits the
-    * vector broadcast budget. An explicit `broadcast()` hint OVERRIDES
-    * AQE's size-based fallback, so an ungated hint on a corpus-row frame
-    * is a 100×-scale failure (driver OOM / the 8 GB cap) where the
-    * unhinted plan would merely shuffle. Every helper that hints a
+    * module (the twin of Graph.nodeHintGate, one module over): true while
+    * the embeddings table's exact row count fits
+    * [[Broadcasts.VectorRows]]. Every helper that hints a
     * corpus-proportional frame (NN-descent endpoint lookups, the exact-kNN
     * sample, beam/HNSW candidate+query lookups, the recall-census exact
     * frame, triplet-mining lookups) takes the decision as a parameter and
@@ -95,11 +75,8 @@ object Similarity {
     * count/stats frames keep their hints unconditionally — they are
     * output-sized at any scale. PlanQualitySpec pins both shapes and
     * gate-independent results. */
-  private[graft] def embHintGate(d: String): Boolean =
-    embRowsUpperBound(d) <= BcVecRowLimit
-
-  private def hintIf(bc: Boolean)(df: DataFrame): DataFrame =
-    if (bc) broadcast(df) else df
+  private[graft] def embHintGate(s: SparkSession, d: String): Boolean =
+    Broadcasts.fits(s, s"$d/embeddings.parquet", Broadcasts.VectorRows)
 
   /** 2-round NN-descent (Dong '11) over `e` = (vec_id, v): returns the
     * per-round graphs Seq(g0, g1, g2), each (a, b, cos_raw) with ≤ k edges
@@ -119,7 +96,7 @@ object Similarity {
     * fetch endpoints' vectors; above the gate they run co-partitioned on
     * the vector key (VERDICT r13 #1 — a comment was not a gate). */
   private def nnDescentGraphs(e: DataFrame, k: Int, bcVec: Boolean): Seq[DataFrame] = {
-    val hint = hintIf(bcVec) _
+    val hint = Broadcasts.hint(bcVec) _
     val cnt = e.agg(count(lit(1)).as("n"))
     val ea = e.select(col("vec_id").as("a"), col("v").as("va"))
     val eb = e.select(col("vec_id").as("b"), col("v").as("vb"))
@@ -178,7 +155,7 @@ object Similarity {
         org.apache.spark.sql.Encoders.scalaLong,
         org.apache.spark.sql.Encoders.scalaDouble))
     val gt = e.select(col("vec_id").as("b"), col("v").as("vb"))
-      .crossJoin(hintIf(bcVec)(e.filter(col("vec_id") % 50 === residue)
+      .crossJoin(Broadcasts.hint(bcVec)(e.filter(col("vec_id") % 50 === residue)
         .select(col("vec_id").as("a"), col("v").as("va"))))
       .filter(col("a") =!= col("b"))
       .withColumn("cos_raw", V.cosine(col("va"), col("vb")))
@@ -195,7 +172,7 @@ object Similarity {
     * face measures, so build face and layout cannot drift. */
   private def knnGraphLayout(s: SparkSession, d: String, e: DataFrame): DataFrame = {
     graft.engine.Layouts.committed(s, d, "sim/knn8") { out =>
-      nnDescentGraphs(e, 8, embHintGate(d)).last.select("a", "b")
+      nnDescentGraphs(e, 8, embHintGate(s, d)).last.select("a", "b")
         .coalesce(2).write.parquet(out)
     }
   }
@@ -223,7 +200,7 @@ object Similarity {
   // frames the broadcast-exchange builds are the runtime. The lookup is
   // the full corpus-vector frame: hinted only below embHintGate
   private def beamScore(cv: DataFrame, bcVec: Boolean)(pool: DataFrame): DataFrame =
-    pool.join(hintIf(bcVec)(cv), "cand")
+    pool.join(Broadcasts.hint(bcVec)(cv), "cand")
       .select(col("qid"), col("qv"), col("cand"),
         V.cosine(col("cv"), col("qv")).as("cos"))
 
@@ -253,7 +230,7 @@ object Similarity {
   // which equals exact's distinct-a by construction since both derive
   // from the same % 50 sample and every query always holds a beam)
   private def beamCensusRow(exact: DataFrame, k: Int, bcVec: Boolean)(round: Int, b: DataFrame): DataFrame =
-    b.join(hintIf(bcVec)(exact.select(col("a").as("__ea"), col("b").as("__eb"))),
+    b.join(Broadcasts.hint(bcVec)(exact.select(col("a").as("__ea"), col("b").as("__eb"))),
         b("qid") === col("__ea") && b("cand") === col("__eb"), "left")
       .groupBy("qid")
       .agg(max("cos").as("best"), max("qn").as("qn"),
@@ -351,7 +328,7 @@ object Similarity {
                                entryStride: Int, exact: DataFrame,
                                k: Int, entries: Int = 4,
                                bcVec: Boolean = true): DataFrame = {
-    val hint = hintIf(bcVec) _
+    val hint = Broadcasts.hint(bcVec) _
     val q = e.filter(col("vec_id") % 50 === 0)
       .select(col("vec_id").as("qid"), col("v").as("qv"))
     val cv = e.select(col("vec_id").as("cand"), col("v").as("cv"))
@@ -427,7 +404,7 @@ object Similarity {
                                   bcVec: Option[Boolean] = None): DataFrame = {
     // corpus-row lookup hints route through embHintGate unless a plan
     // audit forces a variant (PlanQualitySpec pins both shapes)
-    val bc = bcVec.getOrElse(embHintGate(d))
+    val bc = bcVec.getOrElse(embHintGate(s, d))
     val e = emb(s, d).select(col("vec_id"), col("v")).cache()
     val g0 = knnGraphLayout(s, d, e)
     val tail = if (l0r2 > 0) Seq(Stage("l0", g0, l0b, l0r2, expand = l0e2))
@@ -453,7 +430,7 @@ object Similarity {
     graft.engine.Layouts.committed(s, d, s"sim/knn8c$sfx") { out =>
       val ec = e.filter(col("vec_id") % stride === 0)
         .select((col("vec_id") / stride).cast("long").as("vec_id"), col("v"))
-      nnDescentGraphs(ec, 8, embHintGate(d)).last
+      nnDescentGraphs(ec, 8, embHintGate(s, d)).last
         .select((col("a") * stride).as("a"), (col("b") * stride).as("b"))
         .coalesce(1).write.parquet(out)
     }
@@ -512,7 +489,7 @@ object Similarity {
   private def searchThenLink(e: DataFrame, gbEdges: DataFrame, q: DataFrame,
                              hinted: Boolean): DataFrame = {
     val k = 8
-    val hint = hintIf(hinted) _
+    val hint = Broadcasts.hint(hinted) _
     val cntB = e.filter(col("vec_id") % 2 === 0).agg(count(lit(1)).as("n"))
     // NARROW FRONTIER (OPTIMIZATION r15, guide §8): unlike the flat census
     // faces' ≤720-row pools — where the ride-the-frontier shape measured
@@ -561,7 +538,7 @@ object Similarity {
 
   private[graft] def indexInsertAt(s: SparkSession, d: String, hinted: Boolean): DataFrame = {
     val k = 8
-    val hint = hintIf(hinted) _
+    val hint = Broadcasts.hint(hinted) _
     val e = emb(s, d).select(col("vec_id"), col("v")).cache()
     val ea = e.select(col("vec_id").as("a"), col("v").as("va"))
     val eb = e.select(col("vec_id").as("b"), col("v").as("vb"))
@@ -653,7 +630,7 @@ object Similarity {
     graft.engine.Layouts.publish(s, d, "sim/append") { work =>
       val e = emb(s, d).select(col("vec_id"), col("v")).cache()
       val gbEdges = coarseKnnLayout(s, d, e, 2)
-      val hinted = embHintGate(d)
+      val hinted = embHintGate(s, d)
       val arriving = (0 to 2).map(b => e.filter(col("vec_id") % 2 === 1)
         .filter(pmod(expr("vec_id div 2"), lit(3)) === b))
       graft.streaming.StreamHarness.replayForeach(s, arriving) { (df, batchId) =>
@@ -675,7 +652,7 @@ object Similarity {
     val e = emb(s, d).select(col("vec_id"), col("v")).cache()
     searchThenLink(e, coarseKnnLayout(s, d, e, 2),
       e.filter(col("vec_id") % 2 === 1)
-        .select(col("vec_id").as("qid"), col("v").as("qv")), embHintGate(d))
+        .select(col("vec_id").as("qid"), col("v").as("qv")), embHintGate(s, d))
   }
 
   /** The sim_triplet_mining body at an explicit gate decision: `hinted`
@@ -684,7 +661,7 @@ object Similarity {
     * full plan is audit-visible without [[Materialize.unrolled]]. */
   private[graft] def tripletMiningAt(s: SparkSession, d: String,
                                      hinted: Boolean): DataFrame = {
-    val hint = hintIf(hinted) _
+    val hint = Broadcasts.hint(hinted) _
     val e = emb(s, d).cache()
     val g = knnGraphLayout(s, d, e.select(col("vec_id"), col("v")))
     val q = e.filter(col("vec_id") % 50 === 0)
@@ -737,7 +714,7 @@ object Similarity {
     def census(round: Int, g: DataFrame): DataFrame =
       g.agg(count(lit(1)).as("n_edges"),
           FP.qround(FP.qmean(col("cos_raw")), 4).as("avg_cos"))
-        .crossJoin(g.join(hintIf(hinted)(exact), Seq("a", "b")).agg(count(lit(1)).as("hits")))
+        .crossJoin(g.join(Broadcasts.hint(hinted)(exact), Seq("a", "b")).agg(count(lit(1)).as("hits")))
         .crossJoin(exact.agg(countDistinct(col("a")).as("ns")))
         .select(lit(round.toLong).as("round"), col("n_edges"), col("avg_cos"),
           (floor(col("hits") * lit(10000.0) / (col("ns") * lit(k)) + lit(0.5))
@@ -1650,7 +1627,7 @@ object Similarity {
       val e = emb(s, d)
       val q = e.filter(col("vec_id") % 100 === 0)
         .select(col("vec_id").as("qid"), col("v").as("qv"))
-      e.crossJoin(hintIf(embHintGate(d))(q))
+      e.crossJoin(Broadcasts.hint(embHintGate(s, d))(q))
         .filter(col("vec_id") =!= col("qid"))
         .withColumn("cos_raw", V.cosine(col("v"), col("qv")))
         .withColumn("rank", row_number().over(
@@ -1721,7 +1698,7 @@ object Similarity {
     // deterministic 2%-sample (the sim_knn_join shape); the oracle
     // unrolls both rounds as CTEs and replays the identical candidate
     // generation, so every edge — not just the census — is gate-checked.
-    "sim_nndescent" -> ((s, d) => nndescentAt(s, d, embHintGate(d))),
+    "sim_nndescent" -> ((s, d) => nndescentAt(s, d, embHintGate(s, d))),
 
     // ---- kNN-graph SEARCH (VERDICT r10 #1) — the production read path of
     // every HNSW/NSG-family index: sim_nndescent builds the kNN graph; this
@@ -1751,7 +1728,7 @@ object Similarity {
     // at sf0.01: 0.475 search vs 0.50 ceiling), at a per-query candidate
     // budget comparable to the IVF face's nprobe=4 point.
     "sim_graph_search" -> ((s, d) => {
-      val bc = embHintGate(d)
+      val bc = embHintGate(s, d)
       val e = emb(s, d).select(col("vec_id"), col("v")).cache()
       beamCensus(e, knnGraphLayout(s, d, e), exactKnnSample(e, 8, bc),
           beam = 8, rounds = 5, k = 8, bcVec = bc)
@@ -1768,7 +1745,7 @@ object Similarity {
     // and the candidate budget column makes the recall-vs-work trade
     // explicit in-row.
     "sim_beam_sweep" -> ((s, d) => {
-      val bc = embHintGate(d)
+      val bc = embHintGate(s, d)
       val e = emb(s, d).select(col("vec_id"), col("v")).cache()
       // ground truth and the round-0 entry scoring are computed ONCE and
       // shared by the three width chains (beamCensuses)
@@ -1800,7 +1777,7 @@ object Similarity {
     // NN-descent build and its beam rounds cost 1/16th the base layer's;
     // everything else is the sim_graph_search frontier discipline.
     "sim_hnsw_search" -> ((s, d) => {
-      val bc = embHintGate(d)
+      val bc = embHintGate(s, d)
       val e = emb(s, d).select(col("vec_id"), col("v")).cache()
       hnswCensus(e, coarseKnnLayout(s, d, e), knnGraphLayout(s, d, e),
           exactKnnSample(e, 8, bc), coarseBeam = 7, coarseRounds = 2,
@@ -1868,7 +1845,7 @@ object Similarity {
     // shapes). The census carries pool sizes so starved anchors
     // (no same-label candidate in 2 hops) are visible, not silent; the
     // oracle re-derives the graph from SQL and replays every tie-break.
-    "sim_triplet_mining" -> ((s, d) => tripletMiningAt(s, d, embHintGate(d))),
+    "sim_triplet_mining" -> ((s, d) => tripletMiningAt(s, d, embHintGate(s, d))),
 
     // ---- ANN index INSERT (VERDICT r13 missing #1) — the maintenance
     // path an embedding store runs continuously: the committed base-half
@@ -1878,7 +1855,7 @@ object Similarity {
     // [[indexInsertAt]] for the full mechanics and scale shape;
     // FacesInvariantSpec pins recall(inserted, new) within ε of
     // recall(rebuilt, new).
-    "sim_index_insert" -> ((s, d) => indexInsertAt(s, d, embHintGate(d))),
+    "sim_index_insert" -> ((s, d) => indexInsertAt(s, d, embHintGate(s, d))),
 
     // ---- STREAMING index append (VERDICT r13 missing #3) — arriving
     // vector micro-batches search-then-link into the committed base

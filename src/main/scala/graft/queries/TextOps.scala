@@ -3,7 +3,7 @@ package graft.queries
 import org.apache.spark.sql.{Column, DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.expressions.Window
-import graft.engine.{FixedPoint => FP, Tables, TextFunctions => T}
+import graft.engine.{Broadcasts, FixedPoint => FP, TextFunctions => T}
 import graft.engine.Tables.{load => t}
 
 /** Text-analysis catalog over the `documents` table (builder-prompt
@@ -1733,7 +1733,7 @@ object TextOps {
     // every n-gram LM demo runs, as a relational plan: the argmax-next
     // table (one row per vocabulary token: its most frequent successor,
     // count-desc/token-asc tie-break via the struct-min trick) is built
-    // once and hinted below the docs-bytes gate; each of the 8 decode
+    // once and hinted below the document-count gate; each of the 8 decode
     // steps is one join extending (cur, seq). Greedy decoding's loop
     // degeneracy (the chain enters a 2-cycle fast) shows up honestly in
     // the output. A dead-end token (never seen as a bigram head) emits
@@ -1742,9 +1742,9 @@ object TextOps {
     // 8 joins of the 5-row chain frame against the successor table,
     // never corpus-sized. The successor table is VOCAB-sized (token
     // types grow with the corpus, uncapped here), so its hint routes
-    // through the same on-disk-bytes gate as every data-proportional
-    // hint (the r12/r13 class): above the bound the planner's own choice
-    // stands.
+    // through engine.Broadcasts on the document count, like every
+    // data-proportional hint (the r12/r13 class): above the limit the
+    // planner's own choice stands.
     "tx_lm_generate" -> ((s, d) => {
       val staged = t(s, d, "documents")
         .select(col("doc_id"), T.tokens(col("text")).as("__toks")).cache()
@@ -1760,8 +1760,8 @@ object TextOps {
       val nxt0 = cab.groupBy("a")
         .agg(min(struct((-col("cab")).as("nc"), col("b").as("nb"))).as("m"))
         .select(col("a").as("cur"), col("m.nb").as("nxt"))
-      val nxt = if (Tables.bytesOnDisk(d, "documents") <= (256L << 20))
-        broadcast(nxt0) else nxt0
+      val nxt = Broadcasts.hint(
+        Broadcasts.fits(s, s"$d/documents.parquet", Broadcasts.DocumentRows))(nxt0)
       val seeds = staged.select(explode(col("__toks")).as("tok"))
         .groupBy("tok").agg(count(lit(1)).as("c"))
         .orderBy(col("c").desc, col("tok").asc).limit(5)

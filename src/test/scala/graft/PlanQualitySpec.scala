@@ -225,7 +225,7 @@ class PlanQualitySpec extends AnyFunSuite with SharedSparkSpec {
     // a stale r7-tagged layout lingered on /tmp and failed once it was gone
     val tag = graft.engine.Layouts.tag(d)
     val pruned = graft.engine.FileSkipping
-      .survivors(spark, s"/tmp/graft_filestats/lineitem_$tag", 2000.0, 15000.0)
+      .survivors(spark, s"/tmp/graft_filestats/lineitem_$tag", "l_extendedprice", 2000.0, 15000.0)
     assert(pruned.nonEmpty && pruned.length < 8,
       s"expected strict file pruning, kept ${pruned.length} of 8")
   }
@@ -692,8 +692,9 @@ class PlanQualitySpec extends AnyFunSuite with SharedSparkSpec {
   // class VERDICT r12/r13 found in graph and ANN, closed proactively):
   // TPC-H customer/supplier/part grow with sf, so their hints — and
   // hints on frames derived from them — route through
-  // Relational.scaledHintOn (on-disk-bytes bound). q3 is the pinned
-  // representative; the gate unit test proves the byte-bound flip.
+  // Relational.scaledHintOn (engine.Broadcasts on the base table's
+  // footer row count). q3 is the pinned representative; the gate unit
+  // test proves the row-limit flip.
 
   test("q3_shipping_priority: scaled-customer hint gated; co-partitioned above; gate-independent results") {
     pinGate("q3_shipping_priority",
@@ -703,19 +704,19 @@ class PlanQualitySpec extends AnyFunSuite with SharedSparkSpec {
       minHintedBhj = 1)
   }
 
-  test("scaled-table hint gate flips on on-disk bytes (sparse-file probe)") {
-    val dir = java.nio.file.Files.createTempDirectory("graft_gate").toFile
-    try {
-      val f = new java.io.RandomAccessFile(
-        new java.io.File(dir, "customer.parquet"), "rw")
-      f.setLength(graft.queries.Relational.BcTableByteLimit + 1); f.close()
-      assert(!graft.queries.Relational.scaledHintOn(dir.getPath, "customer"),
-        "a table above the byte bound must not carry a broadcast hint")
-      assert(graft.queries.Relational.scaledHintOn(d, "customer"),
-        "the test-sf customer must stay hinted (the drift fingerprints are below-gate)")
-    } finally {
-      Option(dir.listFiles()).foreach(_.foreach(_.delete())); dir.delete()
+  test("broadcast-hint gate: a table of n rows fits at limit n, not at n - 1") {
+    import graft.engine.Broadcasts
+    val nodes = graft.queries.Graph.nodesPath(spark, d) // publishes the layout on first use
+    for (p <- Seq(s"$d/customer.parquet", s"$d/embeddings.parquet", nodes)) {
+      val n = graft.engine.Tables.rowCount(spark, p)
+      assert(n > 0, p)
+      assert(Broadcasts.fits(spark, p, n), p)
+      assert(!Broadcasts.fits(spark, p, n - 1), p)
     }
+    // the test-sf tables stay hinted (the drift fingerprints are below-gate)
+    assert(graft.queries.Relational.scaledHintOn(spark, d, "customer"))
+    assert(graft.queries.Similarity.embHintGate(spark, d))
+    assert(graft.queries.Graph.nodeHintGate(spark, d))
   }
 
   test("sim_knn_join_idx: cell equi-join co-partitioned; only the constant centroid frame broadcasts") {
@@ -754,7 +755,7 @@ class PlanQualitySpec extends AnyFunSuite with SharedSparkSpec {
     // largest shuffle (448/448 qid-exchanges carried qv in the r15
     // before-plan, kept in the git history of round 15).
     val p = graft.engine.Materialize.unrolled(graft.queries.Similarity.indexInsertAt(spark, d,
-        graft.queries.Similarity.embHintGate(d)))
+        graft.queries.Similarity.embHintGate(spark, d)))
       .queryExecution.explainString(org.apache.spark.sql.execution.FormattedMode)
     val exchangeInputs = """\(\d+\) Exchange\s*\nInput \[\d+\]: \[([^\]]*)\]""".r
       .findAllMatchIn(p).map(_.group(1)).toSeq

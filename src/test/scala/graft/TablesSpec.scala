@@ -4,7 +4,7 @@ import java.io.File
 
 import org.scalatest.funsuite.AnyFunSuite
 
-import graft.engine.{Layouts, Tables, Telemetry}
+import graft.engine.{Broadcasts, FileSkipping, Layouts, Tables, Telemetry}
 
 /** `Tables.parquet` opens a parquet table from one footer read on the
   * driver instead of Spark's one-task schema-inference job. Its contract is
@@ -13,7 +13,9 @@ import graft.engine.{Layouts, Tables, Telemetry}
   * `events` nanos branch of `Tables.load` still fires, and a table
   * rewritten in place is seen at once (there is no cache). The source
   * scans keep base tables, committed layouts and commit-log snapshots on
-  * that one path, and keep `Telemetry` scopes out of engine code.
+  * that one path, keep `Telemetry` scopes out of engine code, and keep
+  * every broadcast-hint decision in `Broadcasts` and every size or file
+  * range on the footers.
   */
 class TablesSpec extends AnyFunSuite with SharedSparkSpec {
   private val sfs = Seq("/root/testdata/sf0.001", "/root/testdata/sf0.01")
@@ -24,7 +26,7 @@ class TablesSpec extends AnyFunSuite with SharedSparkSpec {
       assert(Tables.parquet(spark, p).schema == spark.read.parquet(p).schema, p)
     }
     // build a few layouts of distinct shapes (partitioned, nested structs,
-    // arrays, range-clustered files and their stats table) so the walk never
+    // arrays, range-clustered files) so the walk never
     // comes up empty; the rest are whatever the other suites committed
     val d = sfs.head
     Seq("nested_inline_agg", "pp_dynamic_pruning", "etl_deletion_vectors",
@@ -105,14 +107,34 @@ class TablesSpec extends AnyFunSuite with SharedSparkSpec {
     assert(Tables.parquet(spark, p).schema == inferred)
   }
 
-  test("(f) the node gate's count is the exact row count, read from footers without a job") {
-    for (d <- sfs) {
-      val path = Layouts.path(d, "graph/symnodes")
-      graft.queries.Graph.nodeCount(spark, d) // publishes the layout on first use
-      var n = -1L
-      assert(Telemetry.during(spark) { n = graft.queries.Graph.nodeCount(spark, d) }.jobs == 0, d)
-      assert(n == spark.read.parquet(path).count(), d)
-      assert(n > 0, d)
+  test("(f) gate row counts and skipping survivors come from footers, with no job") {
+    // the test sfs and sf0.1, their sibling dir (the bench scale)
+    for (d <- sfs :+ new File(new File(sfs.head).getParentFile, "sf0.1").getPath) {
+      // publish the node and file-skipping layouts on first use
+      val nodes = graft.queries.Graph.nodesPath(spark, d)
+      SparkEntry.queries("layout_file_skipping")(spark, d)
+      val counted = nodes +:
+        Seq("customer", "supplier", "part", "embeddings", "documents").map(n => s"$d/$n.parquet")
+      var counts = Seq.empty[Long]
+      var gates = Seq.empty[Boolean]
+      var survivors = Seq.empty[String]
+      val run = Telemetry.during(spark) {
+        counts = counted.map(Tables.rowCount(spark, _))
+        gates = Seq(graft.queries.Graph.nodeHintGate(spark, d),
+          graft.queries.Similarity.embHintGate(spark, d),
+          Broadcasts.fits(spark, s"$d/documents.parquet", Broadcasts.DocumentRows)) ++
+          Seq("customer", "supplier", "part").map(graft.queries.Relational.scaledHintOn(spark, d, _))
+        survivors = FileSkipping.survivors(spark, Layouts.path(d, "filestats/lineitem"),
+          "l_extendedprice", 2000.0, 15000.0)
+      }
+      assert(run.jobs == 0, d)
+      for ((p, n) <- counted.zip(counts)) {
+        assert(n > 0, p)
+        assert(n == spark.read.parquet(p).count(), p)
+      }
+      // every test sf sits below every limit: each gate keeps its hint
+      assert(gates.forall(identity), s"$d: $gates")
+      assert(survivors.nonEmpty && survivors.length < 8, s"$d: $survivors")
     }
   }
 
@@ -161,5 +183,20 @@ class TablesSpec extends AnyFunSuite with SharedSparkSpec {
         (f.startsWith("engine/") && f != "engine/Telemetry.scala")
     }
     assert(scoped.isEmpty, s"Telemetry used outside mains: ${scoped.mkString("; ")}")
+  }
+
+  test("hints are decided only in Broadcasts; sizes and file ranges come from footers") {
+    val decided = sites("broadcast(").filter { case (f, l) =>
+      (f.startsWith("queries/") || f.startsWith("engine/")) && f != "engine/Broadcasts.scala" &&
+        (l.contains("if (") || l.contains("else"))
+    }
+    assert(decided.isEmpty,
+      s"a broadcast hint decided outside engine.Broadcasts: ${decided.mkString("; ")}")
+    val bytes = sites("bytesOnDisk")
+    assert(bytes.isEmpty,
+      s"a size probe on file bytes (use Tables.rowCount): ${bytes.mkString("; ")}")
+    val inSkipping = sites(".read.parquet(").filter(_._1 == "engine/FileSkipping.scala")
+    assert(inSkipping.isEmpty,
+      s"FileSkipping opens parquet without Tables.parquet: ${inSkipping.mkString("; ")}")
   }
 }
