@@ -398,34 +398,32 @@ object Commits {
     private def dir(table: String, v: Int) =
       new java.io.File(table, f"_change_data/v$v%05d")
 
-    def exists(table: String, v: Int): Boolean =
-      new java.io.File(dir(table, v), "_SUCCESS").exists()
+    /** Published by [[Layouts.publishWith]]: the directory exists iff
+      * the version's change data is complete. */
+    def exists(table: String, v: Int): Boolean = dir(table, v).exists()
 
-    /** Versions with published change data, ascending. */
+    /** Versions with published change data, ascending (a
+      * `vNNNNN.build-<id>` work dir does not match). */
     def versions(table: String): Seq[Int] =
       Option(new java.io.File(table, "_change_data").listFiles())
         .map(_.toSeq).getOrElse(Seq.empty)
-        .filter(f => f.getName.matches("v\\d{5}") && new java.io.File(f, "_SUCCESS").exists())
+        .filter(_.getName.matches("v\\d{5}"))
         .map(_.getName.substring(1).toInt).sorted
 
-    /** Idempotently publish `df` as version `v`'s change file set. Returns
-      * false iff the version's change data already exists (a replayer or
-      * the winning committer got there first — identical derived content,
-      * so losing the rename race is a no-op). Single-file output: change
-      * sets are O(batch)-sized and downstream streaming consumers want one
-      * file per version. */
+    /** Idempotently publish `df` as version `v`'s change file set, by the
+      * layouts' build-aside-then-rename rule. Returns false iff the
+      * version's change data already exists (a replayer or the winning
+      * committer got there first — identical derived content, so losing
+      * the rename race is a no-op). Single-file output: change sets are
+      * O(batch)-sized and downstream streaming consumers want one file
+      * per version. */
     def publish(df: DataFrame, table: String, version: Int): Boolean = {
-      val d = dir(table, version)
-      if (exists(table, version)) return false
       require(df.columns.contains("_change_type") && df.columns.contains("_commit_version"),
         s"change data for $table v$version lacks _change_type/_commit_version")
       require(delta(table, version).length() > 0,
         s"change data publishes only for durable commits: $table v$version")
-      val tmp = new java.io.File(d.getParentFile,
-        s".v$version-${java.util.UUID.randomUUID().toString.take(8)}")
-      df.coalesce(1).write.mode("errorifexists").parquet(tmp.getPath)
-      if (tmp.renameTo(d)) true
-      else { Layouts.rmTree(tmp); false } // lost the publish race: identical content won
+      Layouts.publishWith(dir(table, version).getPath, _ => ())(
+        df.coalesce(1).write.mode("errorifexists").parquet(_))
     }
 
     /** THE O(changes) reader: version `v`'s change rows, change files only
@@ -484,7 +482,13 @@ object Commits {
       // marker that bricks every subsequent read
       writeAtomic(f, Seq(newHorizon.toString))
       val victims = versions(table).filter(_ < newHorizon)
-      victims.foreach(v => Layouts.rmTree(dir(table, v)))
+      // renamed aside before the delete: a crash mid-delete must not
+      // leave a half-emptied version dir, which `exists` would report
+      victims.foreach { v =>
+        val aside = new java.io.File(
+          dir(table, v).getPath + ".vacuum-" + java.util.UUID.randomUUID().toString.take(8))
+        if (dir(table, v).renameTo(aside)) Layouts.rmTree(aside)
+      }
       victims
     }
   }

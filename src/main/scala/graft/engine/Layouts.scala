@@ -63,31 +63,36 @@ object Layouts {
     open(s, publish(s, d, name)(write))
 
   /** The path of layout `name` of `d`, published by `build` if absent. */
-  def publish(s: SparkSession, d: String, name: String)(build: String => Unit): String =
-    publishWith(path(d, name), p => s.catalog.refreshByPath(p))(build)
+  def publish(s: SparkSession, d: String, name: String)(build: String => Unit): String = {
+    val p = path(d, name)
+    publishWith(p, s.catalog.refreshByPath)(build)
+    p
+  }
 
   /** The commit rule, with the listing refresh passed in (tests run it
-    * without a session). Returns `path` at once if it exists. Otherwise
-    * `build` fills a fresh `path.build-<id>`, which is renamed to `path`;
-    * a rename that fails because another thread or process published
-    * `path` first counts as published. The work dir is deleted in a
-    * `finally`, so a `build` that throws leaves nothing behind and its
-    * exception reaches the caller. `build` runs with lineage cuts on
-    * ([[Materialize.cutting]]), also inside a plan audit's
-    * [[Materialize.unrolled]]. */
+    * without a session). Returns false at once if `path` exists.
+    * Otherwise `build` fills a fresh `path.build-<id>`, which is renamed
+    * to `path`, and returns whether this call's rename published it; a
+    * rename that fails because another thread or process published
+    * `path` first counts as published, by the other. The work dir is
+    * deleted in a `finally`, so a `build` that throws leaves nothing
+    * behind and its exception reaches the caller. `build` runs with
+    * lineage cuts on ([[Materialize.cutting]]), also inside a plan
+    * audit's [[Materialize.unrolled]]. */
   private[graft] def publishWith(path: String, refresh: String => Unit)(
-      build: String => Unit): String = {
+      build: String => Unit): Boolean = {
     val dst = new java.io.File(path)
-    if (!dst.exists()) {
+    !dst.exists() && {
       val work = new java.io.File(
         path + ".build-" + java.util.UUID.randomUUID().toString.take(8))
       try {
         Materialize.cutting(build(work.getPath))
-        if (work.renameTo(dst)) refresh(path)
+        val won = work.renameTo(dst)
+        if (won) refresh(path)
         else require(dst.exists(), s"atomic publish of $work failed")
+        won
       } finally if (work.exists()) rmTree(work)
     }
-    path
   }
 
   /** Recursive best-effort delete (scenario work dirs, stream scratch,

@@ -142,10 +142,8 @@ object TextFunctions {
       lit(0L), (acc, x) => acc + x)
   }
 
-  /** Stopword-hit count for a candidate language (lang-ID heuristic). */
-  def stopwordHits(text: Column, stopwords: Seq[String]): Column =
-    stopwordHitsFromTokens(tokens(text), stopwords)
-
+  /** Stopword-hit count of a token array for a candidate language (lang-ID
+    * heuristic). */
   def stopwordHitsFromTokens(toks: Column, stopwords: Seq[String]): Column = {
     val arr = array(stopwords.map(s => lit(s)): _*)
     size(filter(toks, t => array_contains(arr, t))).cast("bigint")

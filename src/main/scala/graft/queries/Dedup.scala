@@ -222,8 +222,6 @@ object Dedup {
       changed = next.filter(col("cid") =!= col("old")).count()
       labels = next.select("doc_id", "cid")
       rounds += 1
-      if (sys.env.contains("GRAFT_CC_DEBUG"))
-        println(s"[cc] round=$rounds changed=$changed t=${System.nanoTime()}")
     }
     sym.unpersist()
     // singletons: every corpus doc not in the edge set keeps its own id

@@ -61,4 +61,22 @@ class IngestSpec extends AnyFunSuite with SharedSparkSpec {
     assert(raw.schema.fields.forall(_.dataType.typeName == "string"))
     assert(raw.head.isNullAt(raw.columns.indexOf("TrackTemp")))
   }
+
+  test("inferred CSV ingest types int, double and string columns; raw ingest of the same file does not") {
+    val dir = tempDir("graft-csv-inferred").toPath
+    Files.writeString(dir.resolve("weather_data.csv"),
+      "Time,AirTemp,TrackTemp,Humidity,Pressure,WindSpeed,Rainfall\n" +
+        "00:01:00:000,28.4,41.5,45,1013.2,2.1,dry\n" +
+        "00:02:00:000,28.6,41.0,47,1013.0,1.8,light\n")
+    val inferred = Ingest.readInferredCsv(spark, dir.toString)
+    val types = inferred.schema.fields.map(f => f.name -> f.dataType.typeName).toMap
+    assert(types("Humidity") == "integer", inferred.schema.treeString)
+    assert(types("AirTemp") == "double", inferred.schema.treeString)
+    assert(types("Time") == "string" && types("Rainfall") == "string", inferred.schema.treeString)
+    assert(inferred.collect().map(r => r.getAs[Int]("Humidity")).sorted.toSeq == Seq(45, 47))
+    val raw = Ingest.readRawCsv(spark, dir.toString, "weather_data")
+    assert(raw.columns.toSeq == inferred.columns.toSeq)
+    assert(raw.schema.fields.forall(_.dataType.typeName == "string"), raw.schema.treeString)
+    assert(raw.collect().map(_.getAs[String]("Humidity")).sorted.toSeq == Seq("45", "47"))
+  }
 }

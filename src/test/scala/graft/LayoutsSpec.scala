@@ -25,8 +25,10 @@ class LayoutsSpec extends AnyFunSuite with SharedSparkSpec {
     java.nio.file.Files.write(new java.io.File(dir, name).toPath, body.getBytes("UTF-8"))
   }
 
-  private def publish(path: String)(build: String => Unit): String =
+  private def publish(path: String)(build: String => Unit): String = {
     Layouts.publishWith(path, _ => ())(build)
+    path
+  }
 
   test("a build that throws publishes nothing, leaves no work dir, and rethrows") {
     val root = freshRoot()
@@ -79,6 +81,20 @@ class LayoutsSpec extends AnyFunSuite with SharedSparkSpec {
       assert(publish(path) { _ => builds += 1 } == path)
       assert(builds == 1)
       assert(siblings(root) == Seq("tbl"))
+    } finally Layouts.rmTree(root)
+  }
+
+  test("publishWith reports whether this call's rename published") {
+    val root = freshRoot()
+    val path = new java.io.File(root, "tbl").getPath
+    val other = new java.io.File(root, "other").getPath
+    try {
+      assert(Layouts.publishWith(path, _ => ())(write(_, "v", "1")))
+      assert(!Layouts.publishWith(path, _ => ())(write(_, "v", "2")), "an existing path is not republished")
+      assert(!Layouts.publishWith(other, _ => ()) { work =>
+        write(work, "who", "this")
+        write(other, "who", "other")
+      }, "a lost rename race is not this call's publish")
     } finally Layouts.rmTree(root)
   }
 

@@ -42,7 +42,8 @@ class PlanDriftSpec extends AnyFunSuite with SharedSparkSpec {
   }
 
   // the 20 largest warm-time queries of the round-8 driver bench
-  // (bench_detail_r08.json) — where a plan regression costs the most
+  // (archived up to 9b5c0e6; BENCH_TRAJECTORY.csv's r08 column keeps the
+  // medians) — where a plan regression costs the most
   // Note the corpus reads like the plan audit it automates: the iterative
   // faces assemble from checkpointed rounds (no joins in the FINAL frame's
   // plan), agg_mad/winsorize show the fit-broadcast-transform single
